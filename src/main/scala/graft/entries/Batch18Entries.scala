@@ -1,7 +1,6 @@
 package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.core.{Tables => T}
 import graft.mm.Multimodal
@@ -13,10 +12,6 @@ import graft.stream.Streaming
   * against an analytic SQL oracle, plus scale-gate hardening entries.
   */
 object Batch18Entries {
-
-  /** Memory-sink query names must be unique per invocation (warm-up +
-    * timed bench runs share one session). */
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Deterministic synthetic corpus: 24 BMPs whose pixel luma is the
     * closed-form `(x·7 + y·13 + id·31) mod 256`, sizes varying with id
@@ -59,27 +54,19 @@ object Batch18Entries {
     // stream.)
     "stream_dedup" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val n = 120000
-      val in = MemoryStream[(Long, Long, Double)]
-      in.addData((0 until n).map { i =>
+      val rows = (0 until n).map { i =>
         val k = (i % (n / 2)).toLong
         (k, (i / 1000).toLong, k.toDouble)
-      })
-      val df = in.toDF().toDF("k", "toff", "v")
-        .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("toff")))
-      val qn = s"stream_dedup_sink_${sinkSeq.incrementAndGet()}"
-      // state = one row per distinct key inside the watermark horizon;
-      // the tuning scope covers the query's whole lifetime (the cloned
-      // stream session reads confs on the query thread, after start())
-      Streaming.withReplayTuning(s, stateRows = n / 2) {
-        val q = Streaming.dedupWithinWatermark(df, "ts", "60 seconds", Seq("k"))
-          .select("k", "v")
-          .writeStream.format("memory").queryName(qn).outputMode("append")
-          .start()
-        try q.processAllAvailable() finally q.stop()
       }
-      s.table(qn).orderBy("k")
+      // one micro-batch; state = one row per distinct key inside the
+      // watermark horizon
+      Streaming.replay(s, Seq(rows), "append", stateRows = n / 2) { in =>
+        val df = in.toDF("k", "toff", "v")
+          .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("toff")))
+        Streaming.dedupWithinWatermark(df, "ts", "60 seconds", Seq("k"))
+          .select("k", "v")
+      }.orderBy("k")
     }),
 
     // §2.9 single-linkage merge heights, FULL oracle: the dendrogram

@@ -1,7 +1,6 @@
 package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.core.{Tables => T}
 
@@ -10,9 +9,6 @@ import graft.core.{Tables => T}
   * scoring replays fixed weights in SQL).
   */
 object Batch27Entries {
-
-  /** Memory-sink names must be unique per run (the Batch18 pattern). */
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Fitted BM25 index per sf dir, materialized once (localCheckpoint
     * blocks survive the bench's clearCache) — the deploy contract IS
@@ -106,7 +102,6 @@ object Batch27Entries {
     // RetrievalSpec asserts this entry contains bm25_topk's top-k.
     "bm25_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = T.documents(s, dir)
       val index = bm25Index(s, dir)
       // driver-bounded: |corpus| / 97 query rows
@@ -115,28 +110,23 @@ object Batch27Entries {
           slice(graft.text.TextFns.tokens(lower(col("text"))), 1, 5)
             .as("toks"))
         .as[(Long, Seq[String])].collect()
-      val in = MemoryStream[(java.sql.Timestamp, Long, Seq[String])]
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-      in.addData(qRows.toSeq.map { case (qid, tk) => (t0, qid, tk) }: _*)
-      // watermark-advancing tail row: tokenless, matches nothing, but
-      // pushes event time far enough that the 10:00 window closes
-      in.addData((java.sql.Timestamp.valueOf("2024-01-01 12:00:00"),
-        -1L, Seq.empty[String]))
-      val qn = s"bm25_stream_sink_${sinkSeq.incrementAndGet()}"
+      // one micro-batch: the queries plus a watermark-advancing tail
+      // row — tokenless, matches nothing, but pushes event time far
+      // enough that the 10:00 window closes
+      val batch = qRows.toSeq.map { case (qid, tk) => (t0, qid, tk) } :+
+        ((java.sql.Timestamp.valueOf("2024-01-01 12:00:00"), -1L,
+          Seq.empty[String]))
       // no stateRows: the window-agg state here is per (query, doc)
       // candidate pair — Σ_t df(t), CORPUS-proportional and unknown at
       // deploy time — so state partitions keep the session default
       // (the scale-honest choice; only the checksum toggle is scoped)
-      graft.stream.Streaming.withReplayTuning(s) {
-        val q = graft.stream.Streaming.bm25StreamScores(
-            in.toDF().toDF("ts", "qid", "qtoks"), index,
+      graft.stream.Streaming.replay(s, Seq(batch), "append") { in =>
+        graft.stream.Streaming.bm25StreamScores(
+            in.toDF("ts", "qid", "qtoks"), index,
             "qid", "qtoks", "ts", "5 minutes", "10 minutes")
           .select(col("query"), col("doc"), col("score"))
-          .writeStream.format("memory").queryName(qn).outputMode("append")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(qn).orderBy("query", "doc")
+      }.orderBy("query", "doc")
     }),
 
     // datasets.Make.makeBlobs portable mode: hash-assigned clusters,

@@ -1,7 +1,6 @@
 package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.core.{Tables => T}
 import graft.stream.Streaming
@@ -19,9 +18,7 @@ import graft.stream.Streaming.TypedEvent
   */
 object Batch40Entries {
 
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private val funnelSteps = Seq("view", "click", "purchase")
+  private[entries] val funnelSteps = Seq("view", "click", "purchase")
 
   /** Replay order: the exactness contract is per-user non-decreasing
     * ts across micro-batches with equal-ts ties resolved earlier-step
@@ -44,18 +41,6 @@ object Batch40Entries {
     * [[Streaming.statePartitionsFor]] sizes state partitions from. */
   private[entries] def nUsers(evs: Array[TypedEvent]): Long =
     evs.iterator.map(_.user_id).toSet.size.toLong
-
-  private def replay[A](in: MemoryStream[A],
-                        evs: Array[A],
-                        q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    // three chunks: state must chain across micro-batch boundaries,
-    // not just within one batch
-    try evs.grouped(math.max(1, evs.length / 3 + 1)).foreach { chunk =>
-      in.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-  }
-
   /** dHash fixture: 32 real 16×16 BMPs in 4 pixel-pattern groups
     * (g = id % 4; luma = (x·(37+26g) + 11y) mod 256 — the multiplier
     * wraps several times across x, so the gradient-sign pattern
@@ -146,20 +131,15 @@ object Batch40Entries {
     // tie rule and cross-batch chaining).
     "funnel_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val stepIdx = funnelSteps.zipWithIndex.toMap
       val evs = orderedEvents(s, dir, stepIdx)
         .filter(e => stepIdx.contains(e.event_type))
-      val in = MemoryStream[TypedEvent]
-      val qn = s"funnel_stream_sink_${sinkSeq.incrementAndGet()}"
-      Streaming.withReplayTuning(s, stateRows = nUsers(evs)) {
-        val q = Streaming.funnelStream(in.toDS(), funnelSteps).toDF()
-          .writeStream.format("memory").queryName(qn).outputMode("update")
-          .start()
-        replay(in, evs, q)
-      }
-      Streaming.funnelStreamCounts(s.table(qn), funnelSteps)
-        .orderBy("step")
+      // three micro-batches: state must chain across micro-batch
+      // boundaries, not just within one batch
+      val sink = Streaming.replay(s, Streaming.microBatches(evs.toSeq, 3),
+          "update", nUsers(evs))(
+        Streaming.funnelStream(_, funnelSteps).toDF())
+      Streaming.funnelStreamCounts(sink, funnelSteps).orderBy("step")
     }),
 
     // Streaming.conversionTimeStream replayed END-TO-END: per-user
@@ -168,19 +148,12 @@ object Batch40Entries {
     // batch conversion_time's SQL verbatim.
     "conversion_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = orderedEvents(s, dir, Map("view" -> 0, "purchase" -> 1))
         .filter(e => e.event_type == "view" || e.event_type == "purchase")
-      val in = MemoryStream[TypedEvent]
-      val qn = s"conversion_stream_sink_${sinkSeq.incrementAndGet()}"
-      Streaming.withReplayTuning(s, stateRows = nUsers(evs)) {
-        val q = Streaming.conversionTimeStream(in.toDS(), "view", "purchase")
-          .toDF()
-          .writeStream.format("memory").queryName(qn).outputMode("append")
-          .start()
-        replay(in, evs, q)
-      }
-      Streaming.conversionTimeSummary(s.table(qn))
+      Streaming.conversionTimeSummary(
+        Streaming.replay(s, Streaming.microBatches(evs.toSeq, 3), "append",
+            nUsers(evs))(
+          Streaming.conversionTimeStream(_, "view", "purchase").toDF()))
     }),
 
     // Streaming.cohortRetentionStream replayed END-TO-END: per-user
@@ -192,17 +165,11 @@ object Batch40Entries {
     // correctness loop.
     "cohort_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = orderedEvents(s, dir, Map.empty)
-      val in = MemoryStream[TypedEvent]
-      val qn = s"cohort_stream_sink_${sinkSeq.incrementAndGet()}"
-      Streaming.withReplayTuning(s, stateRows = nUsers(evs)) {
-        val q = Streaming.cohortRetentionStream(in.toDS(), "week").toDF()
-          .writeStream.format("memory").queryName(qn).outputMode("append")
-          .start()
-        replay(in, evs, q)
-      }
-      Streaming.cohortRetentionCounts(s.table(qn))
+      Streaming.cohortRetentionCounts(
+          Streaming.replay(s, Streaming.microBatches(evs.toSeq, 3), "append",
+              nUsers(evs))(
+            Streaming.cohortRetentionStream(_, "week").toDF()))
         .orderBy("cohort", "period_offset")
     }),
 
@@ -265,19 +232,12 @@ object Batch40Entries {
     // once). FULL oracle — event_transitions' SQL verbatim.
     "transitions_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = orderedEvents(s, dir, Map.empty)
-      val in = MemoryStream[TypedEvent]
-      val qn = s"transitions_stream_sink_${sinkSeq.incrementAndGet()}"
-      Streaming.withReplayTuning(s, stateRows = nUsers(evs)) {
-        val q = Streaming.transitionsStream(in.toDS()).toDF()
-          .writeStream.format("memory").queryName(qn).outputMode("append")
-          .start()
-        replay(in, evs, q)
-      }
+      val sink = Streaming.replay(s, Streaming.microBatches(evs.toSeq, 3),
+          "append", nUsers(evs))(Streaming.transitionsStream(_).toDF())
       // snapshot the memory sink: a MemoryPlan View can't dedup its
       // references across the counts-vs-totals self-join
-      val pairs = s.table(qn).localCheckpoint()
+      val pairs = sink.localCheckpoint()
       val counts = pairs
         .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
       val totals = counts.groupBy("from_type").agg(sum("n").as("_tot"))
@@ -290,11 +250,11 @@ object Batch40Entries {
   )
 
   /** The md5 60-bit integer draw — the Make portable hash family. */
-  private def h(tag: Int): String =
+  private[entries] def h(tag: Int): String =
     s"CAST('0x' || substr(md5('42-' || CAST(id AS VARCHAR) || '-$tag'), 1, 15) AS BIGINT)"
 
   /** The md5 uniform in [0,1) (the make_walk oracle's spelling). */
-  private def u(tag: Int): String = s"${h(tag)} / 1152921504606846976.0"
+  private[entries] def u(tag: Int): String = s"${h(tag)} / 1152921504606846976.0"
 
   /** The dHash fixture's analytic thumbnail-pixel CTE (shared by both
     * image oracles): v(media_id, tx, ty) for the 9×8 grid. */

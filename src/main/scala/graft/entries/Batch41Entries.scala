@@ -1,7 +1,6 @@
 package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.core.{Tables => T}
 import graft.stream.Streaming
@@ -27,117 +26,44 @@ import graft.stream.Streaming.TypedEvent
   */
 object Batch41Entries {
 
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private val funnelSteps = Seq("view", "click", "purchase")
+  import Batch40Entries.{funnelSteps, h, u}
 
   /** Deterministic bounded shuffle of the events table: each event is
     * displaced from its (ts, event_id) position by an md5 draw of up
-    * to `window` slots — the per-user in-order contract is violated
+    * to 200 slots — the per-user in-order contract is violated
     * all over the replay, but the disorder stays watermark-bounded.
-    * Returns (shuffled events, watermark delay in ms that keeps every
-    * event in-watermark — the observed max lateness + 2 s margin,
-    * computed from the replay itself so the zero-drop assertion is
-    * exact — and the max event-time ms for the flush sentinels). */
+    * Replayed in 3 micro-batches (the in-order family's convention —
+    * the 200-slot disorder window straddles every batch boundary
+    * densely, so cross-batch buffering is exercised throughout) plus
+    * [[Streaming.shuffledReplay]]'s two flush batches. */
   // fixture cache: the shuffled replay is a pure function of the
   // immutable testdata dir — all four OOO entries (and every bench
   // pass) share one collect+shuffle instead of rebuilding it per run;
   // the deployed operators' cost is untouched
   private val shuffledCache =
     new java.util.concurrent.ConcurrentHashMap[String,
-      (Array[TypedEvent], Long, Long)]()
+      (Streaming.ShuffledReplay, Long)]()
 
-  private def shuffledEvents(s: SparkSession, dir: String, window: Int = 200)
-      : (Array[TypedEvent], Long, Long) =
-    shuffledCache.computeIfAbsent(dir, d => buildShuffled(s, d, window))
+  /** The shuffled replay and its state rows (one OooBuf row per
+    * distinct user). */
+  private def shuffledEvents(s: SparkSession, dir: String)
+      : (Streaming.ShuffledReplay, Long) =
+    shuffledCache.computeIfAbsent(dir, d => buildShuffled(s, d))
 
-  private def buildShuffled(s: SparkSession, dir: String, window: Int)
-      : (Array[TypedEvent], Long, Long) = {
+  private def buildShuffled(s: SparkSession, dir: String)
+      : (Streaming.ShuffledReplay, Long) = {
     import s.implicits._
     val base = T.events(s, dir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       .as[TypedEvent].collect()
       .sortBy(e => (Streaming.epochMicros(e.ts), e.event_id))
     val md5 = java.security.MessageDigest.getInstance("MD5")
-    def disp(id: Long): Int = {
+    val replay = Streaming.shuffledReplay(base, 3) { e =>
       val md = md5.digest(
-        s"ooo-$id".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      (((md(0) & 0xff) << 8) | (md(1) & 0xff)) % window
+        s"ooo-${e.event_id}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (((md(0) & 0xff) << 8) | (md(1) & 0xff)) % 200
     }
-    // keys precomputed: sortBy re-evaluates its key per comparison —
-    // O(n log n) md5 calls for a deterministic key is pure waste
-    val shuffled = base.zipWithIndex
-      .map { case (e, i) => (e, i + disp(e.event_id)) }
-      .sortBy { case (e, k) => (k, e.event_id) }
-      .map(_._1)
-    var runMax = Long.MinValue
-    var lateMax = 0L
-    shuffled.foreach { e =>
-      val m = Streaming.epochMicros(e.ts)
-      if (runMax > m) lateMax = math.max(lateMax, runMax - m)
-      runMax = math.max(runMax, m)
-    }
-    (shuffled, lateMax / 1000L + 2000L, shuffled.map(_.ts.getTime).max)
-  }
-
-  /** Replays the shuffled events in 3 micro-batches (the in-order
-    * family's convention — the 200-slot disorder window straddles
-    * every batch boundary densely, so cross-batch buffering is
-    * exercised throughout), then two flush batches: the first
-    * advances the watermark past every real event (the watermark
-    * updates at batch END), the second fires the event-time timeouts
-    * that drain every reorder buffer. Flush rows ride user_id -1 /
-    * event_type "__flush__" — dropped by the operator's own `keep`
-    * filter or by the sink-side user_id >= 0 guard, but they DO flow
-    * through the watermark node first. */
-  private def replayShuffled(in: MemoryStream[TypedEvent],
-                             evs: Array[TypedEvent], delayMs: Long,
-                             maxTsMs: Long,
-                             q: org.apache.spark.sql.streaming.StreamingQuery)
-      : Unit = {
-    try {
-      evs.grouped(math.max(1, evs.length / 3 + 1)).foreach { chunk =>
-        in.addData(chunk.toSeq: _*); q.processAllAvailable()
-      }
-      val t1 = maxTsMs + delayMs + 10000L
-      in.addData(TypedEvent(-1L, -1L, "__flush__", new java.sql.Timestamp(t1)))
-      q.processAllAvailable()
-      in.addData(TypedEvent(-1L, -2L, "__flush__",
-        new java.sql.Timestamp(t1 + 1000L)))
-      q.processAllAvailable()
-    } finally q.stop()
-  }
-
-  /** Start an OOO deploy on a fresh MemoryStream, run the shuffled
-    * replay to completion, assert the engine dropped ZERO rows as
-    * late-beyond-watermark (the delay was computed from the replay's
-    * own disorder, so the oracle match is exact, not survivorship),
-    * and return the memory-sink table name. */
-  private def runOoo(s: SparkSession, name: String, evs: Array[TypedEvent],
-                     delayMs: Long, maxTsMs: Long,
-                     mk: (MemoryStream[TypedEvent], String) => DataFrame)
-      : String = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[TypedEvent]
-    val qn = s"${name}_sink_${sinkSeq.incrementAndGet()}"
-    // state = one OooBuf row per distinct user; fullProgressRetention
-    // because the zero-drop assertion below sums recentProgress over
-    // EVERY micro-batch, not just the default last 100. The tuning
-    // scope covers start() through stop() (the stream session reads
-    // confs on the query thread).
-    val q = Streaming.withReplayTuning(s,
-        stateRows = Batch40Entries.nUsers(evs),
-        fullProgressRetention = true) {
-      val q0 = mk(in, s"$delayMs milliseconds").writeStream
-        .format("memory").queryName(qn).outputMode("append").start()
-      replayShuffled(in, evs, delayMs, maxTsMs, q0)
-      q0
-    }
-    val dropped = Streaming.droppedByWatermark(q)
-    require(dropped == 0L,
-      s"$name: engine dropped $dropped events behind the watermark")
-    qn
+    (replay, Batch40Entries.nUsers(base))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -149,14 +75,14 @@ object Batch41Entries {
     // the batch funnel's SQL verbatim — plus a zero-late-drop
     // assertion inside the entry.
     "funnel_stream_ooo" -> ((s, dir) => {
-      val (evs, delayMs, maxTsMs) = shuffledEvents(s, dir)
+      import s.implicits._
+      val (r, stateRows) = shuffledEvents(s, dir)
       val late = s.sparkContext.longAccumulator("funnel_ooo_late")
-      val qn = runOoo(s, "funnel_ooo", evs, delayMs, maxTsMs,
-        (in, delay) => Streaming.funnelStreamOoo(in.toDS(), funnelSteps,
-          delay, Some(late)).toDF())
+      val sink = Streaming.replay(s, r.chunks, "append", stateRows)(
+        Streaming.funnelStreamOoo(_, funnelSteps, r.delay, Some(late)).toDF())
       require(late.value == 0L,
         s"funnel_stream_ooo dropped ${late.value} late events")
-      Streaming.funnelStreamCounts(s.table(qn), funnelSteps).orderBy("step")
+      Streaming.funnelStreamCounts(sink, funnelSteps).orderBy("step")
     }),
 
     // Streaming.conversionTimeStreamOoo on the same shuffled replay:
@@ -165,14 +91,15 @@ object Batch41Entries {
     // position, so out-of-order arrival can't emit a wrong delay.
     // FULL oracle — the batch conversion_time's SQL verbatim.
     "conversion_stream_ooo" -> ((s, dir) => {
-      val (evs, delayMs, maxTsMs) = shuffledEvents(s, dir)
+      import s.implicits._
+      val (r, stateRows) = shuffledEvents(s, dir)
       val late = s.sparkContext.longAccumulator("conversion_ooo_late")
-      val qn = runOoo(s, "conversion_ooo", evs, delayMs, maxTsMs,
-        (in, delay) => Streaming.conversionTimeStreamOoo(in.toDS(), "view",
-          "purchase", delay, Some(late)).toDF())
+      val sink = Streaming.replay(s, r.chunks, "append", stateRows)(
+        Streaming.conversionTimeStreamOoo(_, "view", "purchase", r.delay,
+          Some(late)).toDF())
       require(late.value == 0L,
         s"conversion_stream_ooo dropped ${late.value} late events")
-      Streaming.conversionTimeSummary(s.table(qn))
+      Streaming.conversionTimeSummary(sink)
     }),
 
     // Streaming.cohortRetentionStreamOoo on the same shuffled replay:
@@ -181,14 +108,15 @@ object Batch41Entries {
     // MIN(period) even though the first ARRIVAL may be a later event.
     // FULL oracle — the batch cohort_retention's SQL verbatim.
     "cohort_stream_ooo" -> ((s, dir) => {
-      val (evs, delayMs, maxTsMs) = shuffledEvents(s, dir)
+      import s.implicits._
+      val (r, stateRows) = shuffledEvents(s, dir)
       val late = s.sparkContext.longAccumulator("cohort_ooo_late")
-      val qn = runOoo(s, "cohort_ooo", evs, delayMs, maxTsMs,
-        (in, delay) => Streaming.cohortRetentionStreamOoo(in.toDS(), "week",
-          delay, Some(late)).toDF())
+      val sink = Streaming.replay(s, r.chunks, "append", stateRows)(
+        Streaming.cohortRetentionStreamOoo(_, "week", r.delay, Some(late))
+          .toDF())
       require(late.value == 0L,
         s"cohort_stream_ooo dropped ${late.value} late events")
-      Streaming.cohortRetentionCounts(s.table(qn).filter(col("user_id") >= 0))
+      Streaming.cohortRetentionCounts(sink.filter(col("user_id") >= 0))
         .orderBy("cohort", "period_offset")
     }),
 
@@ -197,16 +125,16 @@ object Batch41Entries {
     // consecutive-pair emission is order-critical. FULL oracle —
     // event_transitions' SQL verbatim.
     "transitions_stream_ooo" -> ((s, dir) => {
-      val (evs, delayMs, maxTsMs) = shuffledEvents(s, dir)
+      import s.implicits._
+      val (r, stateRows) = shuffledEvents(s, dir)
       val late = s.sparkContext.longAccumulator("transitions_ooo_late")
-      val qn = runOoo(s, "transitions_ooo", evs, delayMs, maxTsMs,
-        (in, delay) => Streaming.transitionsStreamOoo(in.toDS(), delay,
-          Some(late)).toDF())
+      val sink = Streaming.replay(s, r.chunks, "append", stateRows)(
+        Streaming.transitionsStreamOoo(_, r.delay, Some(late)).toDF())
       require(late.value == 0L,
         s"transitions_stream_ooo dropped ${late.value} late events")
       // snapshot the memory sink: a MemoryPlan View can't dedup its
       // references across the counts-vs-totals self-join
-      val pairs = s.table(qn).filter(col("user_id") >= 0).localCheckpoint()
+      val pairs = sink.filter(col("user_id") >= 0).localCheckpoint()
       val counts = pairs
         .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
       val totals = counts.groupBy("from_type").agg(sum("n").as("_tot"))
@@ -664,14 +592,6 @@ object Batch41Entries {
         |  ROUND((q - p) * ln(q / p), 6) AS psi_term
         |FROM s ORDER BY category""".stripMargin
   )
-
-  /** The md5 60-bit integer draw — the Make portable hash family
-    * (the Batch40 oracle spelling). */
-  private def h(tag: Int): String =
-    s"CAST('0x' || substr(md5('42-' || CAST(id AS VARCHAR) || '-$tag'), 1, 15) AS BIGINT)"
-
-  /** The md5 uniform in [0,1). */
-  private def u(tag: Int): String = s"${h(tag)} / 1152921504606846976.0"
 
   /** Round-9 Box–Muller z on the (tag, tag+10000) uniform pair — the
     * Batch20 gaussian spelling, the NormField kernel. */

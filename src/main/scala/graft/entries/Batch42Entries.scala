@@ -1,7 +1,6 @@
 package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.core.{Tables => T}
 import graft.io.{Npy, Pickle}
@@ -25,8 +24,6 @@ import graft.ml.Similarity
   *    family's streaming twin, gofast/dataops/quality.py:1863).
   */
 object Batch42Entries {
-
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** One shard export per (dir, JVM): the testdata is immutable, so
     * bench passes re-read the same files instead of re-writing them —
@@ -180,53 +177,38 @@ object Batch42Entries {
     // oracle.
     "drift_psi_cat_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val o = T.orders(s, dir)
       val refCounts = graft.stats.DataAudit.categoryCounts(
         o.filter(col("o_orderkey") % 2 === 0), "o_orderpriority", "_cr")
       val cur = o.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderpriority").cast("string")).as[String].collect()
-      val in = MemoryStream[String]
-      val qn = s"psi_cat_sink_${sinkSeq.incrementAndGet()}"
       // state = one count row per live category (exact, driver-known)
-      graft.stream.Streaming.withReplayTuning(s,
-          stateRows = cur.distinct.length.toLong) {
-        val q = graft.stats.DataAudit.psiCatStreamCounts(
-            in.toDF().toDF("o_orderpriority"), "o_orderpriority")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").start()
-        try cur.grouped(cur.length / 3 + 1).foreach { chunk =>
-          in.addData(chunk.toSeq: _*); q.processAllAvailable()
-        } finally q.stop()
-      }
-      graft.stats.DataAudit.psiCatOfCounts(refCounts, s.table(qn))
+      val counts = graft.stream.Streaming.replay(s,
+          graft.stream.Streaming.microBatches(cur.toSeq, 3), "complete",
+          stateRows = cur.distinct.length.toLong)(in =>
+        graft.stats.DataAudit.psiCatStreamCounts(
+          in.toDF("o_orderpriority"), "o_orderpriority"))
+      graft.stats.DataAudit.psiCatOfCounts(refCounts, counts)
         .orderBy("category")
     }),
 
     "drift_psi_stream" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val li = T.lineitem(s, dir)
       val ref = li.filter(col("l_orderkey") % 2 === 0)
         .select("l_extendedprice")
       val edges = graft.stats.DataAudit.psiFitEdges(ref, "l_extendedprice")
       val cur = li.filter(col("l_orderkey") % 2 === 1)
         .select(col("l_extendedprice").cast("double")).as[Double].collect()
-      val in = MemoryStream[Double]
-      val qn = s"psi_sink_${sinkSeq.incrementAndGet()}"
       // state = one count row per PSI bin (the fitted decile grid)
-      graft.stream.Streaming.withReplayTuning(s, stateRows = 10L) {
-        val q = graft.stats.DataAudit.psiStreamCounts(
-            in.toDF().toDF("l_extendedprice"), "l_extendedprice", edges)
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").start()
-        try cur.grouped(cur.length / 3 + 1).foreach { chunk =>
-          in.addData(chunk.toSeq: _*); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val counts = graft.stream.Streaming.replay(s,
+          graft.stream.Streaming.microBatches(cur.toSeq, 3), "complete",
+          stateRows = 10L)(in =>
+        graft.stats.DataAudit.psiStreamCounts(
+          in.toDF("l_extendedprice"), "l_extendedprice", edges))
       graft.stats.DataAudit.psiOfCounts(
           graft.stats.DataAudit.binCounts(ref, "l_extendedprice", edges, "_cr"),
-          s.table(qn), bins = 10)
+          counts, bins = 10)
         .orderBy("bin")
     })
   )

@@ -254,9 +254,7 @@ object Batch46Entries {
     }),
 
     "media_dedup_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
       // 50 bounded fixture rows: the closed-form corpus collected once
       val base = Batch40Entries.dhashBmps(s)
@@ -266,29 +264,21 @@ object Batch46Entries {
         (base.map { case (id, c) => (ts, id, c) } ++
           base.filter(_._1 < 16).map { case (id, c) => (ts, 100L + id, c) } ++
           Seq(200L, 201L).map(id => (ts, id, Array[Byte](9, 9, 9)))).toSeq
-      val in = MemoryStream[(java.sql.Timestamp, Long, Array[Byte])]
-      val qn = s"media_dedup_sink_${mddSinkSeq.incrementAndGet()}"
-      // state = one row per distinct fingerprint in the horizon,
-      // bounded by the replay's row count (driver-known)
-      graft.stream.Streaming.withReplayTuning(s,
-          stateRows = rows.length.toLong) {
-        val q = graft.mm.Multimodal.mediaDedupStream(
-            in.toDF().toDF("ts", "media_id", "content"), "ts", "10 minutes")
-          .select("media_id", "content")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try rows.grouped(17).foreach { ch =>
-          in.addData(ch: _*); q.processAllAvailable()
-        } finally q.stop()
-      }
-      graft.mm.Multimodal.imageDHash(s.table(qn))
+      // three micro-batches of 17, 17 and 16 rows; state = one row
+      // per distinct fingerprint in the horizon, bounded by the
+      // replay's row count (driver-known)
+      val kept = graft.stream.Streaming.replay(s,
+          graft.stream.Streaming.microBatches(rows, 3), "append",
+          stateRows = rows.length.toLong)(in =>
+        graft.mm.Multimodal.mediaDedupStream(
+            in.toDF("ts", "media_id", "content"), "ts", "10 minutes")
+          .select("media_id", "content"))
+      graft.mm.Multimodal.imageDHash(kept)
         .select(col("ok"), col("b0"), col("b1"), col("b2"), col("b3"))
         .orderBy(col("ok").desc, col("b0"), col("b1"), col("b2"),
           col("b3"))
     })
   )
-
-  private val mddSinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
   val oracleSql: Map[String, String] = Map(
     // cosine_topk's oracle verbatim: the Arrow vector round-trip must

@@ -149,23 +149,6 @@ object Sampling {
   val DrawB: Long = 656901407040548081L
   val DrawC: Long = 98764321261L
 
-  /** Deterministic pseudo-random index in [0, n) for draw key `k`.
-    *
-    * Quadratic congruential mixer mod the Mersenne prime P = 2^61 − 1:
-    * {{{ idx = ((A·(k² mod P) + B·k + C) mod P) mod n }}}
-    * computed in exact decimal(38,0) arithmetic, so DuckDB (HUGEINT)
-    * reproduces it bit-for-bit — an xor/shift mixer (splitmix64) can't
-    * be mirrored exactly in portable SQL, and a purely LINEAR map
-    * (the classic Knuth hash) is low-discrepancy over sequential keys:
-    * it covers rows near-evenly per replicate, destroying the
-    * multinomial resampling variance a bootstrap needs. The k² term
-    * supplies the non-linearity (quadratic Weyl sums are O(√N)), so
-    * per-replicate draw counts are near-Poisson.
-    *
-    * Valid for any k < 2^63 (k² ≤ 8.5e37 < 10^38 fits decimal(38,0);
-    * A·(k² mod P) + B·k + C ≤ 4.2e36 + 6.1e36 < 10^38). Modulo bias
-    * after the final `% n` is ≤ n/P ≈ 4.3e-7 even at n = 10^12 rows.
-    */
   /** a·b mod [[DrawP]] in primitive 64-bit arithmetic, for
     * 0 ≤ a, b < DrawP: `Math.multiplyHigh` gives the 128-bit product,
     * and 2^61 ≡ 1 (mod 2^61 − 1) folds it in one step —
@@ -180,6 +163,29 @@ object Sampling {
     if (x >= DrawP) x - DrawP else x
   }
 
+  /** Deterministic pseudo-random index in [0, n) for draw key `k`.
+    *
+    * Quadratic congruential mixer mod the Mersenne prime P = 2^61 − 1:
+    * {{{ idx = ((A·(k² mod P) + B·k + C) mod P) mod n }}}
+    * computed in exact decimal(38,0) arithmetic, so DuckDB (HUGEINT)
+    * reproduces it bit-for-bit — an xor/shift mixer (splitmix64) can't
+    * be mirrored exactly in portable SQL, and a purely LINEAR map
+    * (the classic Knuth hash) is low-discrepancy over sequential keys:
+    * it covers rows near-evenly per replicate, destroying the
+    * multinomial resampling variance a bootstrap needs. The k² term
+    * supplies the non-linearity (quadratic Weyl sums are O(√N)), so
+    * per-replicate draw counts are near-Poisson.
+    *
+    * Valid for every long k (|k|² ≤ 2^126 ≈ 8.5e37 < 10^38 fits
+    * decimal(38,0); A·(k² mod P) + |B·k| + C ≤ 4.2e36 + 6.1e36 <
+    * 10^38). Each `mod P` is the non-negative residue, so a negative k
+    * also lands in [0, n). Modulo bias after the final `% n` is ≤ n/P
+    * ≈ 4.3e-7 even at n = 10^12 rows.
+    *
+    * `k` must be non-null: the UDF is declared non-nullable, so a null
+    * key would reach downstream code as a value the schema says cannot
+    * be there. Both callers pass `spark.range` ids.
+    */
   private[graft] def drawIndex(k: Column, n: Long): Column = {
     // Primitive-long evaluation of the SAME residues the documented
     // decimal(38,0) tree defines (and the DuckDB oracle replays):
@@ -193,7 +199,7 @@ object Sampling {
     // bootstrap_ci's 3M-draw join (measured r19: taskRunSum 18.8 s →
     // 1.3 s, query 2.5 s → 1.3 s steady-state).
     val f = udf { (k: Long) =>
-      val kr = k % DrawP
+      val kr = Math.floorMod(k, DrawP)
       val t = mulmodP(DrawA, mulmodP(kr, kr))
       val u = mulmodP(DrawB, kr)
       val s0 = t + u

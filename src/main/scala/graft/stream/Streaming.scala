@@ -1,6 +1,7 @@
 package graft.stream
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
@@ -573,21 +574,12 @@ object Streaming {
     * `spark.sql.streaming.numRecentProgressUpdates` (default 100)
     * micro-batches — a replay longer than that silently undercounts.
     * Callers asserting zero drops must either stay under the window
-    * (the entry replays are 5 batches) or raise the conf BEFORE
-    * starting the query ([[withFullProgressRetention]]). */
+    * or raise the conf BEFORE starting the query, as
+    * [[withReplayTuning]] does for every [[replay]]. */
   def droppedByWatermark(q: StreamingQuery): Long =
     q.recentProgress.iterator
       .flatMap(_.stateOperators.iterator)
       .map(_.numRowsDroppedByWatermark).sum
-
-  /** Raise the progress-retention window so [[droppedByWatermark]]
-    * sums over EVERY micro-batch of a bounded replay, not just the
-    * last 100 — call before `start()` on any query whose late-drop
-    * count backs an assertion. */
-  def withFullProgressRetention(spark: SparkSession,
-                                maxBatches: Int = 100000): Unit =
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-      maxBatches.toString)
 
   /** State partitions for a stateful replay whose expected state row
     * count is known at deploy time: enough partitions to keep per-
@@ -634,11 +626,10 @@ object Streaming {
     * partition per micro-batch). Durable deploys (kill-restart
     * recovery tests, real clusters) keep the default ON.
     *
-    * `fullProgressRetention` additionally raises the progress-
-    * retention window for the duration (see
-    * [[withFullProgressRetention]]) — scoped the same way. */
-  def withReplayTuning[A](spark: SparkSession, stateRows: Long = -1L,
-                          fullProgressRetention: Boolean = false)
+    * The progress-retention window is raised for the duration too —
+    * scoped the same way — so [[droppedByWatermark]] sums over EVERY
+    * micro-batch of the replay, not just the last 100. */
+  def withReplayTuning[A](spark: SparkSession, stateRows: Long = -1L)
                          (run: => A): A = {
     val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     val spKey = "spark.sql.shuffle.partitions"
@@ -647,11 +638,97 @@ object Streaming {
     spark.conf.set(ckKey, "false")
     if (stateRows >= 0L)
       spark.conf.set(spKey, statePartitionsFor(spark, stateRows).toString)
-    if (fullProgressRetention) spark.conf.set(prKey, "100000")
+    spark.conf.set(prKey, "100000")
     try run
     finally before.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
+  }
+
+  /** Memory-sink names must be unique per replay: a bench pass or a
+    * test suite replays the same entry many times in one session. */
+  private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Bounded replay of a streaming deploy — the one path every
+    * registry stream entry and ScaleProbe's stream axis goes through.
+    *
+    * `deploy` is applied to a fresh MemoryStream and started into a
+    * memory sink with `outputMode`, inside [[withReplayTuning]] (with
+    * `stateRows` sizing the state partitions; -1 keeps the session's
+    * partition count). Each element of `chunks` is added as ONE
+    * micro-batch and drained with `processAllAvailable` before the
+    * next, so the chunk list IS the micro-batch layout. A watermarked
+    * deploy that must release everything it buffers ends `chunks`
+    * with flush sentinels (see [[shuffledReplay]]): rows far past
+    * every real event that advance the watermark, which updates at
+    * batch END, so the last sentinel's batch fires the timeouts.
+    *
+    * The query is stopped even when a batch fails. The replay then
+    * `require`s that the engine dropped ZERO rows as late-beyond-
+    * watermark, so an oracle match is exact, not survivorship. The
+    * sink's rows come back as a DataFrame and the sink's temp view is
+    * dropped: a replay leaves no view, active query or conf behind. */
+  def replay[A: Encoder](spark: SparkSession, chunks: Seq[Seq[A]],
+                         outputMode: String, stateRows: Long = -1L)
+                        (deploy: Dataset[A] => DataFrame): DataFrame = {
+    implicit val sqlCtx: SQLContext = spark.sqlContext
+    val in = MemoryStream[A]
+    val name = s"replay_sink_${replaySeq.incrementAndGet()}"
+    try {
+      val dropped = withReplayTuning(spark, stateRows) {
+        val q = deploy(in.toDS()).writeStream.format("memory")
+          .queryName(name).outputMode(outputMode).start()
+        try chunks.foreach { c => in.addData(c: _*); q.processAllAvailable() }
+        finally q.stop()
+        droppedByWatermark(q)
+      }
+      require(dropped == 0L,
+        s"replay dropped $dropped rows behind the watermark")
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
+  }
+
+  /** `xs` cut into `n` contiguous micro-batches of `xs.length / n + 1`
+    * rows each (fewer batches when `xs` is short). */
+  def microBatches[A](xs: Seq[A], n: Int): Seq[Seq[A]] =
+    xs.grouped(xs.length / n + 1).toSeq
+
+  /** The chunks and watermark delay of a [[shuffledReplay]]. */
+  case class ShuffledReplay(chunks: Seq[Seq[TypedEvent]], delay: String)
+
+  /** A deterministic out-of-order replay of `evs` (given in event-time
+    * order) for the `*Ooo` deploys. Event i moves to sort position
+    * i + `disp(e)`, so the disorder is bounded by the largest
+    * displacement; `disp` is called once per event, in order. The
+    * watermark `delay` is the replay's own observed max lateness plus
+    * a 2 s margin, so no event is late. The shuffled events come as
+    * `batches` micro-batches, then two flush batches: user_id -1 /
+    * event_type "__flush__" rows, dropped by the deploys' own filters
+    * after they pass the watermark node. The first moves the
+    * watermark past every real event; the second fires the event-time
+    * timeouts that drain every reorder buffer. */
+  def shuffledReplay(evs: Array[TypedEvent], batches: Int)
+                    (disp: TypedEvent => Int): ShuffledReplay = {
+    // keys precomputed: sortBy re-evaluates its key per comparison
+    val shuffled = evs.zipWithIndex
+      .map { case (e, i) => (e, i + disp(e)) }
+      .sortBy { case (e, k) => (k, e.event_id) }
+      .map(_._1)
+    var runMax = Long.MinValue
+    var lateMax = 0L
+    shuffled.foreach { e =>
+      val m = epochMicros(e.ts)
+      if (runMax > m) lateMax = math.max(lateMax, runMax - m)
+      runMax = math.max(runMax, m)
+    }
+    val delayMs = lateMax / 1000L + 2000L
+    val t1 = shuffled.map(_.ts.getTime).max + delayMs + 10000L
+    val flush = Seq(
+      Seq(TypedEvent(-1L, -1L, "__flush__", new java.sql.Timestamp(t1))),
+      Seq(TypedEvent(-1L, -2L, "__flush__",
+        new java.sql.Timestamp(t1 + 1000L))))
+    ShuffledReplay(microBatches(shuffled.toSeq, batches) ++ flush,
+      s"$delayMs milliseconds")
   }
 
   /** Reorder-buffer state: the held not-yet-ripe events plus the

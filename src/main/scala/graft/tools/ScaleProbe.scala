@@ -488,39 +488,32 @@ object ScaleProbe {
     // what the driver holds; the deploy itself is source-agnostic.)
     sys.env.get("SPARK_GRAFT_EVS_N").map(_.toInt).filter(_ > 0).foreach { n =>
       import spark.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      import graft.stream.Streaming
+      import graft.stream.Streaming.TypedEvent
       val nUsers = math.max(n / 100, 1)
       val types = Array("view", "click", "purchase", "signup")
+      val steps = Seq("view", "click", "purchase")
       val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
       val evs = Array.tabulate(n) { i =>
-        graft.stream.Streaming.TypedEvent(
+        TypedEvent(
           (i * 2654435761L % nUsers).abs, i.toLong,
           types(((i * 40503L) % 4).toInt.abs),
           new java.sql.Timestamp(base + i * 1000L))
       } // already ts-ordered by construction
-      def timeIt(name: String)(mk: MemoryStream[graft.stream.Streaming.TypedEvent] =>
-          org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-        val in = MemoryStream[graft.stream.Streaming.TypedEvent]
-        val t0 = System.nanoTime()
-        val q = mk(in)
-        evs.grouped(n / 5 + 1).foreach { chunk =>
-          in.addData(chunk.toSeq: _*); q.processAllAvailable()
-        }
-        q.stop()
+      // `extra` is read after `run`, so it can report run-time gauges
+      def timeIt(name: String, extra: => String = "")(run: => Unit): Unit = {
+        val t0 = System.nanoTime(); run
         val sec = math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
-        println(f"""EVSPROBE {"op":"$name","events":$n,"sec":$sec%.3f}""")
+        println(f"""EVSPROBE {"op":"$name","events":$n$extra,"sec":$sec%.3f}""")
       }
-      timeIt("funnel_stream") { in =>
-        graft.stream.Streaming.funnelStream(in.toDS(),
-            Seq("view", "click", "purchase")).toDF()
-          .writeStream.format("memory")
-          .queryName(s"evs_fu_$n").outputMode("update").start()
+      val inOrder = Streaming.microBatches(evs.toSeq, 5)
+      timeIt("funnel_stream") {
+        Streaming.replay(spark, inOrder, "update", nUsers)(
+          Streaming.funnelStream(_, steps).toDF())
       }
-      timeIt("transitions_stream") { in =>
-        graft.stream.Streaming.transitionsStream(in.toDS()).toDF()
-          .writeStream.format("memory")
-          .queryName(s"evs_tr_$n").outputMode("append").start()
+      timeIt("transitions_stream") {
+        Streaming.replay(spark, inOrder, "append", nUsers)(
+          Streaming.transitionsStream(_).toDF())
       }
       // OOO variants (round 14): the same corpus SHUFFLED within a
       // bounded window, fed to the watermarked reorder-buffer deploys.
@@ -528,53 +521,14 @@ object ScaleProbe {
       // (~window seconds of events), NOT stream length, so wall should
       // stay a small constant over the in-order deploys at every n.
       val disp = new scala.util.Random(7)
-      // precompute displaced keys: sortBy re-evaluates its key function
-      // during comparisons, so a stateful RNG inside it violates the
-      // sort contract (TimSort throws at this n)
-      val shuffled = evs.zipWithIndex
-        .map { case (e, i) => (e, i + disp.nextInt(500)) }
-        .sortBy { case (e, k) => (k, e.event_id) }
-        .map(_._1)
-      var runMax = Long.MinValue; var lateMax = 0L
-      shuffled.foreach { e =>
-        val m = graft.stream.Streaming.epochMicros(e.ts)
-        if (runMax > m) lateMax = math.max(lateMax, runMax - m)
-        runMax = math.max(runMax, m)
+      val ooo = Streaming.shuffledReplay(evs, 5)(_ => disp.nextInt(500))
+      timeIt("funnel_stream_ooo") {
+        Streaming.replay(spark, ooo.chunks, "append", nUsers)(
+          Streaming.funnelStreamOoo(_, steps, ooo.delay).toDF())
       }
-      val delayMs = lateMax / 1000L + 2000L
-      val maxTsMs = shuffled.map(_.ts.getTime).max
-      def timeItOoo(name: String)(
-          mk: (MemoryStream[graft.stream.Streaming.TypedEvent], String) =>
-            org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-        val in = MemoryStream[graft.stream.Streaming.TypedEvent]
-        val t0 = System.nanoTime()
-        val q = mk(in, s"$delayMs milliseconds")
-        shuffled.grouped(n / 5 + 1).foreach { chunk =>
-          in.addData(chunk.toSeq: _*); q.processAllAvailable()
-        }
-        val t1 = maxTsMs + delayMs + 10000L
-        in.addData(graft.stream.Streaming.TypedEvent(-1L, -1L, "__flush__",
-          new java.sql.Timestamp(t1)))
-        q.processAllAvailable()
-        in.addData(graft.stream.Streaming.TypedEvent(-1L, -2L, "__flush__",
-          new java.sql.Timestamp(t1 + 1000L)))
-        q.processAllAvailable()
-        q.stop()
-        val dropped = graft.stream.Streaming.droppedByWatermark(q)
-        require(dropped == 0L, s"$name dropped $dropped in-horizon events")
-        val sec = math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
-        println(f"""EVSPROBE {"op":"$name","events":$n,"dropped":$dropped,"sec":$sec%.3f}""")
-      }
-      timeItOoo("funnel_stream_ooo") { (in, d) =>
-        graft.stream.Streaming.funnelStreamOoo(in.toDS(),
-            Seq("view", "click", "purchase"), d).toDF()
-          .writeStream.format("memory")
-          .queryName(s"evs_fuo_$n").outputMode("append").start()
-      }
-      timeItOoo("transitions_stream_ooo") { (in, d) =>
-        graft.stream.Streaming.transitionsStreamOoo(in.toDS(), d).toDF()
-          .writeStream.format("memory")
-          .queryName(s"evs_tro_$n").outputMode("append").start()
+      timeIt("transitions_stream_ooo") {
+        Streaming.replay(spark, ooo.chunks, "append", nUsers)(
+          Streaming.transitionsStreamOoo(_, ooo.delay).toDF())
       }
       // SKEW variant (round 15): one hot user carries ~50% of ALL
       // events, displaced within a window of n/4 slots — the horizon
@@ -584,49 +538,21 @@ object ScaleProbe {
       // deploys under power-law users; the per-user cap refuses past
       // maxBufferPerUser instead of OOMing an executor.
       val skewEvs = Array.tabulate(n) { i =>
-        graft.stream.Streaming.TypedEvent(
+        TypedEvent(
           if (i % 2 == 0) 0L else (i * 2654435761L % nUsers).abs + 1L,
           i.toLong, types(((i * 40503L) % 4).toInt.abs),
           new java.sql.Timestamp(base + i * 1000L))
       }
       val dispS = new scala.util.Random(11)
-      val skewShuffled = skewEvs.zipWithIndex
-        .map { case (e, i) => (e, i + dispS.nextInt(math.max(n / 4, 1))) }
-        .sortBy { case (e, k) => (k, e.event_id) }
-        .map(_._1)
-      var runMaxS = Long.MinValue; var lateMaxS = 0L
-      skewShuffled.foreach { e =>
-        val m = graft.stream.Streaming.epochMicros(e.ts)
-        if (runMaxS > m) lateMaxS = math.max(lateMaxS, runMaxS - m)
-        runMaxS = math.max(runMaxS, m)
-      }
-      val delayMsS = lateMaxS / 1000L + 2000L
-      val maxTsMsS = skewShuffled.map(_.ts.getTime).max
-      locally {
-        val gauge = new graft.stream.Streaming.MaxAccumulator
-        spark.sparkContext.register(gauge, "ooo_held_peak")
-        val in = MemoryStream[graft.stream.Streaming.TypedEvent]
-        val t0 = System.nanoTime()
-        val q = graft.stream.Streaming.transitionsStreamOoo(in.toDS(),
-            s"$delayMsS milliseconds", heldGauge = Some(gauge)).toDF()
-          .writeStream.format("memory")
-          .queryName(s"evs_trs_$n").outputMode("append").start()
-        skewShuffled.grouped(n / 5 + 1).foreach { chunk =>
-          in.addData(chunk.toSeq: _*); q.processAllAvailable()
-        }
-        val t1 = maxTsMsS + delayMsS + 10000L
-        in.addData(graft.stream.Streaming.TypedEvent(-1L, -1L, "__flush__",
-          new java.sql.Timestamp(t1)))
-        q.processAllAvailable()
-        in.addData(graft.stream.Streaming.TypedEvent(-1L, -2L, "__flush__",
-          new java.sql.Timestamp(t1 + 1000L)))
-        q.processAllAvailable()
-        q.stop()
-        val dropped = graft.stream.Streaming.droppedByWatermark(q)
-        require(dropped == 0L,
-          s"transitions_stream_ooo_skew dropped $dropped in-horizon events")
-        val sec = math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
-        println(f"""EVSPROBE {"op":"transitions_stream_ooo_skew","events":$n,"hot_user_share":0.5,"disorder_slots":${math.max(n / 4, 1)},"peak_user_buffer":${gauge.value},"dropped":$dropped,"sec":$sec%.3f}""")
+      val window = math.max(n / 4, 1)
+      val skew = Streaming.shuffledReplay(skewEvs, 5)(_ => dispS.nextInt(window))
+      val gauge = new Streaming.MaxAccumulator
+      spark.sparkContext.register(gauge, "ooo_held_peak")
+      timeIt("transitions_stream_ooo_skew", s""","hot_user_share":0.5,""" +
+          s""""disorder_slots":$window,"peak_user_buffer":${gauge.value}""") {
+        Streaming.replay(spark, skew.chunks, "append", nUsers + 1L)(
+          Streaming.transitionsStreamOoo(_, skew.delay,
+            heldGauge = Some(gauge)).toDF())
       }
       spark.stop()
       return

@@ -78,15 +78,17 @@ class Batch15Spec extends SparkSpec {
   test("drawIndex long-arithmetic body matches the documented decimal tree") {
     // the decimal(38,0) tree is the SPEC (it is what the DuckDB oracle
     // replays); the shipped body is primitive-long mulmod — assert
-    // bit-identical indexes over small, large and near-2^63 keys
+    // bit-identical indexes over small, large and near-2^63 keys, and
+    // over negative keys down to -2^63, where `mod P` is the
+    // non-negative residue (pmod; equal to % for the other keys)
     def decimalDraw(k: org.apache.spark.sql.Column, n: Long)
         : org.apache.spark.sql.Column = {
       val kd = k.cast("decimal(19,0)")
       val p = lit(Sampling.DrawP).cast("decimal(19,0)")
-      val h1 = (kd * kd) % p
-      val h = (h1 * lit(Sampling.DrawA).cast("decimal(19,0)")
+      val h1 = pmod(kd * kd, p)
+      val h = pmod(h1 * lit(Sampling.DrawA).cast("decimal(19,0)")
         + kd * lit(Sampling.DrawB).cast("decimal(19,0)")
-        + lit(Sampling.DrawC).cast("decimal(19,0)")) % p
+        + lit(Sampling.DrawC).cast("decimal(19,0)"), p)
       (h % lit(n).cast("decimal(19,0)")).cast("long")
     }
     val ks = spark.range(200000)
@@ -95,6 +97,11 @@ class Batch15Spec extends SparkSpec {
         .select((lit(Long.MaxValue) - col("id") * 982451653L).as("id")))
       .unionAll(spark.range(200)
         .select((lit(Sampling.DrawP) + col("id") * 7919L - 100L).as("id")))
+      .unionAll(spark.range(1, 2000).select((-col("id")).as("id")))
+      .unionAll(spark.range(200)
+        .select((lit(Long.MinValue) + col("id") * 982451653L).as("id")))
+      .unionAll(spark.range(200)
+        .select((lit(-Sampling.DrawP) + col("id") * 7919L - 100L).as("id")))
     for (n <- Seq(7L, 1000000L, 3037000499L)) {
       val mismatches = ks
         .select(Sampling.drawIndex(col("id"), n).as("a"),

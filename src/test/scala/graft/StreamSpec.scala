@@ -1176,18 +1176,31 @@ class StreamSpec extends SparkSpec {
     val before = keys.map(k => k -> spark.conf.get(k))
     // inside the scope the tuned values are live (the started query's
     // cloned session captures them)
-    Streaming.withReplayTuning(spark, stateRows = 1L,
-        fullProgressRetention = true) {
+    Streaming.withReplayTuning(spark, stateRows = 1L) {
       assert(spark.conf.get(keys(0)) === "false")
       assert(spark.conf.get(keys(1)) === "1")
       assert(spark.conf.get(keys(2)) === "100000")
     }
     assert(keys.map(k => k -> spark.conf.get(k)) === before)
-    // and a REAL replay entry (temp checkpoint, memory sink, scoped
-    // tuning inside) leaves the session conf exactly as it found it —
-    // durable-checkpoint queries started afterwards keep the
-    // corruption guard ON
-    graft.SparkEntry.queries("drift_psi_cat_stream")(spark, sf).collect()
+    // and every REAL replay entry (temp checkpoint, memory sink, scoped
+    // tuning inside), run twice, leaves the session exactly as it found
+    // it: the same confs — durable-checkpoint queries started
+    // afterwards keep the corruption guard ON — no memory-sink temp
+    // view and no active query
+    def views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val viewsBefore = views
+    val activeBefore = spark.streams.active.map(_.id).toSet
+    val entries = Seq("funnel_stream", "conversion_stream", "cohort_stream",
+      "transitions_stream", "funnel_stream_ooo", "conversion_stream_ooo",
+      "cohort_stream_ooo", "transitions_stream_ooo", "stream_dedup",
+      "bm25_stream", "drift_psi_cat_stream", "drift_psi_stream",
+      "media_dedup_stream")
+    for (_ <- 1 to 2; e <- entries)
+      graft.SparkEntry.queries(e)(spark, sf).collect()
+    assert(views === viewsBefore, "a replay entry leaked temp views")
+    assert(spark.streams.active.map(_.id).toSet === activeBefore,
+      "a replay entry left a query running")
     assert(keys.map(k => k -> spark.conf.get(k)) === before,
       "a replay entry leaked session confs")
   }
