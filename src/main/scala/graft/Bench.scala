@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.{GraftSession, Json}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
@@ -60,20 +60,13 @@ object Bench {
         .split("\\s+").headOption.flatMap(_.toDoubleOption)
       catch { case _: Throwable => None }).getOrElse(0.0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the host's real core count, not a fixed "4": off-driver
-    // isolated re-times (run without env vars) used to silently bench
-    // local[4] AND stamp contended:true on a quiet box because the
-    // contention threshold (cpus/4) was computed from the fake 4.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    // the contention threshold (cpus/4) is computed from the real
+    // core count, never a fixed "4"
+    val cpus = GraftSession.cores
     // dev-only subset filter (comma-separated names); driver leaves unset
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(name: String, dir: String): Unit =
@@ -161,12 +154,6 @@ object Bench {
     // separator under e.g. de_DE would break it.
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val allQs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -181,9 +168,9 @@ object Bench {
     // carries every failed name (short messages) within the driver's
     // ~2000-char tail window — truncated messages beat a truncated line.
     if (errors.nonEmpty)
-      println("BENCHERR " + errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+      println("BENCHERR " + errors.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
         .mkString("{", ",", "}"))
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v.take(40))}" }
+    val errJson = errors.map { case (k, v) => s"${Json.str(k)}:${Json.str(v.take(40))}" }
       .mkString("{", ",", "}")
     // Headline selection (r12 verdict: the static list under-sampled
     // the heavy tail — basket_lift at 4.7 s was absent while
@@ -197,7 +184,7 @@ object Bench {
       .sortBy { case (n, t) => (-t, n) }.map(_._1)
     val reps = headline.filter(n =>
       results.contains(n) && !heavy.contains(n))
-    val loadsJson = passLoads.map(jstr).mkString("[", ",", "]")
+    val loadsJson = passLoads.map(Json.str).mkString("[", ",", "]")
     // Self-adjudicating contention guard (the r13 267.2s artifact was
     // taken under loadavg ~4 with concurrent builds and needed manual
     // re-timing to dismiss): stamp contended=true when the PRE-RUN
@@ -208,11 +195,10 @@ object Bench {
     // decaying load from the previous pass — r15's first quiet-box
     // closing run stamped contended at pass-2 loadavg 9.24/32 with
     // the box at 0.07 before launch.)
-    val cpuCount = cpus.toDoubleOption.getOrElse(4.0)
-    val contended = startLoad1m > cpuCount / 4.0 ||
+    val contended = startLoad1m > cpus / 4.0 ||
       passLoads.dropRight(1).exists { l =>
         l.split("\\s+").headOption.flatMap(_.toDoubleOption)
-          .exists(_ > cpuCount)
+          .exists(_ > cpus)
       }
     val headlineRule = s"all>=${HEAVY_SEC}s then representatives, pruned to fit"
     // the artifact carries BOTH estimators for the same picked keys:

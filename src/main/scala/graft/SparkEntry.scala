@@ -23,138 +23,73 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("smart_group")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++
-      entries.RelEntries.queries ++
-      entries.StatsEntries.queries ++
-      entries.CleanEntries.queries ++
-      entries.TsEntries.queries ++
-      entries.TextEntries.queries ++
-      entries.EncodeEntries.queries ++
-      entries.InferEntries.queries ++
-      entries.SqlEntries.queries ++
-      entries.MoreEntries.queries ++
-      entries.Batch10Entries.queries ++
-      entries.Batch11Entries.queries ++
-      entries.Batch12Entries.queries ++
-      entries.Batch13Entries.queries ++
-      entries.Batch14Entries.queries ++
-      entries.Batch15Entries.queries ++
-      entries.Batch16Entries.queries ++
-      entries.Batch17Entries.queries ++
-      entries.Batch18Entries.queries ++
-      entries.Batch19Entries.queries ++
-      entries.Batch20Entries.queries ++
-      entries.Batch21Entries.queries ++
-      entries.Batch22Entries.queries ++
-      entries.Batch23Entries.queries ++
-      entries.Batch24Entries.queries ++
-      entries.Batch25Entries.queries ++
-      entries.Batch26Entries.queries ++
-      entries.Batch27Entries.queries ++
-      entries.Batch28Entries.queries ++
-      entries.Batch29Entries.queries ++
-      entries.Batch30Entries.queries ++
-      entries.Batch31Entries.queries ++
-      entries.Batch32Entries.queries ++
-      entries.Batch33Entries.queries ++
-      entries.Batch34Entries.queries ++
-      entries.Batch35Entries.queries ++
-      entries.Batch36Entries.queries ++
-      entries.Batch37Entries.queries ++
-      entries.Batch38Entries.queries ++
-      entries.Batch39Entries.queries ++
-      entries.Batch40Entries.queries ++
-      entries.Batch41Entries.queries ++
-      entries.Batch42Entries.queries ++
-      entries.Batch43Entries.queries ++
-      entries.Batch44Entries.queries ++
-      entries.Batch45Entries.queries ++
-      entries.Batch46Entries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    merged(files.map(_.queries))
 
-  def oracleSql: Map[String, String] =
-    baseOracle ++
-      entries.RelEntries.oracleSql ++
-      entries.StatsEntries.oracleSql ++
-      entries.CleanEntries.oracleSql ++
-      entries.TsEntries.oracleSql ++
-      entries.TextEntries.oracleSql ++
-      entries.EncodeEntries.oracleSql ++
-      entries.InferEntries.oracleSql ++
-      entries.SqlEntries.oracleSql ++
-      entries.MoreEntries.oracleSql ++
-      entries.Batch10Entries.oracleSql ++
-      entries.Batch11Entries.oracleSql ++
-      entries.Batch12Entries.oracleSql ++
-      entries.Batch13Entries.oracleSql ++
-      entries.Batch14Entries.oracleSql ++
-      entries.Batch15Entries.oracleSql ++
-      entries.Batch16Entries.oracleSql ++
-      entries.Batch17Entries.oracleSql ++
-      entries.Batch18Entries.oracleSql ++
-      entries.Batch19Entries.oracleSql ++
-      entries.Batch20Entries.oracleSql ++
-      entries.Batch21Entries.oracleSql ++
-      entries.Batch22Entries.oracleSql ++
-      entries.Batch23Entries.oracleSql ++
-      entries.Batch24Entries.oracleSql ++
-      entries.Batch25Entries.oracleSql ++
-      entries.Batch26Entries.oracleSql ++
-      entries.Batch27Entries.oracleSql ++
-      entries.Batch28Entries.oracleSql ++
-      entries.Batch29Entries.oracleSql ++
-      entries.Batch30Entries.oracleSql ++
-      entries.Batch31Entries.oracleSql ++
-      entries.Batch32Entries.oracleSql ++
-      entries.Batch33Entries.oracleSql ++
-      entries.Batch34Entries.oracleSql ++
-      entries.Batch35Entries.oracleSql ++
-      entries.Batch36Entries.oracleSql ++
-      entries.Batch37Entries.oracleSql ++
-      entries.Batch38Entries.oracleSql ++
-      entries.Batch39Entries.oracleSql ++
-      entries.Batch40Entries.oracleSql ++
-      entries.Batch41Entries.oracleSql ++
-      entries.Batch42Entries.oracleSql ++
-      entries.Batch43Entries.oracleSql ++
-      entries.Batch44Entries.oracleSql ++
-      entries.Batch45Entries.oracleSql ++
-      entries.Batch46Entries.oracleSql
+  lazy val oracleSql: Map[String, String] = merged(files.map(_.oracleSql))
 
-  private val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.4 smart_group (transformation.py:663): groupBy + agg + HAVING + sort.
-    // TPC-H-Q1 shape on lineitem.
-    "smart_group" -> ((s, dir) => {
-      val li = T.lineitem(s, dir)
-      Aggregates.smartGroup(
-        li,
-        by = Seq("l_returnflag", "l_linestatus"),
-        aggs = Seq(
-          Exact.dsum(col("l_quantity")).as("sum_qty"),
-          Exact.dsum(col("l_extendedprice")).as("sum_base_price"),
-          sum(col("l_extendedprice").cast("decimal(18,2)") *
-              (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-            .cast("double").as("sum_disc_price"),
-          Exact.davg(col("l_quantity")).as("avg_qty"),
-          Exact.davg(col("l_extendedprice")).as("avg_price"),
-          count(lit(1)).as("count_order")),
-        having = Some(count(lit(1)) > 10),
-        sortBy = Seq(col("l_returnflag"), col("l_linestatus")))
-    })
-  )
+  import entries._
 
-  private val baseOracle: Map[String, String] = Map(
-    "smart_group" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |HAVING COUNT(*) > 10
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin
-  )
+  /** Every registry file, in the order the registry is built. */
+  private[graft] def files: Seq[Entries] = Seq(
+    Base, RelEntries, StatsEntries, CleanEntries, TsEntries, TextEntries,
+    EncodeEntries, InferEntries, SqlEntries, MoreEntries, Batch10Entries,
+    Batch11Entries, Batch12Entries, Batch13Entries, Batch14Entries,
+    Batch15Entries, Batch16Entries, Batch17Entries, Batch18Entries,
+    Batch19Entries, Batch20Entries, Batch21Entries, Batch22Entries,
+    Batch23Entries, Batch24Entries, Batch25Entries, Batch26Entries,
+    Batch27Entries, Batch28Entries, Batch29Entries, Batch30Entries,
+    Batch31Entries, Batch32Entries, Batch33Entries, Batch34Entries,
+    Batch35Entries, Batch36Entries, Batch37Entries, Batch38Entries,
+    Batch39Entries, Batch40Entries, Batch41Entries, Batch42Entries,
+    Batch43Entries, Batch44Entries, Batch45Entries, Batch46Entries)
+
+  /** The files' maps merged into one; a name defined in two files is
+    * an error, not a silent override by the later file. */
+  private[graft] def merged[V](maps: Seq[Map[String, V]]): Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val twice = acc.keySet.intersect(m.keySet)
+      require(twice.isEmpty,
+        s"registry names defined twice: ${twice.toSeq.sorted.mkString(", ")}")
+      acc ++ m
+    }
+
+  private object Base extends Entries {
+    val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+      // §2.4 smart_group (transformation.py:663): groupBy + agg + HAVING + sort.
+      // TPC-H-Q1 shape on lineitem.
+      "smart_group" -> ((s, dir) => {
+        val li = T.lineitem(s, dir)
+        Aggregates.smartGroup(
+          li,
+          by = Seq("l_returnflag", "l_linestatus"),
+          aggs = Seq(
+            Exact.dsum(col("l_quantity")).as("sum_qty"),
+            Exact.dsum(col("l_extendedprice")).as("sum_base_price"),
+            sum(col("l_extendedprice").cast("decimal(18,2)") *
+                (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
+              .cast("double").as("sum_disc_price"),
+            Exact.davg(col("l_quantity")).as("avg_qty"),
+            Exact.davg(col("l_extendedprice")).as("avg_price"),
+            count(lit(1)).as("count_order")),
+          having = Some(count(lit(1)) > 10),
+          sortBy = Seq(col("l_returnflag"), col("l_linestatus")))
+      })
+    )
+
+    val oracleSql: Map[String, String] = Map(
+      "smart_group" ->
+        """SELECT l_returnflag, l_linestatus,
+          |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+          |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+          |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+          |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty,
+          |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
+          |  COUNT(*) AS count_order
+          |FROM lineitem
+          |GROUP BY l_returnflag, l_linestatus
+          |HAVING COUNT(*) > 10
+          |ORDER BY l_returnflag, l_linestatus""".stripMargin
+    )
+  }
 }

@@ -1,19 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.{GraftSession, Json}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (comma-separated names); driver leaves unset
@@ -36,25 +30,13 @@ object Verify {
         failures(name) = msg.replaceAll("\\s+", " ").take(500)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Always written (empty object when green) so its absence/staleness is
     // itself a signal; a count >0 means this round's verify was incomplete.
     val failJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/failures.json"), failJson)
     // Manifest of the names this run actually attempted, written LAST:
     // a Verify killed mid-run (OOM/JVM abort) leaves no manifest — or a
@@ -64,7 +46,7 @@ object Verify {
     val ranNames = SparkEntry.queries.keys.toSeq
       .filter(n => only.forall(_.contains(n))).sorted
     val manifest = s"""{"full_run": ${only.isEmpty}, "ran": ${
-      ranNames.map(q).mkString("[", ",", "]")}}"""
+      ranNames.map(Json.str).mkString("[", ",", "]")}}"""
     Files.writeString(Paths.get(s"$outDir/manifest.json"), manifest)
     if (failures.nonEmpty)
       println(s"[verify] ${failures.size} queries FAILED — see $outDir/failures.json")

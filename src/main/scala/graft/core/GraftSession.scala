@@ -3,7 +3,8 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated SparkSession factory: the configuration this engine is
-  * designed against, for both local runs and cluster submits.
+  * designed against, for both local runs and cluster submits. Every
+  * session the engine's mains and tests use is built here.
   *
   * - AQE on with skew-join handling (runtime re-plan replaces the
   *   reference's static batch-size heuristics, SURVEY §4);
@@ -13,6 +14,11 @@ import org.apache.spark.sql.SparkSession
   * - UTC session timezone (oracle-comparable timestamps).
   */
 object GraftSession {
+
+  /** Local core count: `SPARK_GRAFT_CPUS` when set, else the host's
+    * available processors. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
   def builder(master: Option[String] = None,
               shufflePartitions: Option[Int] = None): SparkSession.Builder = {
@@ -29,7 +35,7 @@ object GraftSession {
   }
 
   /** Local session sized to the machine (tests, single-node runs). */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def local(cores: Int = GraftSession.cores): SparkSession = {
     val s = builder(Some(s"local[$cores]"), Some(cores))
       .config("spark.ui.enabled", "false")
       .getOrCreate()

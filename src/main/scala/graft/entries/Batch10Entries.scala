@@ -10,7 +10,7 @@ import graft.ts.{PerGroup, Windows}
 /** Entries for smoothing, rank correlation, extrema, coverage,
   * replication, and per-series recursion (SURVEY §2.5/§2.6/§2.9 math).
   */
-object Batch10Entries {
+object Batch10Entries extends Entries {
 
   // Savitzky–Golay quadratic, window 5: (-3, 12, 17, 12, -3)/35.
   private val sg5 = Seq(-3.0, 12.0, 17.0, 12.0, -3.0).map(_ / 35.0)

@@ -10,7 +10,7 @@ import graft.text.Dedup
 /** Entries for the remaining join variants, n-gram Jaccard dedup, and
   * distribution scalars.
   */
-object Batch11Entries {
+object Batch11Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.3 merge_frames_on_index (quality.py:1060): multiway outer join

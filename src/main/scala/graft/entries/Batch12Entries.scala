@@ -8,7 +8,7 @@ import graft.stats.{Descriptive, Distributions, Regression}
 
 /** Entries for describe, OLS residualization, spatial box filter, and
   * Poisson log-pmf. */
-object Batch12Entries {
+object Batch12Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.2 filter_position/extract_zones (spatial_utils.py:1813) as a

@@ -9,7 +9,7 @@ import graft.ts.Temporal
 /** Composite end-to-end entries: batch sessionization and the
   * training-corpus keep/drop decision.
   */
-object Batch13Entries {
+object Batch13Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // batch analog of session windows (SURVEY §2.12): 30-minute gap.

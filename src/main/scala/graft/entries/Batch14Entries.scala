@@ -11,7 +11,7 @@ import graft.ts.PerGroup
   * smoothing, NTILE, KPSS, and the embedding-cosine near-dup /
   * IVF-search north-star entries.
   */
-object Batch14Entries {
+object Batch14Entries extends Entries {
 
   /** Exact decimal cross-moment Pearson corr(x, y) with null-pair
     * masking, rounded 9 — the Temporal.acf kernel generalized to two

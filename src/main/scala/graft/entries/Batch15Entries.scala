@@ -12,7 +12,7 @@ import graft.text.TextFns
   * deterministic bootstrap CI, uniform sampling, haversine nearest
   * join, and the string-transform battery.
   */
-object Batch15Entries {
+object Batch15Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.9 get_threshold_from (otsu) (gofast/utils/mathext.py:156) as a

@@ -7,7 +7,7 @@ import graft.rel.Joins
 
 /** Round-8 batch: reference-index row alignment and the Torres-Verdín
   * adaptive filter. */
-object Batch16Entries {
+object Batch16Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.5 torres_verdin_filter (gofast/utils/spatial_utils.py:4685):

@@ -10,7 +10,7 @@ import graft.text.{Dedup, Quality}
   * resolution (connected components over pair output), and
   * Gopher-style repetition quality stats.
   */
-object Batch17Entries {
+object Batch17Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.13 activation transformers (transformers/activations.py:218-

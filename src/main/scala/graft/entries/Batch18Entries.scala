@@ -11,7 +11,7 @@ import graft.stream.Streaming
   * luma → nearest-neighbor thumbnail → exact pixel moments) proven
   * against an analytic SQL oracle, plus scale-gate hardening entries.
   */
-object Batch18Entries {
+object Batch18Entries extends Entries {
 
   /** Deterministic synthetic corpus: 24 BMPs whose pixel luma is the
     * closed-form `(x·7 + y·13 + id·31) mod 256`, sizes varying with id

@@ -12,7 +12,7 @@ import graft.text.{Decontaminate, Redact}
   * counts are exact row-level checks of the regex semantics shared by
   * Java regex and RE2.
   */
-object Batch19Entries {
+object Batch19Entries extends Entries {
 
   /** Deterministic synthetic audio corpus: 24 WAV clips whose 16-bit
     * PCM samples follow the closed form

@@ -9,7 +9,7 @@ import graft.text.{Decontaminate, Redact}
   * mixing, short-eval decontamination, and the date-redaction pass —
   * each with a FULL DuckDB oracle.
   */
-object Batch20Entries {
+object Batch20Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

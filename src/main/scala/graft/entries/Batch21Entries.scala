@@ -10,7 +10,7 @@ import graft.core.{Tables => T}
   * imputation and the time split. Each oracle is the straightforward
   * SQL the fancy plan must equal exactly.
   */
-object Batch21Entries {
+object Batch21Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -12,7 +12,7 @@ import graft.core.{Tables => T}
   * count-min-prefiltered EXACT heavy hitters (the sketch only prunes,
   * never decides — the result must equal the plain GROUP BY/HAVING).
   */
-object Batch22Entries {
+object Batch22Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -9,7 +9,7 @@ import graft.core.{Tables => T}
   * replays the whole chain: exact BIGINT totals → round(pow, 9)
   * weights → floored budget shares → windowed selection.
   */
-object Batch23Entries {
+object Batch23Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -11,7 +11,7 @@ import graft.core.{Tables => T}
   * reassembly twin, and all window math is double-division + CEIL so
   * the engines agree bit-for-bit.
   */
-object Batch24Entries {
+object Batch24Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

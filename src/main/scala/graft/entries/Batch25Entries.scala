@@ -13,7 +13,7 @@ import graft.core.{Tables => T}
   * by reconstructing terminal periods from a plain split, and all
   * log-prob parity follows the token_entropy round-6 contract.
   */
-object Batch25Entries {
+object Batch25Entries extends Entries {
 
   /** Deterministic C4 fixture line j of doc `id` (Spark side): 2-5
     * words, 1/3 of lines missing terminal punctuation, periodic

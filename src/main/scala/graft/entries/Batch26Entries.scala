@@ -8,7 +8,7 @@ import graft.core.{Tables => T}
   * the r10 ADVICE gap — the kernel shipped in round 10 with no entry,
   * no spec, no coverage registration).
   */
-object Batch26Entries {
+object Batch26Entries extends Entries {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Retrieval.bm25TopK: every ~97th document's first 5 tokens act as

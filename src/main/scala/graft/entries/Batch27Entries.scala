@@ -8,7 +8,7 @@ import graft.core.{Tables => T}
   * (fit/deploy split like bm25Index — training is ScalaTest-gated,
   * scoring replays fixed weights in SQL).
   */
-object Batch27Entries {
+object Batch27Entries extends Entries {
 
   /** Fitted BM25 index per sf dir, materialized once (localCheckpoint
     * blocks survive the bench's clearCache) — the deploy contract IS

@@ -12,7 +12,7 @@ import graft.datasets.Make
   * portable-oracle mode (md5 hash family, libm crossings rounded
   * once), replayed end-to-end in DuckDB from `range()`.
   */
-object Batch28Entries {
+object Batch28Entries extends Entries {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // datasets.Make.makeWalk portable mode (simulate_stock_prices'

@@ -8,7 +8,7 @@ import graft.core.{Tables => T}
 /** Round-12 additions: product-quantized ANN (the 64×-smaller scan
   * format) and UniMax budget mixing (the epoch-capped waterfill
   * alternative to temperature sampling). */
-object Batch29Entries {
+object Batch29Entries extends Entries {
 
   /** Amortized PQ artifacts, one per sf dir (the ivfCache pattern):
     * real PQ deployments fit the codebook and encode the corpus ONCE,

@@ -11,7 +11,7 @@ import graft.core.{Tables => T}
   * k-gram screen, native max-cosine kernel), the BPE deploy chain,
   * token-budgeted shard packing + the seeded global shuffle (the
   * pipeline's output stage), and the banded point-in-interval join. */
-object Batch30Entries {
+object Batch30Entries extends Entries {
 
   /** Fixed BPE merge table for the bpe_encode entry: hand-built chains
     * over the synthetic vocabulary (row/table/hash/scan/join + the

@@ -11,7 +11,7 @@ import graft.core.{Tables => T}
   * sketch-based approximate quantile path (the at-scale variant of
   * quantiles_exact — a full sort per column is the wrong plan at
   * 100 TB; the GK summary is one mergeable pass). */
-object Batch31Entries {
+object Batch31Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

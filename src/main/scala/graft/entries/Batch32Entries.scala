@@ -9,7 +9,7 @@ import graft.core.{Tables => T}
   * et al. 2007 — the n-gram smoothing designed FOR distributed
   * trillion-token corpora), topping out the LM-scoring ladder
   * add-α unigram → add-α bigram → interpolated KN → trigram SB. */
-object Batch32Entries {
+object Batch32Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

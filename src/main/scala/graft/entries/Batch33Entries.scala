@@ -9,7 +9,7 @@ import graft.core.{Tables => T}
   * (BLEU ✓ ROUGE-N ✓ ROUGE-L ✓ — chrF is the fourth WMT standard, and
   * the only tokenization-free one).
   */
-object Batch33Entries {
+object Batch33Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

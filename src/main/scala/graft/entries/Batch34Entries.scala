@@ -11,7 +11,7 @@ import graft.text.{Blocklist, CorpusStats, Retrieval, Winnow}
   * postings, and cross-corpus divergence — four LLM-pipeline stages
   * with full DuckDB oracles.
   */
-object Batch34Entries {
+object Batch34Entries extends Entries {
 
   /** The bounded pair-corpus convention of minhash_pairs_md5
     * (Batch17): 50 base docs + a first-word-dropped twin each. The

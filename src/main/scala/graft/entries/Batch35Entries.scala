@@ -17,7 +17,7 @@ import graft.ml.{ClassifierEval, RankEval}
   * where naive AUC implementations diverge — the average-rank
   * tie handling is the thing under test.
   */
-object Batch35Entries {
+object Batch35Entries extends Entries {
 
   private def scored(s: SparkSession, dir: String): DataFrame =
     T.lineitem(s, dir).select(col("l_discount").as("score"),

@@ -12,7 +12,7 @@ import graft.text.CorpusStats
   * growth + Heaps fit (unbounded-type detector), per-source lexical
   * diversity.
   */
-object Batch36Entries {
+object Batch36Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

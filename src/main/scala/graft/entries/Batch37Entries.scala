@@ -12,7 +12,7 @@ import graft.rel.Graph
   * derived from orders × lineitem. Supplier ids offset by 1e6 so the
   * two id spaces cannot collide.
   */
-object Batch37Entries {
+object Batch37Entries extends Entries {
 
   private def purchaseEdges(s: SparkSession, dir: String): DataFrame =
     T.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))

@@ -8,7 +8,7 @@ import graft.core.{Tables => T}
 /** Round-12 batch: dictionary redaction — masking the members of a
   * term list (name lists, codenames) in place, the masking sibling of
   * the blocklist's page removal. */
-object Batch38Entries {
+object Batch38Entries extends Entries {
 
   private val redactTerms = Seq("hash", "dup", "spark")
 

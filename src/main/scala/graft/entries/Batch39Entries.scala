@@ -7,7 +7,7 @@ import graft.core.{Tables => T}
 
 /** Round-12 batch: data-quality audits (Benford first-digit screen,
   * join-key skew report) and CUSUM drift monitoring. */
-object Batch39Entries {
+object Batch39Entries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -16,7 +16,7 @@ import graft.stream.Streaming.TypedEvent
   * (4) perceptual image dHash + audio energy fingerprints with the
   * banded near-dup kernel, over closed-form decoded fixtures.
   */
-object Batch40Entries {
+object Batch40Entries extends Entries {
 
   private[entries] val funnelSteps = Seq("view", "click", "purchase")
 

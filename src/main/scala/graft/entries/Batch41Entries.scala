@@ -24,7 +24,7 @@ import graft.stream.Streaming.TypedEvent
   *  - the generator preset tail (`make_erp`, `make_retail_store`) and
   *    the categorical PSI drift twin (`drift_psi_cat`).
   */
-object Batch41Entries {
+object Batch41Entries extends Entries {
 
   import Batch40Entries.{funnelSteps, h, u}
 

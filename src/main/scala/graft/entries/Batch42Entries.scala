@@ -23,7 +23,7 @@ import graft.ml.Similarity
   *    the sink with the batch arithmetic verbatim (the monitoring
   *    family's streaming twin, gofast/dataops/quality.py:1863).
   */
-object Batch42Entries {
+object Batch42Entries extends Entries {
 
   /** One shard export per (dir, JVM): the testdata is immutable, so
     * bench passes re-read the same files instead of re-writing them —

@@ -33,7 +33,7 @@ import graft.io.{Dta, Sas, Sav, Xpt}
   *    writer (XptSpec). FULL oracle — the shared closed form under the
   *    format's uppercase 8-char names, aliased back.
   */
-object Batch43Entries {
+object Batch43Entries extends Entries {
 
   /** One multi-page sas7bdat per JVM for the paged-scan entry — the
     * [[Batch42Entries.npyShardDir]] write-once convention. */

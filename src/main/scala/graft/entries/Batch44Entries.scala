@@ -45,7 +45,7 @@ import graft.io.{Dta, Sas, Sav}
   *    TAIL read. One multi-batch shard read whole, one through the
   *    batch-parallel scan. FULL oracle.
   */
-object Batch44Entries {
+object Batch44Entries extends Entries {
 
   /** One RLE sas7bdat on disk per JVM for the paged half of the entry
     * (the [[Batch43Entries]] write-once convention). */

@@ -30,7 +30,7 @@ import graft.io.{Dta, Feather}
   *    round-trip must be invisible to the dedup arithmetic). FULL
   *    oracle.
   */
-object Batch45Entries {
+object Batch45Entries extends Entries {
 
   /** One multi-batch ZSTD feather file per JVM for the batch-parallel
     * half of read_feather_zstd (the [[Batch44Entries]] write-once

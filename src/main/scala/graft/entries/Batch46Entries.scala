@@ -43,7 +43,7 @@ import graft.ml.Similarity
   *    release-118 shard in one scan) onto read_dta's closed form —
   *    the release must be invisible to the records. FULL oracle.
   */
-object Batch46Entries {
+object Batch46Entries extends Entries {
 
   /** One vector-feather export per (dir, JVM) — the testdata is
     * immutable, so bench passes re-read the same files instead of

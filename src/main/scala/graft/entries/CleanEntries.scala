@@ -9,7 +9,7 @@ import graft.clean.{Duplicates, Missing, Outliers}
   * outliers, §2.4 duplicates). Nulls are derived deterministically
   * (`nullif`-style) since the testdata has none.
   */
-object CleanEntries {
+object CleanEntries extends Entries {
 
   /** events with `value` nulled on error rows — the shared fixture for
     * null-handling entries; both engines derive identical nulls. */

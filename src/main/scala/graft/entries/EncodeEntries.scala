@@ -8,7 +8,7 @@ import graft.encode.{BoxCox, Encoders => E}
 /** Driver-contract entries for encoding/scaling operators (SURVEY §2.9
   * encoding + math families).
   */
-object EncodeEntries {
+object EncodeEntries extends Entries {
 
   private val priorities =
     Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")

@@ -10,7 +10,7 @@ import graft.stats.Inferential
   * ([[graft.stats.PValues]], covered by InferSpec); DuckDB has no
   * distribution CDFs to oracle them against.
   */
-object InferEntries {
+object InferEntries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Welch t-test (inferential.py:388).

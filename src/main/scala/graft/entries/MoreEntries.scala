@@ -13,7 +13,7 @@ import graft.ts.Interpolate
   * counts, decomposition, stationarity transforms, Fourier features,
   * Kaplan–Meier, and the audit_data composite.
   */
-object MoreEntries {
+object MoreEntries extends Entries {
 
   // shared moment-sum SQL (same trees as graft.stats.Descriptive):
   // scaled-long products, exact accumulation, one de-scaling division.

@@ -10,7 +10,7 @@ import graft.rel._
   * deterministic (decimal-derived) doubles so the DuckDB hash-compare
   * is exact.
   */
-object RelEntries {
+object RelEntries extends Entries {
 
   private val priorities =
     Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")

@@ -10,7 +10,7 @@ import graft.sql.SqlGuards
   * oracle. Every query goes through [[SqlGuards]] plan-shape guards —
   * the strictly-stronger replacement for the reference's regex checks.
   */
-object SqlEntries {
+object SqlEntries extends Entries {
 
   private def guards(s: SparkSession, dir: String): SqlGuards =
     new SqlGuards(s)

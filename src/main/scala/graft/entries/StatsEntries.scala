@@ -11,7 +11,7 @@ import graft.stats.{Descriptive => D, WeightedMedian}
   * EXACT decimal power sums (bit-identical in Spark and DuckDB — see
   * [[graft.stats.Descriptive]]) or explicitly rounded.
   */
-object StatsEntries {
+object StatsEntries extends Entries {
 
   // SQL mirrors of Descriptive.powerSum — identical casts, identical
   // double expression trees, so both engines produce the same bits.

@@ -14,7 +14,7 @@ import graft.text.{Dedup, Keywords, Quality, TextFns}
   * (driver records the weaker rows-only check); their semantics are
   * covered by TextSpec instead.
   */
-object TextEntries {
+object TextEntries extends Entries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.9 clean_text/normalize_text (text.py:53) + slugify (:1192).

@@ -9,7 +9,7 @@ import graft.ts.{Temporal, Windows}
   * (SURVEY §2.5, §2.11). All windows partition by user_id — the
   * at-scale contract (no global sorts).
   */
-object TsEntries {
+object TsEntries extends Entries {
 
   private val evOrder = Seq(col("ts"), col("event_id"))
 

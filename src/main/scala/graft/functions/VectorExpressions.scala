@@ -744,56 +744,44 @@ object VectorExpressions {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.SparkSession
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[DotF32].getName, null, name, usage, "", "", "",
-      "array_funcs", "4.0.0", "", "built-in")
+  private def fn(cls: Class[_], name: String, usage: String)
+                (build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(cls.getName, null, name, usage, "", "", "",
+        "array_funcs", "4.0.0", "", "built-in"),
+      build)
 
-  /** Register dot_f32 / cosine_f32 on an existing session (callable via
+  /** The native vector functions, the one table both [[register]] and
+    * [[GraftExtensions]] install from, so `DESCRIBE FUNCTION` reads the
+    * same however the session was built. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn(classOf[DotF32], "dot_f32", "dot_f32(a, b) - float-array dot product")(
+      c => DotF32(c(0), c(1))),
+    fn(classOf[CosineF32], "cosine_f32",
+      "cosine_f32(a, b) - float-array cosine similarity")(
+      c => CosineF32(c(0), c(1))),
+    fn(classOf[QuantizeI8], "quantize_i8",
+      "quantize_i8(a) - symmetric int8 codes of a float array")(
+      c => QuantizeI8(c(0))),
+    fn(classOf[CosineI8], "cosine_i8", "cosine_i8(a, b) - cosine over int8 codes")(
+      c => CosineI8(c(0), c(1))))
+
+  /** Register the vector functions on an existing session (callable via
     * `call_function` / SQL). Idempotent: entries call this defensively
     * per query, and re-registering spams "replaced a previously
     * registered function" warnings through every test log. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     if (registry.functionExists(FunctionIdentifier("cosine_i8"))) return
-    registry.registerFunction(
-      FunctionIdentifier("dot_f32"),
-      info("dot_f32", "dot_f32(a, b) - float-array dot product"),
-      (children: Seq[Expression]) => DotF32(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("cosine_f32"),
-      info("cosine_f32", "cosine_f32(a, b) - float-array cosine similarity"),
-      (children: Seq[Expression]) => CosineF32(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("quantize_i8"),
-      info("quantize_i8", "quantize_i8(a) - symmetric int8 codes of a float array"),
-      (children: Seq[Expression]) => QuantizeI8(children(0)))
-    registry.registerFunction(
-      FunctionIdentifier("cosine_i8"),
-      info("cosine_i8", "cosine_i8(a, b) - cosine over int8 codes"),
-      (children: Seq[Expression]) => CosineI8(children(0), children(1)))
+    functions.foreach { case (id, info, build) =>
+      registry.registerFunction(id, info, build)
+    }
   }
 }
 
 /** SparkSessionExtensions hook:
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-      (children: Seq[Expression]) => DotF32(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_f32"),
-      new ExpressionInfo(classOf[CosineF32].getName, "cosine_f32"),
-      (children: Seq[Expression]) => CosineF32(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("quantize_i8"),
-      new ExpressionInfo(classOf[QuantizeI8].getName, "quantize_i8"),
-      (children: Seq[Expression]) => QuantizeI8(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_i8"),
-      new ExpressionInfo(classOf[CosineI8].getName, "cosine_i8"),
-      (children: Seq[Expression]) => CosineI8(children(0), children(1))))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    VectorExpressions.functions.foreach(ext.injectFunction)
 }

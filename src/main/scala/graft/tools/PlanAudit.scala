@@ -199,9 +199,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     audit(spark, sfDir).foreach { a =>
       a.error match {

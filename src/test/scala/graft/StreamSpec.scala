@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.stream.Streaming
+import scala.jdk.CollectionConverters._
 
 case class Ev(ts: Timestamp, user_id: Long, event_type: String, value: Double)
 case class DocEv(ts: Timestamp, doc_id: Long, text: String)
@@ -1189,8 +1190,14 @@ class StreamSpec extends SparkSpec {
     // view and no active query
     def views = spark.catalog.listTables().collect()
       .filter(_.isTemporary).map(_.name).toSet
+    // a stopped query's micro-batch thread must be gone too, not left
+    // running behind a quiet `streams.active`
+    def streamThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("stream execution thread"))
+      .map(_.getName).toSet
     val viewsBefore = views
     val activeBefore = spark.streams.active.map(_.id).toSet
+    val threadsBefore = streamThreads
     val entries = Seq("funnel_stream", "conversion_stream", "cohort_stream",
       "transitions_stream", "funnel_stream_ooo", "conversion_stream_ooo",
       "cohort_stream_ooo", "transitions_stream_ooo", "stream_dedup",
@@ -1201,6 +1208,8 @@ class StreamSpec extends SparkSpec {
     assert(views === viewsBefore, "a replay entry leaked temp views")
     assert(spark.streams.active.map(_.id).toSet === activeBefore,
       "a replay entry left a query running")
+    assert(streamThreads === threadsBefore,
+      "a replay entry left a stream execution thread running")
     assert(keys.map(k => k -> spark.conf.get(k)) === before,
       "a replay entry leaked session confs")
   }

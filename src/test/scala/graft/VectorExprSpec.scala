@@ -142,4 +142,17 @@ class VectorExprSpec extends SparkSpec {
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))").head
     assert(r.getDouble(0) == 11.0)
   }
+
+  test("DESCRIBE FUNCTION gives every vector function its usage") {
+    // no register call: the shared test session is a GraftSession, whose
+    // extension installs the functions from the same table
+    for ((id, _, _) <- VectorExpressions.functions) {
+      val usage = spark.sql(s"DESCRIBE FUNCTION ${id.funcName}")
+        .collect().map(_.getString(0)).find(_.startsWith("Usage:"))
+      assert(usage.exists(u => u.contains(s"${id.funcName}(") &&
+        !u.contains("N/A")), s"${id.funcName}: $usage")
+    }
+    assert(VectorExpressions.functions.map(_._1.funcName) ===
+      Seq("dot_f32", "cosine_f32", "quantize_i8", "cosine_i8"))
+  }
 }
