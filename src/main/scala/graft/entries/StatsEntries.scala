@@ -51,7 +51,7 @@ object StatsEntries extends Entries {
     }),
 
     // exact percentiles (quartiles, descriptive.py:1084) — distributed
-    // order statistics, bit-identical to the percentile aggregate.
+    // order statistics, bit-identical to DuckDB's quantile_cont.
     "quantiles_exact" -> ((s, dir) => {
       graft.stats.Quantiles.exactPercentilesByGroup(T.lineitem(s, dir),
           Seq("l_returnflag"), "l_quantity", Seq(0.25, 0.5, 0.75))

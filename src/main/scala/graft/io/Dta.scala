@@ -856,10 +856,9 @@ object Dta {
   }
 
   /** The shared writer: per-column mode 'n' (double), 'f' (fixed
-    * str#), 'l' (strL text, t=130), 'y' (strL binary, t=129).
-    * Package-visible for the ScaleProbe fixture shapes. */
-  private[graft] def dumpsModes(cols: Seq[(String, Char)],
-                                data: Seq[Seq[Any]]): Array[Byte] = {
+    * str#), 'l' (strL text, t=130), 'y' (strL binary, t=129). */
+  private def dumpsModes(cols: Seq[(String, Char)],
+                         data: Seq[Seq[Any]]): Array[Byte] = {
     require(cols.nonEmpty, "dumps needs at least one column")
     data.foreach(r => require(r.length == cols.length,
       s"row arity ${r.length} != ${cols.length} columns"))

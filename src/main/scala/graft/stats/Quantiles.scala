@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * bucketed cumulative positions (parallel across value buckets) → the
   * two values straddling position p·(n−1) are picked by a broadcast
   * join of the tiny (group × percentile) target table → linear
-  * interpolation, using the same expression the built-in aggregate
-  * evaluates (`lower + (pos − ⌊pos⌋)·(upper − lower)`), so results are
-  * bit-identical to `percentile` / DuckDB `quantile_cont`.
+  * interpolation as DuckDB's `quantile_cont` evaluates it
+  * (`lower·(1 − d) + upper·d`, d = pos − ⌊pos⌋), so results are
+  * bit-identical to it. Spark's `percentile` evaluates
+  * `lower + d·(upper − lower)`, which differs in the last ulp (0.1 and
+  * 0.7 at p 0.3: 0.27999999999999997 vs 0.28).
   *
   * Reference: `quartiles`/`quantile` (gofast/stats/descriptive.py:1084,
   * :1232) and every fence-based operator built on them.
@@ -60,9 +62,9 @@ object Quantiles {
       .agg(first("_pos").as("_pos"),
            min(when(contains("_loidx"), col("_v"))).as("_vlo"),
            min(when(contains("_hiidx"), col("_v"))).as("_vhi"))
-      .withColumn("value",
-        col("_vlo") + (col("_pos") - floor(col("_pos"))) *
-          (col("_vhi") - col("_vlo")))
+      .withColumn("_d", col("_pos") - floor(col("_pos")))
+      .withColumn("value", when(col("_d") === 0.0, col("_vlo")).otherwise(
+        col("_vlo") * (lit(1.0) - col("_d")) + col("_vhi") * col("_d")))
       .select(g ++ Seq(col("_p").as("p"), col("value")): _*)
   }
 

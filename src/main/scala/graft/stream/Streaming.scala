@@ -650,7 +650,7 @@ object Streaming {
   private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Bounded replay of a streaming deploy — the one path every
-    * registry stream entry and ScaleProbe's stream axis goes through.
+    * registry stream entry goes through.
     *
     * `deploy` is applied to a fresh MemoryStream and started into a
     * memory sink with `outputMode`, inside [[withReplayTuning]] (with

@@ -128,9 +128,10 @@ object Retrieval {
     // design — localCheckpoint cand, re-read per ranking — inverted at
     // scale: at 40× corpus the checkpoint write + K re-reads cost more
     // than recomputing the whole retrieval per parameterization
-    // (ScaleProbe bisect: bm25_single stayed linear, bm25_rrf went
-    // super-linear). What IS cut for reuse is the grouped scored
-    // table — per-(query, doc), k-independent, df-fold smaller.
+    // (measured bisect: one-parameter bm25 stayed linear, the
+    // multi-parameter rrf fusion went super-linear). What IS cut for
+    // reuse is the grouped scored table — per-(query, doc),
+    // k-independent, df-fold smaller.
     val aggs = params.zipWithIndex.map { case ((k1, b), i) =>
       val contrib = idf * (col("tf").cast("double") * lit(k1 + 1.0)) /
         (col("tf").cast("double") +

@@ -33,6 +33,8 @@ object Profile {
       "usage: graft.tools.Profile <sfDir> <iters> <query> [<query> ...]")
     val sfDir = args(0)
     val iters = args(1).toInt
+    require(iters >= 1, s"iters must be at least 1 (got $iters): " +
+      "the plan and stage lines print after the last timed pass")
     val names = args.drop(2).toSeq
     val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
@@ -103,11 +105,14 @@ object Profile {
         .write.format("noop").mode("overwrite").save()
 
     for (name <- names) {
-      // one untimed warmup (codegen/JIT)
-      try { exec(name); awaitEvents() } catch { case e: Throwable =>
-        println(s"PROFILE $name FAILED: ${e.getMessage}"); }
+      // one untimed warmup (codegen/JIT); a query that fails here is
+      // reported and skipped, so the later queries still run
+      val warm = try { exec(name); awaitEvents(); true } catch {
+        case e: Throwable =>
+          println(s"PROFILE $name FAILED: ${e.getMessage}"); false
+      }
       spark.catalog.clearCache()
-      for (it <- 1 to iters) {
+      if (warm) for (it <- 1 to iters) {
         stageWall.clear(); jobs = 0
         written = None
         phaseMs.synchronized { phaseMs.clear(); batches = 0 }

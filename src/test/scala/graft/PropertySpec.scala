@@ -128,6 +128,44 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("exactPercentilesByGroup interpolates as DuckDB quantile_cont") {
+    // DuckDB 1.0's quantile_cont, the oracle of every exact-quantile
+    // query, interpolates lo·(1−d) + hi·d; lo + d·(hi − lo) differs in
+    // the last ulp, which moves tied rows across a strict `v > edge`
+    def reference(vs: Seq[Double], p: Double): Double = {
+      val s = vs.sorted
+      val pos = p * (s.size - 1)
+      val (lo, hi, d) = (s(pos.floor.toInt), s(pos.ceil.toInt), pos - pos.floor)
+      if (d == 0.0) lo else lo * (1 - d) + hi * d
+    }
+    val ps = Seq(0.1, 0.25, 0.3, 0.37, 0.5, 0.73, 0.9, 0.99)
+    // cent-rounded values like the testdata's prices; a tied group
+    // repeats its values three times, as replicated inputs do
+    val groupGen = for {
+      n <- Gen.choose(1, 12)
+      vs <- Gen.listOfN(n, Gen.choose(-1e5, 1e5).map(v => math.rint(v * 100) / 100))
+      tied <- Gen.oneOf(false, true)
+    } yield if (tied) vs ++ vs ++ vs else vs
+    // an exact position (d = 0) takes its value as is: DuckDB gives
+    // inf at p 0.1 of the third group, where inf·1 + inf·0 is NaN
+    val pinned = Seq(Seq(0.1, 0.7), Seq(3.3, 7.9, 11.1),
+      1.0 +: Seq.fill(10)(Double.PositiveInfinity))
+    forSamples(Gen.listOfN(6, groupGen), n = 5) { random =>
+      val groups = pinned ++ random
+      val df = groups.zipWithIndex
+        .flatMap { case (vs, g) => vs.map(v => (g, v)) }.toDF("g", "v")
+      val got = graft.stats.Quantiles
+        .exactPercentilesByGroup(df, Seq("g"), "v", ps)
+        .as[(Int, Double, Double)].collect()
+        .map { case (g, p, v) => (g, p) -> v }.toMap
+      assert(got((0, 0.3)) == 0.27999999999999997)
+      assert(got((1, 0.37)) == 6.704)
+      assert(got((2, 0.1)) == Double.PositiveInfinity)
+      for ((vs, g) <- groups.zipWithIndex; p <- ps)
+        assert(got((g, p)) == reference(vs, p), s"group $vs at p $p")
+    }
+  }
+
   private val docGen = Gen.listOfN(12,
     Gen.zip(Gen.choose(0L, 1L << 40),
       Gen.listOf(Gen.oneOf("a", "bb", "ccc", "the", "of", "x9", "#"))

@@ -42,7 +42,14 @@ def keyed_rows(tbl):
 def main():
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        # a file, or a generator's `<t>.parquet/part-*.parquet` directory
+        # (perfbench/gen.py); a table the input set lacks is skipped
+        path = Path(SF) / f"{t}.parquet"
+        if path.is_dir():
+            path = path / "*.parquet"
+        elif not path.exists():
+            continue
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle_path = OUT / "oracle_sql.json"
     oracle = json.loads(oracle_path.read_text())
     # Verify always dumps the FULL oracle map, but SPARK_GRAFT_ONLY
