@@ -4,25 +4,37 @@ import graft.core.{GraftSession, Json}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The registry names a run dumps: all of them, or the comma-separated
+    * `SPARK_GRAFT_ONLY` subset (a dev filter; the full run leaves it
+    * unset). A name outside the registry fails the run: a typo would
+    * otherwise run nothing and still leave a green check. */
+  def selected(only: Option[String]): Seq[String] = {
+    val all = SparkEntry.queries.keys.toSeq
+    only.fold(all) { list =>
+      val names = list.split(",").map(_.trim).toSet
+      val unknown = names.diff(all.toSet)
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names no registry query: " +
+        unknown.toSeq.sorted.map(n => s"'$n'").mkString(", "))
+      all.filter(names.contains)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val names = selected(only)
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated names); driver leaves unset
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     // Failures must be LOUD: r10's events-schema break silently shrank the
     // correctness artifact's denominator (165→157 rows went unnoticed
     // because errors only hit stderr). Collect them and write
     // failures.json next to oracle_sql.json so a broken build is visible
     // in the artifacts themselves.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -43,10 +55,8 @@ object Verify {
     // stale one older than oracle_sql.json — and check.py treats either
     // as fatal instead of silently counting missing outputs as a
     // "subset". full_run distinguishes SPARK_GRAFT_ONLY dev passes.
-    val ranNames = SparkEntry.queries.keys.toSeq
-      .filter(n => only.forall(_.contains(n))).sorted
     val manifest = s"""{"full_run": ${only.isEmpty}, "ran": ${
-      ranNames.map(Json.str).mkString("[", ",", "]")}}"""
+      names.sorted.map(Json.str).mkString("[", ",", "]")}}"""
     Files.writeString(Paths.get(s"$outDir/manifest.json"), manifest)
     if (failures.nonEmpty)
       println(s"[verify] ${failures.size} queries FAILED — see $outDir/failures.json")

@@ -2,7 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Tables => T}
+import graft.core.{Fixtures, Tables => T}
 
 /** Round-12 batch: the trained quality classifier's deploy path
   * (fit/deploy split like bm25Index — training is ScalaTest-gated,
@@ -15,11 +15,9 @@ object Batch27Entries extends Entries {
     * fit-once/score-anywhere, so the bm25_stream entry measures
     * scoring a stream against an EXISTING index, not a refit per
     * iteration (bm25_topk already measures the fit+retrieve path). */
-  private val bm25IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def bm25Index(s: SparkSession, dir: String): DataFrame =
-    bm25IndexCache.computeIfAbsent(dir, d =>
-      graft.text.Retrieval.bm25Index(T.documents(s, d), "doc_id", "text")
+    Fixtures.cached(s"bm25_index:$dir")(
+      graft.text.Retrieval.bm25Index(T.documents(s, dir), "doc_id", "text")
         .localCheckpoint())
 
   /** Formula-derived fixed weights (portable-oracle mode, the
@@ -36,14 +34,12 @@ object Batch27Entries extends Entries {
         lit(0.007).as("weight")))
 
   /** IVF index over the PLANTED embedding corpus, one per sf dir (the
-    * Batch14 ivfCache pattern — an index amortizes its build across
-    * queries; Bench warm-up triggers the KMeans fit). */
-  private val plantedIvfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.ml.Similarity.IvfIndex]()
+    * Batch14 ivf pattern — an index amortizes its build across queries;
+    * the warm-up pass at the same dir runs the KMeans fit). */
   private def plantedIvf(s: SparkSession, dir: String): graft.ml.Similarity.IvfIndex =
-    plantedIvfCache.computeIfAbsent(dir, d =>
+    Fixtures.cached(s"planted_ivf:$dir")(
       graft.ml.Similarity.ivfIndex(
-        Batch14Entries.withPlantedDups(T.embeddings(s, d)),
+        Batch14Entries.withPlantedDups(T.embeddings(s, dir)),
         "vec_id", "embedding", nlist = 16))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -3,29 +3,27 @@ package graft.entries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.{Tables => T}
+import graft.core.{Fixtures, Tables => T}
 
 /** Round-12 additions: product-quantized ANN (the 64×-smaller scan
   * format) and UniMax budget mixing (the epoch-capped waterfill
   * alternative to temperature sampling). */
 object Batch29Entries extends Entries {
 
-  /** Amortized PQ artifacts, one per sf dir (the ivfCache pattern):
+  /** Amortized PQ artifacts, one per sf dir (the Batch14 ivf pattern):
     * real PQ deployments fit the codebook and encode the corpus ONCE,
     * then serve every query from the 8-byte code column. The packed
     * frame is localCheckpoint-cut so `clearCache()` between bench
     * queries cannot force a re-encode. */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ml.PQ.PQCodebook, DataFrame)]()
   private def pq(s: SparkSession, dir: String)
       : (graft.ml.PQ.PQCodebook, DataFrame) =
-    pqCache.computeIfAbsent(dir, { d =>
-      val emb = T.embeddings(s, d)
+    Fixtures.cached(s"pq:$dir") {
+      val emb = T.embeddings(s, dir)
       val cb = graft.ml.PQ.fit(emb, "vec_id", "embedding", m = 8, k = 16)
       val packed = graft.ml.PQ.encodePacked(emb, "embedding", cb)
         .select("vec_id", "pq64").localCheckpoint()
       (cb, packed)
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

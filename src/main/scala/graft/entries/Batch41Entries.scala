@@ -2,7 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Tables => T}
+import graft.core.{Fixtures, Tables => T}
 import graft.stream.Streaming
 import graft.stream.Streaming.TypedEvent
 
@@ -36,19 +36,13 @@ object Batch41Entries extends Entries {
     * the 200-slot disorder window straddles every batch boundary
     * densely, so cross-batch buffering is exercised throughout) plus
     * [[Streaming.shuffledReplay]]'s two flush batches. */
-  // fixture cache: the shuffled replay is a pure function of the
-  // immutable testdata dir — all four OOO entries (and every bench
-  // pass) share one collect+shuffle instead of rebuilding it per run;
-  // the deployed operators' cost is untouched
-  private val shuffledCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Streaming.ShuffledReplay, Long)]()
-
   /** The shuffled replay and its state rows (one OooBuf row per
-    * distinct user). */
+    * distinct user). A fixture: it is a pure function of the immutable
+    * testdata dir, so all four OOO entries (and every timed pass) share
+    * one collect+shuffle; the deployed operators' cost is untouched. */
   private def shuffledEvents(s: SparkSession, dir: String)
       : (Streaming.ShuffledReplay, Long) =
-    shuffledCache.computeIfAbsent(dir, d => buildShuffled(s, d))
+    Fixtures.cached(s"shuffled_events:$dir")(buildShuffled(s, dir))
 
   private def buildShuffled(s: SparkSession, dir: String)
       : (Streaming.ShuffledReplay, Long) = {

@@ -2,7 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Tables => T}
+import graft.core.{Fixtures, Tables => T}
 import graft.io.{Npy, Pickle}
 import graft.ml.Similarity
 
@@ -29,18 +29,13 @@ object Batch42Entries extends Entries {
     * bench passes re-read the same files instead of re-writing them —
     * the entry times the INGEST+SEARCH path, which is the deploy
     * shape (corpora are written once, queried forever). */
-  private val npyDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def npyShardDir(s: SparkSession, dir: String): String =
-    npyDirCache.computeIfAbsent(dir, d => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_npy_ann_").toFile
-      tmp.deleteOnExit()
-      Npy.writeNpyShards(T.embeddings(s, d), "vec_id", "embedding",
-        tmp.getPath, rowsPerShard = 256)
-      tmp.getPath
-    })
+    Fixtures.cached(s"npy_shards:$dir") {
+      val tmp = Fixtures.tempDir("graft_npy_ann_").toString
+      Npy.writeNpyShards(T.embeddings(s, dir), "vec_id", "embedding",
+        tmp, rowsPerShard = 256)
+      tmp
+    }
 
   /** 17×16 BMP fixture for the 256-bit dHash family — the
     * [[Batch40Entries.dhashBmps]] construction at the wider grid, so
@@ -60,6 +55,22 @@ object Batch42Entries extends Entries {
     }
     graft.mm.Multimodal.toMediaFrame(s, rows)
   }
+
+  /** Column spec of [[dhash256Rows]] for the typed feather and dta
+    * writers. */
+  private[graft] val dhash256Cols = Seq(("media_id", 'n'), ("content", 'y'),
+    ("format", 's'), ("width", 'n'), ("height", 'n'))
+
+  /** [[dhash256Bmps]] as writer rows in media_id order — the one input
+    * of the feather and dta media fixtures. */
+  private[graft] def dhash256Rows(s: SparkSession): Seq[Seq[Any]] =
+    dhash256Bmps(s).select(col("media_id"), col("content"),
+        col("meta.format"), col("meta.width"), col("meta.height"))
+      .collect() // 32 fixture rows — a bounded driver write
+      .sortBy(_.getLong(0))
+      .map(r => Seq[Any](r.getLong(0).toDouble, r.getAs[Array[Byte]](1),
+        r.getString(2), r.getInt(3).toDouble, r.getInt(4).toDouble))
+      .toSeq
 
   /** Reinterpret a [0, 2^32) long as its signed 32-bit value without
     * an ANSI overflow throw. */

@@ -2,6 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.io.{Dta, Sas, Sav, Xpt}
 
 /** Round-15 batch (cont.): statistical-package ingest — closes the
@@ -37,23 +38,11 @@ object Batch43Entries extends Entries {
 
   /** One multi-page sas7bdat per JVM for the paged-scan entry — the
     * [[Batch42Entries.npyShardDir]] write-once convention. */
-  private val pagedFileCache =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private def pagedFile(): String = {
-    val cached = pagedFileCache.get()
-    if (cached != null) cached
-    else {
-      val cols = Seq(("k", true), ("txt", false))
-      val data = (0 until 24000).map(i =>
-        Seq(i.toDouble, s"v${i % 13}"): Seq[Any])
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_sas_paged_", ".sas7bdat")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp, Sas.dumps(cols, data))
-      pagedFileCache.compareAndSet(null, tmp.toString)
-      pagedFileCache.get()
-    }
+  private def pagedFile(): String = Fixtures.cached("sas_paged") {
+    val cols = Seq(("k", true), ("txt", false))
+    val data = (0 until 24000).map(i =>
+      Seq(i.toDouble, s"v${i % 13}"): Seq[Any])
+    Fixtures.tempFile("graft_sas_paged_", ".sas7bdat")(Sas.dumps(cols, data))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

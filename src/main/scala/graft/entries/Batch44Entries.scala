@@ -2,6 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.io.{Dta, Sas, Sav}
 
 /** Round-16 batch: the compressed statistical-format closures the r15
@@ -47,11 +48,6 @@ import graft.io.{Dta, Sas, Sav}
   */
 object Batch44Entries extends Entries {
 
-  /** One RLE sas7bdat on disk per JVM for the paged half of the entry
-    * (the [[Batch43Entries]] write-once convention). */
-  private val rleFileCache =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   private val rleCols = Seq(("id", true), ("grp", false), ("score", true),
     ("note", false))
 
@@ -65,87 +61,45 @@ object Batch44Entries extends Entries {
 
   /** One workbook DIRECTORY per JVM (8 homogeneous single-sheet
     * exports — the read_worksheets deploy shape). */
-  private val xlsxDirCache =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private def xlsxDir(s: SparkSession): String = {
-    val cached = xlsxDirCache.get()
-    if (cached != null) cached
-    else {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_xlsx_dir_")
-      tmp.toFile.deleteOnExit()
-      (0 until 8).foreach { f =>
-        val df = s.range(f * 75, f * 75 + 75).selectExpr(
-          "CAST(id AS DOUBLE) AS id",
-          "'g' || CAST(id % 3 AS STRING) AS grp",
-          "CASE WHEN id % 4 = 0 THEN NULL " +
-            "ELSE CAST(id AS DOUBLE) * 0.5 - 3.0 END AS score",
-          "CASE WHEN id % 5 = 0 THEN NULL " +
-            "ELSE 'n' || CAST(id AS STRING) END AS note")
-        graft.io.Excel.writeXlsx(
-          tmp.resolve(f"wb_$f%02d.xlsx").toString, Seq("data" -> df))
-      }
-      xlsxDirCache.compareAndSet(null, tmp.toString)
-      xlsxDirCache.get()
+  private def xlsxDir(s: SparkSession): String = Fixtures.cached("xlsx_dir") {
+    val tmp = Fixtures.tempDir("graft_xlsx_dir_")
+    (0 until 8).foreach { f =>
+      val df = s.range(f * 75, f * 75 + 75).selectExpr(
+        "CAST(id AS DOUBLE) AS id",
+        "'g' || CAST(id % 3 AS STRING) AS grp",
+        "CASE WHEN id % 4 = 0 THEN NULL " +
+          "ELSE CAST(id AS DOUBLE) * 0.5 - 3.0 END AS score",
+        "CASE WHEN id % 5 = 0 THEN NULL " +
+          "ELSE 'n' || CAST(id AS STRING) END AS note")
+      graft.io.Excel.writeXlsx(
+        tmp.resolve(f"wb_$f%02d.xlsx").toString, Seq("data" -> df))
     }
+    tmp.toString
   }
 
   /** One multi-batch feather file per JVM for the batch-parallel half
     * of read_feather. */
-  private val featherFileCache =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private def featherFile(): String = {
-    val cached = featherFileCache.get()
-    if (cached != null) cached
-    else {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      val data = (300 until 600).map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i")
-      }
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_feather_", ".feather")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp,
-        graft.io.Feather.dumps(cols, data, rowsPerBatch = 64))
-      featherFileCache.compareAndSet(null, tmp.toString)
-      featherFileCache.get()
+  private def featherFile(): String = Fixtures.cached("feather_file") {
+    val cols = Seq(("id", true), ("grp", false), ("score", true),
+      ("note", false))
+    val data = (300 until 600).map { i =>
+      Seq[Any](i.toDouble, s"g${i % 3}",
+        if (i % 4 == 0) null else i * 0.5 - 3.0,
+        if (i % 5 == 0) null else s"n$i")
     }
+    Fixtures.tempFile("graft_feather_", ".feather")(
+      graft.io.Feather.dumps(cols, data, rowsPerBatch = 64))
   }
 
-  private def rleFile(): String = {
-    val cached = rleFileCache.get()
-    if (cached != null) cached
-    else {
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_sas_rle_", ".sas7bdat")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp,
-        Sas.dumps(rleCols, rleRows(600 until 1200), rle = true))
-      rleFileCache.compareAndSet(null, tmp.toString)
-      rleFileCache.get()
-    }
-  }
+  /** One RLE and one RDC sas7bdat on disk per JVM for the paged half of
+    * their entries (the [[Batch43Entries]] write-once convention). */
+  private def rleFile(): String = Fixtures.cached("sas_rle")(
+    Fixtures.tempFile("graft_sas_rle_", ".sas7bdat")(
+      Sas.dumps(rleCols, rleRows(600 until 1200), rle = true)))
 
-  private val rdcFileCache =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private def rdcFile(): String = {
-    val cached = rdcFileCache.get()
-    if (cached != null) cached
-    else {
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_sas_rdc_", ".sas7bdat")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp,
-        Sas.dumps(rleCols, rleRows(600 until 1200), rdc = true))
-      rdcFileCache.compareAndSet(null, tmp.toString)
-      rdcFileCache.get()
-    }
-  }
+  private def rdcFile(): String = Fixtures.cached("sas_rdc")(
+    Fixtures.tempFile("graft_sas_rdc_", ".sas7bdat")(
+      Sas.dumps(rleCols, rleRows(600 until 1200), rdc = true)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -238,30 +192,19 @@ object Batch44Entries extends Entries {
     // the pixel closed form, so the ingest path is oracle-gated end
     // to end (the npy_ann_topk composition convention)
     "feather_media_dedup" -> ((s, dir) => {
-      val media = Batch42Entries.dhash256Bmps(s)
-      val rows = media.select(col("media_id"), col("content"),
-          col("meta.format"), col("meta.width"), col("meta.height"))
-        .collect() // 32 fixture rows — a bounded driver write
-        .map(r => Seq[Any](r.getLong(0).toDouble, r.getAs[Array[Byte]](1),
-          r.getString(2), r.getInt(3).toDouble, r.getInt(4).toDouble))
-        .toSeq
-      val blob = graft.io.Feather.dumpsTyped(
-        Seq(("media_id", 'n'), ("content", 'y'), ("format", 's'),
-          ("width", 'n'), ("height", 'n')), rows, rowsPerBatch = 8)
+      val blob = graft.io.Feather.dumpsTyped(Batch42Entries.dhash256Cols,
+        Batch42Entries.dhash256Rows(s), rowsPerBatch = 8)
       val typed = graft.io.Feather.readFeatherTypedBlobs(s,
         Seq(("corpus.feather", blob)))
       // law, asserted in-entry (the merge-artifact convention): the
       // block-parallel TYPED scan of the same bytes must hand back the
       // identical blobs — 32 bounded rows, so the compare is cheap
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_media_corpus_", ".feather")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp, blob)
+      val tmp = Fixtures.tempFile("graft_media_corpus_", ".feather")(blob)
       def key(df: org.apache.spark.sql.DataFrame) = df
         .select(col("row"), col("media_id"), md5(col("content")),
           col("format"), col("width"), col("height"))
         .collect().map(_.toSeq).sortBy(_.toString)
-      val paged = graft.io.Feather.readFeatherTypedPaged(s, tmp.toString,
+      val paged = graft.io.Feather.readFeatherTypedPaged(s, tmp,
         partitions = 4)
       require(key(paged).toSeq == key(typed).toSeq,
         "feather_media_dedup: typed paged scan diverged from the " +

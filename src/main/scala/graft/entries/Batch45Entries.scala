@@ -2,6 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Fixtures
 import graft.io.{Dta, Feather}
 
 /** Round-17 batch: the residual real-file refusals the r16 verdict
@@ -32,12 +33,6 @@ import graft.io.{Dta, Feather}
   */
 object Batch45Entries extends Entries {
 
-  /** One multi-batch ZSTD feather file per JVM for the batch-parallel
-    * half of read_feather_zstd (the [[Batch44Entries]] write-once
-    * convention). */
-  private val zstdFileCache =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   private val shardCols = Seq(("id", true), ("grp", false),
     ("score", true), ("note", false))
 
@@ -47,54 +42,23 @@ object Batch45Entries extends Entries {
       if (i % 5 == 0) null else s"n$i")
   }
 
-  private def zstdFile(): String = {
-    val cached = zstdFileCache.get()
-    if (cached != null) cached
-    else {
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_feather_zstd_", ".feather")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp,
-        Feather.dumps(shardCols, shardRows(300 until 600),
-          rowsPerBatch = 64, zstd = true))
-      zstdFileCache.compareAndSet(null, tmp.toString)
-      zstdFileCache.get()
-    }
-  }
-
-  /** One strL .dta on disk per JVM for the paged half of
-    * read_dta_strl_paged. */
-  private val strlFileCache =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  /** One multi-batch ZSTD feather file per JVM for the batch-parallel
+    * half of read_feather_zstd (the [[Batch44Entries]] write-once
+    * convention). */
+  private def zstdFile(): String = Fixtures.cached("feather_zstd")(
+    Fixtures.tempFile("graft_feather_zstd_", ".feather")(
+      Feather.dumps(shardCols, shardRows(300 until 600),
+        rowsPerBatch = 64, zstd = true)))
 
   /** The media corpus as (blob, on-disk path), built once per JVM —
-    * bench passes and multi-scale verify runs must not re-serialize
+    * timed passes and multi-scale verify runs must not re-serialize
     * the BMP corpus per invocation. */
-  private val mediaCorpusCache =
-    new java.util.concurrent.atomic.AtomicReference[(Array[Byte], String)](null)
-
-  private def mediaCorpus(s: SparkSession): (Array[Byte], String) = {
-    val cached = mediaCorpusCache.get()
-    if (cached != null) cached
-    else {
-      val media = Batch42Entries.dhash256Bmps(s)
-      val rows = media.select(col("media_id"), col("content"),
-          col("meta.format"), col("meta.width"), col("meta.height"))
-        .collect() // 32 fixture rows — a bounded driver write
-        .map(r => Seq[Any](r.getLong(0).toDouble, r.getAs[Array[Byte]](1),
-          r.getString(2), r.getInt(3).toDouble, r.getInt(4).toDouble))
-        .toSeq
-      val blob = Dta.dumpsTyped(
-        Seq(("media_id", 'n'), ("content", 'y'), ("format", 's'),
-          ("width", 'n'), ("height", 'n')), rows)
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_media_corpus_", ".dta")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp, blob)
-      mediaCorpusCache.compareAndSet(null, (blob, tmp.toString))
-      mediaCorpusCache.get()
+  private def mediaCorpus(s: SparkSession): (Array[Byte], String) =
+    Fixtures.cached("dta_media_corpus") {
+      val blob = Dta.dumpsTyped(Batch42Entries.dhash256Cols,
+        Batch42Entries.dhash256Rows(s))
+      (blob, Fixtures.tempFile("graft_media_corpus_", ".dta")(blob))
     }
-  }
 
   private def strlRows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
     Seq[Any](i.toDouble, s"g${i % 3}",
@@ -102,19 +66,11 @@ object Batch45Entries extends Entries {
       if (i % 5 == 0) null else s"n$i" + ("q" * (i % 29)))
   }
 
-  private def strlFile(): String = {
-    val cached = strlFileCache.get()
-    if (cached != null) cached
-    else {
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_dta_strl_", ".dta")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp,
-        Dta.dumps(shardCols, strlRows(0 until 300), strl = true))
-      strlFileCache.compareAndSet(null, tmp.toString)
-      strlFileCache.get()
-    }
-  }
+  /** One strL .dta on disk per JVM for the paged half of
+    * read_dta_strl_paged. */
+  private def strlFile(): String = Fixtures.cached("dta_strl")(
+    Fixtures.tempFile("graft_dta_strl_", ".dta")(
+      Dta.dumps(shardCols, strlRows(0 until 300), strl = true)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

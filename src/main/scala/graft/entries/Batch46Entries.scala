@@ -2,7 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Tables => T}
+import graft.core.{Fixtures, Tables => T}
 import graft.io.Feather
 import graft.ml.Similarity
 
@@ -46,23 +46,16 @@ import graft.ml.Similarity
 object Batch46Entries extends Entries {
 
   /** One vector-feather export per (dir, JVM) — the testdata is
-    * immutable, so bench passes re-read the same files instead of
+    * immutable, so timed passes re-read the same files instead of
     * re-serializing them (the npyShardDir convention: entries time the
-    * INGEST+SEARCH path — corpora are written once, queried forever). */
-  private val vecDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val embCols = Seq(("vec_id", 'n'), ("embedding", 'v'))
-
-  /** Exports emb_fsl.feather (even vec_ids, fixed_size_list<f32>),
+    * INGEST+SEARCH path — corpora are written once, queried forever).
+    * Exports emb_fsl.feather (even vec_ids, fixed_size_list<f32>),
     * emb_lst.feather (odd vec_ids, list<f32>, zstd) and
     * emb_planted.feather (the SemDeDup planted corpus,
     * fixed_size_list<f32>); returns the directory. */
   private def vecDir(s: SparkSession, dir: String): String =
-    vecDirCache.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_vec_ingest_").toFile
-      tmp.deleteOnExit()
+    Fixtures.cached(s"vec_feathers:$dir") {
+      val tmp = Fixtures.tempDir("graft_vec_ingest_")
       def dump(df: DataFrame, kind: Char, name: String,
                zstd: Boolean): Unit = {
         // ≤4k rows × 64 floats (TESTDATA.md) — a bounded driver write
@@ -71,8 +64,7 @@ object Batch46Entries extends Entries {
           .map(r => Seq[Any](r.getLong(0).toDouble,
             r.getSeq[Float](1).toIndexedSeq))
           .toSeq
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp.getPath, name),
+        java.nio.file.Files.write(tmp.resolve(name),
           Feather.dumpsTyped(Seq(("vec_id", 'n'), ("embedding", kind)),
             data, rowsPerBatch = 256, zstd = zstd))
       }
@@ -83,8 +75,8 @@ object Batch46Entries extends Entries {
         zstd = true)
       dump(Batch14Entries.withPlantedDups(emb), 'v',
         "emb_planted.feather", zstd = false)
-      tmp.getPath
-    })
+      tmp.toString
+    }
 
   private def typedVecs(s: SparkSession, path: String): DataFrame =
     Feather.readFeatherTyped(s, path)
@@ -93,33 +85,12 @@ object Batch46Entries extends Entries {
   /** The 32-BMP perceptual corpus as ONE multi-batch zstd Arrow file,
     * written once per JVM — media_pipeline's ingest fixture (the
     * Batch45 mediaCorpus convention, Arrow container). */
-  private val mediaFeatherCache =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private def mediaFeather(s: SparkSession): String = {
-    val cached = mediaFeatherCache.get()
-    if (cached != null) cached
-    else {
-      val media = Batch42Entries.dhash256Bmps(s)
-      val rows = media.select(col("media_id"), col("content"),
-          col("meta.format"), col("meta.width"), col("meta.height"))
-        .collect() // 32 fixture rows — a bounded driver write
-        .sortBy(_.getLong(0))
-        .map(r => Seq[Any](r.getLong(0).toDouble, r.getAs[Array[Byte]](1),
-          r.getString(2), r.getInt(3).toDouble, r.getInt(4).toDouble))
-        .toSeq
-      val blob = Feather.dumpsTyped(
-        Seq(("media_id", 'n'), ("content", 'y'), ("format", 's'),
-          ("width", 'n'), ("height", 'n')), rows,
-        rowsPerBatch = 8, zstd = true) // 4 blocks: the scan splits
-      val tmp = java.nio.file.Files
-        .createTempFile("graft_media_pipe_", ".feather")
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.write(tmp, blob)
-      mediaFeatherCache.compareAndSet(null, tmp.toString)
-      mediaFeatherCache.get()
-    }
-  }
+  private def mediaFeather(s: SparkSession): String =
+    Fixtures.cached("media_feather")(
+      Fixtures.tempFile("graft_media_pipe_", ".feather")(
+        Feather.dumpsTyped(Batch42Entries.dhash256Cols,
+          Batch42Entries.dhash256Rows(s),
+          rowsPerBatch = 8, zstd = true))) // 4 blocks: the scan splits
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -1,10 +1,16 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Scans every SparkEntry query's physical plan for scale red flags:
   * cartesian products, BroadcastNestedLoopJoins outside the adjudicated
-  * allowlist, and degenerated dedup/LSH band joins; the exchange count
+  * allowlist, unpartitioned windows outside theirs, and degenerated
+  * dedup/LSH band joins; the exchange count
   * is surfaced per query (PlanAuditSpec asserts a ceiling on it). The
   * oracle gate can NOT catch these — a degenerated self-join still
   * returns correct rows while scanning n² — so [[audit]] is asserted by
@@ -98,6 +104,28 @@ object PlanAudit {
     // BNLJ ever reappears there it is a regression to the join path
     // and must flag
 
+  /** Queries that plan a `WindowExec` with no partition spec, which
+    * moves every input row of the window to one task. README design
+    * rule 3 allows it only over a bounded domain; anywhere else it
+    * flags `GLOBALWINDOW`. Pinned to the 24 queries that plan one at
+    * sf0.001, in two groups. */
+  private val globalWindowAllowed: Set[String] = Set(
+    // distinct-value, per-group or capped domains: distinct scores,
+    // values, event times or tokens; contingency cells; IV categories;
+    // the 256 rank buckets of `rank2OfCounts`; the 1e6-id prefix
+    // buckets of vocabGrowth; the <= 8192-row brute-force haversine
+    // side; the 24 merge heights of a 25-point linkage
+    "avg_precision", "binary_iv", "chi2", "haversine_nn",
+    "haversine_nn_full", "heaps_fit", "kaplan_meier", "kruskal_wallis",
+    "ks_test", "linkage_single_heights", "otsu", "pr_curve", "roc_auc",
+    "vocab_growth", "wilcoxon", "zipf_fit",
+    // row-scale, still to rewrite to a partitioned or two-phase form:
+    // the window runs over a table that grows with the data (keys,
+    // customers, an encoded column's values, 100-document shard
+    // buckets, weeks)
+    "key_skew", "label_encode", "llm_pipeline", "media_pipeline",
+    "pack_shards", "pareto_curve", "rfm_segments", "wow_growth")
+
   /** Count the exchanges a plan EXECUTES, not the ones its printout
     * mentions: a `persist()`ed / lazily checkpointed shared subtree
     * prints once per consumer but runs once, so the r17 text count
@@ -115,44 +143,53 @@ object PlanAudit {
     * an AQE plan outside [[audit]], which disables AQE) is unwrapped
     * to its current physical plan rather than silently contributing
     * zero (the adaptive wrapper hides its children from `children`). */
-  def distinctExchanges(root: org.apache.spark.sql.execution.SparkPlan): Int = {
+  def distinctExchanges(root: SparkPlan): Int =
+    executedNodes(root).count(_.isInstanceOf[Exchange])
+
+  /** Every node a plan executes, each shared subtree once: the walk
+    * [[distinctExchanges]] documents (adaptive wrappers unwrapped,
+    * cached relations and reused subqueries visited once). */
+  private def executedNodes(root: SparkPlan): Seq[SparkPlan] = {
     val seenCached = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
     val seenSub = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-    var n = 0
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        walk(a.executedPlan)
+    val out = Seq.newBuilder[SparkPlan]
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case _ =>
+        out += p
         p match {
-          case _: org.apache.spark.sql.execution.exchange.Exchange => n += 1
-          case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+          case im: InMemoryTableScanExec =>
             if (seenCached.add(im.relation.cachedPlan)) walk(im.relation.cachedPlan)
           case _ =>
         }
         p.children.foreach(walk)
         p.subqueries.foreach { sq =>
           val target = sq match {
-            case r: org.apache.spark.sql.execution.ReusedSubqueryExec => r.child
+            case r: ReusedSubqueryExec => r.child
             case other => other
           }
           if (seenSub.add(target)) walk(target)
         }
     }
     walk(root)
-    n
+    out.result()
   }
 
-  /** Audit one query's executed plan (tree for the exchange count,
-    * text for the shape flags). */
-  def auditPlan(name: String,
-                planTree: org.apache.spark.sql.execution.SparkPlan): Audit = {
+  /** Audit one query's executed plan (tree for the exchange count and
+    * the windows, text for the other shape flags). */
+  def auditPlan(name: String, planTree: SparkPlan): Audit = {
     val plan = planTree.toString
     val lines = plan.split('\n')
     val cartesian = lines.count(_.contains("CartesianProduct"))
     val nlj = lines.count(_.contains("BroadcastNestedLoopJoin"))
-    val exchanges = distinctExchanges(planTree)
+    val nodes = executedNodes(planTree)
+    val exchanges = nodes.count(_.isInstanceOf[Exchange])
+    val globalWindows = nodes.count {
+      case w: WindowExec => w.partitionSpec.isEmpty
+      case _ => false
+    }
     val nljUnexpected = nlj > 0 && !nljAllowed.contains(name)
     // dedup/LSH pair queries MUST join keyed on their band/bucket
     // column — a degenerated self-join would still return correct
@@ -169,7 +206,9 @@ object PlanAudit {
     val flags = Seq(
       if (cartesian > 0) Some(s"CARTESIAN=$cartesian") else None,
       if (nljUnexpected) Some(s"NLJ=$nlj") else None,
-      if (bandJoinMissing) Some("NOBANDJOIN") else None).flatten
+      if (bandJoinMissing) Some("NOBANDJOIN") else None,
+      if (globalWindows > 0 && !globalWindowAllowed.contains(name))
+        Some(s"GLOBALWINDOW=$globalWindows") else None).flatten
     Audit(name, exchanges, flags, None)
   }
 

@@ -1,14 +1,17 @@
-// Per-query profiler for the optimization rounds: runs each named
-// registry query through the bench's noop sink, one untimed warm-up and
-// then <iters> timed passes, and reports where the wall time goes:
+// Per-query profiler and the one timing main: runs each named registry
+// query (with no names, every registry query in sorted order) through
+// the noop sink, one untimed warm-up and then <iters> timed passes, and
+// reports where the wall time goes:
 //  - per pass: wall, jobs, stages, tasks, stage-wall and task-run sums,
 //    shuffle bytes and GC (SparkListener); for streaming entries also
 //    the micro-batch count and `durationMs` summed per phase over the
 //    pass's replays (StreamingQueryListener);
 //  - after the last pass: the costliest stages and the noop write's
 //    final adaptive plan, with its initial plan (QueryExecutionListener).
+// A query that fails in any pass prints `PROFILE <q> FAILED: …` and no
+// timing line for that pass, and the run goes on to the next query.
 // Run:
-//   sbt 'runMain graft.tools.Profile <sfDir> <iters> <q1> <q2> ...'
+//   sbt 'runMain graft.tools.Profile <sfDir> <iters> [<q1> <q2> ...]'
 // Spark confs pass as JVM system properties, e.g. the state store:
 //   sbt 'set run / javaOptions += "-Dspark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"' \
 //       'runMain graft.tools.Profile <sfDir> <iters> <q1> ...'
@@ -29,13 +32,15 @@ object Profile {
     Seq("addBatch", "queryPlanning", "walCommit", "commitOffsets", "latestOffset")
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: graft.tools.Profile <sfDir> <iters> <query> [<query> ...]")
+    require(args.length >= 2,
+      "usage: graft.tools.Profile <sfDir> <iters> [<query> ...]")
     val sfDir = args(0)
     val iters = args(1).toInt
     require(iters >= 1, s"iters must be at least 1 (got $iters): " +
       "the plan and stage lines print after the last timed pass")
-    val names = args.drop(2).toSeq
+    val names =
+      if (args.length > 2) args.drop(2).toSeq
+      else graft.SparkEntry.queries.keys.toSeq.sorted
     val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -104,47 +109,54 @@ object Profile {
       graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    for (name <- names) {
-      // one untimed warmup (codegen/JIT); a query that fails here is
-      // reported and skipped, so the later queries still run
-      val warm = try { exec(name); awaitEvents(); true } catch {
-        case e: Throwable =>
-          println(s"PROFILE $name FAILED: ${e.getMessage}"); false
-      }
+    def pass(name: String, it: Int): Unit = {
+      stageWall.clear(); jobs = 0
+      written = None
+      phaseMs.synchronized { phaseMs.clear(); batches = 0 }
+      collecting = true
+      val t0 = System.nanoTime()
+      exec(name)
+      val dt = (System.nanoTime() - t0) / 1e9
+      awaitEvents()
+      collecting = false
       spark.catalog.clearCache()
-      if (warm) for (it <- 1 to iters) {
-        stageWall.clear(); jobs = 0
-        written = None
-        phaseMs.synchronized { phaseMs.clear(); batches = 0 }
-        collecting = true
-        val t0 = System.nanoTime()
-        exec(name)
-        val dt = (System.nanoTime() - t0) / 1e9
-        awaitEvents()
-        collecting = false
-        spark.catalog.clearCache()
-        val stages = stageWall.toSeq
-        val wallSum = stages.map(_._2._2).sum / 1e3
-        val runSum = stages.map(_._2._3).sum / 1e3
-        val shuf = stages.map(_._2._4).sum / 1e6
-        val gc = stages.map(_._2._5).sum / 1e3
-        val tasks = stages.map(_._2._6).sum
-        println(f"PROFILE $name it$it wall=$dt%.2fs jobs=$jobs stages=${stages.size} tasks=$tasks stageWallSum=$wallSum%.2fs taskRunSum=$runSum%.2fs shuffleMB=$shuf%.1f gc=$gc%.2fs")
-        phaseMs.synchronized {
-          if (batches > 0)
-            println(s"PROFILE $name it$it stream batches=$batches durationMs " +
-              phases.map(p => s"$p=${phaseMs.getOrElse(p, 0L)}").mkString(" "))
+      val stages = stageWall.toSeq
+      val wallSum = stages.map(_._2._2).sum / 1e3
+      val runSum = stages.map(_._2._3).sum / 1e3
+      val shuf = stages.map(_._2._4).sum / 1e6
+      val gc = stages.map(_._2._5).sum / 1e3
+      val tasks = stages.map(_._2._6).sum
+      println(f"PROFILE $name it$it wall=$dt%.2fs jobs=$jobs stages=${stages.size} tasks=$tasks stageWallSum=$wallSum%.2fs taskRunSum=$runSum%.2fs shuffleMB=$shuf%.1f gc=$gc%.2fs")
+      phaseMs.synchronized {
+        if (batches > 0)
+          println(s"PROFILE $name it$it stream batches=$batches durationMs " +
+            phases.map(p => s"$p=${phaseMs.getOrElse(p, 0L)}").mkString(" "))
+      }
+      if (it == iters) {
+        stages.sortBy(-_._2._2).take(12).foreach { case (id, (nm, w, r, sb, g, nt)) =>
+          println(f"  stage$id%-5d wall=${w / 1e3}%.2fs run=${r / 1e3}%.2fs tasks=$nt%-4d shufMB=${sb / 1e6}%.1f gc=${g / 1e3}%.2fs  $nm")
         }
-        if (it == iters) {
-          stages.sortBy(-_._2._2).take(12).foreach { case (id, (nm, w, r, sb, g, nt)) =>
-            println(f"  stage$id%-5d wall=${w / 1e3}%.2fs run=${r / 1e3}%.2fs tasks=$nt%-4d shufMB=${sb / 1e6}%.1f gc=${g / 1e3}%.2fs  $nm")
-          }
-          println(s"PROFILE $name plan (noop write, executed):")
-          println(written.map(_.executedPlan.toString.take(20000))
-            .getOrElse("  (no write reported)"))
-        }
+        println(s"PROFILE $name plan (noop write, executed):")
+        println(written.map(_.executedPlan.toString.take(20000))
+          .getOrElse("  (no write reported)"))
       }
     }
+
+    /** Runs one pass; on a failure it stops collecting, drops cached
+      * blocks, reports the error and returns false. */
+    def attempt(name: String)(body: => Unit): Boolean =
+      try { body; true } catch { case e: Throwable =>
+        collecting = false
+        spark.catalog.clearCache()
+        println(s"PROFILE $name FAILED: ${e.getMessage}")
+        false
+      }
+
+    // one untimed warm-up (codegen/JIT), then the timed passes; the
+    // first failure ends the query, so the later queries still run
+    for (name <- names)
+      attempt(name) { exec(name); awaitEvents(); spark.catalog.clearCache() } &&
+        (1 to iters).forall(it => attempt(name)(pass(name, it)))
     spark.stop()
   }
 }

@@ -6,9 +6,10 @@ import graft.tools.PlanAudit
   * that loses its equi-key still returns correct rows while scanning
   * n² — so the plan-shape audit runs as a failing test, not an
   * optional tool: zero CartesianProducts, zero NOBANDJOIN dedup/LSH
-  * degenerations, and no BroadcastNestedLoopJoin outside the
-  * adjudicated allowlist (1-row scalar broadcasts + capped pair
-  * kernels) across EVERY declared query at sf0.001.
+  * degenerations, no BroadcastNestedLoopJoin outside the adjudicated
+  * allowlist (1-row scalar broadcasts + capped pair kernels) and no
+  * unpartitioned window outside its pinned set, across EVERY declared
+  * query at sf0.001.
   *
   * stream_dedup is excluded: its entry runs a MemoryStream to
   * completion as a throughput probe (~10 s) and contains no batch
@@ -45,5 +46,20 @@ class PlanAuditSpec extends SparkSpec {
     val heavy = audits.filter(a => a.exchanges > ceiling(a.name))
     assert(heavy.isEmpty,
       s"exchange explosion: ${heavy.map(a => s"${a.name}=${a.exchanges}").mkString("; ")}")
+  }
+
+  test("an unpartitioned window outside the pinned set flags GLOBALWINDOW") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.row_number
+    val df = spark.range(10)
+      .withColumn("rn", row_number().over(Window.orderBy("id")))
+    val plan = df.queryExecution.executedPlan
+    assert(PlanAudit.auditPlan("new_global_rank", plan).flags ===
+      Seq("GLOBALWINDOW=1"))
+    assert(PlanAudit.auditPlan("ks_test", plan).flags.isEmpty)
+    val perKey = spark.range(10).withColumn("rn",
+      row_number().over(Window.partitionBy("id").orderBy("id")))
+    assert(PlanAudit.auditPlan("new_keyed_rank",
+      perKey.queryExecution.executedPlan).flags.isEmpty)
   }
 }

@@ -27,4 +27,16 @@ class RegistrySpec extends AnyFunSuite {
     val rowsOnly = names -- oracle
     assert(rowsOnly.size === 338 - SparkEntry.oracleSql.size)
   }
+
+  test("Verify.selected rejects SPARK_GRAFT_ONLY names outside the registry") {
+    val typo = intercept[IllegalArgumentException](
+      Verify.selected(Some("smart_group,smart_grop")))
+    assert(typo.getMessage.contains("'smart_grop'"))
+    assert(!typo.getMessage.contains("'smart_group'"))
+    val empty = intercept[IllegalArgumentException](Verify.selected(Some("")))
+    assert(empty.getMessage.contains("''"))
+    assert(Verify.selected(Some(" ks_test,smart_group ")).sorted ===
+      Seq("ks_test", "smart_group"))
+    assert(Verify.selected(None).toSet === names)
+  }
 }

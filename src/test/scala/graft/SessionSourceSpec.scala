@@ -25,7 +25,7 @@ class SessionSourceSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"builds a session outside GraftSession: $hits")
   }
 
-  test("the programs under src/main are exactly the six known mains") {
+  test("the programs under src/main are exactly the five known mains") {
     val objectDecl = "object (\\w+)".r
     val mains = scalaFiles("src/main").flatMap { p =>
       val src = Files.readString(p)
@@ -33,15 +33,14 @@ class SessionSourceSpec extends AnyFunSuite {
         objectDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
       }
     }
-    assert(mains.sorted == Seq("ApiDoc", "Bench", "PipelineDemo", "PlanAudit",
+    assert(mains.sorted == Seq("ApiDoc", "PipelineDemo", "PlanAudit",
       "Profile", "Verify"))
   }
 
-  test("src/main reads exactly five SPARK_GRAFT_* env knobs") {
+  test("src/main reads exactly two SPARK_GRAFT_* env knobs") {
     val knobs = scalaFiles("src/main").flatMap { p =>
       "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(Files.readString(p))
     }.toSet
-    assert(knobs == Set("CPUS", "ITERS", "ONLY", "SF_DIR", "WARM_DIR")
-      .map("SPARK_GRAFT_" + _))
+    assert(knobs == Set("CPUS", "ONLY").map("SPARK_GRAFT_" + _))
   }
 }
