@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   *   reference's static batch-size heuristics, SURVEY §4);
   * - shuffle partitions sized to the environment (driver/test: cores;
   *   cluster: leave to AQE coalescing from a high initial value);
-  * - graft native functions (dot_f32/cosine_f32) registered;
+  * - graft native functions (the vector and text table of
+  *   [[graft.functions.NativeFunctions]]) injected by the extension;
   * - UTC session timezone (oracle-comparable timestamps).
   */
 object GraftSession {
@@ -39,7 +40,6 @@ object GraftSession {
     val s = builder(Some(s"local[$cores]"), Some(cores))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    graft.functions.VectorExpressions.register(s)
     graft.encode.Activations.register(s)
     s
   }

@@ -1,11 +1,11 @@
 package graft.entries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.clean.{Duplicates, Missing, Outliers, Extras}
 import graft.core.{Exact, Tables => T}
-import graft.clean.{Duplicates, Missing, Outliers}
 
-/** Driver-contract entries for cleaning operators (SURVEY §2.9 missing/
+/** Registry queries for cleaning operators (SURVEY §2.9 missing /
   * outliers, §2.4 duplicates). Nulls are derived deterministically
   * (`nullif`-style) since the testdata has none.
   */
@@ -100,6 +100,35 @@ object CleanEntries extends Entries {
       cols.zipWithIndex.map { case (c, i) => (c, r.getDouble(i)) }
         .toDF("column", "distinct_ratio")
         .orderBy("column")
+    }),
+
+    // §2.9 get_threshold_from (otsu) (gofast/utils/mathext.py:156) as a
+    // fully distributed plan — argmax of between-class variance over a
+    // 32-bin histogram of l_extendedprice.
+    "otsu" -> ((s, dir) => {
+      Extras.otsuThresholdDf(T.lineitem(s, dir), "l_extendedprice", bins = 32)
+    }),
+
+    // clean.Extras.fillMode: nulls take the column's deterministic
+    // mode (most frequent, smallest value on ties).
+    "fill_mode" -> ((s, dir) => {
+      val withNulls = T.customer(s, dir)
+        .select(col("c_custkey"),
+          when(col("c_custkey") % 7 === 0, lit(null))
+            .otherwise(col("c_mktsegment")).as("seg"))
+      graft.clean.Extras.fillMode(withNulls, "seg")
+        .orderBy("c_custkey")
+    }),
+
+    // Extras.numericToCategorical (was ScalaTest-only): low-cardinality
+    // numeric columns become strings. On nation, n_regionkey (5
+    // distinct) casts, n_nationkey (25 distinct) stays numeric — both
+    // cardinalities sit far from the maxDistinct=10 line, so the HLL
+    // estimate (deterministic for fixed data) cannot flip the decision.
+    "num_to_cat" -> ((s, dir) => {
+      graft.clean.Extras.numericToCategorical(T.nation(s, dir),
+          maxDistinct = 10)
+        .orderBy("n_nationkey")
     })
   )
 
@@ -166,6 +195,57 @@ object CleanEntries extends Entries {
         |SELECT 'o_orderstatus', CAST(COUNT(DISTINCT o_orderstatus) AS DOUBLE) / COUNT(*) FROM orders
         |UNION ALL
         |SELECT 'o_orderpriority', CAST(COUNT(DISTINCT o_orderpriority) AS DOUBLE) / COUNT(*) FROM orders
-        |ORDER BY "column"""".stripMargin
+        |ORDER BY "column"""".stripMargin,
+
+    "otsu" ->
+      """WITH b AS (SELECT MIN(l_extendedprice) lo, MAX(l_extendedprice) hi FROM lineitem),
+        |h AS (
+        |  SELECT CASE WHEN hi <= lo THEN 0 ELSE
+        |      LEAST(CAST(FLOOR((l_extendedprice - lo) / ((hi - lo) / 32.0)) AS BIGINT), 31) END AS bin,
+        |    COUNT(*) AS n, MIN(lo) AS lo, MIN(hi) AS hi
+        |  FROM lineitem, b GROUP BY 1),
+        |c AS (
+        |  SELECT bin, n, lo, hi,
+        |    CAST(SUM(n) OVER (ORDER BY bin) AS DOUBLE) AS a0,
+        |    CAST(SUM(n * bin) OVER (ORDER BY bin) AS DOUBLE) AS b0,
+        |    CAST(SUM(n) OVER () AS DOUBLE) AS att,
+        |    CAST(SUM(n * bin) OVER () AS DOUBLE) AS bt,
+        |    (hi - lo) / 32.0 AS w
+        |  FROM h),
+        |e AS (
+        |  SELECT bin, lo, hi, w, a0, att,
+        |    lo * a0 + w * (b0 + a0 * 0.5) AS s0,
+        |    lo * att + w * (bt + att * 0.5) AS st
+        |  FROM c)
+        |SELECT bin, lo + (bin + 1) * w AS threshold,
+        |  a0 * (att - a0) * (s0 / a0 - (st - s0) / (att - a0))
+        |               * (s0 / a0 - (st - s0) / (att - a0)) AS between_var
+        |FROM e WHERE bin < 31 AND att - a0 > 0
+        |ORDER BY between_var DESC, bin ASC LIMIT 1""".stripMargin,
+
+    "fill_mode" ->
+      """WITH withnulls AS (
+        |  SELECT c_custkey,
+        |    CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END AS seg
+        |  FROM customer),
+        |m AS (
+        |  SELECT seg FROM withnulls WHERE seg IS NOT NULL
+        |  GROUP BY seg ORDER BY COUNT(*) DESC, seg ASC LIMIT 1)
+        |SELECT c_custkey, COALESCE(w.seg, (SELECT seg FROM m)) AS seg
+        |FROM withnulls w
+        |ORDER BY c_custkey""".stripMargin,
+
+    "num_to_cat" ->
+      """SELECT n_nationkey, n_name, CAST(n_regionkey AS VARCHAR) AS n_regionkey
+        |FROM nation ORDER BY n_nationkey""".stripMargin
   )
+
+  override val nljAllowed: Set[String] = Set(
+    // the fitted Otsu threshold is a 1-row scalar broadcast
+    "otsu")
+
+  override val globalWindowAllowed: Set[String] = Set(
+    // capped domain: the threshold sweep runs over the 32 histogram
+    // bins
+    "otsu")
 }

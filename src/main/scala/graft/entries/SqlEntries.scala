@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.{Tables => T}
 import graft.sql.SqlGuards
 
-/** Driver-contract entries for the SQL pass-through surface (SURVEY
-  * §3.1 DBAnalysis; §2.4 grouping-sets note). The engine's SQL dialect
-  * is Spark SQL; the same text (mod dialect) runs in DuckDB as the
-  * oracle. Every query goes through [[SqlGuards]] plan-shape guards —
-  * the strictly-stronger replacement for the reference's regex checks.
+/** Registry queries for the SQL pass-through surface (SURVEY §3.1
+  * DBAnalysis; §2.4 grouping-sets note). The engine's SQL dialect is
+  * Spark SQL; the same text (mod dialect) runs in DuckDB as the oracle.
+  * Every query goes through [[SqlGuards]] plan-shape guards — the
+  * strictly-stronger replacement for the reference's regex checks.
   */
 object SqlEntries extends Entries {
 

@@ -114,7 +114,7 @@ object PipelineDemo {
     // Stupid Backoff LM of the corpus itself, rank best-first and cut
     // at a token budget with the two-level-prefix-sum selection, then
     // pack survivors into ~2k-token output shards in a seeded order
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val normed = docs.withColumn("text",
       call_function("unicode_norm", col("text"), lit("NFC")))
     val sbScored = graft.text.LangModel.scoreByStupidBackoff(

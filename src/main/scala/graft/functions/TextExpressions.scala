@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -231,118 +229,78 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
 }
 
 object TextExpressions {
+  import NativeFunctions.fn
 
-  /** Register `unicode_norm(str, 'NFC')` and `lcs_len(a, b)` on an
-    * existing session. Idempotent (the [[VectorExpressions.register]]
-    * convention — the guard checks the LAST-added function so an
-    * upgrade re-registers the full set). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    // guard on the LAST-added function so an upgraded register() call
-    // on a session registered by an older build re-registers the set
-    if (registry.functionExists(FunctionIdentifier("multi_contains"))) return
-    registry.registerFunction(
-      FunctionIdentifier("lcs_len"),
-      new ExpressionInfo(classOf[LcsLength].getName, null,
-        "lcs_len", "lcs_len(a, b) - longest common subsequence length " +
-          "of two token arrays", "", "", "", "array_funcs", "4.0.0", "",
-        "built-in"),
-      (children: Seq[Expression]) => LcsLength(children(0), children(1)))
-    registry.registerFunction(
-      FunctionIdentifier("unicode_norm"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, null,
-        "unicode_norm", "unicode_norm(str, form) - UAX #15 normalization",
-        "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => {
-        val form = children(1) match {
-          case Literal(v: UTF8String, StringType) => v.toString
-          case other => throw new IllegalArgumentException(
-            s"unicode_norm form must be a string literal, got $other")
-        }
-        UnicodeNormalize(children(0), form)
-      })
-    def intLit(e: Expression, fn: String): Int = e match {
-      case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn maxN must be an integer literal, got $other")
-    }
-    registry.registerFunction(
-      FunctionIdentifier("ngram_overlap_all"),
-      new ExpressionInfo(classOf[NgramOverlapAll].getName, null,
-        "ngram_overlap_all", "ngram_overlap_all(cand, ref, maxN) - " +
-          "clipped word-n-gram overlap triples for orders 1..maxN",
-        "", "", "", "array_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => NgramOverlapAll(children(0),
-        children(1), intLit(children(2), "ngram_overlap_all")))
-    registry.registerFunction(
-      FunctionIdentifier("chargram_overlap_all"),
-      new ExpressionInfo(classOf[CharGramOverlapAll].getName, null,
-        "chargram_overlap_all", "chargram_overlap_all(cand, ref, maxN) - " +
-          "clipped char-n-gram overlap triples for orders 1..maxN",
-        "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => CharGramOverlapAll(children(0),
-        children(1), intLit(children(2), "chargram_overlap_all")))
-    registry.registerFunction(
-      FunctionIdentifier("dup_ngram_chars"),
-      new ExpressionInfo(classOf[DupNgramChars].getName, null,
-        "dup_ngram_chars", "dup_ngram_chars(toks, n, minOccur) - " +
-          "[total_chars, dup_chars] of n-grams repeated >= minOccur times",
-        "", "", "", "array_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => DupNgramChars(children(0),
-        intLit(children(1), "dup_ngram_chars"),
-        intLit(children(2), "dup_ngram_chars")))
-    registry.registerFunction(
-      FunctionIdentifier("top_ngram_stats"),
-      new ExpressionInfo(classOf[TopNgramStats].getName, null,
-        "top_ngram_stats", "top_ngram_stats(toks, n) - most frequent " +
-          "n-gram of the document and its count",
-        "", "", "", "array_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => TopNgramStats(children(0),
-        intLit(children(1), "top_ngram_stats")))
-    registry.registerFunction(
-      FunctionIdentifier("dup_token_counts"),
-      new ExpressionInfo(classOf[DupTokenCounts].getName, null,
-        "dup_token_counts", "dup_token_counts(toks) - [n_tokens, " +
-          "occurrences of token types appearing more than once]",
-        "", "", "", "array_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => DupTokenCounts(children(0)))
-    registry.registerFunction(
-      FunctionIdentifier("summarize_doc"),
-      new ExpressionInfo(classOf[SummarizeDoc].getName, null,
-        "summarize_doc", "summarize_doc(text, minTokenLen) - top " +
-          "TF-IDF sentence of the document (sidx, summary, score)",
-        "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => SummarizeDoc(children(0),
-        intLit(children(1), "summarize_doc")))
-    registry.registerFunction(
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, null,
-        "winnow_fps", "winnow_fps(str, k, w) - winnowing fingerprint " +
-          "hashes (SIGMOD 2003) of a normalized char stream", "", "", "",
-        "string_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => WinnowFps(children(0),
-        intLit(children(1), "winnow_fps"), intLit(children(2), "winnow_fps")))
-    registry.registerFunction(
-      FunctionIdentifier("multi_contains"),
-      new ExpressionInfo(classOf[MultiContains].getName, null,
-        "multi_contains", "multi_contains(text, patterns) - ascending " +
-          "ids of the literal patterns occurring in text (Aho-Corasick, " +
-          "one pass)", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-      (children: Seq[Expression]) => {
-        val pats = children(1) match {
-          case Literal(a: org.apache.spark.sql.catalyst.util.ArrayData,
-              org.apache.spark.sql.types.ArrayType(StringType, _)) =>
-            a.toArray[UTF8String](StringType).map(_.toString).toSeq
-          case ca: org.apache.spark.sql.catalyst.expressions.CreateArray =>
-            ca.children.map {
-              case Literal(s: UTF8String, StringType) => s.toString
-              case other => throw new IllegalArgumentException(
-                s"multi_contains patterns must be string literals, got $other")
-            }
-          case other => throw new IllegalArgumentException(
-            s"multi_contains patterns must be an array literal, got $other")
-        }
-        MultiContains(children(0), pats)
-      })
+  private def intLit(e: Expression, name: String): Int = e match {
+    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$name maxN must be an integer literal, got $other")
   }
+
+  /** The native text functions: rows of the one table
+    * [[NativeFunctions]] registers and [[GraftExtensions]] injects.
+    * Each builder checks that its plan-time arguments are literals. */
+  val functions: Seq[NativeFunctions.Row] = Seq(
+    fn(classOf[LcsLength], "lcs_len", "lcs_len(a, b) - longest common " +
+      "subsequence length of two token arrays")(
+      c => LcsLength(c(0), c(1))),
+    fn(classOf[UnicodeNormalize], "unicode_norm",
+      "unicode_norm(str, form) - UAX #15 normalization", "string_funcs") { c =>
+      val form = c(1) match {
+        case Literal(v: UTF8String, StringType) => v.toString
+        case other => throw new IllegalArgumentException(
+          s"unicode_norm form must be a string literal, got $other")
+      }
+      UnicodeNormalize(c(0), form)
+    },
+    fn(classOf[NgramOverlapAll], "ngram_overlap_all",
+      "ngram_overlap_all(cand, ref, maxN) - clipped word-n-gram overlap " +
+        "triples for orders 1..maxN")(
+      c => NgramOverlapAll(c(0), c(1), intLit(c(2), "ngram_overlap_all"))),
+    fn(classOf[CharGramOverlapAll], "chargram_overlap_all",
+      "chargram_overlap_all(cand, ref, maxN) - clipped char-n-gram overlap " +
+        "triples for orders 1..maxN", "string_funcs")(
+      c => CharGramOverlapAll(c(0), c(1),
+        intLit(c(2), "chargram_overlap_all"))),
+    fn(classOf[DupNgramChars], "dup_ngram_chars",
+      "dup_ngram_chars(toks, n, minOccur) - [total_chars, dup_chars] of " +
+        "n-grams repeated >= minOccur times")(
+      c => DupNgramChars(c(0), intLit(c(1), "dup_ngram_chars"),
+        intLit(c(2), "dup_ngram_chars"))),
+    fn(classOf[TopNgramStats], "top_ngram_stats",
+      "top_ngram_stats(toks, n) - most frequent n-gram of the document " +
+        "and its count")(
+      c => TopNgramStats(c(0), intLit(c(1), "top_ngram_stats"))),
+    fn(classOf[DupTokenCounts], "dup_token_counts",
+      "dup_token_counts(toks) - [n_tokens, occurrences of token types " +
+        "appearing more than once]")(
+      c => DupTokenCounts(c(0))),
+    fn(classOf[SummarizeDoc], "summarize_doc",
+      "summarize_doc(text, minTokenLen) - top TF-IDF sentence of the " +
+        "document (sidx, summary, score)", "string_funcs")(
+      c => SummarizeDoc(c(0), intLit(c(1), "summarize_doc"))),
+    fn(classOf[WinnowFps], "winnow_fps",
+      "winnow_fps(str, k, w) - winnowing fingerprint hashes (SIGMOD 2003) " +
+        "of a normalized char stream", "string_funcs")(
+      c => WinnowFps(c(0), intLit(c(1), "winnow_fps"),
+        intLit(c(2), "winnow_fps"))),
+    fn(classOf[MultiContains], "multi_contains",
+      "multi_contains(text, patterns) - ascending ids of the literal " +
+        "patterns occurring in text (Aho-Corasick, one pass)",
+      "string_funcs") { c =>
+      val pats = c(1) match {
+        case Literal(a: org.apache.spark.sql.catalyst.util.ArrayData,
+            org.apache.spark.sql.types.ArrayType(StringType, _)) =>
+          a.toArray[UTF8String](StringType).map(_.toString).toSeq
+        case ca: org.apache.spark.sql.catalyst.expressions.CreateArray =>
+          ca.children.map {
+            case Literal(s: UTF8String, StringType) => s.toString
+            case other => throw new IllegalArgumentException(
+              s"multi_contains patterns must be string literals, got $other")
+          }
+        case other => throw new IllegalArgumentException(
+          s"multi_contains patterns must be an array literal, got $other")
+      }
+      MultiContains(c(0), pats)
+    })
 }

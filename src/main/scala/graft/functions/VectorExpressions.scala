@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -741,20 +741,11 @@ case class PQAdcLut(left: Expression, right: Expression,
 }
 
 object VectorExpressions {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.SparkSession
+  import NativeFunctions.fn
 
-  private def fn(cls: Class[_], name: String, usage: String)
-                (build: Seq[Expression] => Expression) =
-    (FunctionIdentifier(name),
-      new ExpressionInfo(cls.getName, null, name, usage, "", "", "",
-        "array_funcs", "4.0.0", "", "built-in"),
-      build)
-
-  /** The native vector functions, the one table both [[register]] and
-    * [[GraftExtensions]] install from, so `DESCRIBE FUNCTION` reads the
-    * same however the session was built. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  /** The native vector functions: rows of the one table
+    * [[NativeFunctions]] registers and [[GraftExtensions]] injects. */
+  val functions: Seq[NativeFunctions.Row] = Seq(
     fn(classOf[DotF32], "dot_f32", "dot_f32(a, b) - float-array dot product")(
       c => DotF32(c(0), c(1))),
     fn(classOf[CosineF32], "cosine_f32",
@@ -765,23 +756,4 @@ object VectorExpressions {
       c => QuantizeI8(c(0))),
     fn(classOf[CosineI8], "cosine_i8", "cosine_i8(a, b) - cosine over int8 codes")(
       c => CosineI8(c(0), c(1))))
-
-  /** Register the vector functions on an existing session (callable via
-    * `call_function` / SQL). Idempotent: entries call this defensively
-    * per query, and re-registering spams "replaced a previously
-    * registered function" warnings through every test log. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (registry.functionExists(FunctionIdentifier("cosine_i8"))) return
-    functions.foreach { case (id, info, build) =>
-      registry.registerFunction(id, info, build)
-    }
-  }
-}
-
-/** SparkSessionExtensions hook:
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    VectorExpressions.functions.foreach(ext.injectFunction)
 }

@@ -42,7 +42,7 @@ object Similarity {
     * math to [[cosine]] (per-element double products, sequential sum)
     * but a tight JIT loop instead of interpreted HOF dispatch. */
   def cosineNative(df: DataFrame, a: Column, b: Column): Column = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
+    graft.functions.NativeFunctions.register(df.sparkSession)
     call_function("cosine_f32", a, b)
   }
 
@@ -65,7 +65,7 @@ object Similarity {
     * once, persist the codes, scan with [[cosineI8TopK]]. */
   def quantizeI8(df: DataFrame, vecCol: String,
                  outCol: String = "vec_i8"): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
+    graft.functions.NativeFunctions.register(df.sparkSession)
     df.withColumn(outCol, call_function("quantize_i8", col(vecCol)))
   }
 
@@ -85,7 +85,7 @@ object Similarity {
     * VectorExprSpec and measured at the million-vector probe. */
   def cosineI8TopK(df: DataFrame, codeCol: String, idCol: String,
                    query: Seq[Double], k: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
+    graft.functions.NativeFunctions.register(df.sparkSession)
     val q = lit(quantizeQuery(query))
     df.select(col(idCol),
         call_function("cosine_i8", col(codeCol), q).as("cos"))
@@ -140,7 +140,7 @@ object Similarity {
     def searchI8(query: Seq[Double], k: Int, nprobe: Int = 4): DataFrame = {
       require(bucketed.columns.contains("_vec_i8"),
         "index built without int8 codes: pass withI8 = true to ivfIndex")
-      graft.functions.VectorExpressions.register(bucketed.sparkSession)
+      graft.functions.NativeFunctions.register(bucketed.sparkSession)
       val probeIds = centroids.zipWithIndex
         .sortBy { case (c, _) => -cos(query, c) }
         .take(nprobe).map(_._2)
@@ -211,7 +211,7 @@ object Similarity {
                      nprobe: Int = 4): DataFrame = {
       require(bucketed.columns.contains("_vec_i8"),
         "index built without int8 codes: pass withI8 = true to ivfIndex")
-      graft.functions.VectorExpressions.register(bucketed.sparkSession)
+      graft.functions.NativeFunctions.register(bucketed.sparkSession)
       batchedProbe[Array[Byte]](queries, k, nprobe,
         (q, _) => quantizeQuery(q), "_vec_i8",
         (v, q) => call_function("cosine_i8", v, q))
@@ -650,7 +650,7 @@ object Similarity {
     import org.apache.spark.ml.functions.array_to_vector
     require(fitFraction > 0.0 && fitFraction <= 1.0,
       s"fitFraction must be in (0, 1], got $fitFraction")
-    if (withI8) graft.functions.VectorExpressions.register(df.sparkSession)
+    if (withI8) graft.functions.NativeFunctions.register(df.sparkSession)
     val base = if (withI8)
       df.withColumn("_vec_i8", call_function("quantize_i8", col(vecCol)))
     else df

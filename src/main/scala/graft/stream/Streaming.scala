@@ -389,7 +389,7 @@ object Streaming {
                        idCol: String, candCol: String, refCol: String,
                        rougeMaxN: Int = 2, chrfMaxN: Int = 6,
                        chrfBeta: Double = 2.0): DataFrame = {
-    graft.functions.TextExpressions.register(refs.sparkSession)
+    graft.functions.NativeFunctions.register(refs.sparkSession)
     val empty = array().cast("array<string>")
     val c = cands.select(col(idCol).as("doc"),
       coalesce(graft.text.TextFns.tokens(lower(col(candCol))), empty)
@@ -465,7 +465,7 @@ object Streaming {
     val fps = call_function("winnow_fps",
       regexp_replace(graft.text.TextFns.cleanText(col(textCol)), " ", ""),
       lit(k), lit(w))
-    graft.functions.TextExpressions.register(docs.sparkSession)
+    graft.functions.NativeFunctions.register(docs.sparkSession)
     docs.withWatermark(tsCol, watermark)
       .select(col(idCol), col(tsCol), explode(fps).as("fp"))
       .join(org.apache.spark.sql.functions.broadcast(
@@ -775,7 +775,9 @@ object Streaming {
     * wrong-tool refusal beats a silent executor OOM) — the message
     * says which user and what to do (shorten the delay so events
     * ripen sooner, or route the hot key to the batch operator).
-    * EVSPROBE's skew axis measures the knee honestly in SCALE.md. */
+    * The knee was measured by the retired ScaleProbe's user-skew axis;
+    * SCALE.md keeps the numbers in its historical record ("OOO reorder
+    * buffer under user skew"). */
   def reorderedStream[S <: Product : TypeTag, O <: Product : TypeTag](
       events: Dataset[TypedEvent],
       delay: String,

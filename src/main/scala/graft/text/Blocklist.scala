@@ -101,7 +101,7 @@ object Blocklist {
     * order, preserving the literal path's output exactly. */
   private def hitsAc(df: DataFrame, idCol: String, textCol: String,
                      ts: Seq[String], ps: Seq[String]): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
+    graft.functions.NativeFunctions.register(df.sparkSession)
     val all = (ts ++ ps).map(p => " " + p + " ")
     val padded = concat(lit(" "), TextFns.cleanText(textOrEmpty(textCol)), lit(" "))
     val matched = call_function("multi_contains", padded, lit(all.toArray))
@@ -136,7 +136,7 @@ object Blocklist {
     val ps = phrases.map(norm).filter(_.contains(" ")).distinct
     require(ts.nonEmpty || ps.nonEmpty, "empty blocklist: nothing to match")
     if (engine == "ac" || (engine == "auto" && ts.size + ps.size > 64)) {
-      graft.functions.TextExpressions.register(df.sparkSession)
+      graft.functions.NativeFunctions.register(df.sparkSession)
       val all = (ts ++ ps).map(p => " " + p + " ")
       val padded = concat(lit(" "), TextFns.cleanText(textOrEmpty(textCol)), lit(" "))
       return df.filter(size(call_function("multi_contains", padded,

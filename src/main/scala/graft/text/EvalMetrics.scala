@@ -126,7 +126,7 @@ object EvalMetrics {
   private def localOverlap(cands: DataFrame, refs: DataFrame,
                            idCol: String, candCol: String, refCol: String,
                            maxN: Int): DataFrame = {
-    graft.functions.TextExpressions.register(cands.sparkSession)
+    graft.functions.NativeFunctions.register(cands.sparkSession)
     val empty = array().cast("array<string>")
     val c = cands.select(col(idCol).as("doc"),
       coalesce(TextFns.tokens(lower(col(candCol))), empty).as("_t"))
@@ -202,7 +202,7 @@ object EvalMetrics {
     * (doc, lcs, rouge_l). */
   def rougeL(cands: DataFrame, refs: DataFrame, idCol: String,
              candCol: String, refCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(cands.sparkSession)
+    graft.functions.NativeFunctions.register(cands.sparkSession)
     val c = cands.select(col(idCol).as("doc"),
       TextFns.tokens(lower(col(candCol))).as("_ct"))
     val r = refs.select(col(idCol).as("doc"),
@@ -309,7 +309,7 @@ object EvalMetrics {
     * reference row score (0, 0.0). Output: (doc, em, f1). */
   def qaEval(cands: DataFrame, refs: DataFrame, idCol: String,
              candCol: String, refCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(cands.sparkSession)
+    graft.functions.NativeFunctions.register(cands.sparkSession)
     val empty = array().cast("array<string>")
     val c = cands.select(col(idCol).as("doc"),
       TextFns.cleanText(col(candCol)).as("_cn"))
@@ -421,7 +421,7 @@ object EvalMetrics {
             (lit(b2) * col("chrf_p") + col("chrf_r")), 6))
           .otherwise(lit(0.0)).as("chrf"))
     if (kernel == "local") {
-      graft.functions.TextExpressions.register(cands.sparkSession)
+      graft.functions.NativeFunctions.register(cands.sparkSession)
       val c = cands.select(col(idCol).as("doc"),
         coalesce(regexp_replace(lower(col(candCol)), "\\s+", ""), lit(""))
           .as("_s"))

@@ -67,7 +67,7 @@ object Keywords {
       // sentences) — one native summarize_doc expression per row, no
       // checkpoint/aggregate/window machinery; the relational kernel
       // below stays as the single-giant-doc escape hatch
-      graft.functions.TextExpressions.register(df.sparkSession)
+      graft.functions.NativeFunctions.register(df.sparkSession)
       return df.select(col(idCol).as("doc"),
           call_function("summarize_doc", col(textCol), lit(minTokenLen))
             .as("_s"))

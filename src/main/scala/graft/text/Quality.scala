@@ -116,7 +116,7 @@ object Quality {
       // both signals are doc-local — one native expression each, no
       // shuffle (the dup_ngram_chars rule); the relational kernel
       // below stays as the single-giant-doc escape hatch
-      graft.functions.TextExpressions.register(df.sparkSession)
+      graft.functions.NativeFunctions.register(df.sparkSession)
       val toks = coalesce(TextFns.tokens(col(textCol)),
         array().cast("array<string>"))
       return df.select(col(idCol), length(col(textCol)).as("_nc"),
@@ -275,7 +275,7 @@ object Quality {
       // row, NO shuffle at all (the EvalMetrics row-local rule) —
       // the relational kernel below stays as the single-giant-doc
       // escape hatch
-      graft.functions.TextExpressions.register(df.sparkSession)
+      graft.functions.NativeFunctions.register(df.sparkSession)
       return df.select(col(idCol),
           call_function("dup_ngram_chars",
             coalesce(TextFns.tokens(col(textCol)),
@@ -379,7 +379,7 @@ object Quality {
       // the modal gram of a document is doc-local: one native
       // expression per row replaces the (doc, gram) count + window —
       // NO shuffle at all (same tie-break: count desc, gram binary asc)
-      graft.functions.TextExpressions.register(df.sparkSession)
+      graft.functions.NativeFunctions.register(df.sparkSession)
       val toks = coalesce(TextFns.tokens(col(textCol)),
         array().cast("array<string>"))
       return df.select(col(idCol),

@@ -61,7 +61,7 @@ object Winnow {
       // monotonic-deque window minima inside whole-stage codegen,
       // bit-identical to the HOF path on the (ASCII) cleaned stream —
       // asserted in Batch34Spec
-      graft.functions.TextExpressions.register(df.sparkSession)
+      graft.functions.NativeFunctions.register(df.sparkSession)
       val fps = call_function("winnow_fps", sRaw, lit(k), lit(w))
       return df.select(col(idCol), explode(fps).as("fp"))
     }

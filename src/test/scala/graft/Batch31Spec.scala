@@ -58,7 +58,7 @@ class Batch31Spec extends SparkSpec {
       .as[Double].collect().sorted
     val n = vals.length
     val acc = 10000
-    val row = graft.entries.Batch31Entries.queries("quantiles_approx")(
+    val row = SparkEntry.queries("quantiles_approx")(
       spark, sf).head()
     Seq(0.25 -> 0, 0.5 -> 1, 0.75 -> 2, 0.99 -> 3).foreach {
       case (q, i) =>

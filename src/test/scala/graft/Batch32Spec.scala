@@ -38,7 +38,7 @@ class Batch32Spec extends SparkSpec {
   }
 
   test("sb_ppl entry runs on testdata and scores held-in docs lower") {
-    val out = entries.Batch32Entries.queries("sb_ppl")(spark, sf)
+    val out = SparkEntry.queries("sb_ppl")(spark, sf)
     val rows = out.collect()
     assert(rows.length > 0)
     // held-in docs (doc_id % 5 != 0) were in the training corpus, so
@@ -157,7 +157,7 @@ class Batch32Spec extends SparkSpec {
 
   test("unicode_norm matches java.text.Normalizer across forms") {
     import org.apache.spark.sql.functions._
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val samples = Seq(
       "café",        // decomposed e + combining acute
       "café",              // composed
@@ -187,7 +187,7 @@ class Batch32Spec extends SparkSpec {
 
   test("NFC normalization repairs hash-based dedup across encodings") {
     import org.apache.spark.sql.functions._
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     // the same text, composed vs decomposed: raw md5 sees two
     // documents, normalized md5 sees one — the reason the expression
     // exists
@@ -199,9 +199,9 @@ class Batch32Spec extends SparkSpec {
   }
 
   test("approx_count_distinct honors the HLL++ error bound vs exact counts") {
-    val exact = graft.entries.MoreEntries.queries("unique_stats")(spark, sf)
+    val exact = SparkEntry.queries("unique_stats")(spark, sf)
       .head()
-    val approx = graft.entries.Batch32Entries.queries("unique_stats_approx")(
+    val approx = SparkEntry.queries("unique_stats_approx")(
       spark, sf).head()
     // default rsd 0.05; allow 3 standard errors plus slack for tiny
     // cardinalities (HLL is exact in the sparse regime anyway)
@@ -246,7 +246,7 @@ class Batch32Spec extends SparkSpec {
 
   test("lcs_len matches a reference DP on random token arrays") {
     import org.apache.spark.sql.functions._
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     def goldLcs(a: Seq[String], b: Seq[String]): Int = {
       val dp = Array.ofDim[Int](a.length + 1, b.length + 1)
       for (i <- 1 to a.length; j <- 1 to b.length)

@@ -105,7 +105,7 @@ class Batch34Spec extends SparkSpec {
   }
 
   test("winnow_fps registers as a SQL function") {
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val out = spark.sql(
       "SELECT winnow_fps('abcdefghij', 5, 4) AS f").as[Seq[Long]].head()
     assert(out.nonEmpty) // 10 chars -> 6 grams -> 3 complete windows
@@ -160,7 +160,7 @@ class Batch34Spec extends SparkSpec {
   }
 
   test("multi_contains finds overlapping and suffix patterns via fail links") {
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val out = spark.sql(
       "SELECT multi_contains('xabcy', array('ab', 'abc', 'bc', 'zz')) AS m")
       .as[Seq[Int]].head()

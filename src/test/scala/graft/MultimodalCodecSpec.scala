@@ -1,7 +1,7 @@
 package graft
 
 import graft.mm.Multimodal
-import graft.entries.Batch18Entries
+import graft.entries.MediaEntries
 
 /** The real javax.imageio codec path: lossless container round-trips,
   * analytic moment parity, resize floor-sampling, corrupt-input
@@ -33,7 +33,7 @@ class MultimodalCodecSpec extends SparkSpec {
   }
 
   test("imageFeatures matches analytic moments computed in-process") {
-    val rows = Batch18Entries.syntheticBmps(spark)
+    val rows = MediaEntries.syntheticBmps(spark)
     val got = Multimodal.imageFeatures(rows, thumbSide = 8)
       .orderBy("media_id").collect()
     assert(got.length == 24)

@@ -62,4 +62,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(PlanAudit.auditPlan("new_keyed_rank",
       perKey.queryExecution.executedPlan).flags.isEmpty)
   }
+
+  test("each domain's plan-shape exemptions name its own queries") {
+    for (domain <- SparkEntry.files) {
+      val foreign = (domain.nljAllowed ++ domain.globalWindowAllowed)
+        .diff(domain.queries.keySet)
+      assert(foreign.isEmpty,
+        s"${domain.getClass.getSimpleName} exempts queries it does not " +
+          s"define: ${foreign.toSeq.sorted.mkString(", ")}")
+    }
+  }
 }

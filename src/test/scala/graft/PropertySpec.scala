@@ -39,7 +39,7 @@ class PropertySpec extends SparkSpec {
     // cosine of two quantized vectors can drift at most ~2·0.5·√n/127
     // ≈ 0.06 at n = 64 — assert a 0.08 bound over random vectors,
     // including adversarial shapes (one dominant element, tiny tails)
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     val vecGen = for {
       n <- Gen.choose(4, 64)
       a <- Gen.listOfN(n, Gen.choose(-100.0, 100.0))
@@ -225,7 +225,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("unicode_norm is idempotent and NFC∘NFD == NFC") {
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.NativeFunctions.register(spark)
     // strings mixing ascii, precomposed accents, combining marks and
     // compatibility characters
     val charGen = Gen.oneOf(

@@ -29,7 +29,7 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("exact screen on the planted corpus keeps exactly the base ids") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val planted = graft.entries.Batch14Entries.withPlantedDups(emb)
+    val planted = graft.entries.MlEntries.withPlantedDups(emb)
     val kept = Similarity
       .semanticDedupExact(planted, "vec_id", "embedding", 0.9)
       .select("vec_id").as[Long].collect().toSet
@@ -74,7 +74,7 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("bucketed screen reaches >= 0.9 drop recall vs the exact screen") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val planted = graft.entries.Batch14Entries.withPlantedDups(emb)
+    val planted = graft.entries.MlEntries.withPlantedDups(emb)
     val allIds = planted.select("vec_id").as[Long].collect().toSet
     val exactKept = Similarity
       .semanticDedupExact(planted, "vec_id", "embedding", 0.9)
@@ -96,7 +96,7 @@ class SemanticDedupSpec extends SparkSpec {
   test("clone collapse leaves the bucketed drop set identical, " +
       "including exact clone sets and threshold 1.0") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val planted = graft.entries.Batch14Entries.withPlantedDups(emb)
+    val planted = graft.entries.MlEntries.withPlantedDups(emb)
     // plant EXACT clone sets on top of the near-dups: ids +200000/+300000
     // re-use the base vector byte-for-byte (the dominant real dup mode)
     val clones = Seq(200000L, 300000L).map { off =>

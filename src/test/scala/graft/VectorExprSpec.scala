@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExpressions
+import graft.functions.{NativeFunctions, VectorExpressions}
 import graft.ml.Similarity
 
 class VectorExprSpec extends SparkSpec {
   import spark.implicits._
 
   test("dot_f32/cosine_f32 match the interpreted HOF formulation bit-for-bit") {
-    VectorExpressions.register(spark)
+    NativeFunctions.register(spark)
     val df = Seq(
       (1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
       (2L, Array(0.5f, -0.5f, 0.0f), Array(0.5f, 0.5f, 1.0f))).toDF("id", "a", "b")
@@ -25,7 +25,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("quantize_i8 codes: exact bytes, scale invariance, zero vector") {
-    VectorExpressions.register(spark)
+    NativeFunctions.register(spark)
     val df = Seq(
       (1L, Array(1.0f, -0.5f, 0.25f, 0.0f)),
       (2L, Array(4.0f, -2.0f, 1.0f, 0.0f)), // same direction, 4x scale
@@ -43,7 +43,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("cosine_i8 approximates cosine_f32 and ranks real embeddings") {
-    VectorExpressions.register(spark)
+    NativeFunctions.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sf)
     val q = emb.filter(col("vec_id") === 0).head.getSeq[Float](1)
       .map(_.toDouble)
@@ -101,14 +101,14 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("null input yields null, not a crash") {
-    VectorExpressions.register(spark)
+    NativeFunctions.register(spark)
     val df = Seq((Some(Array(1.0f)), None: Option[Array[Float]])).toDF("a", "b")
     val r = df.select(call_function("dot_f32", col("a"), col("b"))).head
     assert(r.isNullAt(0))
   }
 
   test("expressions survive whole-stage codegen on real embeddings") {
-    VectorExpressions.register(spark)
+    NativeFunctions.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sf)
     val q = emb.filter(col("vec_id") === 0).head.getSeq[Float](1).toArray
     val out = emb.select(col("vec_id"),
@@ -136,23 +136,29 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("SQL surface works after registration") {
-    VectorExpressions.register(spark)
+    NativeFunctions.register(spark)
     val r = spark.sql(
       "SELECT dot_f32(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))").head
     assert(r.getDouble(0) == 11.0)
   }
 
-  test("DESCRIBE FUNCTION gives every vector function its usage") {
-    // no register call: the shared test session is a GraftSession, whose
-    // extension installs the functions from the same table
-    for ((id, _, _) <- VectorExpressions.functions) {
-      val usage = spark.sql(s"DESCRIBE FUNCTION ${id.funcName}")
+  test("DESCRIBE FUNCTION gives every native function its usage") {
+    // a fresh session: no earlier register() call on the shared test
+    // session can satisfy it, only the GraftSession extension that
+    // installs the vector and text tables
+    val fresh = spark.newSession()
+    val names = Seq("dot_f32", "cosine_f32", "quantize_i8", "cosine_i8",
+      "lcs_len", "unicode_norm", "ngram_overlap_all",
+      "chargram_overlap_all", "dup_ngram_chars", "top_ngram_stats",
+      "dup_token_counts", "summarize_doc", "winnow_fps", "multi_contains")
+    for (name <- names) {
+      val usage = fresh.sql(s"DESCRIBE FUNCTION $name")
         .collect().map(_.getString(0)).find(_.startsWith("Usage:"))
-      assert(usage.exists(u => u.contains(s"${id.funcName}(") &&
-        !u.contains("N/A")), s"${id.funcName}: $usage")
+      assert(usage.exists(u => u.contains(s"$name(") && !u.contains("N/A")),
+        s"$name: $usage")
     }
-    assert(VectorExpressions.functions.map(_._1.funcName) ===
-      Seq("dot_f32", "cosine_f32", "quantize_i8", "cosine_i8"))
+    assert(NativeFunctions.functions.map(_._1.funcName) === names)
+    assert(VectorExpressions.functions.map(_._1.funcName) === names.take(4))
   }
 }
