@@ -37,16 +37,27 @@ object IoEntries extends Entries {
     Fixtures.tempFile("graft_sas_paged_", ".sas7bdat")(Sas.dumps(cols, data))
   }
 
-  private val rleCols = Seq(("id", true), ("grp", false), ("score", true),
-    ("note", false))
+  /** The closed-form record set the statistical-format entries write —
+    * (id, g<id%3>, id*0.5-3 null every 4th id, n<id> + `noteTail(id)`
+    * null every 5th id) — replayed in DuckDB by [[recordsSql]] and its
+    * siblings. */
+  private val recordCols = Seq(("id", true), ("grp", false),
+    ("score", true), ("note", false))
 
-  private def rleRows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-    Seq[Any](i.toDouble, s"g${i % 3}",
-      if (i % 4 == 0) null else i * 0.5 - 3.0,
-      // long y-runs + space pads exercise repeats and fills; the note
-      // is null every 5th row (reads back as missing)
-      if (i % 5 == 0) null else s"n$i" + ("y" * (i % 37)))
-  }
+  private def recordRows(ids: Range,
+                         noteTail: Int => String = _ => ""): Seq[Seq[Any]] =
+    ids.map { i =>
+      Seq[Any](i.toDouble, s"g${i % 3}",
+        if (i % 4 == 0) null else i * 0.5 - 3.0,
+        if (i % 5 == 0) null else s"n$i" + noteTail(i))
+    }
+
+  // long y-runs + space pads exercise the SAS codecs' repeats and fills
+  private def rleRows(ids: Range): Seq[Seq[Any]] =
+    recordRows(ids, i => "y" * (i % 37))
+
+  private def strlRows(ids: Range): Seq[Seq[Any]] =
+    recordRows(ids, i => "q" * (i % 29))
 
   /** One workbook DIRECTORY per JVM (8 homogeneous single-sheet
     * exports — the read_worksheets deploy shape). */
@@ -68,43 +79,26 @@ object IoEntries extends Entries {
 
   /** One multi-batch feather file per JVM for the batch-parallel half
     * of read_feather. */
-  private def featherFile(): String = Fixtures.cached("feather_file") {
-    val cols = Seq(("id", true), ("grp", false), ("score", true),
-      ("note", false))
-    val data = (300 until 600).map { i =>
-      Seq[Any](i.toDouble, s"g${i % 3}",
-        if (i % 4 == 0) null else i * 0.5 - 3.0,
-        if (i % 5 == 0) null else s"n$i")
-    }
+  private def featherFile(): String = Fixtures.cached("feather_file")(
     Fixtures.tempFile("graft_feather_", ".feather")(
-      graft.io.Feather.dumps(cols, data, rowsPerBatch = 64))
-  }
+      Feather.dumps(recordCols, recordRows(300 until 600), rowsPerBatch = 64)))
 
   /** One RLE and one RDC sas7bdat on disk per JVM for the paged half of
     * their entries (the read_sas_paged write-once convention). */
   private def rleFile(): String = Fixtures.cached("sas_rle")(
     Fixtures.tempFile("graft_sas_rle_", ".sas7bdat")(
-      Sas.dumps(rleCols, rleRows(600 until 1200), rle = true)))
+      Sas.dumps(recordCols, rleRows(600 until 1200), rle = true)))
 
   private def rdcFile(): String = Fixtures.cached("sas_rdc")(
     Fixtures.tempFile("graft_sas_rdc_", ".sas7bdat")(
-      Sas.dumps(rleCols, rleRows(600 until 1200), rdc = true)))
-
-  private val shardCols = Seq(("id", true), ("grp", false),
-    ("score", true), ("note", false))
-
-  private def shardRows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-    Seq[Any](i.toDouble, s"g${i % 3}",
-      if (i % 4 == 0) null else i * 0.5 - 3.0,
-      if (i % 5 == 0) null else s"n$i")
-  }
+      Sas.dumps(recordCols, rleRows(600 until 1200), rdc = true)))
 
   /** One multi-batch ZSTD feather file per JVM for the batch-parallel
     * half of read_feather_zstd (the read_sas_rle write-once
     * convention). */
   private def zstdFile(): String = Fixtures.cached("feather_zstd")(
     Fixtures.tempFile("graft_feather_zstd_", ".feather")(
-      Feather.dumps(shardCols, shardRows(300 until 600),
+      Feather.dumps(recordCols, recordRows(300 until 600),
         rowsPerBatch = 64, zstd = true)))
 
   /** The media corpus as (blob, on-disk path), built once per JVM —
@@ -117,17 +111,11 @@ object IoEntries extends Entries {
       (blob, Fixtures.tempFile("graft_media_corpus_", ".dta")(blob))
     }
 
-  private def strlRows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-    Seq[Any](i.toDouble, s"g${i % 3}",
-      if (i % 4 == 0) null else i * 0.5 - 3.0,
-      if (i % 5 == 0) null else s"n$i" + ("q" * (i % 29)))
-  }
-
   /** One strL .dta on disk per JVM for the paged half of
     * read_dta_strl_paged. */
   private def strlFile(): String = Fixtures.cached("dta_strl")(
     Fixtures.tempFile("graft_dta_strl_", ".dta")(
-      Dta.dumps(shardCols, strlRows(0 until 300), strl = true)))
+      Dta.dumps(recordCols, strlRows(0 until 300), strl = true)))
 
   /** One vector-feather export per (dir, JVM) — the testdata is
     * immutable, so timed passes re-read the same files instead of
@@ -163,7 +151,7 @@ object IoEntries extends Entries {
     }
 
   private def typedVecs(s: SparkSession, path: String): DataFrame =
-    Feather.readFeatherTyped(s, path)
+    Feather.readTyped(s, path)
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
 
   // the sharded records' closed form: 24 rows across two files
@@ -222,7 +210,7 @@ object IoEntries extends Entries {
     "read_npy" -> ((s, dir) => {
       val blob = graft.io.Npy.npyBytes("<f4", Seq(3L, 4L),
         Array.tabulate(12)(_ * 0.5))
-      graft.io.Npy.readNpyBlobs(s, Seq(("f4_2d.npy", blob)))
+      graft.io.Npy.readBlobs(s, Seq(("f4_2d.npy", blob)))
         .select(col("dtype"),
           element_at(col("coords"), 1).as("i"),
           element_at(col("coords"), 2).as("j"),
@@ -260,8 +248,7 @@ object IoEntries extends Entries {
     // against CPython-written fixtures in PickleSpec), parsed by the
     // pure-JVM subset reader — constructor opcodes refuse by design —
     // and pivoted to the wide record frame under the driver-inferred
-    // schema. FULL oracle — the records' closed form. Remaining
-    // read_data descopes: SAS/SPSS (documented conversions).
+    // schema. FULL oracle — the records' closed form.
     "read_pickle" -> ((s, dir) => {
       val recs = (0 until 12).map { i =>
         scala.collection.immutable.ListMap[String, Any](
@@ -271,7 +258,7 @@ object IoEntries extends Entries {
       }
       val blob = Pickle.dumps(recs)
       Pickle.records(
-          Pickle.readPickleBlobs(s, Seq(("records.pkl", blob))),
+          Pickle.readBlobs(s, Seq(("records.pkl", blob))),
           Pickle.inferKeys(Pickle.parse(blob)))
         .select(col("id"), col("name"), col("score"), col("flag"),
           col("note"))
@@ -284,7 +271,7 @@ object IoEntries extends Entries {
     // 24k rows over ~68 data pages split across the default
     // parallelism; FULL oracle — the file's closed form.
     "read_sas_paged" -> ((s, dir) => {
-      val cells = Sas.readSasPaged(s, pagedFile())
+      val cells = Sas.readPaged(s, pagedFile())
       Sas.records(cells, Seq(("k", true), ("txt", false)))
         .select(col("k"), col("txt"))
         .orderBy("k")
@@ -296,19 +283,10 @@ object IoEntries extends Entries {
     // the blob kernel, pivoted to the wide record frame under the file's
     // own column metadata. FULL oracle — the records' closed form.
     "read_sas7bdat" -> ((s, dir) => {
-      def shard(ids: Range): Array[Byte] = Sas.dumps(
-        Seq(("id", true), ("grp", false), ("score", true),
-          ("note", false)),
-        ids.map { i =>
-          Seq[Any](i.toDouble, s"g${i % 3}",
-            if (i % 4 == 0) null else i * 0.5 - 3.0,
-            if (i % 5 == 0) null else s"n$i")
-        })
-      val cells = Sas.readSasBlobs(s, Seq(
-        ("shard_a.sas7bdat", shard(0 until 12)),
-        ("shard_b.sas7bdat", shard(12 until 24))))
-      Sas.records(cells, Seq(("id", true), ("grp", false),
-          ("score", true), ("note", false)))
+      val cells = Sas.readBlobs(s, Seq(
+        ("shard_a.sas7bdat", Sas.dumps(recordCols, recordRows(0 until 12))),
+        ("shard_b.sas7bdat", Sas.dumps(recordCols, recordRows(12 until 24)))))
+      Sas.records(cells, recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -318,18 +296,11 @@ object IoEntries extends Entries {
     // one entry), dictionary long names from the info-13 record. FULL
     // oracle — the same closed form.
     "read_sav" -> ((s, dir) => {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      def rows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i")
-      }
-      val cells = Sav.readSavBlobs(s, Seq(
-        ("shard_a.sav", Sav.dumps(cols, rows(0 until 12))),
-        ("shard_b.sav", Sav.dumps(cols, rows(12 until 24),
+      val cells = Sav.readBlobs(s, Seq(
+        ("shard_a.sav", Sav.dumps(recordCols, recordRows(0 until 12))),
+        ("shard_b.sav", Sav.dumps(recordCols, recordRows(12 until 24),
           bytecode = true))))
-      Sav.records(cells, cols)
+      Sav.records(cells, recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -339,17 +310,10 @@ object IoEntries extends Entries {
     // (pandas.read_stata-validated, DtaSpec), sections located via the
     // format's own <map> offsets. FULL oracle — the same closed form.
     "read_dta" -> ((s, dir) => {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      def rows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i")
-      }
-      val cells = Dta.readDtaBlobs(s, Seq(
-        ("shard_a.dta", Dta.dumps(cols, rows(0 until 12))),
-        ("shard_b.dta", Dta.dumps(cols, rows(12 until 24)))))
-      Dta.records(cells, cols)
+      val cells = Dta.readBlobs(s, Seq(
+        ("shard_a.dta", Dta.dumps(recordCols, recordRows(0 until 12))),
+        ("shard_b.dta", Dta.dumps(recordCols, recordRows(12 until 24)))))
+      Dta.records(cells, recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -371,16 +335,9 @@ object IoEntries extends Entries {
     // oracle — the shared closed form under the format's uppercase 8-char
     // names, aliased back.
     "read_xpt" -> ((s, dir) => {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      def rows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i")
-      }
-      val cells = Xpt.readXptBlobs(s, Seq(
-        ("shard_a.xpt", Xpt.dumps(cols, rows(0 until 12))),
-        ("shard_b.xpt", Xpt.dumps(cols, rows(12 until 24)))))
+      val cells = Xpt.readBlobs(s, Seq(
+        ("shard_a.xpt", Xpt.dumps(recordCols, recordRows(0 until 12))),
+        ("shard_b.xpt", Xpt.dumps(recordCols, recordRows(12 until 24)))))
       // V5 names are uppercase 8-char; alias back for the shared oracle
       Xpt.records(cells, Seq(("ID", true), ("GRP", false),
           ("SCORE", true), ("NOTE", false)))
@@ -397,11 +354,11 @@ object IoEntries extends Entries {
     // whole-file kernel, half through the page-parallel scan of an RLE
     // file on disk — one entry covers BOTH decode paths end to end
     "read_sas_rle" -> ((s, dir) => {
-      val whole = Sas.readSasBlobs(s, Seq(
+      val whole = Sas.readBlobs(s, Seq(
         ("shard_a.sas7bdat",
-          Sas.dumps(rleCols, rleRows(0 until 600), rle = true))))
-      val paged = Sas.readSasPaged(s, rleFile())
-      Sas.records(whole.unionByName(paged), rleCols)
+          Sas.dumps(recordCols, rleRows(0 until 600), rle = true))))
+      val paged = Sas.readPaged(s, rleFile())
+      Sas.records(whole.unionByName(paged), recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -413,11 +370,11 @@ object IoEntries extends Entries {
     // the OTHER SAS codec through both decode paths: one RDC blob
     // whole-file, one RDC file through the page-parallel scan
     "read_sas_rdc" -> ((s, dir) => {
-      val whole = Sas.readSasBlobs(s, Seq(
+      val whole = Sas.readBlobs(s, Seq(
         ("shard_a.sas7bdat",
-          Sas.dumps(rleCols, rleRows(0 until 600), rdc = true))))
-      val paged = Sas.readSasPaged(s, rdcFile())
-      Sas.records(whole.unionByName(paged), rleCols)
+          Sas.dumps(recordCols, rleRows(0 until 600), rdc = true))))
+      val paged = Sas.readPaged(s, rdcFile())
+      Sas.records(whole.unionByName(paged), recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -428,18 +385,12 @@ object IoEntries extends Entries {
     // as compression 1. One shard zsav, one plain bytecode: both codecs
     // must land on the identical closed form. FULL oracle.
     "read_zsav" -> ((s, dir) => {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      def rows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i")
-      }
-      val cells = Sav.readSavBlobs(s, Seq(
-        ("shard_a.zsav", Sav.dumps(cols, rows(0 until 300), zsav = true)),
-        ("shard_b.sav", Sav.dumps(cols, rows(300 until 600),
+      val cells = Sav.readBlobs(s, Seq(
+        ("shard_a.zsav",
+          Sav.dumps(recordCols, recordRows(0 until 300), zsav = true)),
+        ("shard_b.sav", Sav.dumps(recordCols, recordRows(300 until 600),
           bytecode = true))))
-      Sav.records(cells, cols)
+      Sav.records(cells, recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -454,7 +405,7 @@ object IoEntries extends Entries {
           if (i % 6 == 0) null
           else s"d$i:" + ("x" * ((i * 53) % 580)))
       }
-      val cells = Sav.readSavBlobs(s, Seq(
+      val cells = Sav.readBlobs(s, Seq(
         ("shard_a.sav", Sav.dumps(cols, rows(0 until 150))),
         ("shard_b.zsav", Sav.dumps(cols, rows(150 until 300), zsav = true))))
       Sav.records(cells, cols)
@@ -468,17 +419,11 @@ object IoEntries extends Entries {
     // DtaSpec). One strL shard + one fixed-width shard land on one closed
     // form. FULL oracle.
     "read_dta_strl" -> ((s, dir) => {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      def rows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i" + ("q" * (i % 29)))
-      }
-      val cells = Dta.readDtaBlobs(s, Seq(
-        ("shard_a.dta", Dta.dumps(cols, rows(0 until 300), strl = true)),
-        ("shard_b.dta", Dta.dumps(cols, rows(300 until 600)))))
-      Dta.records(cells, cols)
+      val cells = Dta.readBlobs(s, Seq(
+        ("shard_a.dta", Dta.dumps(recordCols, strlRows(0 until 300),
+          strl = true)),
+        ("shard_b.dta", Dta.dumps(recordCols, strlRows(300 until 600)))))
+      Dta.records(cells, recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -503,7 +448,7 @@ object IoEntries extends Entries {
     "feather_media_dedup" -> ((s, dir) => {
       val blob = graft.io.Feather.dumpsTyped(MediaEntries.dhash256Cols,
         MediaEntries.dhash256Rows(s), rowsPerBatch = 8)
-      val typed = graft.io.Feather.readFeatherTypedBlobs(s,
+      val typed = graft.io.Feather.readTypedBlobs(s,
         Seq(("corpus.feather", blob)))
       // law, asserted in-entry (the merge-artifact convention): the
       // block-parallel TYPED scan of the same bytes must hand back the
@@ -513,8 +458,7 @@ object IoEntries extends Entries {
         .select(col("row"), col("media_id"), md5(col("content")),
           col("format"), col("width"), col("height"))
         .collect().map(_.toSeq).sortBy(_.toString)
-      val paged = graft.io.Feather.readFeatherTypedPaged(s, tmp,
-        partitions = 4)
+      val paged = graft.io.Feather.readTypedPaged(s, tmp, partitions = 4)
       require(key(paged).toSeq == key(typed).toSeq,
         "feather_media_dedup: typed paged scan diverged from the " +
           "whole-file typed read")
@@ -533,23 +477,16 @@ object IoEntries extends Entries {
     // writers map, property.py:2835): flatbuffer footer/schema/batch
     // navigation with a ~60-line vtable walker, LZ4-frame buffer decode,
     // record batches split across tasks by
-    // [[graft.io.Feather.readFeatherPaged]] after a bounded footer TAIL
+    // [[graft.io.Feather.readPaged]] after a bounded footer TAIL
     // read. One multi-batch shard read whole, one through the
     // batch-parallel scan. FULL oracle.
     "read_feather" -> ((s, dir) => {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      def rows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i")
-      }
-      val whole = graft.io.Feather.readFeatherBlobs(s, Seq(
+      val whole = Feather.readBlobs(s, Seq(
         ("shard_a.feather",
-          graft.io.Feather.dumps(cols, rows(0 until 300),
+          Feather.dumps(recordCols, recordRows(0 until 300),
             rowsPerBatch = 64))))
-      val paged = graft.io.Feather.readFeatherPaged(s, featherFile())
-      graft.io.Feather.records(whole.unionByName(paged), cols)
+      val paged = Feather.readPaged(s, featherFile())
+      Feather.records(whole.unionByName(paged), recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -562,12 +499,12 @@ object IoEntries extends Entries {
     // multi-batch zstd file through the batch-parallel scan — both must
     // land on read_feather's closed form. FULL oracle.
     "read_feather_zstd" -> ((s, dir) => {
-      val whole = Feather.readFeatherBlobs(s, Seq(
+      val whole = Feather.readBlobs(s, Seq(
         ("shard_a.feather",
-          Feather.dumps(shardCols, shardRows(0 until 300),
+          Feather.dumps(recordCols, recordRows(0 until 300),
             rowsPerBatch = 64, zstd = true))))
-      val paged = Feather.readFeatherPaged(s, zstdFile())
-      Feather.records(whole.unionByName(paged), shardCols)
+      val paged = Feather.readPaged(s, zstdFile())
+      Feather.records(whole.unionByName(paged), recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -578,11 +515,11 @@ object IoEntries extends Entries {
     // the paged scan + one through the whole-file kernel: the closed form
     // is read_dta_strl's. FULL oracle.
     "read_dta_strl_paged" -> ((s, dir) => {
-      val paged = Dta.readDtaPaged(s, strlFile())
-      val whole = Dta.readDtaBlobs(s, Seq(
-        ("shard_b.dta", Dta.dumps(shardCols, strlRows(300 until 600),
+      val paged = Dta.readPaged(s, strlFile())
+      val whole = Dta.readBlobs(s, Seq(
+        ("shard_b.dta", Dta.dumps(recordCols, strlRows(300 until 600),
           strl = true))))
-      Dta.records(paged.unionByName(whole), shardCols)
+      Dta.records(paged.unionByName(whole), recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -591,7 +528,7 @@ object IoEntries extends Entries {
     // the feather_media_dedup closed form over a Stata container
     "dta_media_dedup" -> ((s, dir) => {
       val (blob, corpusPath) = mediaCorpus(s)
-      val typed = Dta.readDtaTypedBlobs(s, Seq(("corpus.dta", blob)))
+      val typed = Dta.readTypedBlobs(s, Seq(("corpus.dta", blob)))
       // law, asserted in-entry (the feather_media_dedup convention):
       // the range-parallel TYPED scan of the same bytes — BOTH resolve
       // paths — must hand back the identical blobs (32 bounded rows)
@@ -602,7 +539,7 @@ object IoEntries extends Entries {
       val wholeKey = key(typed.select(col("row"), col("media_id"),
         col("content"), col("width"), col("height")))
       Seq(64L << 20, 0L).foreach { bound =>
-        val paged = Dta.readDtaTypedPaged(s, corpusPath,
+        val paged = Dta.readTypedPaged(s, corpusPath,
           partitions = 4, gsoInlineBytes = bound)
         require(key(paged).toSeq == wholeKey.toSeq,
           s"dta_media_dedup: typed paged scan (gsoInlineBytes=$bound) " +
@@ -635,7 +572,7 @@ object IoEntries extends Entries {
       // law, asserted in-entry (the dta_media_dedup convention): the
       // block-parallel typed scan of the same bytes must hand back
       // identical vector cells
-      val paged = Feather.readFeatherTypedPaged(s, s"$d/emb_fsl.feather",
+      val paged = Feather.readTypedPaged(s, s"$d/emb_fsl.feather",
           partitions = 4)
         .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       require(paged.exceptAll(whole).isEmpty &&
@@ -672,18 +609,11 @@ object IoEntries extends Entries {
     // form. Our BE writer's bytes are pandas-validated
     // (tools/make_sas_fixture.py check-be).
     "read_sas_be" -> ((s, dir) => {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      def rows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i")
-      }
-      val cells = graft.io.Sas.readSasBlobs(s, Seq(
-        ("shard_le.sas7bdat", graft.io.Sas.dumps(cols, rows(0 until 12))),
-        ("shard_be.sas7bdat", graft.io.Sas.dumps(cols, rows(12 until 24),
+      val cells = Sas.readBlobs(s, Seq(
+        ("shard_le.sas7bdat", Sas.dumps(recordCols, recordRows(0 until 12))),
+        ("shard_be.sas7bdat", Sas.dumps(recordCols, recordRows(12 until 24),
           rdc = true, bigEndian = true))))
-      graft.io.Sas.records(cells, cols)
+      Sas.records(cells, recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     }),
@@ -693,17 +623,10 @@ object IoEntries extends Entries {
     // make_dta_fixture.py check-113) + a release-118 shard in one
     // scan, landing on read_dta's closed form.
     "read_dta_113" -> ((s, dir) => {
-      val cols = Seq(("id", true), ("grp", false), ("score", true),
-        ("note", false))
-      def rows(ids: Range): Seq[Seq[Any]] = ids.map { i =>
-        Seq[Any](i.toDouble, s"g${i % 3}",
-          if (i % 4 == 0) null else i * 0.5 - 3.0,
-          if (i % 5 == 0) null else s"n$i")
-      }
-      val cells = graft.io.Dta.readDtaBlobs(s, Seq(
-        ("shard_113.dta", graft.io.Dta.dumps113(cols, rows(0 until 12))),
-        ("shard_118.dta", graft.io.Dta.dumps(cols, rows(12 until 24)))))
-      graft.io.Dta.records(cells, cols)
+      val cells = Dta.readBlobs(s, Seq(
+        ("shard_113.dta", Dta.dumps113(recordCols, recordRows(0 until 12))),
+        ("shard_118.dta", Dta.dumps(recordCols, recordRows(12 until 24)))))
+      Dta.records(cells, recordCols)
         .select(col("id"), col("grp"), col("score"), col("note"))
         .orderBy("id")
     })

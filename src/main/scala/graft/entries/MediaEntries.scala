@@ -354,7 +354,7 @@ object MediaEntries extends Entries {
     // Every corpus-sized shuffle is keyed (band / media_id / bucket);
     // the dedup never goes n².
     "media_pipeline" -> ((s, dir) => {
-      val typed = Feather.readFeatherTypedPaged(s, mediaFeather(s),
+      val typed = Feather.readTypedPaged(s, mediaFeather(s),
         partitions = 4)
       val media = typed.select(
         col("media_id").cast("long").as("media_id"),

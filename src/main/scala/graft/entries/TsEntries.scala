@@ -501,6 +501,12 @@ object TsEntries extends Entries {
     })
   )
 
+  /** The lag-k Pearson correlation over the n/sx/sy/sxy/sxx/syy sums
+    * the acf and ccf oracles both build, rounded to 9 places. */
+  private def corrK(k: Int): String =
+    s"""ROUND((n$k * sxy$k - sx$k * sy$k) /
+       |    (SQRT(n$k * sxx$k - sx$k * sx$k) * SQRT(n$k * syy$k - sy$k * sy$k)), 9)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "pacf" -> (graft.ts.Stationarity.pacf3Sql("events", "user_id",
       "ts, event_id", "value") + "\nORDER BY user_id, lag"),
@@ -593,9 +599,6 @@ object TsEntries extends Entries {
         |FROM m ORDER BY user_id""".stripMargin,
 
     "acf" -> {
-      def corrK(k: Int) =
-        s"""ROUND((n$k * sxy$k - sx$k * sy$k) /
-           |    (SQRT(n$k * sxx$k - sx$k * sx$k) * SQRT(n$k * syy$k - sy$k * sy$k)), 9)""".stripMargin
       def sums(k: Int) =
         s"""CAST(SUM(CASE WHEN lag$k IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) AS n$k,
            |    CAST(SUM(CASE WHEN lag$k IS NOT NULL THEN CAST(value AS DECIMAL(12,3)) END) AS DOUBLE) AS sx$k,
@@ -793,9 +796,6 @@ object TsEntries extends Entries {
            |    CAST(SUM(CASE WHEN m$k THEN CAST(xd * yd$k AS DECIMAL(28,6)) END) AS DOUBLE) AS sxy$k,
            |    CAST(SUM(CASE WHEN m$k THEN CAST(xd * xd AS DECIMAL(28,6)) END) AS DOUBLE) AS sxx$k,
            |    CAST(SUM(CASE WHEN m$k THEN CAST(yd$k * yd$k AS DECIMAL(28,6)) END) AS DOUBLE) AS syy$k""".stripMargin
-      def corrK(k: Int) =
-        s"""ROUND((n$k * sxy$k - sx$k * sy$k) /
-           |    (SQRT(n$k * sxx$k - sx$k * sx$k) * SQRT(n$k * syy$k - sy$k * sy$k)), 9)""".stripMargin
       s"""WITH l AS (
          |  SELECT user_id, CAST(value AS DECIMAL(12,3)) AS xd,
          |    CAST(length(props) AS DECIMAL(12,3)) AS yd0,

@@ -30,17 +30,21 @@ import scala.collection.mutable
   *    against pandas.to_stata(convert_strl) output — resolved through
   *    the <strls> GSO table. Text payloads (t=130) decode on every
   *    path; BINARY strL (t=129) has no tall-cell channel, so the
-  *    cells()/records() paths refuse it toward [[readDtaTyped]],
+  *    cells()/records() paths refuse it toward [[readTyped]],
   *    which carries it as BinaryType. The paged scan splits strL
   *    files too — refs travel as markers and resolve via an equi-join
   *    against a GSO-section scan (the GSO scan itself is one task,
   *    bounded by the section's <map> length);
   *  - all five numeric types, every missing class (., .a–.z) → null.
   *
-  * Layout mirrors [[Sas]]/[[Sav]]: per-partition parse, tall cells,
-  * wide records under the file's own dictionary.
+  * The Spark surface is [[TallCells]]' (the [[Sas]]/[[Sav]] shape:
+  * per-partition parse, tall cells, wide records under the file's own
+  * dictionary) plus [[TypedCells]]' for the binary channel.
   */
-object Dta {
+object Dta extends TallCells with TypedCells {
+  import Bytes.{u1, u2, i2, u4, i4, i8, f4, f8}
+
+  type Meta = DtaMeta
 
   /** One variable: name, string width (0 = numeric), numeric width in
     * bytes (1/2/4/8; 0 for strings), float flag; strL columns carry an
@@ -58,42 +62,21 @@ object Dta {
         "113/114/115/117/118 with fixed-width columns; re-export once " +
         "(pandas.read_stata(...).to_parquet(...)) for anything outside it.")
 
-  // --------------------------------------------------------------
-  // little-endian primitives
-  // --------------------------------------------------------------
+  // every multi-byte field is little-endian (MSF files refuse)
 
-  private def u1(b: Array[Byte], at: Long): Int = b(at.toInt) & 0xff
-  private def u2(b: Array[Byte], at: Long): Int =
-    u1(b, at) | (u1(b, at + 1) << 8)
-  private def i2(b: Array[Byte], at: Long): Int = u2(b, at).toShort.toInt
-  private def i4(b: Array[Byte], at: Long): Int = {
-    var v = 0; var i = 3
-    while (i >= 0) { v = (v << 8) | u1(b, at + i); i -= 1 }
-    v
-  }
-  private def i8(b: Array[Byte], at: Long): Long = {
-    var v = 0L; var i = 7
-    while (i >= 0) { v = (v << 8) | u1(b, at + i); i -= 1 }
-    v
-  }
-  private def f4(b: Array[Byte], at: Long): Float =
-    java.lang.Float.intBitsToFloat(i4(b, at))
-  private def f8(b: Array[Byte], at: Long): Double =
-    java.lang.Double.longBitsToDouble(i8(b, at))
-
-  private def str(b: Array[Byte], at: Long, len: Int, utf8: Boolean): String = {
-    var end = at.toInt + len
+  private def str(b: Array[Byte], at: Int, len: Int, utf8: Boolean): String = {
+    var end = at + len
     while (end > at && b(end - 1) == 0) end -= 1
-    new String(b, at.toInt, end - at.toInt,
+    new String(b, at, end - at,
       if (utf8) java.nio.charset.StandardCharsets.UTF_8
       else java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 
-  private def tag(b: Array[Byte], at: Long, t: String): Long = {
+  private def tag(b: Array[Byte], at: Int, t: String): Int = {
     val tb = t.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     var i = 0
     while (i < tb.length) {
-      if (at + i >= b.length || b((at + i).toInt) != tb(i))
+      if (at + i >= b.length || b(at + i) != tb(i))
         refuse(s"expected '$t' at offset $at (corrupt or unsupported file)")
       i += 1
     }
@@ -149,16 +132,16 @@ object Dta {
     val k = i2(bytes, 4)
     val n = i4(bytes, 6).toLong
     require(k >= 0 && n >= 0, s"dta: negative K/N ($k/$n)")
-    var at = 109L
+    var at = 109
     val codes = (0 until k).map(i => u1(bytes, at + i)); at += k
-    val names = (0 until k).map(i => str(bytes, at + 33L * i, 33,
-      utf8 = false)); at += 33L * k
-    at += 2L * (k + 1) // sortlist
+    val names = (0 until k).map(i => str(bytes, at + 33 * i, 33,
+      utf8 = false)); at += 33 * k
+    at += 2 * (k + 1) // sortlist
     // the ONE classic-ladder width change: release 113 (Stata 8)
     // carries 12-byte formats; 114/115 grew them to 49
-    at += (if (release >= 114) 49L else 12L) * k // formats
-    at += 33L * k // value-label names
-    at += 81L * k // variable labels
+    at += (if (release >= 114) 49 else 12) * k // formats
+    at += 33 * k // value-label names
+    at += 81 * k // variable labels
     // expansion fields: {u8 type, i32 len, payload} until type=0 len=0
     var open = true
     while (open) {
@@ -167,7 +150,7 @@ object Dta {
       at += 5
       if (t == 0 && len == 0) open = false
       else {
-        require(len >= 0 && at + len <= bytes.length,
+        require(len >= 0 && at.toLong + len <= bytes.length,
           "dta: runaway expansion field")
         at += len
       }
@@ -198,14 +181,14 @@ object Dta {
     at += 1 + u1(bytes, at)
     at = tag(bytes, at, "</timestamp></header><map>")
     // the spec's own section index: 14 u64 offsets
-    val map = (0 until 14).map(i => i8(bytes, at + 8L * i))
-    val typesAt = tag(bytes, map(2), "<variable_types>")
-    val codes = (0 until k).map(i => u2(bytes, typesAt + 2L * i))
+    val map = (0 until 14).map(i => i8(bytes, at + 8 * i))
+    val typesAt = tag(bytes, map(2).toInt, "<variable_types>")
+    val codes = (0 until k).map(i => u2(bytes, typesAt + 2 * i))
     val nameLen = if (release == 118) 129 else 33
-    val namesAt = tag(bytes, map(3), "<varnames>")
+    val namesAt = tag(bytes, map(3).toInt, "<varnames>")
     val names = (0 until k).map(i =>
-      str(bytes, namesAt + nameLen.toLong * i, nameLen, release == 118))
-    val dataAt = tag(bytes, map(9), "<data>")
+      str(bytes, namesAt + nameLen * i, nameLen, release == 118))
+    val dataAt = tag(bytes, map(9).toInt, "<data>")
     val vars = names.zip(codes).map { case (nm, c) => varOf(release, nm, c) }
     DtaMeta(release, k, n, vars, dataAt, utf8 = release == 118,
       strlsAt = map(10), strlsEndAt = map(11))
@@ -218,23 +201,22 @@ object Dta {
   private def parseStrlsTyped(bytes: Array[Byte], meta: DtaMeta)
       : Map[(Long, Long), (Int, Array[Byte])] = {
     require(meta.strlsAt >= 0, "dta: strL columns need a <strls> section")
-    var at = tag(bytes, meta.strlsAt, "<strls>")
+    var at = tag(bytes, meta.strlsAt.toInt, "<strls>")
     val out = Map.newBuilder[(Long, Long), (Int, Array[Byte])]
-    while (!(bytes(at.toInt) == '<'.toByte)) {
+    while (!(bytes(at) == '<'.toByte)) {
       at = tag(bytes, at, "GSO")
-      val v = i4(bytes, at).toLong & 0xffffffffL
-      val o = if (meta.release == 118) i8(bytes, at + 4)
-              else i4(bytes, at + 4).toLong & 0xffffffffL
+      val v = u4(bytes, at)
+      val o = if (meta.release == 118) i8(bytes, at + 4) else u4(bytes, at + 4)
       at += (if (meta.release == 118) 12 else 8)
       val t = u1(bytes, at)
       val len = i4(bytes, at + 1)
       at += 5
-      require(len >= 0 && at + len <= bytes.length,
+      require(len >= 0 && at.toLong + len <= bytes.length,
         s"dta: GSO payload of $len bytes overruns the file")
       if (t != 129 && t != 130)
         refuse(s"unknown strL payload type $t at GSO ($v,$o)")
       out += ((v, o) ->
-        (t, java.util.Arrays.copyOfRange(bytes, at.toInt, (at + len).toInt)))
+        (t, java.util.Arrays.copyOfRange(bytes, at, at + len)))
       at += len
     }
     tag(bytes, at, "</strls>")
@@ -267,13 +249,13 @@ object Dta {
 
   /** The tall-cell paths' view of the GSO table: text payloads only —
     * binary strL (t=129) has no tall-cell channel and refuses toward
-    * [[readDtaTyped]]. */
+    * [[readTyped]]. */
   private def parseStrls(bytes: Array[Byte],
                          meta: DtaMeta): Map[(Long, Long), String] =
     parseStrlsTyped(bytes, meta).map { case ((v, o), (t, payload)) =>
       if (t == 129)
         refuse(s"binary strL payload (t=129) at GSO ($v,$o) has no " +
-          "tall-cell channel — use readDtaTyped, which keeps BinaryType")
+          "tall-cell channel — use Dta.readTyped, which keeps BinaryType")
       (v, o) -> strlText(payload, meta.utf8)
     }
 
@@ -316,15 +298,14 @@ object Dta {
     (0L until meta.nRows).iterator.map { r =>
       val base = meta.dataAt + r * rowLen
       meta.vars.zip(offs).zipWithIndex.map { case ((v, o), ci) =>
-        val at = base + o
+        val at = (base + o).toInt
         if (v.isStrL) {
           // the (v, o) ref: u4+u4 in 117, u2 + 48-bit o in 118
           val (rv, ro) =
             if (meta.release == 118)
               (u2(bytes, at).toLong,
                 i8(bytes, at) >>> 16) // o = high 6 bytes of the LE u64
-            else (i4(bytes, at).toLong & 0xffffffffL,
-              i4(bytes, at + 4).toLong & 0xffffffffL)
+            else (u4(bytes, at), u4(bytes, at + 4))
           if (rv == 0L && ro == 0L) null
           else resolve(ci, rv, ro)
         } else if (v.strWidth > 0) {
@@ -333,7 +314,7 @@ object Dta {
         } else {
           val d: Double = v.numWidth match {
             case 1 =>
-              val x = bytes(at.toInt).toInt
+              val x = bytes(at).toInt
               if (x >= 101) MissDouble else x.toDouble
             case 2 =>
               val x = i2(bytes, at)
@@ -354,100 +335,61 @@ object Dta {
   }
 
   // --------------------------------------------------------------
-  // Spark surface — the Sas tall-cells + records convention
+  // Spark surface — TallCells' tall cells + records, TypedCells' typed
   // --------------------------------------------------------------
 
-  // the shared statistical tall-cell layout — declared once
-  private val cellSchema = PagedScan.cellSchema
+  def columns(meta: DtaMeta): Seq[(String, Boolean)] =
+    meta.vars.map(v => (v.name, v.strWidth == 0 && !v.isStrL))
 
-  private def cells(file: String, bytes: Array[Byte]): Iterator[Row] = {
-    val meta = parseMeta(bytes)
-    rows(bytes, meta).zipWithIndex.flatMap { case (vals, r) =>
-      meta.vars.iterator.zip(vals.iterator).map { case (v, x) =>
-        if (v.strWidth > 0 || v.isStrL)
-          Row(file, r.toLong, v.name, "str", x, null)
-        else Row(file, r.toLong, v.name, "num", null, x)
-      }
-    }
-  }
+  /** The <strls> section size up to which the paged scans resolve strL
+    * refs from a driver-broadcast GSO map instead of an equi-join. */
+  private val GsoInlineBytes = 64L << 20
 
-  /** Read .dta file(s) (path, directory or glob) as tall cells. */
-  def readDta(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap(r =>
-      cells(r.getString(0), r.getAs[Array[Byte]](1)))
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** In-memory blobs through the same kernel. */
-  def readDtaBlobs(spark: SparkSession,
-                   blobs: Seq[(String, Array[Byte])]): DataFrame = {
-    require(blobs.nonEmpty, "readDtaBlobs needs at least one blob")
-    val rdd = spark.sparkContext
-      .parallelize(blobs, math.min(blobs.size, 32))
-      .flatMap { case (name, bytes) => cells(name, bytes) }
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** Wide pivot — one groupBy(row) shuffle ([[Sas.records]]). */
-  def records(cellsDf: DataFrame, cols: Seq[(String, Boolean)]): DataFrame =
-    Sas.records(cellsDf, cols)
+  def readPaged(spark: SparkSession, path: String,
+                partitions: Int): DataFrame =
+    readPaged(spark, path, partitions, GsoInlineBytes)
 
   /** Range-parallel scan of ONE large .dta: rows are a fixed stride in
     * every supported release, so after a bounded driver read of the
     * dictionary each task preads and decodes its own row range
-    * ([[Sas.readSasPaged]]'s story). Row ids are the true indexes.
+    * ([[Sas.readPaged]]'s story). Row ids are the true indexes.
     *
     * strL files split too. When the <strls> GSO section fits
     * `gsoInlineBytes` the DRIVER preads and parses it once and ships
     * the map by broadcast — one file scan, zero joins (the
-    * [[Feather.readFeatherPaged]] dictionary convention). Past the
+    * [[Feather.readPaged]] dictionary convention). Past the
     * bound, the row tasks emit each cell's (v, o) ref, ONE task scans
     * the GSO section (bounded by the section's own <map> length — the
     * residual single-task axis), and the refs resolve through an
     * equi-join in the SAME single scan (null join keys for non-strL
     * cells; left join preserves them). A ref with no GSO entry raises
     * loudly at execution, matching the whole-file read. */
-  def readDtaPaged(spark: SparkSession, path: String,
-                   partitions: Int = 0,
-                   gsoInlineBytes: Long = 64L << 20): DataFrame = {
+  def readPaged(spark: SparkSession, path: String, partitions: Int,
+                gsoInlineBytes: Long): DataFrame = {
     val meta = PagedScan.driverMeta(spark, path)(parseMeta)
     val rowLen = meta.vars.map(v =>
       if (v.strWidth > 0) v.strWidth else v.numWidth).sum.toLong
     if (!meta.vars.exists(_.isStrL)) {
-      PagedScan.scan(spark, path, cellSchema, meta.nRows, meta.dataAt,
+      val cols = columns(meta)
+      PagedScan.scan(spark, path, Cells.schema, meta.nRows, meta.dataAt,
         rowLen, partitions) { (buf, startRow, nRows) =>
-        val m = meta.copy(nRows = nRows, dataAt = 0L)
-        rows(buf, m).zipWithIndex.flatMap { case (vals, r) =>
-          meta.vars.iterator.zip(vals.iterator).map { case (v, x) =>
-            if (v.strWidth > 0)
-              Row(path, startRow + r, v.name, "str", x, null)
-            else Row(path, startRow + r, v.name, "num", null, x)
-          }
-        }
+        Cells.cells(path, cols,
+          rows(buf, meta.copy(nRows = nRows, dataAt = 0L)), startRow)
       }
     } else {
-      require(meta.strlsAt >= 0 && meta.strlsEndAt > meta.strlsAt,
-        "dta: strL columns but the <map> locates no <strls> section")
-      val secLen = meta.strlsEndAt - meta.strlsAt
-      require(secLen <= Int.MaxValue - 16L,
-        s"dta: $secLen-byte <strls> section — past the single-buffer " +
-          "GSO scan bound; re-export with fixed-width strings or split " +
-          "the file")
+      val secLen = strlsLength(meta, "re-export with fixed-width strings " +
+        "or split the file")
       def scanRows(resolve: (Int, Long, Long) => Any,
-                   strlCell: (String, Long, String, Any) => Row)
-          : DataFrame =
-        PagedScan.scan(spark, path, cellSchema, meta.nRows,
+                   strlCell: (Long, String, Any) => Row): DataFrame =
+        PagedScan.scan(spark, path, Cells.schema, meta.nRows,
           meta.dataAt, rowLen, partitions) { (buf, startRow, nRows) =>
           val m = meta.copy(nRows = nRows, dataAt = 0L)
           rowsResolved(buf, m, resolve)
             .zipWithIndex.flatMap { case (vals, r) =>
               meta.vars.iterator.zip(vals.iterator).map { case (v, x) =>
-                if (v.isStrL) strlCell(path, startRow + r, v.name, x)
-                else if (v.strWidth > 0)
-                  Row(path, startRow + r, v.name, "str", x, null)
-                else Row(path, startRow + r, v.name, "num", null, x)
+                if (v.isStrL) strlCell(startRow + r, v.name, x)
+                else Cells.cell(path, startRow + r, v.name,
+                  v.strWidth == 0, x)
               }
             }
         }
@@ -464,15 +406,17 @@ object Dta {
               refuse(s"strL cell ($rv,$ro) has no GSO entry"))
             if (s.isEmpty) null else s
           },
-          strlCell = (p, rowId, name, x) => Row(p, rowId, name, "str", x, null))
+          strlCell = (rowId, name, x) =>
+            Cells.cell(path, rowId, name, isNum = false, x))
       } else {
         // 1. the row scan emits strL cells as "v,o" ref markers
         val raw = scanRows(
           resolve = (_, rv, ro) => (rv, ro),
-          strlCell = (p, rowId, name, x) => x match {
+          strlCell = (rowId, name, x) => x match {
             case (rv: Long, ro: Long) =>
-              Row(p, rowId, name, "strl", s"$rv,$ro", null)
-            case _ => Row(p, rowId, name, "str", x, null) // (0,0) → null
+              Row(path, rowId, name, "strl", s"$rv,$ro", null)
+            case _ => // (0,0) → null
+              Cells.cell(path, rowId, name, isNum = false, x)
           })
         // 2. ONE task preads and parses the GSO section (the shared
         //    [[gsoTaskRdd]] kernel); the tall-cell path refuses binary
@@ -482,7 +426,7 @@ object Dta {
           case ((rv, ro), (t, payload)) =>
             if (t == 129)
               refuse(s"binary strL payload (t=129) at GSO ($rv,$ro) has " +
-                "no tall-cell channel — use readDtaTypedPaged, which " +
+                "no tall-cell channel — use Dta.readTypedPaged, which " +
                 "keeps BinaryType")
             Row(s"$rv,$ro", strlText(payload, utf8))
         }
@@ -512,24 +456,22 @@ object Dta {
     }
   }
 
-  /** [[readDtaPaged]] over a directory/glob of large files — both
-    * parallelism axes at once ([[Sas.readSasPagedAll]]'s shape). */
-  def readDtaPagedAll(spark: SparkSession, path: String,
-                      partitions: Int = 0): DataFrame =
-    PagedScan.unionPerFile(spark, path)(readDtaPaged(spark, _, partitions))
-
-  /** The one-call wide read: dictionary from the FIRST file. */
-  def readDtaRecords(spark: SparkSession, path: String): DataFrame = {
-    val firstBytes = PagedScan.firstFileBytes(spark, path)
-    val meta = parseMeta(firstBytes)
-    records(readDta(spark, path),
-      meta.vars.map(v => (v.name, v.strWidth == 0 && !v.isStrL)))
+  /** Byte length of the <strls> section the <map> locates — bounded by
+    * one task buffer (`advice` names the way out past it). */
+  private def strlsLength(meta: DtaMeta, advice: String): Long = {
+    require(meta.strlsAt >= 0 && meta.strlsEndAt > meta.strlsAt,
+      "dta: strL columns but the <map> locates no <strls> section")
+    val secLen = meta.strlsEndAt - meta.strlsAt
+    require(secLen <= Int.MaxValue - 16L,
+      s"dta: $secLen-byte <strls> section — past the single-buffer " +
+        s"GSO scan bound; $advice")
+    secLen
   }
 
   // --------------------------------------------------------------
   // typed read — the BinaryType channel for binary strL (t=129),
-  // mirroring Feather.readFeatherTyped (media blobs in Stata
-  // containers; pandas read_stata hands them back as Python bytes)
+  // mirroring Feather.readTyped (media blobs in Stata containers;
+  // pandas read_stata hands them back as Python bytes)
   // --------------------------------------------------------------
 
   /** Column kinds for the typed read: 'n' double, 's' string, 'y'
@@ -544,12 +486,6 @@ object Dta {
     val gso: Map[(Long, Long), (Int, Array[Byte])] =
       if (meta.vars.exists(_.isStrL)) parseStrlsTyped(bytes, meta)
       else Map.empty
-    typedKindsOf(bytes, meta, gso)
-  }
-
-  private def typedKindsOf(bytes: Array[Byte], meta: DtaMeta,
-                           gso: Map[(Long, Long), (Int, Array[Byte])])
-      : Seq[(String, Char)] = {
     val isBin = new Array[Boolean](meta.vars.length)
     if (meta.vars.exists(_.isStrL))
       rowsResolved(bytes, meta, (ci, rv, ro) => {
@@ -566,24 +502,6 @@ object Dta {
     }
   }
 
-  /** TYPED read: one DataFrame row per record, numerics as double,
-    * strings as string, binary strL columns as BinaryType — the
-    * channel the tall-cell layout lacks. Every file must land on the
-    * FIRST file's column kinds. */
-  def readDtaTyped(spark: SparkSession, path: String): DataFrame =
-    typedFrom(spark, dtaTypedKinds(PagedScan.firstFileBytes(spark, path)),
-      spark.read.format("binaryFile").load(path)
-        .select(col("path"), col("content")).rdd
-        .map(r => (r.getString(0), r.getAs[Array[Byte]](1))))
-
-  /** In-memory blobs through the typed kernel. */
-  def readDtaTypedBlobs(spark: SparkSession,
-                        blobs: Seq[(String, Array[Byte])]): DataFrame = {
-    require(blobs.nonEmpty, "readDtaTypedBlobs needs at least one blob")
-    typedFrom(spark, dtaTypedKinds(blobs.head._2),
-      spark.sparkContext.parallelize(blobs, math.min(blobs.size, 32)))
-  }
-
   /** ONE task preads and parses the <strls> section — the shared
     * kernel behind both paged equi-join paths (entries are
     * variable-length, so the section itself does not range-split). */
@@ -594,22 +512,20 @@ object Dta {
     val strlsAt = meta.strlsAt
     val metaForGso = meta
     spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(PagedScan.rebuild(hconf))
-      val in = fs.open(p)
-      val buf = try {
-        val b = new Array[Byte](secLen.toInt)
-        in.readFully(strlsAt, b)
-        b
-      } finally in.close()
+      val buf = new Array[Byte](secLen.toInt)
+      PagedScan.open(hconf, path)(_.readFully(strlsAt, buf))
       parseStrlsTyped(buf, metaForGso.copy(strlsAt = 0L)).iterator
     }
   }
 
+  def readTypedPaged(spark: SparkSession, path: String,
+                     partitions: Int): DataFrame =
+    readTypedPaged(spark, path, partitions, GsoInlineBytes)
+
   /** TYPED read of ONE large .dta with WITHIN-file parallelism — the
-    * media path for big binary-strL corpora ([[Feather.readFeatherTypedPaged]]'s
+    * media path for big binary-strL corpora ([[Feather.readTypedPaged]]'s
     * role for the Stata container). Row ranges split like
-    * [[readDtaPaged]]; strL payloads resolve either from a
+    * [[readPaged]]; strL payloads resolve either from a
     * driver-broadcast GSO map (section ≤ `gsoInlineBytes`) or through
     * one left equi-join per strL column against a one-task GSO scan.
     *
@@ -621,22 +537,18 @@ object Dta {
     * stripped, empty → null like every other dta surface): decode
     * downstream with the RELEASE's charset — `decode(col, 'UTF-8')`
     * for 118 files, `decode(col, 'ISO-8859-1')` for 114-117 — or use
-    * [[readDtaTyped]] (whole-file per task) for classified kinds. */
-  def readDtaTypedPaged(spark: SparkSession, path: String,
-                        partitions: Int = 0,
-                        gsoInlineBytes: Long = 64L << 20): DataFrame = {
+    * [[readTyped]] (whole-file per task) for classified kinds. */
+  def readTypedPaged(spark: SparkSession, path: String, partitions: Int,
+                     gsoInlineBytes: Long): DataFrame = {
     val meta = PagedScan.driverMeta(spark, path)(parseMeta)
-    PagedScan.requireNoReservedNames(meta.vars.map(_.name),
-      "readDtaTypedPaged")
+    Cells.requireNoReservedNames(meta.vars.map(_.name),
+      "Dta.readTypedPaged")
     val rowLen = meta.vars.map(v =>
       if (v.strWidth > 0) v.strWidth else v.numWidth).sum.toLong
-    val schema = StructType(
-      StructField("src_file", StringType, nullable = false) +:
-      StructField("row", LongType, nullable = false) +:
-      meta.vars.map(v => StructField(v.name,
-        if (v.isStrL) BinaryType
-        else if (v.strWidth > 0) StringType
-        else DoubleType, nullable = true)))
+    val schema = Cells.typedSchema(meta.vars.map(v => StructField(v.name,
+      if (v.isStrL) BinaryType
+      else if (v.strWidth > 0) StringType
+      else DoubleType, nullable = true)))
     def scanWide(resolve: (Int, Long, Long) => Any): DataFrame =
       PagedScan.scan(spark, path, schema, meta.nRows, meta.dataAt,
         rowLen, partitions) { (buf, startRow, nRows) =>
@@ -647,12 +559,7 @@ object Dta {
       }
     if (!meta.vars.exists(_.isStrL))
       return scanWide((_, _, _) => refuse("unreachable: no strL columns"))
-    require(meta.strlsAt >= 0 && meta.strlsEndAt > meta.strlsAt,
-      "dta: strL columns but the <map> locates no <strls> section")
-    val secLen = meta.strlsEndAt - meta.strlsAt
-    require(secLen <= Int.MaxValue - 16L,
-      s"dta: $secLen-byte <strls> section — past the single-buffer " +
-        "GSO scan bound; split the file or use readDtaTyped")
+    val secLen = strlsLength(meta, "split the file or use Dta.readTyped")
     if (secLen <= gsoInlineBytes) {
       // payloads FINALIZED once per GSO entry before the broadcast
       // (not per referencing cell — shared payloads would re-copy)
@@ -694,28 +601,29 @@ object Dta {
     }
   }
 
-  /** [[readDtaTypedPaged]] over a directory/glob — both parallelism
-    * axes. */
-  def readDtaTypedPagedAll(spark: SparkSession, path: String,
-                           partitions: Int = 0,
-                           gsoInlineBytes: Long = 64L << 20): DataFrame =
-    PagedScan.unionPerFile(spark, path)(
-      readDtaTypedPaged(spark, _, partitions, gsoInlineBytes))
+  /** [[readTypedPaged]] over a directory/glob with the GSO bound
+    * forwarded to every file. */
+  def readTypedPagedAll(spark: SparkSession, path: String, partitions: Int,
+                        gsoInlineBytes: Long): DataFrame =
+    Cells.unionPerFile(spark, path)(
+      readTypedPaged(spark, _, partitions, gsoInlineBytes))
 
-  private def typedFrom(spark: SparkSession, kinds: Seq[(String, Char)],
-                        files: org.apache.spark.rdd.RDD[(String, Array[Byte])])
+  /** TYPED read: one DataFrame row per record, numerics as double,
+    * strings as string, binary strL columns as BinaryType — the
+    * channel the tall-cell layout lacks. Every file must land on the
+    * FIRST file's column kinds. */
+  protected def typedFrom(spark: SparkSession, first: Array[Byte],
+                          files: org.apache.spark.rdd.RDD[(String, Array[Byte])])
       : DataFrame = {
-    PagedScan.requireNoReservedNames(kinds.map(_._1), "readDtaTyped")
-    val schema = StructType(
-      StructField("src_file", StringType, nullable = false) +:
-      StructField("row", LongType, nullable = false) +:
-      kinds.map { case (name, kind) =>
-        StructField(name, kind match {
-          case 'n' => DoubleType
-          case 'y' => BinaryType
-          case _ => StringType
-        }, nullable = true)
-      })
+    val kinds = dtaTypedKinds(first)
+    Cells.requireNoReservedNames(kinds.map(_._1), "Dta.readTyped")
+    val schema = Cells.typedSchema(kinds.map { case (name, kind) =>
+      StructField(name, kind match {
+        case 'n' => DoubleType
+        case 'y' => BinaryType
+        case _ => StringType
+      }, nullable = true)
+    })
     val rdd = files.flatMap { case (file, bytes) =>
       // ONE GSO parse per file feeds the kind check AND the resolve
       // map — for media files the GSO section IS the bulk, so a
@@ -773,7 +681,7 @@ object Dta {
 
   /** [[dumps]] with explicit column kinds: 'n' double, 's' strL text
     * (t=130), 'y' strL BINARY (t=129, Array[Byte] cells — the Stata
-    * channel for media blobs, read back by [[readDtaTyped]] and by
+    * channel for media blobs, read back by [[readTyped]] and by
     * pandas.read_stata as bytes). */
   def dumpsTyped(cols: Seq[(String, Char)], data: Seq[Seq[Any]])
       : Array[Byte] = {

@@ -157,24 +157,16 @@ object Excel {
     * homogeneous-exports deploy shape. */
   def readXlsxDirCells(spark: SparkSession, path: String,
                        header: Boolean = true): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap { r =>
-      val file = r.getString(0)
-      val (names0, data) =
-        xlsxFirstSheetStrings(r.getAs[Array[Byte]](1), header)
+    val rdd = Cells.files(spark, path).flatMap { case (file, bytes) =>
+      val (names0, data) = xlsxFirstSheetStrings(bytes, header)
       // cells key under the DEDUPED names the fitted schema carries
       // (repeated header labels are routine in real spreadsheets);
       // null cells are emitted too — an all-blank spreadsheet row must
       // still form a pivot group instead of silently vanishing
-      val names = TypedRows.dedupeNames(names0)
-      data.iterator.zipWithIndex.flatMap { case (vals, i) =>
-        names.iterator.zip(vals.iterator).map { case (k, v) =>
-          Row(file, i.toLong, k, "str", v, null)
-        }
-      }
+      val names = TypedRows.dedupeNames(names0).map((_, false))
+      Cells.cells(file, names, data.iterator)
     }
-    spark.createDataFrame(rdd, PagedScan.cellSchema)
+    spark.createDataFrame(rdd, Cells.schema)
   }
 
   /** The one-call wide read over a workbook directory: header and
@@ -183,12 +175,12 @@ object Excel {
     * then parsed task-side and pivoted under that schema. */
   def readXlsxDir(spark: SparkSession, path: String,
                   header: Boolean = true): DataFrame = {
-    val firstBytes = PagedScan.firstFileBytes(spark, path)
+    val firstBytes = Cells.firstFileBytes(spark, path)
     val (names0, sample) = xlsxFirstSheetStrings(firstBytes, header)
     require(names0.nonEmpty, "first workbook has no columns")
     val names = TypedRows.dedupeNames(names0)
     val fitted = TypedRows.toDf(spark, names0, sample).schema
-    val wide = Sas.records(readXlsxDirCells(spark, path, header),
+    val wide = Cells.records(readXlsxDirCells(spark, path, header),
       names.map(n => (n, false)))
     // backticked refs: header labels may carry dots/spaces
     wide.select(col("src_file") +: col("row") +: fitted.map(f =>

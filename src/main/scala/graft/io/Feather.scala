@@ -1,7 +1,6 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
 
@@ -30,7 +29,7 @@ import scala.collection.mutable
   *    DICTIONARY-encoded utf8 (pandas categoricals: the DictionaryBatch
   *    blocks resolve index columns; delta dictionaries refuse), and
   *    Binary — which has no tall-cell channel, so the cells()/records()
-  *    paths refuse it loudly and [[readFeatherTyped]] carries it as
+  *    paths refuse it loudly and [[readTyped]] carries it as
   *    BinaryType (media blobs) — nested types, unions, decimals refuse;
   *  - uncompressed bodies, LZ4_FRAME-compressed buffers (the pyarrow/R
   *    default — each buffer is an i64 plain length + one lz4 frame,
@@ -40,40 +39,26 @@ import scala.collection.mutable
   *  - int64 magnitudes past 2^53 refuse (the tall-cell value channel
   *    is a double — silent precision loss is worse than a loud stop).
   *
-  * Layout mirrors [[Sas]]: per-partition parse over `binaryFile`, tall
-  * (row, key, typed value) cells, [[records]] wide pivot under the
-  * FIRST file's schema. [[readFeatherPaged]] adds within-file
-  * parallelism: record batches are independent by design, so the
-  * driver reads only the footer (a bounded TAIL read) and each task
-  * preads and decodes its own batch blocks.
+  * The Spark surface is [[TallCells]]' (the [[Sas]] shape: per-partition
+  * parse over `binaryFile`, tall (row, key, typed value) cells, `records`
+  * wide pivot under the FIRST file's schema) plus [[TypedCells]]'.
+  * [[readPaged]] adds within-file parallelism: record batches are
+  * independent by design, so the driver reads only the footer (a
+  * bounded TAIL read) and each task preads and decodes its own batch
+  * blocks.
   */
-object Feather {
+object Feather extends TallCells with TypedCells {
 
-  // --------------------------------------------------------------
-  // little-endian primitives
-  // --------------------------------------------------------------
+  // every multi-byte field is little-endian (big-endian files refuse)
+  import Bytes.{u1, u2, i2, u4, i4, i8}
 
-  private def u8v(b: Array[Byte], at: Int): Int = b(at) & 0xff
-  private def i16(b: Array[Byte], at: Int): Int =
-    (u8v(b, at) | (u8v(b, at + 1) << 8)).toShort.toInt
-  private def u16(b: Array[Byte], at: Int): Int =
-    u8v(b, at) | (u8v(b, at + 1) << 8)
-  private def i32(b: Array[Byte], at: Int): Int = {
-    var v = 0; var i = 3
-    while (i >= 0) { v = (v << 8) | u8v(b, at + i); i -= 1 }
-    v
-  }
-  private def i64(b: Array[Byte], at: Int): Long = {
-    var v = 0L; var i = 7
-    while (i >= 0) { v = (v << 8) | u8v(b, at + i); i -= 1 }
-    v
-  }
+  type Meta = FeatherMeta
 
   private def refuse(msg: String): Nothing =
     throw new IllegalArgumentException(
       s"feather: $msg — the supported subset is little-endian Arrow IPC " +
         "files with flat int/float/bool/utf8/large_utf8/date32/date64/" +
-        "timestamp/dictionary columns (binary via readFeatherTyped), " +
+        "timestamp/dictionary columns (binary via Feather.readTyped), " +
         "plain, lz4-frame or zstd bodies; re-export once (pyarrow.feather" +
         ".read_table(...).to_pandas().to_parquet(...)) for anything " +
         "outside it.")
@@ -87,12 +72,12 @@ object Feather {
     * 4 + 2*id; slot 0 means "absent, use the default". */
   private final case class FbTable(b: Array[Byte], pos: Int) {
     private def fieldAt(id: Int): Int = {
-      val vt = pos - i32(b, pos)
-      val vtSize = u16(b, vt)
+      val vt = pos - i4(b, pos)
+      val vtSize = u2(b, vt)
       val slot = 4 + 2 * id
       if (slot >= vtSize) 0
       else {
-        val o = u16(b, vt + slot)
+        val o = u2(b, vt + slot)
         if (o == 0) 0 else pos + o
       }
     }
@@ -100,13 +85,13 @@ object Feather {
       val o = fieldAt(id); if (o == 0) default else b(o).toInt
     }
     def i16f(id: Int, default: Int = 0): Int = {
-      val o = fieldAt(id); if (o == 0) default else i16(b, o)
+      val o = fieldAt(id); if (o == 0) default else i2(b, o)
     }
     def i32f(id: Int, default: Int = 0): Int = {
-      val o = fieldAt(id); if (o == 0) default else i32(b, o)
+      val o = fieldAt(id); if (o == 0) default else i4(b, o)
     }
     def i64f(id: Int, default: Long = 0L): Long = {
-      val o = fieldAt(id); if (o == 0) default else i64(b, o)
+      val o = fieldAt(id); if (o == 0) default else i8(b, o)
     }
     def boolf(id: Int, default: Boolean = false): Boolean = {
       val o = fieldAt(id); if (o == 0) default else b(o) != 0
@@ -114,14 +99,14 @@ object Feather {
     def present(id: Int): Boolean = fieldAt(id) != 0
     def table(id: Int): Option[FbTable] = {
       val o = fieldAt(id)
-      if (o == 0) None else Some(FbTable(b, o + i32(b, o)))
+      if (o == 0) None else Some(FbTable(b, o + i4(b, o)))
     }
     def string(id: Int): Option[String] = {
       val o = fieldAt(id)
       if (o == 0) None
       else {
-        val t = o + i32(b, o)
-        val n = i32(b, t)
+        val t = o + i4(b, o)
+        val n = i4(b, t)
         Some(new String(b, t + 4, n,
           java.nio.charset.StandardCharsets.UTF_8))
       }
@@ -131,14 +116,14 @@ object Feather {
       val o = fieldAt(id)
       if (o == 0) (0, 0)
       else {
-        val t = o + i32(b, o)
-        (t + 4, i32(b, t))
+        val t = o + i4(b, o)
+        (t + 4, i4(b, t))
       }
     }
   }
 
   private def rootTable(b: Array[Byte], at: Int): FbTable =
-    FbTable(b, at + i32(b, at))
+    FbTable(b, at + i4(b, at))
 
   // --------------------------------------------------------------
   // schema
@@ -173,7 +158,7 @@ object Feather {
       if (nChildren != 1)
         refuse(s"list column '$name' with $nChildren children")
       if (f.present(4)) refuse(s"dictionary-encoded list column '$name'")
-      val child = FbTable(f.b, chBase + i32(f.b, chBase))
+      val child = FbTable(f.b, chBase + i4(f.b, chBase))
       val (_, nGrand) = child.vector(5)
       if (nGrand > 0 || child.present(4))
         refuse(s"list column '$name' nests a non-flat child")
@@ -281,7 +266,7 @@ object Feather {
   /** Parse the footer (schema + record-batch block table) from the
     * whole file OR from a tail slice (`base` = the slice's offset in
     * the file — the paged reader hands readTail bytes). */
-  def parseFooter(bytes: Array[Byte]): FeatherMeta = {
+  def parseMeta(bytes: Array[Byte]): FeatherMeta = {
     require(bytes.length >= 20, "feather: file shorter than the magics")
     require(new String(bytes, 0, 6,
         java.nio.charset.StandardCharsets.US_ASCII) == "ARROW1",
@@ -297,7 +282,7 @@ object Feather {
     require(new String(bytes, n - 6, 6,
         java.nio.charset.StandardCharsets.US_ASCII) == "ARROW1",
       "feather: bad trailing magic — truncated Arrow IPC file")
-    val footerLen = i32(bytes, n - 10)
+    val footerLen = i4(bytes, n - 10)
     require(footerLen > 0 && footerLen <= n - 10,
       s"feather: footer length $footerLen does not fit the buffer")
     val footer = rootTable(bytes, n - 10 - footerLen)
@@ -311,13 +296,13 @@ object Feather {
     require(fN > 0, "feather: schema has no fields")
     val cols = (0 until fN).map { i =>
       val o = fBase + 4 * i
-      parseField(FbTable(bytes, o + i32(bytes, o)))
+      parseField(FbTable(bytes, o + i4(bytes, o)))
     }
     def blockVec(id: Int): Seq[(Long, Int, Long)] = {
       val (base, n) = footer.vector(id)
       (0 until n).map { i =>
         val at = base + 24 * i // Block: i64 offset, i32 meta, pad, i64 body
-        (i64(bytes, at), i32(bytes, at + 8), i64(bytes, at + 16))
+        (i8(bytes, at), i4(bytes, at + 8), i8(bytes, at + 16))
       }
     }
     FeatherMeta(cols, blockVec(3), blockVec(2))
@@ -336,9 +321,9 @@ object Feather {
     def decodeFrame(src: Array[Byte], from: Int, len: Int,
                     outLen: Int): Array[Byte] = {
       val end = from + len
-      require(from + 7 <= end && i32(src, from) == FrameMagic,
+      require(from + 7 <= end && i4(src, from) == FrameMagic,
         "feather: lz4 frame magic missing")
-      val flg = u8v(src, from + 4)
+      val flg = u1(src, from + 4)
       require((flg >> 6) == 1, s"feather: lz4 frame version ${flg >> 6}")
       val blockChecksum = (flg & 0x10) != 0
       val hasContentSize = (flg & 0x08) != 0
@@ -352,7 +337,7 @@ object Feather {
       var done = false
       while (!done) {
         require(ip + 4 <= end, "feather: lz4 frame truncated at block size")
-        val bs = i32(src, ip); ip += 4
+        val bs = i4(src, ip); ip += 4
         if (bs == 0) done = true
         else {
           val uncompressed = (bs & 0x80000000) != 0
@@ -379,7 +364,7 @@ object Feather {
       var op = outFrom
       def take(): Int = {
         require(ip < end, "feather: lz4 block truncated mid-sequence")
-        val b = u8v(src, ip); ip += 1; b
+        val b = u1(src, ip); ip += 1; b
       }
       while (ip < end) {
         val token = take()
@@ -394,7 +379,7 @@ object Feather {
         ip += litLen; op += litLen
         if (ip < end) { // the last sequence has no match part
           require(ip + 2 <= end, "feather: lz4 block truncated at offset")
-          val offset = u16(src, ip); ip += 2
+          val offset = u2(src, ip); ip += 2
           require(offset > 0 && offset <= op, "feather: lz4 match offset")
           var matchLen = (token & 0x0F) + 4
           if ((token & 0x0F) == 15) {
@@ -431,7 +416,7 @@ object Feather {
     * this block). */
   private def parseDictBatch(bytes: Array[Byte], at: Int,
                              metaLen: Int): (Long, IndexedSeq[String]) = {
-    require(i32(bytes, at) == 0xFFFFFFFF,
+    require(i4(bytes, at) == 0xFFFFFFFF,
       "feather: dictionary message continuation marker missing")
     val msg = rootTable(bytes, at + 8)
     if (msg.i8f(1) != 2)
@@ -461,7 +446,7 @@ object Feather {
     * `at` — validation declared ONCE so the decode ([[batchRows]]) and
     * the dense-id row count ([[blockRowCount]]) cannot drift. */
   private def recordBatchTable(bytes: Array[Byte], at: Int): FbTable = {
-    require(i32(bytes, at) == 0xFFFFFFFF,
+    require(i4(bytes, at) == 0xFFFFFFFF,
       "feather: message continuation marker missing (pre-0.15 stream?)")
     val msg = rootTable(bytes, at + 8)
     if (msg.i8f(1) != 3)
@@ -499,8 +484,8 @@ object Feather {
     var bufIdx = 0
     def nextBuf(): Array[Byte] = {
       require(bufIdx < nBufs, "feather: batch ran out of buffers")
-      val off = i64(bytes, bufBase + 16 * bufIdx).toInt
-      val len = i64(bytes, bufBase + 16 * bufIdx + 8).toInt
+      val off = i8(bytes, bufBase + 16 * bufIdx).toInt
+      val len = i8(bytes, bufBase + 16 * bufIdx + 8).toInt
       bufIdx += 1
       if (!compressed) {
         val out = new Array[Byte](len)
@@ -508,7 +493,7 @@ object Feather {
         out
       } else if (len == 0) Array.emptyByteArray
       else {
-        val plain = i64(bytes, body + off)
+        val plain = i8(bytes, body + off)
         if (plain == -1L) { // spec: -1 = this buffer left uncompressed
           val out = new Array[Byte](len - 8)
           System.arraycopy(bytes, body + off + 8, out, 0, len - 8)
@@ -540,7 +525,7 @@ object Feather {
             val offs = nextBuf()
             val data = nextBuf()
             (c, (r: Int) => if (!isSet(r)) null else {
-              val s = i32(offs, 4 * r); val e = i32(offs, 4 * r + 4)
+              val s = i4(offs, 4 * r); val e = i4(offs, 4 * r + 4)
               new String(data, s, e - s,
                 java.nio.charset.StandardCharsets.UTF_8)
             })
@@ -548,14 +533,14 @@ object Feather {
             val offs = nextBuf()
             val data = nextBuf()
             (c, (r: Int) => if (!isSet(r)) null else {
-              val s = i32(offs, 4 * r); val e = i32(offs, 4 * r + 4)
+              val s = i4(offs, 4 * r); val e = i4(offs, 4 * r + 4)
               java.util.Arrays.copyOfRange(data, s, e)
             })
           case 'S' => // LargeUtf8: 64-bit offsets, same shape
             val offs = nextBuf()
             val data = nextBuf()
             (c, (r: Int) => if (!isSet(r)) null else {
-              val s = i64(offs, 8 * r); val e = i64(offs, 8 * r + 8)
+              val s = i8(offs, 8 * r); val e = i8(offs, 8 * r + 8)
               if (e - s > Int.MaxValue)
                 refuse(s"large_utf8 value of ${e - s} bytes in '${c.name}'")
               new String(data, s.toInt, (e - s).toInt,
@@ -569,24 +554,24 @@ object Feather {
           case 'd' =>
             val data = nextBuf()
             (c, (r: Int) => if (!isSet(r)) null
-              else java.time.LocalDate.ofEpochDay(i32(data, 4 * r).toLong)
+              else java.time.LocalDate.ofEpochDay(i4(data, 4 * r).toLong)
                 .toString)
           case 'D' => // Date64: epoch MILLIS, still a calendar date
             val data = nextBuf()
             (c, (r: Int) => if (!isSet(r)) null
               else java.time.LocalDate.ofEpochDay(
-                Math.floorDiv(i64(data, 8 * r), 86400000L)).toString)
+                Math.floorDiv(i8(data, 8 * r), 86400000L)).toString)
           case 't' =>
             val data = nextBuf()
             (c, (r: Int) => if (!isSet(r)) null
-              else timestampIso(i64(data, 8 * r), c.bits))
+              else timestampIso(i8(data, 8 * r), c.bits))
           case 'f' =>
             val data = nextBuf()
             (c, (r: Int) => if (!isSet(r)) null
               else java.lang.Double.valueOf(
                 if (c.bits == 32)
-                  java.lang.Float.intBitsToFloat(i32(data, 4 * r)).toDouble
-                else java.lang.Double.longBitsToDouble(i64(data, 8 * r))))
+                  java.lang.Float.intBitsToFloat(i4(data, 4 * r)).toDouble
+                else java.lang.Double.longBitsToDouble(i8(data, 8 * r))))
           case 'x' =>
             val data = nextBuf()
             val dict = dicts.getOrElse(c.dictId,
@@ -595,9 +580,9 @@ object Feather {
             (c, (r: Int) => if (!isSet(r)) null else {
               val idx: Long = c.bits match {
                 case 8 => data(r).toLong
-                case 16 => i16(data, 2 * r).toLong
-                case 32 => i32(data, 4 * r).toLong
-                case _ => i64(data, 8 * r)
+                case 16 => i2(data, 2 * r).toLong
+                case 32 => i4(data, 4 * r).toLong
+                case _ => i8(data, 8 * r)
               }
               if (idx < 0 || idx >= dict.length)
                 refuse(s"dictionary index $idx of ${dict.length} in " +
@@ -616,13 +601,13 @@ object Feather {
             def elem(j: Int): Any =
               if (!childSet(j)) null
               else if (c.bits == 32)
-                java.lang.Float.intBitsToFloat(i32(data, 4 * j))
+                java.lang.Float.intBitsToFloat(i4(data, 4 * j))
               else java.lang.Double.valueOf(
-                java.lang.Double.longBitsToDouble(i64(data, 8 * j)))
+                java.lang.Double.longBitsToDouble(i8(data, 8 * j)))
             (c, (r: Int) => if (!isSet(r)) null else {
               val (s, e) =
                 if (c.kind == 'v') (r * c.listSize, (r + 1) * c.listSize)
-                else (i32(offs, 4 * r), i32(offs, 4 * r + 4))
+                else (i4(offs, 4 * r), i4(offs, 4 * r + 4))
               require(e >= s, s"feather: list offsets run backwards in " +
                 s"'${c.name}' at row $r")
               (s until e).map(elem)
@@ -632,12 +617,12 @@ object Feather {
             (c, (r: Int) => if (!isSet(r)) null else {
               val v: Long = (c.kind, c.bits) match {
                 case ('l', 8) => data(r).toLong
-                case ('l', 16) => i16(data, 2 * r).toLong
-                case ('l', 32) => i32(data, 4 * r).toLong
+                case ('l', 16) => i2(data, 2 * r).toLong
+                case ('l', 32) => i4(data, 4 * r).toLong
                 case ('u', 8) => (data(r) & 0xff).toLong
-                case ('u', 16) => u16(data, 2 * r).toLong
-                case ('u', 32) => i32(data, 4 * r).toLong & 0xffffffffL
-                case _ => i64(data, 8 * r) // i64 / u64 share the guard
+                case ('u', 16) => u2(data, 2 * r).toLong
+                case ('u', 32) => u4(data, 4 * r)
+                case _ => i8(data, 8 * r) // i64 / u64 share the guard
               }
               if (v > (1L << 53) || v < -(1L << 53))
                 refuse(s"int value $v in '${c.name}' exceeds 2^53 " +
@@ -653,15 +638,16 @@ object Feather {
   }
 
   // --------------------------------------------------------------
-  // Spark surface — the Sas tall-cells + records convention
+  // Spark surface — TallCells' tall cells + records, TypedCells' typed
   // --------------------------------------------------------------
-
-  private val cellSchema = PagedScan.cellSchema
 
   private def isNum(c: FeatherCol): Boolean = c.kind match {
     case 'l' | 'u' | 'f' | 'b' => true
     case _ => false // utf8/dict, dates/timestamps-as-iso, null → str
   }
+
+  def columns(meta: FeatherMeta): Seq[(String, Boolean)] =
+    meta.cols.map(c => (c.name, isNum(c)))
 
   /** Column kinds only the TYPED surfaces can hold (blobs, vectors). */
   private def noTallChannel(meta: FeatherMeta, typedName: String): Unit =
@@ -671,56 +657,18 @@ object Feather {
           s"'${c.name}' has no tall-cell channel — use $typedName, " +
           "which keeps BinaryType/ArrayType columns"))
 
-  private def cells(file: String, bytes: Array[Byte]): Iterator[Row] = {
-    val meta = parseFooter(bytes)
-    noTallChannel(meta, "readFeatherTyped")
+  def rows(bytes: Array[Byte], meta: FeatherMeta): Iterator[Seq[Any]] = {
+    noTallChannel(meta, "Feather.readTyped")
+    batches(bytes, meta)
+  }
+
+  /** Every record batch of one whole file, in file order. */
+  private def batches(bytes: Array[Byte],
+                      meta: FeatherMeta): Iterator[Seq[Any]] = {
     val dicts = parseDicts(bytes, meta)
-    var rowBase = 0L
     meta.blocks.iterator.flatMap { case (off, metaLen, _) =>
-      val rows = batchRows(bytes, off.toInt, metaLen, meta, dicts)
-        .zipWithIndex
-        .flatMap { case (vals, r) =>
-          val rowId = rowBase + r
-          meta.cols.iterator.zip(vals.iterator).map { case (c, v) =>
-            if (isNum(c)) Row(file, rowId, c.name, "num", null, v)
-            else Row(file, rowId, c.name, "str", v, null)
-          }
-        }.toSeq
-      rowBase += rows.length / math.max(1, meta.cols.length)
-      rows
+      batchRows(bytes, off.toInt, metaLen, meta, dicts)
     }
-  }
-
-  /** Read .feather/.arrow file(s) (path, directory or glob) as tall
-    * cells — parsed per-partition off a binaryFile scan. */
-  def readFeather(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap(r =>
-      cells(r.getString(0), r.getAs[Array[Byte]](1)))
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** In-memory blobs through the same kernel. */
-  def readFeatherBlobs(spark: SparkSession,
-                       blobs: Seq[(String, Array[Byte])]): DataFrame = {
-    require(blobs.nonEmpty, "readFeatherBlobs needs at least one blob")
-    val rdd = spark.sparkContext
-      .parallelize(blobs, math.min(blobs.size, 32))
-      .flatMap { case (name, bytes) => cells(name, bytes) }
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** Wide pivot — one groupBy(row) shuffle ([[Sas.records]]). */
-  def records(cellsDf: DataFrame, cols: Seq[(String, Boolean)]): DataFrame =
-    Sas.records(cellsDf, cols)
-
-  /** The one-call wide read: schema from the FIRST file's footer. */
-  def readFeatherRecords(spark: SparkSession, path: String): DataFrame = {
-    val firstBytes = PagedScan.firstFileBytes(spark, path)
-    val meta = parseFooter(firstBytes)
-    records(readFeather(spark, path),
-      meta.cols.map(c => (c.name, isNum(c))))
   }
 
   /** Batch-parallel scan of ONE large feather file: record batches are
@@ -728,21 +676,17 @@ object Feather {
     * so the driver reads ONLY the footer — a bounded geometrically-
     * widening TAIL read — and each task preads and decodes its own
     * batch blocks. Row ids are DENSE 0..N−1 in file order, identical
-    * to [[readFeather]]'s: a metadata pass preads each block's message
+    * to [[read]]'s: a metadata pass preads each block's message
     * header (metaLen bytes, never the body) for its row count and
     * prefix-sums the per-block bases. */
-  def readFeatherPaged(spark: SparkSession, path: String,
-                       partitions: Int = 0): DataFrame = {
+  def readPaged(spark: SparkSession, path: String,
+                partitions: Int): DataFrame = {
     val m = pagedMeta(spark, path)
-    noTallChannel(m, "readFeatherTypedPaged")
+    noTallChannel(m, "Feather.readTypedPaged")
+    val cols = columns(m)
     val rdd = pagedRowsRdd(spark, path, m, partitions)
-      .flatMap { case (rowId, vals) =>
-        m.cols.iterator.zip(vals.iterator).map { case (c, v) =>
-          if (isNum(c)) Row(path, rowId, c.name, "num", null, v)
-          else Row(path, rowId, c.name, "str", v, null)
-        }
-      }
-    spark.createDataFrame(rdd, cellSchema)
+      .flatMap { case (rowId, vals) => Cells.row(path, rowId, cols, vals) }
+    spark.createDataFrame(rdd, Cells.schema)
   }
 
   /** Footer of ONE file off a bounded, geometrically-widening TAIL
@@ -787,7 +731,7 @@ object Feather {
     val dictBytes = m.dictBlocks.map { case (_, ml, bl) => ml + bl }.sum
     require(dictBytes < (64L << 20),
       s"feather: $dictBytes bytes of dictionary batches — past the " +
-        "driver pread bound; use readFeather (whole-file per task)")
+        "driver pread bound; use Feather.read (whole-file per task)")
     val dicts: Map[Long, IndexedSeq[String]] =
       m.dictBlocks.map { case (off, ml, bl) =>
         val buf = PagedScan.readTail(spark, path, off, ml + bl.toInt)
@@ -808,17 +752,13 @@ object Feather {
         // pay an object-store round-trip per record batch
         if (it.isEmpty) Iterator.empty
         else {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(PagedScan.rebuild(hconf))
-          val in = fs.open(p)
-          val out = try {
+          PagedScan.open(hconf, path) { in =>
             it.map { case ((off, metaLen, _), blockIdx) =>
               val b = new Array[Byte](metaLen)
               in.readFully(off, b)
               (blockIdx, blockRowCount(b))
             }.toVector
-          } finally in.close()
-          out.iterator
+          }.iterator
         }
       }.collect().sortBy(_._1).map(_._2)
     // broadcast, not closure — the bases array is O(blocks)
@@ -830,47 +770,28 @@ object Feather {
           s"feather: block $blockIdx is ${metaLen.toLong + bodyLen} " +
             "bytes — past the single-buffer bound (re-export with " +
             "smaller record batches)")
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(PagedScan.rebuild(hconf))
-        val in = fs.open(p)
-        val buf = try {
-          val b = new Array[Byte](metaLen + bodyLen.toInt)
-          in.readFully(off, b)
-          b
-        } finally in.close()
+        val buf = new Array[Byte](metaLen + bodyLen.toInt)
+        PagedScan.open(hconf, path)(_.readFully(off, buf))
         batchRows(buf, 0, metaLen, m, dicts).zipWithIndex.map {
           case (vals, r) => (rowBase.value(blockIdx) + r, vals)
         }
       }
   }
 
-  /** [[readFeatherTyped]] with WITHIN-file parallelism: the media
-    * ingest path for ONE large Arrow file carrying binary columns —
-    * block-parallel like [[readFeatherPaged]], typed output like
-    * [[readFeatherTyped]] (BinaryType blobs intact, dense row ids). */
-  def readFeatherTypedPaged(spark: SparkSession, path: String,
-                            partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.types._
+  /** [[readTyped]] with WITHIN-file parallelism: the media ingest path
+    * for ONE large Arrow file carrying binary columns — block-parallel
+    * like [[readPaged]], typed output like [[readTyped]] (BinaryType
+    * blobs intact, dense row ids). */
+  def readTypedPaged(spark: SparkSession, path: String,
+                     partitions: Int): DataFrame = {
     val m = pagedMeta(spark, path)
-    PagedScan.requireNoReservedNames(m.cols.map(_.name),
-      "readFeatherTypedPaged")
-    val schema = StructType(
-      StructField("src_file", StringType, nullable = false) +:
-      StructField("row", LongType, nullable = false) +:
-      featherSchema(m).fields.toSeq)
+    Cells.requireNoReservedNames(m.cols.map(_.name), "Feather.readTypedPaged")
     val rdd = pagedRowsRdd(spark, path, m, partitions).map {
       case (rowId, vals) =>
         Row.fromSeq(path +: java.lang.Long.valueOf(rowId) +: vals)
     }
-    spark.createDataFrame(rdd, schema)
+    spark.createDataFrame(rdd, Cells.typedSchema(featherSchema(m).fields.toSeq))
   }
-
-  /** [[readFeatherTypedPaged]] over a directory/glob — both
-    * parallelism axes. */
-  def readFeatherTypedPagedAll(spark: SparkSession, path: String,
-                               partitions: Int = 0): DataFrame =
-    PagedScan.unionPerFile(spark, path)(
-      readFeatherTypedPaged(spark, _, partitions))
 
   /** The Spark schema a typed feather read carries: numerics widen to
     * double (the family convention), text/dates/dicts land as string,
@@ -890,60 +811,24 @@ object Feather {
   /** TYPED read: one DataFrame row per record row, columns under
     * [[featherSchema]] — the path for files carrying BINARY columns
     * (media blobs in Arrow corpora), which the tall-cell pivot cannot
-    * hold. Per-partition parse over binaryFile like [[readFeather]];
-    * every file must carry the FIRST file's column list. */
-  def readFeatherTyped(spark: SparkSession, path: String): DataFrame = {
-    val firstBytes = PagedScan.firstFileBytes(spark, path)
-    typedFrom(spark, parseFooter(firstBytes),
-      spark.read.format("binaryFile").load(path)
-        .select(col("path"), col("content")).rdd
-        .map(r => (r.getString(0), r.getAs[Array[Byte]](1))))
-  }
-
-  /** In-memory blobs through the typed kernel. */
-  def readFeatherTypedBlobs(spark: SparkSession,
-                            blobs: Seq[(String, Array[Byte])]): DataFrame = {
-    require(blobs.nonEmpty, "readFeatherTypedBlobs needs at least one blob")
-    typedFrom(spark, parseFooter(blobs.head._2),
-      spark.sparkContext.parallelize(blobs, math.min(blobs.size, 32)))
-  }
-
-  private def typedFrom(spark: SparkSession, first: FeatherMeta,
-                        files: org.apache.spark.rdd.RDD[(String, Array[Byte])])
+    * hold. Every file must carry the FIRST file's column list. */
+  protected def typedFrom(spark: SparkSession, first: Array[Byte],
+                          files: org.apache.spark.rdd.RDD[(String, Array[Byte])])
       : DataFrame = {
-    import org.apache.spark.sql.types._
-    PagedScan.requireNoReservedNames(first.cols.map(_.name),
-      "readFeatherTyped")
-    val schema = StructType(
-      StructField("src_file", StringType, nullable = false) +:
-      StructField("row", LongType, nullable = false) +:
-      featherSchema(first).fields.toSeq)
-    val expect = first.cols.map(c => (c.name, c.kind))
+    val head = parseMeta(first)
+    Cells.requireNoReservedNames(head.cols.map(_.name), "Feather.readTyped")
+    val expect = head.cols.map(c => (c.name, c.kind))
     val rdd = files.flatMap { case (file, bytes) =>
-      val meta = parseFooter(bytes)
+      val meta = parseMeta(bytes)
       require(meta.cols.map(c => (c.name, c.kind)) == expect,
         s"feather: $file's columns ${meta.cols.map(_.name)} do not " +
           s"match the first file's ${expect.map(_._1)}")
-      val dicts = parseDicts(bytes, meta)
-      var rowBase = 0L
-      meta.blocks.iterator.flatMap { case (off, metaLen, _) =>
-        val rows = batchRows(bytes, off.toInt, metaLen, meta, dicts)
-          .zipWithIndex.map { case (vals, r) =>
-            Row.fromSeq(file +: java.lang.Long.valueOf(rowBase + r) +: vals)
-          }.toSeq
-        rowBase += rows.length
-        rows
+      batches(bytes, meta).zipWithIndex.map { case (vals, r) =>
+        Row.fromSeq(file +: java.lang.Long.valueOf(r.toLong) +: vals)
       }
     }
-    spark.createDataFrame(rdd, schema)
+    spark.createDataFrame(rdd, Cells.typedSchema(featherSchema(head).fields.toSeq))
   }
-
-  /** [[readFeatherPaged]] over a directory/glob of large files — both
-    * parallelism axes ([[Sas.readSasPagedAll]]'s shape). */
-  def readFeatherPagedAll(spark: SparkSession, path: String,
-                          partitions: Int = 0): DataFrame =
-    PagedScan.unionPerFile(spark, path)(
-      readFeatherPaged(spark, _, partitions))
 
   // --------------------------------------------------------------
   // writer — uncompressed v2 files for round-trips and entries; the

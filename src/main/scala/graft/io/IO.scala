@@ -13,17 +13,22 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object IO {
 
+  /** The statistical formats' extensions — one record reader each. */
+  private val Statistical: Map[String, TallCells] = Map(
+    "sas7bdat" -> Sas, "sav" -> Sav, "zsav" -> Sav, "dta" -> Dta,
+    "xpt" -> Xpt, "feather" -> Feather, "arrow" -> Feather)
+
   /** Extension-dispatched read, mirroring `read_data`'s map. .npy and
     * .npz dispatch to the pure-JVM [[Npy]] parser (COO rows); .pkl /
     * .pickle to the pure-JVM [[Pickle]] record reader (flat
     * list/dict/scalar frames only — constructor opcodes refuse, by
-    * design); .sas7bdat to the pure-JVM [[Sas]] record reader
-    * (little-endian uncompressed subset — RLE/RDC refuse loudly);
-    * .sav to the pure-JVM [[Sav]] record reader (little-endian $FL2,
-    * no/bytecode compression — zlib refuses loudly); .h5 remains a
-    * documented conversion. `sanitizeNames`
-    * lower-snake-cases columns, the `sanitize=True` read option
-    * (io.py:826). */
+    * design); the statistical formats to their [[TallCells]]
+    * `readRecords`: .sas7bdat ([[Sas]]: little- and big-endian,
+    * uncompressed, RLE or RDC), .sav/.zsav ([[Sav]]: no, bytecode or
+    * zlib compression), .dta ([[Dta]]), .xpt ([[Xpt]]) and
+    * .feather/.arrow ([[Feather]]); .h5 remains a documented
+    * conversion. `sanitizeNames` lower-snake-cases columns, the
+    * `sanitize=True` read option (io.py:826). */
   def readData(spark: SparkSession, path: String,
                inferSchema: Boolean = true,
                sanitizeNames: Boolean = false): DataFrame = {
@@ -41,14 +46,11 @@ object IO {
       case "orc" => spark.read.orc(path)
       case "xml" => spark.read.option("rowTag", "row").xml(path)
       case "xlsx" => Excel.readExcelSheets(spark, path)._2.head._2
-      case "npy" => Npy.readNpy(spark, path)
+      case "npy" => Npy.read(spark, path)
       case "npz" => Npy.readNpz(spark, path)
-      case "pkl" | "pickle" => Pickle.readPickleRecords(spark, path)
-      case "sas7bdat" => Sas.readSasRecords(spark, path)
-      case "sav" | "zsav" => Sav.readSavRecords(spark, path)
-      case "dta" => Dta.readDtaRecords(spark, path)
-      case "xpt" => Xpt.readXptRecords(spark, path)
-      case "feather" | "arrow" => Feather.readFeatherRecords(spark, path)
+      case "pkl" | "pickle" => Pickle.readRecords(spark, path)
+      case stat if Statistical.contains(stat) =>
+        Statistical(stat).readRecords(spark, path)
       case "html" | "htm" =>
         val tables = Scrape.readHtmlTables(spark, path)
         require(tables.nonEmpty, s"no <table> found in $path")

@@ -156,21 +156,26 @@ object Npy {
     StructField("value_long", LongType, nullable = true),
     StructField("dtype", StringType, nullable = false)))
 
+  private def cooFrame(spark: SparkSession,
+                       files: org.apache.spark.rdd.RDD[(String, Array[Byte])],
+                       maxElements: Long): DataFrame =
+    spark.createDataFrame(files.flatMap { case (name, bytes) =>
+      val (h, it) = elements(bytes, maxElements)
+      it.map { case (c, d, l) => Row(name, "", c, d, l, h.descr) }
+    }, cooSchema)
+
+  /** Read .npy file(s) (a path, directory or glob) as COO rows. */
+  def read(spark: SparkSession, path: String,
+           maxElements: Long = 1L << 28): DataFrame =
+    cooFrame(spark, Cells.files(spark, path), maxElements)
+
   /** Parse in-memory npy blobs (name, bytes) as COO rows — the same
-    * `elements` kernel as [[readNpy]] without the filesystem: entries
+    * `elements` kernel as [[read]] without the filesystem: entries
     * and tests synthesize their fixtures with [[npyBytes]] instead of
     * depending on an absolute path that breaks under relocation. */
-  def readNpyBlobs(spark: SparkSession, blobs: Seq[(String, Array[Byte])],
-                   maxElements: Long = 1L << 28): DataFrame = {
-    require(blobs.nonEmpty, "readNpyBlobs needs at least one blob")
-    val rdd = spark.sparkContext
-      .parallelize(blobs, math.min(blobs.size, 32))
-      .flatMap { case (name, bytes) =>
-        val (h, it) = elements(bytes, maxElements)
-        it.map { case (c, d, l) => Row(name, "", c, d, l, h.descr) }
-      }
-    spark.createDataFrame(rdd, cooSchema)
-  }
+  def readBlobs(spark: SparkSession, blobs: Seq[(String, Array[Byte])],
+                maxElements: Long = 1L << 28): DataFrame =
+    cooFrame(spark, Cells.blobs(spark, blobs), maxElements)
 
   /** Synthesize a spec-conformant npy v1 blob — the writer side of the
     * format (magic, 64-byte-aligned Python-literal header, raw
@@ -206,7 +211,7 @@ object Npy {
 
   /** Export an (id, vector) DataFrame as SHARDED rank-2 '<f8' .npy
     * files under `dir` — the layout numpy embedding corpora actually
-    * use (one bounded matrix per shard; [[readNpy]]'s binaryFile scan
+    * use (one bounded matrix per shard; [[read]]'s binaryFile scan
     * parallelizes over the files). Column 0 of every matrix row is the
     * id, columns 1..d the vector, so shards are SELF-DESCRIBING — no
     * sidecar index to drift out of sync. Shard s holds ids in
@@ -249,30 +254,14 @@ object Npy {
       }
   }
 
-  /** Read .npy file(s) (a path, directory or glob) as COO rows. */
-  def readNpy(spark: SparkSession, path: String,
-              maxElements: Long = 1L << 28): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap { r =>
-      val (h, it) = elements(r.getAs[Array[Byte]](1), maxElements)
-      it.map { case (c, d, l) =>
-        Row(r.getString(0), "", c, d, l, h.descr)
-      }
-    }
-    spark.createDataFrame(rdd, cooSchema)
-  }
-
   /** Read .npz archive(s): each zip entry is an npy, `array_name` =
     * the entry name without its .npy suffix. Deflate and stored
     * entries both stream through the JDK inflater per partition. */
   def readNpz(spark: SparkSession, path: String,
               maxElements: Long = 1L << 28): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap { r =>
+    val rdd = Cells.files(spark, path).flatMap { case (file, archive) =>
       val zin = new java.util.zip.ZipInputStream(
-        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+        new java.io.ByteArrayInputStream(archive))
       // entry bytes must be drained before the next getNextEntry, so
       // materialize the (bounded-by-file-size) entry list first, then
       // stream elements lazily
@@ -283,7 +272,7 @@ object Npy {
       entries.iterator.flatMap { case (name, bytes) =>
         val (h, it) = elements(bytes, maxElements)
         it.map { case (c, d, l) =>
-          Row(r.getString(0), name, c, d, l, h.descr)
+          Row(file, name, c, d, l, h.descr)
         }
       }
     }
@@ -298,7 +287,7 @@ object Npy {
   def readNpyMatrix(spark: SparkSession, path: String,
                     maxCols: Long = 1L << 22,
                     maxElements: Long = 1L << 28): DataFrame = {
-    val coo = readNpy(spark, path, maxElements)
+    val coo = read(spark, path, maxElements)
     val rank = size(col("coords"))
     val rowIdx = when(rank >= 2, element_at(col("coords"), 1))
       .otherwise(lit(0L))
@@ -314,7 +303,7 @@ object Npy {
       // silence raise_error): rank and width are refused loudly
       .filter(
         when(col("_rank") > lit(2), raise_error(lit(
-          "readNpyMatrix needs rank <= 2; use readNpy (COO) for tensors"))
+          "readNpyMatrix needs rank <= 2; use Npy.read (COO) for tensors"))
           .cast("boolean"))
         .when(col("_col") >= lit(maxCols), raise_error(concat(lit(
           s"npy row wider than maxCols=$maxCols at col "), col("_col")))

@@ -3,46 +3,13 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Shared machinery for the statistical-format readers: the tall-cell
-  * schema they all emit, the bounded first-file bootstrap, and the
-  * range-parallel single-file scan ([[Sas.readSasPaged]] pioneered the
-  * shape: a widening driver read fits the file's own metadata, then
-  * each task preads and decodes a contiguous fixed-stride row range).
+/** The within-file scan machinery of the statistical-format readers:
+  * a bounded, widening driver read fits the file's own metadata, then
+  * each task preads and decodes a contiguous fixed-stride row range
+  * ([[Sas.readPaged]] pioneered the shape). The tall-cell layout and
+  * the whole-file surfaces live in [[Cells]].
   */
 private[io] object PagedScan {
-
-  /** The (src_file, row, key, vtype, value_str, value_double) cell
-    * layout every statistical reader emits — declared once. */
-  val cellSchema: StructType = StructType(Seq(
-    StructField("src_file", StringType, nullable = false),
-    StructField("row", LongType, nullable = false),
-    StructField("key", StringType, nullable = false),
-    StructField("vtype", StringType, nullable = false),
-    StructField("value_str", StringType, nullable = true),
-    StructField("value_double", DoubleType, nullable = true)))
-
-  /** The TYPED surfaces prepend (src_file, row) to the file's own
-    * variables — a user variable with either name would collide
-    * silently (duplicate columns, or an ambiguous-column error three
-    * operators later). Refuse loudly at the read, the family's
-    * convention. */
-  def requireNoReservedNames(names: Seq[String], reader: String): Unit = {
-    val hit = names.filter(n => n == "src_file" || n == "row")
-    require(hit.isEmpty,
-      s"$reader: column name(s) ${hit.mkString(", ")} collide with the " +
-        "typed surface's reserved (src_file, row) columns — rename them " +
-        "at the producer")
-  }
-
-  /** First file of a path/glob by NAME, its bytes read once — the
-    * records() schema bootstrap (binaryFile prunes `content` when
-    * unselected, so choosing by path costs no data reads). */
-  def firstFileBytes(spark: SparkSession, path: String): Array[Byte] = {
-    val firstPath = spark.read.format("binaryFile").load(path)
-      .select("path").orderBy("path").limit(1).head().getString(0)
-    spark.read.format("binaryFile").load(firstPath)
-      .select("content").head().getAs[Array[Byte]](0)
-  }
 
   /** The session Hadoop conf flattened for task-side rebuild — a bare
     * `new Configuration()` on an executor would lose every non-default
@@ -54,10 +21,19 @@ private[io] object PagedScan {
     b.result()
   }
 
-  private[io] def rebuild(m: Map[String, String]): org.apache.hadoop.conf.Configuration = {
+  private def rebuild(m: Map[String, String]): org.apache.hadoop.conf.Configuration = {
     val c = new org.apache.hadoop.conf.Configuration(false)
     m.foreach { case (k, v) => c.set(k, v) }
     c
+  }
+
+  /** Open `path` TASK-side under a [[confMap]] capture, closed after
+    * `f` — every executor pread of the paged scans goes through here. */
+  def open[T](hconf: Map[String, String], path: String)
+             (f: org.apache.hadoop.fs.FSDataInputStream => T): T = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(rebuild(hconf)).open(p)
+    try f(in) finally in.close()
   }
 
   /** Read a HEAD of the file, widening geometrically until `parse`
@@ -115,30 +91,6 @@ private[io] object PagedScan {
     } finally in.close()
   }
 
-  /** Expand a path/glob/directory into its data files — the
-    * multi-file paged readers union one scan per file. */
-  def listFiles(spark: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-    val files = matched.flatMap { st =>
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq.filter(_.isFile).map(_.getPath)
-      else Seq(st.getPath)
-    }
-    files.map(_.toString).sorted
-  }
-
-  /** Union one WITHIN-file-parallel scan per matched file — both axes
-    * of parallelism at once (across files AND across each file's
-    * pages/rows/batches). Backs every reader's `*PagedAll`. */
-  def unionPerFile(spark: SparkSession, path: String)
-                  (perFile: String => DataFrame): DataFrame = {
-    val files = listFiles(spark, path)
-    require(files.nonEmpty, s"no files match $path")
-    files.map(perFile).reduce(_.unionByName(_))
-  }
-
   def fileLength(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -167,14 +119,9 @@ private[io] object PagedScan {
     val rdd = spark.sparkContext
       .parallelize(ranges, math.max(1, ranges.size))
       .flatMap { case (start, n) =>
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(rebuild(hconf))
-        val in = fs.open(p)
-        try {
-          val buf = new Array[Byte]((n * rowLen).toInt)
-          in.readFully(dataAt + start * rowLen, buf)
-          decode(buf, start, n)
-        } finally in.close()
+        val buf = new Array[Byte]((n * rowLen).toInt)
+        open(hconf, path)(_.readFully(dataAt + start * rowLen, buf))
+        decode(buf, start, n)
       }
     spark.createDataFrame(rdd, schema)
   }

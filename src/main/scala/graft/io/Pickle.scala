@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,10 +18,10 @@ import scala.collection.mutable
   * NEWOBJ and friends are REFUSED BY DESIGN, not just descoped:
   * executing constructor opcodes is how malicious pickles run code,
   * and a data engine has no business instantiating classes from a
-  * 100 TB data lake. SAS/SPSS remain documented conversions.
+  * 100 TB data lake.
   *
   * Layout mirrors [[Npy]]: the scan parses per-partition (one row per
-  * file, zero driver involvement), [[readPickle]] emits tall
+  * file, zero driver involvement), [[read]] emits tall
   * (row, key, typed value) cells, [[records]] pivots to the wide
   * record frame under a driver-inferred (key, type) schema — the
   * fitted-scalar pattern, schema from ONE bounded file read.
@@ -38,26 +39,6 @@ object Pickle {
   // ---------------------------------------------------------------
   // opcode-level parser
   // ---------------------------------------------------------------
-
-  private final class Reader(bytes: Array[Byte]) {
-    var pos = 0
-    def u1(): Int = { val v = bytes(pos) & 0xff; pos += 1; v }
-    def s(n: Int): Array[Byte] = {
-      require(pos + n <= bytes.length, "truncated pickle stream")
-      val out = java.util.Arrays.copyOfRange(bytes, pos, pos + n)
-      pos += n; out
-    }
-    def u2le(): Int = u1() | (u1() << 8)
-    def i4le(): Int = u1() | (u1() << 8) | (u1() << 16) | (u1() << 24)
-    def u4le(): Long = i4le().toLong & 0xffffffffL
-    def u8le(): Long = u4le() | (u4le() << 32)
-    def f8be(): Double = {
-      var bits = 0L
-      var i = 0
-      while (i < 8) { bits = (bits << 8) | u1().toLong; i += 1 }
-      java.lang.Double.longBitsToDouble(bits)
-    }
-  }
 
   /** Names for the refused opcodes so the error teaches, not taunts. */
   private val RefusedNames: Map[Int, String] = Map(
@@ -81,7 +62,7 @@ object Pickle {
     * scalars as null / Boolean / Long / Double / String. */
   def parse(bytes: Array[Byte]): Any = {
     require(bytes.nonEmpty, "empty pickle stream")
-    val in = new Reader(bytes)
+    val in = new Bytes.Cursor(bytes, "truncated pickle stream")
     val stack = mutable.ArrayBuffer.empty[Any]
     val memo = mutable.LongMap.empty[Any]
     var nextMemo = 0L
@@ -111,9 +92,9 @@ object Pickle {
         case 'N' => stack += null // NONE
         case 0x88 => stack += java.lang.Boolean.TRUE // NEWTRUE
         case 0x89 => stack += java.lang.Boolean.FALSE // NEWFALSE
-        case 'J' => stack += in.i4le().toLong // BININT
+        case 'J' => stack += in.i4().toLong // BININT
         case 'K' => stack += in.u1().toLong // BININT1
-        case 'M' => stack += in.u2le().toLong // BININT2
+        case 'M' => stack += in.u2().toLong // BININT2
         case 0x8a => // LONG1: little-endian two's complement
           val n = in.u1()
           if (n == 0) stack += 0L
@@ -126,15 +107,15 @@ object Pickle {
             while (i >= 0) { v = (v << 8) | (b(i).toLong & 0xff); i -= 1 }
             stack += v
           }
-        case 'G' => stack += in.f8be() // BINFLOAT (big-endian!)
+        case 'G' => stack += in.f8(be = true) // BINFLOAT (big-endian!)
         case 'X' => // BINUNICODE
-          stack += new String(in.s(in.i4le()),
+          stack += new String(in.s(in.i4()),
             java.nio.charset.StandardCharsets.UTF_8)
         case 0x8c => // SHORT_BINUNICODE
           stack += new String(in.s(in.u1()),
             java.nio.charset.StandardCharsets.UTF_8)
         case 0x8d => // BINUNICODE8
-          val n = in.u8le()
+          val n = in.i8()
           require(n <= Int.MaxValue, "unicode payload > 2 GiB")
           stack += new String(in.s(n.toInt),
             java.nio.charset.StandardCharsets.UTF_8)
@@ -142,7 +123,7 @@ object Pickle {
           stack += new String(in.s(in.u1()),
             java.nio.charset.StandardCharsets.ISO_8859_1)
         case 'T' => // BINSTRING
-          stack += new String(in.s(in.i4le()),
+          stack += new String(in.s(in.i4()),
             java.nio.charset.StandardCharsets.ISO_8859_1)
         case ']' => stack += mutable.ArrayBuffer.empty[Any] // EMPTY_LIST
         case '}' => stack += mutable.LinkedHashMap.empty[Any, Any] // EMPTY_DICT
@@ -171,10 +152,10 @@ object Pickle {
           val c = pop(); val b = pop(); val a = pop()
           stack += mutable.ArrayBuffer(a, b, c)
         case 'q' => memo(in.u1().toLong) = stack.last // BINPUT
-        case 'r' => memo(in.u4le()) = stack.last // LONG_BINPUT
+        case 'r' => memo(in.u4()) = stack.last // LONG_BINPUT
         case 0x94 => memo(nextMemo) = stack.last; nextMemo += 1 // MEMOIZE
         case 'h' => stack += memo(in.u1().toLong) // BINGET
-        case 'j' => stack += memo(in.u4le()) // LONG_BINGET
+        case 'j' => stack += memo(in.u4()) // LONG_BINGET
         case other =>
           val name = RefusedNames.getOrElse(other,
             f"0x$other%02x")
@@ -265,31 +246,21 @@ object Pickle {
     StructField("value_long", LongType, nullable = true),
     StructField("value_bool", BooleanType, nullable = true)))
 
-  private def withFile(file: String, it: Iterator[Row]): Iterator[Row] =
-    it.map(r => Row.fromSeq(file +: r.toSeq))
+  private def cellFrame(spark: SparkSession,
+                        files: RDD[(String, Array[Byte])]): DataFrame =
+    spark.createDataFrame(files.flatMap { case (file, bytes) =>
+      cells(parse(bytes)).map(r => Row.fromSeq(file +: r.toSeq))
+    }, cellSchema)
 
   /** Read .pkl file(s) (path, directory or glob) as tall cells —
-    * parsed per-partition off a binaryFile scan, like [[Npy.readNpy]]. */
-  def readPickle(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap { r =>
-      withFile(r.getString(0), cells(parse(r.getAs[Array[Byte]](1))))
-    }
-    spark.createDataFrame(rdd, cellSchema)
-  }
+    * parsed per-partition off a binaryFile scan ([[Cells.files]]). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    cellFrame(spark, Cells.files(spark, path))
 
-  /** In-memory blobs through the same kernel — entries and tests
-    * synthesize fixtures without filesystem paths (the
-    * [[Npy.readNpyBlobs]] convention). */
-  def readPickleBlobs(spark: SparkSession,
-                      blobs: Seq[(String, Array[Byte])]): DataFrame = {
-    require(blobs.nonEmpty, "readPickleBlobs needs at least one blob")
-    val rdd = spark.sparkContext
-      .parallelize(blobs, math.min(blobs.size, 32))
-      .flatMap { case (name, bytes) => withFile(name, cells(parse(bytes))) }
-    spark.createDataFrame(rdd, cellSchema)
-  }
+  /** In-memory blobs through the same kernel ([[Cells.blobs]]). */
+  def readBlobs(spark: SparkSession,
+                blobs: Seq[(String, Array[Byte])]): DataFrame =
+    cellFrame(spark, Cells.blobs(spark, blobs))
 
   /** Infer the (key, type) record schema from ONE parsed value —
     * key order = first-appearance order; int⊔float promotes to float,
@@ -338,16 +309,9 @@ object Pickle {
   /** The one-call wide read: schema inferred from the FIRST file
     * (bounded driver read — the fitted-scalar pattern), every file
     * then parsed distributed and pivoted. */
-  def readPickleRecords(spark: SparkSession, path: String): DataFrame = {
-    // pick the first file by PATH ONLY (binaryFile prunes `content`
-    // when unselected — ordering with content selected would read
-    // every file's bytes just to choose one), then load just it
-    val firstPath = spark.read.format("binaryFile").load(path)
-      .select("path").orderBy("path").limit(1).head().getString(0)
-    val firstBytes = spark.read.format("binaryFile").load(firstPath)
-      .select("content").head().getAs[Array[Byte]](0)
-    records(readPickle(spark, path), inferKeys(parse(firstBytes)))
-  }
+  def readRecords(spark: SparkSession, path: String): DataFrame =
+    records(read(spark, path),
+      inferKeys(parse(Cells.firstFileBytes(spark, path))))
 
   // ---------------------------------------------------------------
   // writer — fixtures and round-trip tests (protocol 2 subset)

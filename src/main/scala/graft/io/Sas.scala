@@ -1,8 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable
 
@@ -31,13 +29,16 @@ import scala.collection.mutable
   *  - numeric cells 3–8 bytes wide (the SAS truncated-double ladder)
   *    and fixed-width char cells.
   *
-  * Layout mirrors [[Pickle]]: the scan parses per-partition (one row
-  * per file, zero driver involvement), [[readSas]] emits tall
-  * (row, key, typed value) cells, [[records]] pivots to the wide
-  * record frame under the FIRST file's own column metadata — sas7bdat
-  * is self-describing, so unlike pickle no inference pass is needed.
+  * The Spark surface is [[TallCells]]': the scan parses per-partition
+  * (one row per file, zero driver involvement), `read` emits tall
+  * (row, key, typed value) cells, `records` pivots to the wide record
+  * frame under the FIRST file's own column metadata — sas7bdat is
+  * self-describing, so unlike pickle no inference pass is needed.
   */
-object Sas {
+object Sas extends TallCells {
+  import Bytes.{u1, u2, u4, uN}
+
+  type Meta = SasMeta
 
   private val Magic: Array[Byte] = Array(
     0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00,
@@ -64,31 +65,9 @@ object Sas {
     def rle: Boolean = compression == CompRle
   }
 
-  // --------------------------------------------------------------
-  // integer primitives — every multi-byte field is read in the FILE's
-  // byte order (header byte 37: 0x01 little, 0x00 big), which keeps
-  // every semantic constant (page types, subheader signatures)
-  // identical across both layouts
-  // --------------------------------------------------------------
-
-  private def u1(b: Array[Byte], at: Int): Int = b(at) & 0xff
-  private def u2(b: Array[Byte], at: Int, be: Boolean): Int =
-    if (be) (u1(b, at) << 8) | u1(b, at + 1)
-    else u1(b, at) | (u1(b, at + 1) << 8)
-  private def u4(b: Array[Byte], at: Int, be: Boolean): Long = {
-    var v = 0L
-    if (be) { var i = 0; while (i <= 3) { v = (v << 8) | u1(b, at + i); i += 1 } }
-    else { var i = 3; while (i >= 0) { v = (v << 8) | u1(b, at + i); i -= 1 } }
-    v
-  }
-  private def u8(b: Array[Byte], at: Int, be: Boolean): Long = {
-    var v = 0L
-    if (be) { var i = 0; while (i <= 7) { v = (v << 8) | u1(b, at + i); i += 1 } }
-    else { var i = 7; while (i >= 0) { v = (v << 8) | u1(b, at + i); i -= 1 } }
-    v
-  }
-  private def uint(b: Array[Byte], at: Int, len: Int, be: Boolean): Long =
-    if (len == 8) u8(b, at, be) else u4(b, at, be)
+  // Every multi-byte field is read in the FILE's byte order (header
+  // byte 37: 0x01 little, 0x00 big), which keeps every semantic constant
+  // (page types, subheader signatures) identical across both layouts.
 
   /** Numeric cell: full or SAS-truncated double — the stored bytes are
     * the HIGH-order bytes of the ieee754 pattern, in the file's byte
@@ -97,15 +76,7 @@ object Sas {
     * class ., .A–.Z, ._) decode to null. */
   private def sasDouble(b: Array[Byte], at: Int, width: Int,
                         be: Boolean): java.lang.Double = {
-    var bits = 0L
-    if (be) {
-      var i = 0
-      while (i < width) { bits = (bits << 8) | u1(b, at + i); i += 1 }
-    } else {
-      var i = width - 1
-      while (i >= 0) { bits = (bits << 8) | u1(b, at + i); i -= 1 }
-    }
-    bits <<= 8 * (8 - width)
+    val bits = uN(b, at, width, be) << 8 * (8 - width)
     val d = java.lang.Double.longBitsToDouble(bits)
     if (java.lang.Double.isNaN(d)) null else java.lang.Double.valueOf(d)
   }
@@ -147,7 +118,7 @@ object Sas {
     }
     val headerLength = u4(bytes, 196 + a1, be).toInt
     val pageSize = u4(bytes, 200 + a1, be).toInt
-    val pageCount = uint(bytes, 204 + a1, if (u64) 8 else 4, be)
+    val pageCount = uN(bytes, 204 + a1, if (u64) 8 else 4, be)
     require(headerLength > 0 && pageSize > 0 && pageCount >= 0,
       "sas7bdat: nonsense header geometry")
     SasHeader(u64, headerLength, pageSize, pageCount, be)
@@ -208,19 +179,19 @@ object Sas {
         var i = 0
         while (i < shCount) {
           val pAt = base + bitOffset + 8 + i * ptrLen
-          val shOff = base + uint(bytes, pAt, il, be).toInt
-          val shLen = uint(bytes, pAt + il, il, be)
+          val shOff = base + uN(bytes, pAt, il, be).toInt
+          val shLen = uN(bytes, pAt + il, il, be)
           val comp = u1(bytes, pAt + 2 * il)
           val ptyp = u1(bytes, pAt + 2 * il + 1)
           if (shLen > 0 && comp != 1 && // 1 = truncated pointer
               !(comp == CompData && ptyp == 1)) { // per-row data subheader
             sigOf(shOff) match {
               case 0xF7F7F7F7L =>
-                rowLength = uint(bytes, shOff + 5 * il, il, be)
-                rowCount = uint(bytes, shOff + 6 * il, il, be)
-                mixRows = uint(bytes, shOff + 15 * il, il, be)
+                rowLength = uN(bytes, shOff + 5 * il, il, be)
+                rowCount = uN(bytes, shOff + 6 * il, il, be)
+                mixRows = uN(bytes, shOff + 15 * il, il, be)
               case 0xF6F6F6F6L =>
-                colCount = uint(bytes, shOff + il, il, be)
+                colCount = uN(bytes, shOff + il, il, be)
               case 0xFFFFFFFDL => // column text
                 val at = shOff + il
                 val size = u2(bytes, at, be)
@@ -246,7 +217,7 @@ object Sas {
                 val n = ((shLen - 2 * il - 12) / vec).toInt
                 var j = 0
                 while (j < n) {
-                  attrs += ((uint(bytes, shOff + il + 8 + j * vec, il, be),
+                  attrs += ((uN(bytes, shOff + il + 8 + j * vec, il, be),
                     u4(bytes, shOff + 2 * il + 8 + j * vec, be).toInt,
                     u1(bytes, shOff + 2 * il + 14 + j * vec)))
                   j += 1
@@ -292,6 +263,9 @@ object Sas {
     SasMeta(u64, headerLength, pageSize, pageCount, rowLength, rowCount,
       mixRows, cols, compression = codec, be = be)
   }
+
+  def columns(meta: SasMeta): Seq[(String, Boolean)] =
+    meta.cols.map(c => (c.name, c.isNum))
 
   // --------------------------------------------------------------
   // RLE ("SASYZCRL") page compression
@@ -545,8 +519,8 @@ object Sas {
         val shCount = u2(buf, base + bitOffset + 4, be)
         (0 until shCount).iterator.flatMap { i =>
           val pAt = base + bitOffset + 8 + i * ptrLen
-          val shOff = base + uint(buf, pAt, il, be).toInt
-          val shLen = uint(buf, pAt + il, il, be).toInt
+          val shOff = base + uN(buf, pAt, il, be).toInt
+          val shLen = uN(buf, pAt + il, il, be).toInt
           val comp = u1(buf, pAt + 2 * il)
           val ptyp = u1(buf, pAt + 2 * il + 1)
           def sig: Long = {
@@ -691,6 +665,14 @@ object Sas {
   def pageRowCount(buf: Array[Byte], meta: SasMeta): Long =
     pageSpan(buf, meta)._2 + dataSubheaders(buf, 0, meta).size
 
+  /** Parse-failure messages that mean "the head was too short", not
+    * "the file is broken" — [[PagedScan.driverMeta]] widens on these. */
+  private def headIncomplete(e: Exception): Boolean = {
+    val m = Option(e.getMessage).getOrElse("")
+    m.contains("subheaders missing") || m.contains("metadata mismatch") ||
+      m.contains("points past") || m.contains("no full page yet")
+  }
+
   /** Page-parallel scan of ONE large sas7bdat: `binaryFile` hands a
     * whole file to a single task, so a 100 GB sas7bdat would land on
     * one executor — here the driver reads a bounded HEAD for the
@@ -700,20 +682,12 @@ object Sas {
     * fixed-size and self-contained in BOTH supported layouts
     * (uncompressed stride rows; RLE per-row subheaders), which is what
     * makes the split sound. Row ids are DENSE 0..N−1 in file order,
-    * identical to [[readSas]]'s: a distributed metadata pass counts
+    * identical to [[read]]'s: a distributed metadata pass counts
     * each page's rows ([[pageRowCount]] — header-only preads for
     * uncompressed files, a pointer walk without decompression for
     * compressed ones) and prefix-sums the per-page bases. */
-  /** Parse-failure messages that mean "the head was too short", not
-    * "the file is broken" — [[PagedScan.driverMeta]] widens on these. */
-  private def headIncomplete(e: Exception): Boolean = {
-    val m = Option(e.getMessage).getOrElse("")
-    m.contains("subheaders missing") || m.contains("metadata mismatch") ||
-      m.contains("points past") || m.contains("no full page yet")
-  }
-
-  def readSasPaged(spark: SparkSession, path: String,
-                   partitions: Int = 0): DataFrame = {
+  def readPaged(spark: SparkSession, path: String,
+                partitions: Int): DataFrame = {
     val meta = PagedScan.driverMeta(spark, path,
         retryable = headIncomplete) { buf =>
       val hdr = parseHeader(buf)
@@ -747,11 +721,8 @@ object Sas {
     spark.sparkContext
       .parallelize(ranges, math.max(1, ranges.size))
       .map { case (start, n) =>
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(PagedScan.rebuild(hconf))
-        val in = fs.open(p)
         val arr = new Array[Long](n.toInt)
-        try {
+        PagedScan.open(hconf, path) { in =>
           var i = 0
           while (i < n) {
             val b = new Array[Byte](countWant)
@@ -759,97 +730,23 @@ object Sas {
             arr(i) = pageRowCount(b, meta)
             i += 1
           }
-        } finally in.close()
+        }
         (start, arr)
       }.collect().foreach { case (start, arr) =>
         System.arraycopy(arr, 0, counts, start.toInt, arr.length)
       }
     val pageBase = spark.sparkContext.broadcast(counts.scanLeft(0L)(_ + _))
-    PagedScan.scan(spark, path, cellSchema, meta.pageCount,
+    val cols = columns(meta)
+    PagedScan.scan(spark, path, Cells.schema, meta.pageCount,
       meta.headerLength.toLong, meta.pageSize.toLong, partitions) {
       (buf, startPage, nPages) =>
         (0L until nPages).iterator.flatMap { i =>
-          val pageIdx = startPage + i
           val page = java.util.Arrays.copyOfRange(buf,
             (i * meta.pageSize).toInt, ((i + 1) * meta.pageSize).toInt)
-          pageRows(page, meta).zipWithIndex.flatMap { case (vals, r) =>
-            val rowId = pageBase.value(pageIdx.toInt) + r
-            meta.cols.iterator.zip(vals.iterator).map { case (c, v) =>
-              if (c.isNum) Row(path, rowId, c.name, "num", null, v)
-              else Row(path, rowId, c.name, "str", v, null)
-            }
-          }
+          Cells.cells(path, cols, pageRows(page, meta),
+            pageBase.value((startPage + i).toInt))
         }
     }
-  }
-
-  // --------------------------------------------------------------
-  // Spark surface — the Pickle tall-cells + records convention
-  // --------------------------------------------------------------
-
-  // the shared statistical tall-cell layout — declared once
-  private val cellSchema = PagedScan.cellSchema
-
-  private def cells(file: String, bytes: Array[Byte]): Iterator[Row] = {
-    val meta = parseMeta(bytes)
-    rows(bytes, meta).zipWithIndex.flatMap { case (vals, r) =>
-      meta.cols.iterator.zip(vals.iterator).map { case (c, v) =>
-        if (c.isNum) Row(file, r.toLong, c.name, "num", null, v)
-        else Row(file, r.toLong, c.name, "str", v, null)
-      }
-    }
-  }
-
-  /** Read .sas7bdat file(s) (path, directory or glob) as tall cells —
-    * parsed per-partition off a binaryFile scan, like
-    * [[Pickle.readPickle]]. */
-  def readSas(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap(r =>
-      cells(r.getString(0), r.getAs[Array[Byte]](1)))
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** In-memory blobs through the same kernel — entries and tests
-    * synthesize fixtures without filesystem paths. */
-  def readSasBlobs(spark: SparkSession,
-                   blobs: Seq[(String, Array[Byte])]): DataFrame = {
-    require(blobs.nonEmpty, "readSasBlobs needs at least one blob")
-    val rdd = spark.sparkContext
-      .parallelize(blobs, math.min(blobs.size, 32))
-      .flatMap { case (name, bytes) => cells(name, bytes) }
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** [[readSasPaged]] over a directory/glob of large files: one
-    * within-file-parallel scan per file, unioned — both axes of
-    * parallelism at once (across files AND across each file's pages). */
-  def readSasPagedAll(spark: SparkSession, path: String,
-                      partitions: Int = 0): DataFrame =
-    PagedScan.unionPerFile(spark, path)(readSasPaged(spark, _, partitions))
-
-  /** Pivot tall cells into the wide record frame under a (name, isNum)
-    * column list — one groupBy(row) shuffle, max over the single
-    * matching cell (the [[Pickle.records]] null-safe convention). */
-  def records(cellsDf: DataFrame, cols: Seq[(String, Boolean)]): DataFrame = {
-    require(cols.nonEmpty, "records needs at least one column")
-    val aggs = cols.map { case (k, isNum) =>
-      val v = if (isNum) col("value_double") else col("value_str")
-      max(when(col("key") === k, v)).as(k)
-    }
-    cellsDf.groupBy(col("src_file"), col("row"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** The one-call wide read: columns from the FIRST file's own
-    * metadata (sas7bdat is self-describing — a bounded driver read of
-    * one file, the fitted-scalar pattern), every file then parsed
-    * distributed and pivoted. */
-  def readSasRecords(spark: SparkSession, path: String): DataFrame = {
-    val firstBytes = PagedScan.firstFileBytes(spark, path)
-    val meta = parseMeta(firstBytes)
-    records(readSas(spark, path), meta.cols.map(c => (c.name, c.isNum)))
   }
 
   // --------------------------------------------------------------

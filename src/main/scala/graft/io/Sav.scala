@@ -1,8 +1,6 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import scala.collection.mutable
 
@@ -36,14 +34,16 @@ import scala.collection.mutable
   *    spans ceil(w/252) segment variables of width 255 whose first 252
   *    bytes are real data — folded back to one value on read.
   *
-  * Layout mirrors [[Sas]]: the scan parses per-partition, [[readSav]]
-  * emits tall (row, key, typed value) cells, [[records]] pivots to the
+  * The Spark surface is [[TallCells]]' (the [[Sas]] shape): `read`
+  * emits tall (row, key, typed value) cells, `records` pivots to the
   * wide record frame under the FIRST file's own dictionary. Variable
   * names prefer the long-name map (info subtype 13) and fall back to
   * the trimmed 8-byte short names AS STORED (typically uppercase —
   * the case pyreadstat/SPSS keep).
   */
-object Sav {
+object Sav extends TallCells {
+
+  type Meta = SavMeta
 
   /** One variable: name, string width (0 = numeric), and the index of
     * its first 8-byte element inside a case. */
@@ -55,35 +55,8 @@ object Sav {
 
   private val DefaultSysmis = -java.lang.Double.MAX_VALUE
 
-  // --------------------------------------------------------------
-  // little-endian primitives over a cursor
-  // --------------------------------------------------------------
-
-  private final class Cur(val bytes: Array[Byte]) {
-    var pos = 0
-    def i4(): Int = {
-      require(pos + 4 <= bytes.length, "sav: truncated record")
-      var v = 0; var i = 3
-      while (i >= 0) { v = (v << 8) | (bytes(pos + i) & 0xff); i -= 1 }
-      pos += 4; v
-    }
-    def f8(): Double = {
-      require(pos + 8 <= bytes.length, "sav: truncated record")
-      var bits = 0L; var i = 7
-      while (i >= 0) { bits = (bits << 8) | (bytes(pos + i) & 0xffL); i -= 1 }
-      pos += 8
-      java.lang.Double.longBitsToDouble(bits)
-    }
-    def s(n: Int): Array[Byte] = {
-      require(pos + n <= bytes.length, "sav: truncated record")
-      val out = java.util.Arrays.copyOfRange(bytes, pos, pos + n)
-      pos += n; out
-    }
-    def skip(n: Int): Unit = {
-      require(pos + n <= bytes.length && n >= 0, "sav: truncated record")
-      pos += n
-    }
-  }
+  private def cursor(bytes: Array[Byte]) =
+    new Bytes.Cursor(bytes, "sav: truncated record")
 
   private def refuse(msg: String): Nothing =
     throw new IllegalArgumentException(
@@ -105,7 +78,7 @@ object Sav {
     val magic = ascii(java.util.Arrays.copyOfRange(bytes, 0, 4))
     require(magic == "$FL2" || magic == "$FL3",
       s"sav: bad magic '$magic' — not a system file")
-    val c = new Cur(bytes)
+    val c = cursor(bytes)
     c.skip(64) // magic + product name
     val layout = c.i4()
     if (layout != 2 && layout != 3) {
@@ -167,9 +140,7 @@ object Sav {
           val payload = c.s(size * count)
           subtype match {
             case 4 if size == 8 && count >= 1 =>
-              var bits = 0L; var i = 7
-              while (i >= 0) { bits = (bits << 8) | (payload(i) & 0xffL); i -= 1 }
-              sysmis = java.lang.Double.longBitsToDouble(bits)
+              sysmis = Bytes.f8(payload, 0)
             case 13 => // long variable names: SHORT=Long \t SHORT=Long
               longNames = ascii(payload).split('\t').iterator
                 .map(_.split("=", 2)).collect {
@@ -242,6 +213,9 @@ object Sav {
     SavMeta(caseSize, compression, nCases, bias, sysmis, vars.toSeq, c.pos)
   }
 
+  def columns(meta: SavMeta): Seq[(String, Boolean)] =
+    meta.vars.map(v => (v.name, v.width == 0))
+
   // --------------------------------------------------------------
   // data
   // --------------------------------------------------------------
@@ -254,34 +228,24 @@ object Sav {
     * i64 compressed_ofs; i32 uncompressed_size; i32 compressed_size}}.
     */
   private def inflateZsav(bytes: Array[Byte], meta: SavMeta): Array[Byte] = {
-    def i8(at: Int): Long = {
-      var v = 0L; var i = 7
-      while (i >= 0) { v = (v << 8) | (bytes(at + i) & 0xffL); i -= 1 }
-      v
-    }
-    def i4(at: Int): Int = {
-      var v = 0; var i = 3
-      while (i >= 0) { v = (v << 8) | (bytes(at + i) & 0xff); i -= 1 }
-      v
-    }
-    val zheaderOfs = i8(meta.dataAt)
-    val ztrailerOfs = i8(meta.dataAt + 8)
-    val ztrailerLen = i8(meta.dataAt + 16)
+    val zheaderOfs = Bytes.i8(bytes, meta.dataAt)
+    val ztrailerOfs = Bytes.i8(bytes, meta.dataAt + 8)
+    val ztrailerLen = Bytes.i8(bytes, meta.dataAt + 16)
     if (zheaderOfs != meta.dataAt.toLong)
       refuse(s"zsav zheader self-offset $zheaderOfs != ${meta.dataAt}")
     require(ztrailerOfs + ztrailerLen <= bytes.length,
       "sav: zsav trailer overruns the file")
     val t = ztrailerOfs.toInt
-    val nBlocks = i4(t + 20)
+    val nBlocks = Bytes.i4(bytes, t + 20)
     if (ztrailerLen != 24L + 24L * nBlocks)
       refuse(s"zsav trailer length $ztrailerLen != 24 + 24*$nBlocks")
     val out = new java.io.ByteArrayOutputStream()
     var b = 0
     while (b < nBlocks) {
       val d = t + 24 + 24 * b
-      val compressedOfs = i8(d + 8)
-      val uncompressedSize = i4(d + 16)
-      val compressedSize = i4(d + 20)
+      val compressedOfs = Bytes.i8(bytes, d + 8)
+      val uncompressedSize = Bytes.i4(bytes, d + 16)
+      val compressedSize = Bytes.i4(bytes, d + 20)
       require(compressedOfs + compressedSize <= bytes.length,
         s"sav: zsav block $b overruns the file")
       out.write(inflateOne(bytes, compressedOfs.toInt, compressedSize,
@@ -322,10 +286,7 @@ object Sav {
   private def decodeCase(els: Array[Array[Byte]],
                          meta: SavMeta): Seq[Any] = meta.vars.map { v =>
     if (v.width == 0) {
-      var bits = 0L; var i = 7
-      val e = els(v.elementAt)
-      while (i >= 0) { bits = (bits << 8) | (e(i) & 0xffL); i -= 1 }
-      val d = java.lang.Double.longBitsToDouble(bits)
+      val d = Bytes.f8(els(v.elementAt), 0)
       if (d == meta.sysmis || java.lang.Double.isNaN(d)) null
       else java.lang.Double.valueOf(d)
     } else {
@@ -380,7 +341,7 @@ object Sav {
       "sav: unknown case count (-1) is outside the supported subset")
     val els = new Array[Array[Byte]](meta.caseSize)
     val out = mutable.ArrayBuffer.empty[Seq[Any]]
-    val c = new Cur(bytes)
+    val c = cursor(bytes)
     c.pos = meta.dataAt
 
     def emit(): Unit = out += decodeCase(els, meta)
@@ -395,20 +356,7 @@ object Sav {
     } else {
       // bytecode: 8-command blocks; raw data follows each block
       val Spaces = "        ".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      val sysmisBytes = {
-        val b = new Array[Byte](8)
-        val bits = java.lang.Double.doubleToRawLongBits(meta.sysmis)
-        var i = 0
-        while (i < 8) { b(i) = ((bits >> (8 * i)) & 0xff).toByte; i += 1 }
-        b
-      }
-      def biased(code: Int): Array[Byte] = {
-        val b = new Array[Byte](8)
-        val bits = java.lang.Double.doubleToRawLongBits(code - meta.bias)
-        var i = 0
-        while (i < 8) { b(i) = ((bits >> (8 * i)) & 0xff).toByte; i += 1 }
-        b
-      }
+      val sysmisBytes = Bytes.f8Bytes(meta.sysmis)
       var e = 0
       var eof = false
       while (!eof && out.length < meta.nCases) {
@@ -425,7 +373,9 @@ object Sav {
             case 253 => pending += (e + filled); filled += 1
             case 254 => slots += ((e + filled, Spaces)); filled += 1
             case 255 => slots += ((e + filled, sysmisBytes)); filled += 1
-            case code => slots += ((e + filled, biased(code))); filled += 1
+            case code =>
+              slots += ((e + filled, Bytes.f8Bytes(code - meta.bias)))
+              filled += 1
           }
           i += 1
         }
@@ -444,81 +394,28 @@ object Sav {
     out.iterator
   }
 
-  // --------------------------------------------------------------
-  // Spark surface — the Sas tall-cells + records convention
-  // --------------------------------------------------------------
-
-  // the shared statistical tall-cell layout — declared once
-  private val cellSchema = PagedScan.cellSchema
-
-  private def cells(file: String, bytes: Array[Byte]): Iterator[Row] = {
-    val meta = parseMeta(bytes)
-    rows(bytes, meta).zipWithIndex.flatMap { case (vals, r) =>
-      meta.vars.iterator.zip(vals.iterator).map { case (v, x) =>
-        if (v.width == 0) Row(file, r.toLong, v.name, "num", null, x)
-        else Row(file, r.toLong, v.name, "str", x, null)
-      }
-    }
-  }
-
-  /** Read .sav file(s) (path, directory or glob) as tall cells —
-    * parsed per-partition off a binaryFile scan. */
-  def readSav(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap(r =>
-      cells(r.getString(0), r.getAs[Array[Byte]](1)))
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** In-memory blobs through the same kernel. */
-  def readSavBlobs(spark: SparkSession,
-                   blobs: Seq[(String, Array[Byte])]): DataFrame = {
-    require(blobs.nonEmpty, "readSavBlobs needs at least one blob")
-    val rdd = spark.sparkContext
-      .parallelize(blobs, math.min(blobs.size, 32))
-      .flatMap { case (name, bytes) => cells(name, bytes) }
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** Pivot tall cells into the wide record frame under a (name, isNum)
-    * column list — one groupBy(row) shuffle ([[Sas.records]]). */
-  def records(cellsDf: DataFrame, cols: Seq[(String, Boolean)]): DataFrame =
-    Sas.records(cellsDf, cols)
-
-  /** Range-parallel scan of ONE large UNCOMPRESSED .sav: cases are a
+  /** Range-parallel scan of ONE large .sav: uncompressed cases are a
     * fixed stride (caseSize × 8 bytes), so after a bounded driver read
-    * of the dictionary each task preads and decodes its own case
-    * range ([[Sas.readSasPaged]]'s story; bytecode compression cannot
-    * split — it refuses loudly toward the whole-file reader). Row ids
-    * are the true case indexes (dense, unlike the sas7bdat packing). */
-  def readSavPaged(spark: SparkSession, path: String,
-                   partitions: Int = 0): DataFrame = {
+    * of the dictionary each task preads and decodes its own case range
+    * ([[Sas.readPaged]]'s story); a .zsav goes through the ztrailer
+    * re-sync ([[zsavPaged]]); bytecode compression cannot split — it
+    * refuses loudly toward the whole-file reader. Row ids are the true
+    * case indexes. */
+  def readPaged(spark: SparkSession, path: String,
+                partitions: Int): DataFrame = {
     val meta = PagedScan.driverMeta(spark, path)(parseMeta)
-    if (meta.compression == 2) // zsav: the ztrailer re-sync scan
-      return readZsavPaged(spark, path, partitions)
+    if (meta.compression == 2) return zsavPaged(spark, path, meta, partitions)
     if (meta.compression != 0)
       refuse("the paged scan needs uncompressed data (a bytecode stream " +
-        "has no fixed stride) — use readSav/readSavRecords instead")
-    val rowLen = meta.caseSize * 8L
-    PagedScan.scan(spark, path, cellSchema, meta.nCases.toLong,
-      meta.dataAt.toLong, rowLen, partitions) { (buf, startRow, nRows) =>
-      val m = meta.copy(nCases = nRows.toInt, dataAt = 0)
-      rows(buf, m).zipWithIndex.flatMap { case (vals, r) =>
-        meta.vars.iterator.zip(vals.iterator).map { case (v, x) =>
-          if (v.width == 0)
-            Row(path, startRow + r, v.name, "num", null, x)
-          else Row(path, startRow + r, v.name, "str", x, null)
-        }
-      }
+        "has no fixed stride) — use Sav.read/Sav.readRecords instead")
+    val cols = columns(meta)
+    PagedScan.scan(spark, path, Cells.schema, meta.nCases.toLong,
+      meta.dataAt.toLong, meta.caseSize * 8L, partitions) {
+      (buf, startRow, nRows) =>
+        Cells.cells(path, cols,
+          rows(buf, meta.copy(nCases = nRows.toInt, dataAt = 0)), startRow)
     }
   }
-
-  /** [[readSavPaged]] over a directory/glob of large UNCOMPRESSED
-    * files — both parallelism axes ([[Sas.readSasPagedAll]]'s shape). */
-  def readSavPagedAll(spark: SparkSession, path: String,
-                      partitions: Int = 0): DataFrame =
-    PagedScan.unionPerFile(spark, path)(readSavPaged(spark, _, partitions))
 
   // --------------------------------------------------------------
   // zsav block-parallel scan — the ztrailer re-sync
@@ -531,7 +428,7 @@ object Sav {
   /** Walk ONE inflated block's bytecode STRUCTURE given `rIn` raw
     * units still pending at entry: (rOut, elementsClaimed, eofSeen).
     * Only command bytes are inspected — raw runs are skipped by
-    * offset — so the 9-way speculative walk in [[readZsavPaged]]
+    * offset — so the 9-way speculative walk in [[zsavPaged]]
     * costs pointer arithmetic, not decoding. Element indexes are
     * assigned at COMMAND time (matching [[rows]]' `e + filled`), so
     * `elementsClaimed` counts commands, wherever their raw data
@@ -575,14 +472,7 @@ object Sav {
     val out = mutable.ArrayBuffer.empty[(Long, Seq[Any])]
     if (caseFrom >= caseTo) return out.iterator
     val Spaces = "        ".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    def f8(d: Double): Array[Byte] = {
-      val b = new Array[Byte](8)
-      val bits = java.lang.Double.doubleToRawLongBits(d)
-      var i = 0
-      while (i < 8) { b(i) = ((bits >> (8 * i)) & 0xff).toByte; i += 1 }
-      b
-    }
-    val sysmisBytes = f8(meta.sysmis)
+    val sysmisBytes = Bytes.f8Bytes(meta.sysmis)
     val els = new Array[Array[Byte]](meta.caseSize)
     // unit cursor over the lazily-concatenated blocks
     var cur: Array[Byte] = Array.emptyByteArray
@@ -616,7 +506,9 @@ object Sav {
           case 253 => pending += (e + filled); filled += 1
           case 254 => slots += ((e + filled, Spaces)); filled += 1
           case 255 => slots += ((e + filled, sysmisBytes)); filled += 1
-          case code => slots += ((e + filled, f8(code - meta.bias))); filled += 1
+          case code =>
+            slots += ((e + filled, Bytes.f8Bytes(code - meta.bias)))
+            filled += 1
         }
         i += 1
       }
@@ -656,50 +548,36 @@ object Sav {
     * non-final block's uncompressed size to be a multiple of 8 —
     * PSPP's 0x3ff000 convention — and refuses loudly otherwise.
     * Row ids are true case indexes, dense 0..N−1. */
-  def readZsavPaged(spark: SparkSession, path: String,
-                    partitions: Int = 0): DataFrame = {
-    val meta = PagedScan.driverMeta(spark, path)(parseMeta)
-    if (meta.compression != 2)
-      refuse("readZsavPaged needs a $FL3 zlib file — use readSavPaged " +
-        "(uncompressed) or readSav (bytecode)")
+  private def zsavPaged(spark: SparkSession, path: String, meta: SavMeta,
+                        partitions: Int): DataFrame = {
     require(meta.nCases >= 0,
       "sav: unknown case count (-1) is outside the supported subset")
     val cs = meta.caseSize.toLong
-    def i8(b: Array[Byte], at: Int): Long = {
-      var v = 0L; var i = 7
-      while (i >= 0) { v = (v << 8) | (b(at + i) & 0xffL); i -= 1 }
-      v
-    }
-    def i4(b: Array[Byte], at: Int): Int = {
-      var v = 0; var i = 3
-      while (i >= 0) { v = (v << 8) | (b(at + i) & 0xff); i -= 1 }
-      v
-    }
     // zheader + ztrailer: two bounded driver preads (24 B; 24 B/block)
     val zh = PagedScan.readTail(spark, path, meta.dataAt.toLong, 24)
-    if (i8(zh, 0) != meta.dataAt.toLong)
-      refuse(s"zsav zheader self-offset ${i8(zh, 0)} != ${meta.dataAt}")
-    val ztrailerOfs = i8(zh, 8)
-    val ztrailerLen = i8(zh, 16)
+    if (Bytes.i8(zh, 0) != meta.dataAt.toLong)
+      refuse(s"zsav zheader self-offset ${Bytes.i8(zh, 0)} != ${meta.dataAt}")
+    val ztrailerOfs = Bytes.i8(zh, 8)
+    val ztrailerLen = Bytes.i8(zh, 16)
     require(ztrailerLen >= 24 && ztrailerLen <= 24L + 24L * (1 << 22),
       s"sav: $ztrailerLen-byte ztrailer — past the driver pread bound")
     val tr = PagedScan.readTail(spark, path, ztrailerOfs, ztrailerLen.toInt)
-    val nBlocks = i4(tr, 20)
+    val nBlocks = Bytes.i4(tr, 20)
     if (ztrailerLen != 24L + 24L * nBlocks)
       refuse(s"zsav trailer length $ztrailerLen != 24 + 24*$nBlocks")
     val blocks: IndexedSeq[ZBlock] = (0 until nBlocks).map { b =>
       val d = 24 + 24 * b
-      ZBlock(i8(tr, d + 8), i4(tr, d + 20), i4(tr, d + 16))
+      ZBlock(Bytes.i8(tr, d + 8), Bytes.i4(tr, d + 20), Bytes.i4(tr, d + 16))
     }
     blocks.dropRight(1).zipWithIndex.foreach { case (b, bi) =>
       if (b.usize % 8 != 0)
         refuse(s"zsav block $bi uncompressed size ${b.usize} is not a " +
           "multiple of 8 — the bytecode re-sync needs unit-aligned " +
-          "blocks (PSPP writes 0x3ff000 spans); use readSav")
+          "blocks (PSPP writes 0x3ff000 spans); use Sav.read")
     }
     if (meta.nCases == 0 || blocks.isEmpty)
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], cellSchema)
+        spark.sparkContext.emptyRDD[Row], Cells.schema)
     val nParts = math.max(1, if (partitions > 0) partitions
       else spark.sparkContext.defaultParallelism)
     val hconf = PagedScan.confMap(spark)
@@ -735,14 +613,10 @@ object Sav {
     val tables: Array[Array[(Int, Long, Boolean)]] = spark.sparkContext
       .parallelize(ranges, math.max(1, ranges.size))
       .flatMap { case (b0, b1) =>
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(PagedScan.rebuild(hconf))
-        val in = fs.open(p)
-        try {
-          inflateRange(in, b0, b1).zipWithIndex.map { case (ubuf, k) =>
+        PagedScan.open(hconf, path)(inflateRange(_, b0, b1)).zipWithIndex
+          .map { case (ubuf, k) =>
             (b0 + k, Array.tabulate(9)(r => walkBlock(ubuf, r)))
           }
-        } finally in.close()
       }.collect().sortBy(_._1).map(_._2)
     // ---- compose on the driver: 9 longs per block, ztrailer-bounded
     val eStart = new Array[Long](blocks.size)
@@ -770,7 +644,7 @@ object Sav {
     }
     val bcState = spark.sparkContext.broadcast((eStart, rIn, caseFrom))
     // ---- pass 2: decode, each task from its exact entry state
-    val vars = meta.vars.map(v => (v.name, v.width == 0))
+    val cols = columns(meta)
     val bcMeta = spark.sparkContext.broadcast(meta)
     val rdd = spark.sparkContext
       .parallelize(ranges, math.max(1, ranges.size))
@@ -779,42 +653,22 @@ object Sav {
         val from = cF(b0); val to = cF(b1)
         if (from >= to) Iterator.empty
         else {
-          val m = bcMeta.value
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(PagedScan.rebuild(hconf))
           // the range inflates off ONE pread; straddle continuations
           // past b1 pull one block per short-lived pread (rare — only
           // the last owned case can need them)
-          val in = fs.open(p)
-          val rangeBufs = try inflateRange(in, b0, b1) finally in.close()
+          val rangeBufs = PagedScan.open(hconf, path)(inflateRange(_, b0, b1))
           val zb = bcBlocks.value
           val tail = (b1 until zb.size).iterator.map { bj =>
-            val in2 = fs.open(p)
-            try {
-              val cbuf = new Array[Byte](zb(bj).csize)
-              in2.readFully(zb(bj).cofs, cbuf)
-              inflateOne(cbuf, 0, zb(bj).csize, zb(bj).usize, bj)
-            } finally in2.close()
+            val cbuf = new Array[Byte](zb(bj).csize)
+            PagedScan.open(hconf, path)(_.readFully(zb(bj).cofs, cbuf))
+            inflateOne(cbuf, 0, zb(bj).csize, zb(bj).usize, bj)
           }
-          decodeCases(m, eS(b0), rI(b0), from, to,
+          decodeCases(bcMeta.value, eS(b0), rI(b0), from, to,
               rangeBufs.iterator ++ tail)
-            .flatMap { case (rowId, vals) =>
-              vars.iterator.zip(vals.iterator).map { case ((name, isNum), x) =>
-                if (isNum) Row(path, rowId, name, "num", null, x)
-                else Row(path, rowId, name, "str", x, null)
-              }
-            }
+            .flatMap { case (rowId, vals) => Cells.row(path, rowId, cols, vals) }
         }
       }
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** The one-call wide read: dictionary from the FIRST file (bounded
-    * driver read, the fitted-scalar pattern), then distributed parse. */
-  def readSavRecords(spark: SparkSession, path: String): DataFrame = {
-    val firstBytes = PagedScan.firstFileBytes(spark, path)
-    val meta = parseMeta(firstBytes)
-    records(readSav(spark, path), meta.vars.map(v => (v.name, v.width == 0)))
+    spark.createDataFrame(rdd, Cells.schema)
   }
 
   // --------------------------------------------------------------
@@ -938,11 +792,7 @@ object Sav {
             case other => throw new IllegalArgumentException(
               s"numeric column '${cols(i)._1}' got ${other.getClass.getName}")
           }
-          val b = new Array[Byte](8)
-          val bits = java.lang.Double.doubleToRawLongBits(d)
-          var k = 0
-          while (k < 8) { b(k) = ((bits >> (8 * k)) & 0xff).toByte; k += 1 }
-          els += b
+          els += Bytes.f8Bytes(d)
         } else {
           val vb = r(i) match {
             case null => Array.emptyByteArray
@@ -992,9 +842,7 @@ object Sav {
       data.foreach { r =>
         elements(r).zipWithIndex.foreach { case (el, at) =>
           if (numericAt(at)) {
-            var bits = 0L; var k = 7
-            while (k >= 0) { bits = (bits << 8) | (el(k) & 0xffL); k -= 1 }
-            val d = java.lang.Double.longBitsToDouble(bits)
+            val d = Bytes.f8(el, 0)
             if (d == sysmis) cmds += 255
             else if (d == math.rint(d) && d + 100.0 >= 1 && d + 100.0 <= 251)
               cmds += (d + 100.0).toInt

@@ -1,10 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Pure-JVM SAS Transport (.xpt, V5) ingest over a `binaryFile` scan —
   * completes `read_data`'s pandas `read_sas` parity (which dispatches
@@ -29,7 +25,9 @@ import scala.collection.mutable
   * files with 140-byte NAMESTRs; CPORT archives, V8 136/135-byte
   * NAMESTR variants and multi-member libraries refuse.
   */
-object Xpt {
+object Xpt extends TallCells {
+
+  type Meta = XptMeta
 
   final case class XptVar(name: String, width: Int, isNum: Boolean,
                           pos: Int)
@@ -61,9 +59,7 @@ object Xpt {
     * (., ._, .A–.Z: a letter/dot first byte over an all-zero tail). */
   private[graft] def ibmToDouble(b: Array[Byte], at: Int): java.lang.Double = {
     val b0 = b(at) & 0xff
-    var mant = 0L
-    var i = 1
-    while (i < 8) { mant = (mant << 8) | (b(at + i) & 0xffL); i += 1 }
+    val mant = Bytes.uN(b, at + 1, 7, be = true)
     if (mant == 0L) {
       if (b0 == 0) java.lang.Double.valueOf(0.0)
       else if (b0 == '.' || b0 == '_' ||
@@ -133,20 +129,14 @@ object Xpt {
       refuse(s"OBS header not found after $k NAMESTRs (multi-member " +
         "libraries are not supported)")
 
-    def be2(at: Int): Int =
-      (((bytes(at) & 0xff) << 8) | (bytes(at + 1) & 0xff)).toShort.toInt
-    def be4(at: Int): Int =
-      ((bytes(at) & 0xff) << 24) | ((bytes(at + 1) & 0xff) << 16) |
-        ((bytes(at + 2) & 0xff) << 8) | (bytes(at + 3) & 0xff)
-
     val vars = (0 until k).map { i =>
       val at = 8 * 80 + 140 * i
-      val ntype = be2(at)
+      val ntype = Bytes.i2(bytes, at, be = true)
       require(ntype == 1 || ntype == 2, s"xpt: variable $i has type $ntype")
-      val width = be2(at + 4)
+      val width = Bytes.i2(bytes, at + 4, be = true)
       val name = new String(bytes, at + 8, 8,
         java.nio.charset.StandardCharsets.ISO_8859_1).trim
-      val pos = be4(at + 84) // npos: after nfl/nfd/nfj, nfill, niform,
+      val pos = Bytes.i4(bytes, at + 84, be = true) // npos: after nfl/nfd/nfj, nfill, niform,
                              // nifl/nifd (TS-140 NAMESTR layout)
       if (ntype == 1 && (width < 2 || width > 8))
         refuse(s"numeric '$name' is $width bytes (2-8 supported)")
@@ -156,11 +146,13 @@ object Xpt {
     XptMeta(vars, rowLength, (obsAt + 1) * 80)
   }
 
+  def columns(meta: XptMeta): Seq[(String, Boolean)] =
+    meta.vars.map(v => (v.name, v.isNum))
+
   /** Decode every observation. Trailing card padding is recognized as
     * all-blank rows at the tail (numeric fields of a REAL row are IBM
     * bytes, never 0x20-filled). */
-  def rows(bytes: Array[Byte], meta: XptMeta,
-           trimBlankTail: Boolean = true): Iterator[Seq[Any]] = {
+  def rows(bytes: Array[Byte], meta: XptMeta): Iterator[Seq[Any]] = {
     val dataLen = bytes.length - meta.dataAt
     require(dataLen >= 0, "xpt: data section missing")
     var n = dataLen / meta.rowLength
@@ -168,12 +160,16 @@ object Xpt {
       val base = meta.dataAt + r * meta.rowLength
       (0 until meta.rowLength).forall(j => bytes((base + j).toInt) == ' ')
     }
-    while (trimBlankTail && n > 0 && allBlank(n - 1)) n -= 1
-    val out = mutable.ArrayBuffer.empty[Seq[Any]]
-    var r = 0L
-    while (r < n) {
+    while (n > 0 && allBlank(n - 1)) n -= 1
+    rowsOf(bytes, meta, n)
+  }
+
+  /** Exactly `n` observations from `meta.dataAt`. */
+  private def rowsOf(bytes: Array[Byte], meta: XptMeta,
+                     n: Long): Iterator[Seq[Any]] =
+    (0L until n).iterator.map { r =>
       val base = (meta.dataAt + r * meta.rowLength).toInt
-      out += meta.vars.map { v =>
+      meta.vars.map { v =>
         val at = base + v.pos
         if (v.isNum) {
           if (v.width == 8) ibmToDouble(bytes, at)
@@ -191,50 +187,7 @@ object Xpt {
             java.nio.charset.StandardCharsets.UTF_8)
         }
       }
-      r += 1
     }
-    out.iterator
-  }
-
-  // --------------------------------------------------------------
-  // Spark surface — the Sas tall-cells + records convention
-  // --------------------------------------------------------------
-
-  // the shared statistical tall-cell layout — declared once
-  private val cellSchema = PagedScan.cellSchema
-
-  private def cells(file: String, bytes: Array[Byte]): Iterator[Row] = {
-    val meta = parseMeta(bytes)
-    rows(bytes, meta).zipWithIndex.flatMap { case (vals, r) =>
-      meta.vars.iterator.zip(vals.iterator).map { case (v, x) =>
-        if (v.isNum) Row(file, r.toLong, v.name, "num", null, x)
-        else Row(file, r.toLong, v.name, "str", x, null)
-      }
-    }
-  }
-
-  /** Read .xpt file(s) (path, directory or glob) as tall cells. */
-  def readXpt(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val rdd = bin.rdd.flatMap(r =>
-      cells(r.getString(0), r.getAs[Array[Byte]](1)))
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** In-memory blobs through the same kernel. */
-  def readXptBlobs(spark: SparkSession,
-                   blobs: Seq[(String, Array[Byte])]): DataFrame = {
-    require(blobs.nonEmpty, "readXptBlobs needs at least one blob")
-    val rdd = spark.sparkContext
-      .parallelize(blobs, math.min(blobs.size, 32))
-      .flatMap { case (name, bytes) => cells(name, bytes) }
-    spark.createDataFrame(rdd, cellSchema)
-  }
-
-  /** Wide pivot — one groupBy(row) shuffle ([[Sas.records]]). */
-  def records(cellsDf: DataFrame, cols: Seq[(String, Boolean)]): DataFrame =
-    Sas.records(cellsDf, cols)
 
   /** Range-parallel scan of ONE large .xpt: observations are a fixed
     * stride after the OBS header, so after a bounded driver read of
@@ -242,8 +195,8 @@ object Xpt {
     * blank-card pad is trimmed ON THE DRIVER (tiny backward preads),
     * so chunk decodes never guess — interior all-blank rows survive
     * exactly as the whole-file reader keeps them. */
-  def readXptPaged(spark: SparkSession, path: String,
-                   partitions: Int = 0): DataFrame = {
+  def readPaged(spark: SparkSession, path: String,
+                partitions: Int): DataFrame = {
     val meta = PagedScan.driverMeta(spark, path, align = 80)(parseMeta)
     val fileLen = PagedScan.fileLength(spark, path)
     require(fileLen % 80 == 0, s"xpt: $fileLen bytes is not card-aligned")
@@ -256,30 +209,12 @@ object Xpt {
       val row = PagedScan.readTail(spark, path, base, meta.rowLength)
       if (row.forall(_ == ' '.toByte)) n -= 1 else trimming = false
     }
-    PagedScan.scan(spark, path, cellSchema, n, meta.dataAt,
+    val cols = columns(meta)
+    PagedScan.scan(spark, path, Cells.schema, n, meta.dataAt,
       meta.rowLength.toLong, partitions) { (buf, startRow, nRows) =>
-      val m = meta.copy(dataAt = 0)
-      rows(buf, m, trimBlankTail = false).zipWithIndex.flatMap {
-        case (vals, r) =>
-          meta.vars.iterator.zip(vals.iterator).map { case (v, x) =>
-            if (v.isNum) Row(path, startRow + r, v.name, "num", null, x)
-            else Row(path, startRow + r, v.name, "str", x, null)
-          }
-      }
+      Cells.cells(path, cols, rowsOf(buf, meta.copy(dataAt = 0), nRows),
+        startRow)
     }
-  }
-
-  /** [[readXptPaged]] over a directory/glob of large files — both
-    * parallelism axes ([[Sas.readSasPagedAll]]'s shape). */
-  def readXptPagedAll(spark: SparkSession, path: String,
-                      partitions: Int = 0): DataFrame =
-    PagedScan.unionPerFile(spark, path)(readXptPaged(spark, _, partitions))
-
-  /** The one-call wide read: variables from the FIRST file. */
-  def readXptRecords(spark: SparkSession, path: String): DataFrame = {
-    val firstBytes = PagedScan.firstFileBytes(spark, path)
-    val meta = parseMeta(firstBytes)
-    records(readXpt(spark, path), meta.vars.map(v => (v.name, v.isNum)))
   }
 
   // --------------------------------------------------------------

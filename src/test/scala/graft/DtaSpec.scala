@@ -31,7 +31,7 @@ class DtaSpec extends SparkSpec {
     }
 
   private def check(file: String): Unit = {
-    val wide = Dta.readDtaRecords(spark, s"$dir/$file")
+    val wide = Dta.readRecords(spark, s"$dir/$file")
       .orderBy("row").select($"b", $"i", $"l", $"f", $"d", $"s")
       .as[(Option[Double], Option[Double], Option[Double], Option[Double],
         Option[Double], Option[String])].collect()
@@ -51,7 +51,7 @@ class DtaSpec extends SparkSpec {
   }
 
   test("tall cells carry per-column types; every missing class is null") {
-    val tall = Dta.readDta(spark, s"$dir/fixture_118.dta")
+    val tall = Dta.read(spark, s"$dir/fixture_118.dta")
     assert(tall.count() === 150L)
     val types = tall.select("key", "vtype").distinct()
       .as[(String, String)].collect().toMap
@@ -72,7 +72,7 @@ class DtaSpec extends SparkSpec {
     }
     val blob = Dta.dumps(cols, data)
     val wide = Dta.records(
-        Dta.readDtaBlobs(spark, Seq(("t.dta", blob))), cols)
+        Dta.readBlobs(spark, Seq(("t.dta", blob))), cols)
       .orderBy("row").select($"k", $"txt", $"v")
       .as[(Double, Option[String], Option[Double])].collect()
     assert(wide.length === 200)
@@ -101,12 +101,12 @@ class DtaSpec extends SparkSpec {
         assert(v === (if (i % 7 == 0) None else Some(i * 1.25 - 10.0)))
       }
     }
-    check(Dta.records(Dta.readDtaBlobs(spark, Seq(("t.dta", blob))), cols)
+    check(Dta.records(Dta.readBlobs(spark, Seq(("t.dta", blob))), cols)
       .orderBy("row").select($"k", $"txt", $"v")
       .as[(Double, Option[String], Option[Double])].collect().toSeq)
     val tmp = java.nio.file.Files.createTempFile("graft_dta113_", ".dta")
     java.nio.file.Files.write(tmp, blob)
-    check(Dta.records(Dta.readDtaPaged(spark, tmp.toString, partitions = 4),
+    check(Dta.records(Dta.readPaged(spark, tmp.toString, partitions = 4),
         cols)
       .orderBy("row").select($"k", $"txt", $"v")
       .as[(Double, Option[String], Option[Double])].collect().toSeq)
@@ -125,7 +125,7 @@ class DtaSpec extends SparkSpec {
   test("paged reader matches whole-file on classic and tagged releases") {
     Seq("fixture_114.dta", "fixture_118.dta").foreach { f =>
       val paged = Dta.records(
-          Dta.readDtaPaged(spark, s"$dir/$f", partitions = 4),
+          Dta.readPaged(spark, s"$dir/$f", partitions = 4),
           Seq(("b", true), ("i", true), ("l", true), ("f", true),
             ("d", true), ("s", false)))
         .orderBy("row").select($"b", $"i", $"l", $"f", $"d", $"s")
@@ -144,7 +144,7 @@ class DtaSpec extends SparkSpec {
     for (f <- Seq("fixture_strl.dta", "fixture_strl_117.dta");
          inlineBytes <- Seq(64L << 20, 0L)) {
       val paged = Dta.records(
-          Dta.readDtaPaged(spark, s"$dir/$f", partitions = 4,
+          Dta.readPaged(spark, s"$dir/$f", partitions = 4,
             gsoInlineBytes = inlineBytes),
           Seq(("k", true), ("s", false), ("w", false)))
         .orderBy("row").select($"k", $"s", $"w")
@@ -168,7 +168,7 @@ class DtaSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempFile("graft_strl_", ".dta")
     java.nio.file.Files.write(tmp, Dta.dumps(cols, data, strl = true))
     Seq(64L << 20, 0L).foreach { inlineBytes =>
-      val cells = Dta.readDtaPaged(spark, tmp.toString, partitions = 6,
+      val cells = Dta.readPaged(spark, tmp.toString, partitions = 6,
         gsoInlineBytes = inlineBytes)
       // the post-join plan may AQE-coalesce tiny data to 1 partition;
       // the range-split assertion belongs to the direct scan path
@@ -197,7 +197,7 @@ class DtaSpec extends SparkSpec {
     val blob = Dta.dumpsTyped(cols, data)
     assert(Dta.dtaTypedKinds(blob) ===
       Seq(("id", 'n'), ("tag", 's'), ("payload", 'y')))
-    val back = Dta.readDtaTypedBlobs(spark, Seq(("t.dta", blob)))
+    val back = Dta.readTypedBlobs(spark, Seq(("t.dta", blob)))
       .orderBy("row").select($"id", $"tag", $"payload")
       .as[(Double, Option[String], Option[Array[Byte]])].collect()
     assert(back.length === 200)
@@ -210,14 +210,14 @@ class DtaSpec extends SparkSpec {
     }
     // the tall-cell path refuses the SAME bytes toward the typed read
     val e = intercept[Exception] {
-      Dta.readDtaBlobs(spark, Seq(("t.dta", blob))).collect()
+      Dta.readBlobs(spark, Seq(("t.dta", blob))).collect()
     }
-    assert(e.getMessage.contains("readDtaTyped"))
+    assert(e.getMessage.contains("Dta.readTyped"))
     // a pure-text strL file reads typed too (all strings)
     val tcols = Seq(("id", true), ("txt", false))
     val tblob = Dta.dumps(tcols,
       (0 until 30).map(i => Seq[Any](i.toDouble, s"v$i")), strl = true)
-    val t = Dta.readDtaTypedBlobs(spark, Seq(("x.dta", tblob)))
+    val t = Dta.readTypedBlobs(spark, Seq(("x.dta", tblob)))
       .orderBy("row").select($"id", $"txt")
       .as[(Double, String)].collect()
     t.zipWithIndex.foreach { case ((id, txt), i) =>
@@ -244,7 +244,7 @@ class DtaSpec extends SparkSpec {
     Seq(64L << 20, 0L).foreach { bound =>
       // every strL column lands as BinaryType on the paged typed scan
       // (classification needs a full cell walk); text decodes via SQL
-      val paged = Dta.readDtaTypedPaged(spark, tmp.toString,
+      val paged = Dta.readTypedPaged(spark, tmp.toString,
           partitions = 5, gsoInlineBytes = bound)
         .orderBy("row")
         .select($"row", $"id", decode($"tag", "UTF-8").as("tag"),
@@ -271,7 +271,7 @@ class DtaSpec extends SparkSpec {
       Dta.dumpsTyped(cols, data.take(150)))
     java.nio.file.Files.write(dir2.resolve("shard_b.dta"),
       Dta.dumpsTyped(cols, data.drop(150)))
-    val all = Dta.readDtaTypedPagedAll(spark, dir2.toString,
+    val all = Dta.readTypedPagedAll(spark, dir2.toString,
         partitions = 3, gsoInlineBytes = 0L)
       .orderBy("src_file", "row")
       .select($"src_file", $"row", $"id", $"payload")
@@ -311,7 +311,7 @@ class DtaSpec extends SparkSpec {
     assert(gsoCount === 9, s"expected 9 deduped GSO entries, got $gsoCount")
     assert(Dta.dtaTypedKinds(blob) === Seq(("id", 'n'), ("b1", 'y'),
       ("b2", 'y'), ("t1", 's'), ("t2", 's')))
-    val back = Dta.readDtaTypedBlobs(spark, Seq(("t.dta", blob)))
+    val back = Dta.readTypedBlobs(spark, Seq(("t.dta", blob)))
       .orderBy("row")
       .select($"id", $"b1", $"b2", $"t1", $"t2")
       .as[(Double, Array[Byte], Array[Byte], String, String)].collect()
@@ -360,7 +360,7 @@ class DtaSpec extends SparkSpec {
     assert(samples.size >= 10)
     samples.foreach { case (i, rows) =>
       val blob = Dta.dumpsTyped(cols, rows)
-      val back = Dta.readDtaTypedBlobs(spark, Seq((s"p$i.dta", blob)))
+      val back = Dta.readTypedBlobs(spark, Seq((s"p$i.dta", blob)))
         .orderBy("row").select($"a", $"b", $"c", $"d")
         .as[(Option[Double], Option[String], Option[Array[Byte]],
           Option[Array[Byte]])].collect()
@@ -410,7 +410,7 @@ class DtaSpec extends SparkSpec {
     // tools/make_dta_fixture.py STRL_ROWS: k numeric, s strL with
     // empties (-> (0,0) ref -> null), long and short payloads
     Seq("fixture_strl.dta", "fixture_strl_117.dta").foreach { f =>
-      val wide = Dta.readDtaRecords(spark, s"$dir/$f")
+      val wide = Dta.readRecords(spark, s"$dir/$f")
         .orderBy("row").select($"k", $"s", $"w")
         .as[(Double, Option[String], String)].collect()
       assert(wide.length === 24, f)
@@ -433,7 +433,7 @@ class DtaSpec extends SparkSpec {
     }
     val blob = Dta.dumps(cols, data, strl = true)
     val wide = Dta.records(
-        Dta.readDtaBlobs(spark, Seq(("t.dta", blob))), cols)
+        Dta.readBlobs(spark, Seq(("t.dta", blob))), cols)
       .orderBy("row").select($"id", $"txt", $"note")
       .as[(Double, Option[String], String)].collect()
     assert(wide.length === n)
@@ -446,7 +446,7 @@ class DtaSpec extends SparkSpec {
     val big = Seq(Seq[Any](1.0, "z" * 5000, "n"))
     val wideBlob = Dta.dumps(cols, big, strl = true)
     val back = Dta.records(
-        Dta.readDtaBlobs(spark, Seq(("big.dta", wideBlob))), cols)
+        Dta.readBlobs(spark, Seq(("big.dta", wideBlob))), cols)
       .select($"txt").as[String].head()
     assert(back === "z" * 5000)
     intercept[IllegalArgumentException] { Dta.dumps(cols, big) } // str# cap

@@ -32,7 +32,7 @@ class FeatherSpec extends SparkSpec {
     }
 
   private def check(file: String): Unit = {
-    val wide = Feather.readFeatherRecords(spark, s"$dir/$file")
+    val wide = Feather.readRecords(spark, s"$dir/$file")
       .orderBy("row")
       .select($"i32", $"f64", $"b", $"s", $"d")
       .as[(Option[Double], Option[Double], Option[Double], Option[String],
@@ -52,7 +52,7 @@ class FeatherSpec extends SparkSpec {
   }
 
   test("every int width and f32 decode; nulls land per column") {
-    val tall = Feather.readFeather(spark, s"$dir/fixture_unc.feather")
+    val tall = Feather.read(spark, s"$dir/fixture_unc.feather")
     val byKey = tall.groupBy("key")
       .agg(org.apache.spark.sql.functions.count("value_double").as("n"),
         org.apache.spark.sql.functions.count("value_str").as("ns"))
@@ -67,7 +67,7 @@ class FeatherSpec extends SparkSpec {
   }
 
   test("widened types decode: timestamp[us], uint32, large_utf8, date64") {
-    val wide = Feather.readFeatherRecords(spark, s"$dir/fixture_unc.feather")
+    val wide = Feather.readRecords(spark, s"$dir/fixture_unc.feather")
       .orderBy("row").select($"ts", $"u32", $"lu", $"d64")
       .as[(Option[String], Option[Double], Option[String], Option[String])]
       .collect()
@@ -97,19 +97,19 @@ class FeatherSpec extends SparkSpec {
 
   test("dictionary-encoded (categorical) columns decode via the " +
       "DictionaryBatch blocks, whole-file AND paged") {
-    val whole = Feather.readFeatherRecords(spark, s"$dir/fixture_unc.feather")
+    val whole = Feather.readRecords(spark, s"$dir/fixture_unc.feather")
       .orderBy("row").select($"cat").as[Option[String]].collect()
     assert(whole.length === 40)
     whole.zipWithIndex.foreach { case (cat, i) =>
       assert(cat === (if (i % 19 == 6) None else Some(s"cat_${i % 5}")), s"$i")
     }
     // the lz4 fixture's dictionary batch is compressed too
-    val lz = Feather.readFeatherRecords(spark, s"$dir/fixture_lz4.feather")
+    val lz = Feather.readRecords(spark, s"$dir/fixture_lz4.feather")
       .orderBy("row").select($"cat").as[Option[String]].collect()
     assert(lz.toSeq === whole.toSeq)
     // paged: dictionaries pread once on the driver, blocks per task
     val paged = Feather.records(
-        Feather.readFeatherPaged(spark, s"$dir/fixture_unc.feather",
+        Feather.readPaged(spark, s"$dir/fixture_unc.feather",
           partitions = 2),
         Seq(("cat", false)))
       .orderBy("row").select($"cat").as[Option[String]].collect()
@@ -121,7 +121,7 @@ class FeatherSpec extends SparkSpec {
       .option("inferSchema", "true").csv(s"$dir/golden.csv")
       .select($"i32", $"f64").orderBy("i32")
       .as[(Option[Double], Option[Double])].collect()
-    val ours = Feather.readFeatherRecords(spark, s"$dir/fixture_unc.feather")
+    val ours = Feather.readRecords(spark, s"$dir/fixture_unc.feather")
       .select($"i32", $"f64").orderBy("i32")
       .as[(Option[Double], Option[Double])].collect()
     assert(ours.filter(_._1.nonEmpty).toSeq ===
@@ -138,10 +138,10 @@ class FeatherSpec extends SparkSpec {
         if (i % 5 == 0) null else s"n$i")
     }
     val blob = Feather.dumps(cols, data, rowsPerBatch = 64) // 5 batches
-    val meta = Feather.parseFooter(blob)
+    val meta = Feather.parseMeta(blob)
     assert(meta.blocks.length === 5)
     val wide = Feather.records(
-        Feather.readFeatherBlobs(spark, Seq(("t.feather", blob))), cols)
+        Feather.readBlobs(spark, Seq(("t.feather", blob))), cols)
       .orderBy("row").select($"k", $"grp", $"score", $"note")
       .as[(Double, String, Option[Double], Option[String])].collect()
     assert(wide.length === n)
@@ -167,7 +167,7 @@ class FeatherSpec extends SparkSpec {
     java.nio.file.Files.write(tmp,
       Feather.dumps(cols, data, rowsPerBatch = 512)) // 10 blocks
     val paged = Feather.records(
-        Feather.readFeatherPaged(spark, tmp.toString, partitions = 4), cols)
+        Feather.readPaged(spark, tmp.toString, partitions = 4), cols)
       .orderBy("row").select($"k", $"txt")
       .as[(Double, String)].collect()
     assert(paged.length === n)
@@ -177,7 +177,7 @@ class FeatherSpec extends SparkSpec {
     }
     // row ids are DENSE 0..N−1, identical to the whole-file read: the
     // paged and whole cells join BY ID
-    val pagedIds = Feather.readFeatherPaged(spark, tmp.toString,
+    val pagedIds = Feather.readPaged(spark, tmp.toString,
         partitions = 4)
       .select($"row").distinct().as[Long].collect().sorted
     assert(pagedIds.toSeq === (0L until n.toLong))
@@ -187,7 +187,7 @@ class FeatherSpec extends SparkSpec {
   test("binary columns: typed read keeps bytes exactly; the tall-cell " +
       "path refuses them loudly; writer round-trips") {
     // pyarrow-written blobs byte-for-byte
-    val typed = Feather.readFeatherTyped(spark, s"$dir/fixture_bin.feather")
+    val typed = Feather.readTyped(spark, s"$dir/fixture_bin.feather")
       .orderBy("row").select($"media_id", $"blob")
       .as[(Double, Option[Array[Byte]])].collect()
     assert(typed.length === 6)
@@ -198,9 +198,9 @@ class FeatherSpec extends SparkSpec {
         (0 until i * 11 + 1).map(j => ((i * 37 + j) % 256).toByte), s"$i")
     }
     val e = intercept[Exception] {
-      Feather.readFeather(spark, s"$dir/fixture_bin.feather").collect()
+      Feather.read(spark, s"$dir/fixture_bin.feather").collect()
     }
-    assert(e.getMessage.contains("readFeatherTyped"))
+    assert(e.getMessage.contains("Feather.readTyped"))
     // Scala writer: kinds n/s/y round-trip through the typed reader
     val cols = Seq(("k", 'n'), ("tag", 's'), ("payload", 'y'))
     val data = (0 until 200).map { i =>
@@ -209,7 +209,7 @@ class FeatherSpec extends SparkSpec {
         else Array.tabulate[Byte](i % 40 + 1)(j => ((i + j * 13) % 256).toByte))
     }
     val blob = Feather.dumpsTyped(cols, data, rowsPerBatch = 64)
-    val back = Feather.readFeatherTypedBlobs(spark, Seq(("t.feather", blob)))
+    val back = Feather.readTypedBlobs(spark, Seq(("t.feather", blob)))
       .orderBy("row").select($"k", $"tag", $"payload")
       .as[(Double, String, Option[Array[Byte]])].collect()
     assert(back.length === 200)
@@ -237,7 +237,7 @@ class FeatherSpec extends SparkSpec {
       val tmp = java.nio.file.Files
         .createTempFile("graft_typed_paged_", ".feather")
       java.nio.file.Files.write(tmp, blob)
-      val paged = Feather.readFeatherTypedPaged(spark, tmp.toString,
+      val paged = Feather.readTypedPaged(spark, tmp.toString,
           partitions = 4)
         .orderBy("row").select($"row", $"k", $"tag", $"payload")
         .as[(Long, Double, String, Option[Array[Byte]])].collect()
@@ -287,7 +287,7 @@ class FeatherSpec extends SparkSpec {
       (f"f$i%02d.feather",
         Feather.dumpsTyped(cols, rows, rowsPerBatch = 16, zstd = i % 2 == 1))
     }
-    val back = Feather.readFeatherTypedBlobs(spark, blobs)
+    val back = Feather.readTypedBlobs(spark, blobs)
       .orderBy("src_file", "row")
       .select($"src_file", $"a", $"b", $"c")
       .as[(String, Option[Double], Option[String], Option[Array[Byte]])]
@@ -322,7 +322,7 @@ class FeatherSpec extends SparkSpec {
         Feather.dumps(cols, data, rowsPerBatch = 128))
     }
     val wide = Feather.records(
-        Feather.readFeatherPagedAll(spark, tmp.toString, partitions = 3),
+        Feather.readPagedAll(spark, tmp.toString, partitions = 3),
         cols)
       .orderBy("k").select($"k", $"txt")
       .as[(Double, String)].collect()
@@ -338,7 +338,7 @@ class FeatherSpec extends SparkSpec {
   test("zstd pyarrow fixture decodes identically to the uncompressed " +
       "one (incl. the zstd-compressed dictionary batch)") {
     check("fixture_zstd.feather")
-    val cat = Feather.readFeatherRecords(spark, s"$dir/fixture_zstd.feather")
+    val cat = Feather.readRecords(spark, s"$dir/fixture_zstd.feather")
       .orderBy("row").select($"cat").as[Option[String]].collect()
     cat.zipWithIndex.foreach { case (c, i) =>
       assert(c === (if (i % 19 == 6) None else Some(s"cat_${i % 5}")), s"$i")
@@ -353,7 +353,7 @@ class FeatherSpec extends SparkSpec {
     val blob = Feather.dumps(cols, data, rowsPerBatch = 256, zstd = true)
     assert(blob.length < Feather.dumps(cols, data, rowsPerBatch = 256).length)
     val whole = Feather.records(
-        Feather.readFeatherBlobs(spark, Seq(("z.feather", blob))), cols)
+        Feather.readBlobs(spark, Seq(("z.feather", blob))), cols)
       .orderBy("row").select($"k", $"txt").as[(Double, String)].collect()
     assert(whole.length === n)
     whole.zipWithIndex.foreach { case ((k, txt), i) =>
@@ -362,7 +362,7 @@ class FeatherSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempFile("graft_zstd_", ".feather")
     java.nio.file.Files.write(tmp, blob)
     val paged = Feather.records(
-        Feather.readFeatherPaged(spark, tmp.toString, partitions = 3), cols)
+        Feather.readPaged(spark, tmp.toString, partitions = 3), cols)
       .orderBy("row").select($"k", $"txt").as[(Double, String)].collect()
     assert(paged.toSeq === whole.toSeq)
     java.nio.file.Files.delete(tmp)
@@ -376,7 +376,7 @@ class FeatherSpec extends SparkSpec {
     }
     val bblob = Feather.dumpsTyped(bcols, bdata, rowsPerBatch = 16,
       zstd = true)
-    val back = Feather.readFeatherTypedBlobs(spark,
+    val back = Feather.readTypedBlobs(spark,
         Seq(("zb.feather", bblob)))
       .orderBy("row").select($"k", $"payload")
       .as[(Double, Array[Byte])].collect()
@@ -399,16 +399,16 @@ class FeatherSpec extends SparkSpec {
 
   test("big int64, bad magic and truncation refuse loudly") {
     val e2 = intercept[Exception] {
-      Feather.readFeatherRecords(spark, s"$dir/fixture_bigint.feather")
+      Feather.readRecords(spark, s"$dir/fixture_bigint.feather")
         .collect()
     }
     assert(e2.getMessage.contains("2^53"))
 
     val junk = Array.fill[Byte](64)('Q')
-    intercept[IllegalArgumentException] { Feather.parseFooter(junk) }
+    intercept[IllegalArgumentException] { Feather.parseMeta(junk) }
 
     val cut = bytes("fixture_unc.feather").dropRight(3)
-    intercept[IllegalArgumentException] { Feather.parseFooter(cut) }
+    intercept[IllegalArgumentException] { Feather.parseMeta(cut) }
   }
 
   // ---- embedding-vector columns: fixed_size_list<f32>, list<f32>,
@@ -446,7 +446,7 @@ class FeatherSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     Seq("fixture_vec.feather", "fixture_vec_lz4.feather",
         "fixture_vec_zstd.feather").foreach { f =>
-      val df = Feather.readFeatherTyped(spark, s"$dir/$f")
+      val df = Feather.readTyped(spark, s"$dir/$f")
       assert(df.schema("emb_fsl").dataType === ArrayType(FloatType), f)
       assert(df.schema("emb_list").dataType === ArrayType(FloatType), f)
       assert(df.schema("emb_d").dataType === ArrayType(DoubleType), f)
@@ -458,18 +458,18 @@ class FeatherSpec extends SparkSpec {
       "matches the whole-file read; the tall-cell paths refuse toward " +
       "the typed read") {
     Seq("fixture_vec.feather", "fixture_vec_zstd.feather").foreach { f =>
-      checkVecRows(Feather.readFeatherTypedPaged(spark, s"$dir/$f",
+      checkVecRows(Feather.readTypedPaged(spark, s"$dir/$f",
         partitions = 3).orderBy("row").collect(), s"paged $f")
     }
     val e = intercept[Exception] {
-      Feather.readFeather(spark, s"$dir/fixture_vec.feather").collect()
+      Feather.read(spark, s"$dir/fixture_vec.feather").collect()
     }
-    assert(e.getMessage.contains("readFeatherTyped"))
+    assert(e.getMessage.contains("Feather.readTyped"))
     assert(e.getMessage.contains("vector column"))
     val e2 = intercept[Exception] {
-      Feather.readFeatherPaged(spark, s"$dir/fixture_vec.feather").count()
+      Feather.readPaged(spark, s"$dir/fixture_vec.feather").count()
     }
-    assert(e2.getMessage.contains("readFeatherTypedPaged"))
+    assert(e2.getMessage.contains("Feather.readTypedPaged"))
   }
 
   test("Scala vector writer round-trips both layouts (v fixed / V " +
@@ -488,7 +488,7 @@ class FeatherSpec extends SparkSpec {
     Seq(false, true).foreach { zstd =>
       val blob = Feather.dumpsTyped(cols, data, rowsPerBatch = 16,
         zstd = zstd)
-      val back = Feather.readFeatherTypedBlobs(spark,
+      val back = Feather.readTypedBlobs(spark,
           Seq(("v.feather", blob)))
         .orderBy("row").collect()
       assert(back.length === n, s"zstd=$zstd")
@@ -505,7 +505,7 @@ class FeatherSpec extends SparkSpec {
       val tmp = java.nio.file.Files
         .createTempFile("graft_vec_paged_", ".feather")
       java.nio.file.Files.write(tmp, blob)
-      val paged = Feather.readFeatherTypedPaged(spark, tmp.toString,
+      val paged = Feather.readTypedPaged(spark, tmp.toString,
           partitions = 4)
         .drop("src_file").orderBy("row").collect()
       assert(paged.map(_.toSeq).toSeq ===

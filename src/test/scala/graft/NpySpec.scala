@@ -13,7 +13,7 @@ class NpySpec extends SparkSpec {
   private val dir = "src/test/resources/npy"
 
   private def coo(file: String) =
-    Npy.readNpy(spark, s"$dir/$file")
+    Npy.read(spark, s"$dir/$file")
       .select($"coords", $"value", $"value_long", $"dtype")
 
   test("f8 1-D: exact doubles, coords, dtype") {
@@ -107,7 +107,7 @@ class NpySpec extends SparkSpec {
   test("readNpyBlobs parses a blob exactly like readNpy parses the file") {
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "f8_1d.npy"))
-    val blob = Npy.readNpyBlobs(spark, Seq(("f8_1d.npy", bytes)))
+    val blob = Npy.readBlobs(spark, Seq(("f8_1d.npy", bytes)))
       .orderBy(element_at($"coords", 1))
       .select($"coords", $"value", $"dtype")
       .as[(Seq[Long], Double, String)].collect()
@@ -146,7 +146,7 @@ class NpySpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempFile("npy_scalar_", ".npy")
     try {
       java.nio.file.Files.write(tmp, blob)
-      val coo0 = Npy.readNpy(spark, tmp.toString)
+      val coo0 = Npy.read(spark, tmp.toString)
         .select($"coords", $"value").as[(Seq[Long], Double)].collect()
       assert(coo0.toSeq === Seq((Seq.empty[Long], 42.5)))
       val m = Npy.readNpyMatrix(spark, tmp.toString)

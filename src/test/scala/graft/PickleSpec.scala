@@ -16,7 +16,7 @@ class PickleSpec extends SparkSpec {
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, f))
 
   test("records list-of-dicts (p2): wide pivot matches the closed form") {
-    val wide = Pickle.readPickleRecords(spark, s"$dir/records_p2.pkl")
+    val wide = Pickle.readRecords(spark, s"$dir/records_p2.pkl")
       .orderBy("row")
       .select($"id", $"name", $"score", $"flag", $"note")
       .as[(Long, String, Double, Boolean, Option[String])].collect()
@@ -31,14 +31,14 @@ class PickleSpec extends SparkSpec {
   }
 
   test("columnar dict-of-lists (p4): FRAME/SHORT_BINUNICODE/MEMOIZE") {
-    val wide = Pickle.readPickleRecords(spark, s"$dir/columnar_p4.pkl")
+    val wide = Pickle.readRecords(spark, s"$dir/columnar_p4.pkl")
       .orderBy("row").select($"k", $"v", $"s")
       .as[(Long, Double, String)].collect()
     assert(wide.toSeq === Seq((1L, 1.5, "a"), (2L, -2.5, "b"), (3L, 3.25, "c")))
   }
 
   test("heterogeneous scalars (p5): tall cells carry per-row types") {
-    val tall = Pickle.readPickle(spark, s"$dir/scalars_p5.pkl")
+    val tall = Pickle.read(spark, s"$dir/scalars_p5.pkl")
       .orderBy("row")
       .select($"vtype", $"value_str", $"value_double", $"value_long", $"value_bool")
       .collect()
@@ -56,10 +56,10 @@ class PickleSpec extends SparkSpec {
   }
 
   test("memo reuse (BINGET) and top-level tuple of dicts both parse") {
-    val memo = Pickle.readPickleRecords(spark, s"$dir/memo_p2.pkl")
+    val memo = Pickle.readRecords(spark, s"$dir/memo_p2.pkl")
       .orderBy("row").select($"a").as[String].collect()
     assert(memo.toSeq === Seq("shared", "shared"))
-    val tup = Pickle.readPickleRecords(spark, s"$dir/tuple_p2.pkl")
+    val tup = Pickle.readRecords(spark, s"$dir/tuple_p2.pkl")
       .orderBy("row").select($"a").as[Long].collect()
     assert(tup.toSeq === Seq(1L, 2L))
   }
@@ -93,7 +93,7 @@ class PickleSpec extends SparkSpec {
         "e" -> "there"))
     val blob = Pickle.dumps(v)
     val wide = Pickle.records(
-        Pickle.readPickleBlobs(spark, Seq(("t.pkl", blob))),
+        Pickle.readBlobs(spark, Seq(("t.pkl", blob))),
         Pickle.inferKeys(Pickle.parse(blob)))
       .orderBy("row")
       .select($"a", $"b", $"c", $"d", $"e")

@@ -27,7 +27,7 @@ class SasSpec extends SparkSpec {
     }
 
   private def check(file: String): Unit = {
-    val wide = Sas.readSasRecords(spark, s"$dir/$file")
+    val wide = Sas.readRecords(spark, s"$dir/$file")
       .orderBy("row").select($"id", $"score", $"name")
       .as[(Double, Option[Double], String)].collect()
     assert(wide.toSeq === expected)
@@ -49,7 +49,7 @@ class SasSpec extends SparkSpec {
       .orderBy("id")
       .select($"id", $"score", $"name")
       .as[(Double, Option[Double], String)].collect()
-    val ours = Sas.readSasRecords(spark, s"$dir/fixture_u64.sas7bdat")
+    val ours = Sas.readRecords(spark, s"$dir/fixture_u64.sas7bdat")
       .orderBy("row").select($"id", $"score", $"name")
       .as[(Double, Option[Double], String)].collect()
     assert(ours.length === golden.length)
@@ -65,7 +65,7 @@ class SasSpec extends SparkSpec {
   }
 
   test("tall cells carry per-column types; numeric missing is null") {
-    val tall = Sas.readSas(spark, s"$dir/fixture_u64.sas7bdat")
+    val tall = Sas.read(spark, s"$dir/fixture_u64.sas7bdat")
     assert(tall.count() === 60L)
     val types = tall.select("key", "vtype").distinct()
       .as[(String, String)].collect().toMap
@@ -87,7 +87,7 @@ class SasSpec extends SparkSpec {
     // 300 rows x 24 bytes spill past one 4096-byte data page — the
     // round-trip covers the multi-data-page path
     val wide = Sas.records(
-        Sas.readSasBlobs(spark, Seq(("t.sas7bdat", blob))), cols)
+        Sas.readBlobs(spark, Seq(("t.sas7bdat", blob))), cols)
       .orderBy("row")
       .select($"k", $"txt", $"v")
       .as[(Double, Option[String], Option[Double])].collect()
@@ -145,7 +145,7 @@ class SasSpec extends SparkSpec {
         if (i % 7 == 0) null else (i * 1.25 - 10.0)): Seq[Any]
     }
     def readBack(blob: Array[Byte]) = Sas.records(
-        Sas.readSasBlobs(spark, Seq(("t.sas7bdat", blob))), cols)
+        Sas.readBlobs(spark, Seq(("t.sas7bdat", blob))), cols)
       .orderBy("row").select($"k", $"txt", $"v")
       .as[(Double, Option[String], Option[Double])].collect().toSeq
     val le = readBack(Sas.dumps(cols, data))
@@ -161,7 +161,7 @@ class SasSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempFile("graft_sas_be_", ".sas7bdat")
     java.nio.file.Files.write(tmp, Sas.dumps(cols, data, bigEndian = true))
     val paged = Sas.records(
-        Sas.readSasPaged(spark, tmp.toString, partitions = 4), cols)
+        Sas.readPaged(spark, tmp.toString, partitions = 4), cols)
       .orderBy("row").select($"k", $"txt", $"v")
       .as[(Double, Option[String], Option[Double])].collect().toSeq
     assert(paged === le)
@@ -187,7 +187,7 @@ class SasSpec extends SparkSpec {
   test("paged reader matches the whole-blob reader on both fixtures") {
     Seq("fixture_u64.sas7bdat", "fixture_x86.sas7bdat").foreach { f =>
       val paged = Sas.records(
-          Sas.readSasPaged(spark, s"$dir/$f", partitions = 3),
+          Sas.readPaged(spark, s"$dir/$f", partitions = 3),
           Seq(("id", true), ("score", true), ("name", false)))
         .orderBy("row").select($"id", $"score", $"name")
         .as[(Double, Option[Double], String)].collect()
@@ -202,7 +202,7 @@ class SasSpec extends SparkSpec {
       Seq(i.toDouble, s"v${i % 13}"): Seq[Any])
     val tmp = java.nio.file.Files.createTempFile("graft_paged_", ".sas7bdat")
     java.nio.file.Files.write(tmp, Sas.dumps(cols, data))
-    val cells = Sas.readSasPaged(spark, tmp.toString, partitions = 7)
+    val cells = Sas.readPaged(spark, tmp.toString, partitions = 7)
     // ceil-split: 15 pages over 7 requested parts → 5 ranges of ≤3
     assert(cells.rdd.getNumPartitions > 1)
     val wide = Sas.records(cells, cols)
@@ -231,7 +231,7 @@ class SasSpec extends SparkSpec {
         Sas.dumps(cols, data))
     }
     val wide = Sas.records(
-        Sas.readSasPagedAll(spark, tmp.toString, partitions = 3), cols)
+        Sas.readPagedAll(spark, tmp.toString, partitions = 3), cols)
       .orderBy("k").select($"k", $"txt")
       .as[(Double, String)].collect()
     assert(wide.length === 2000)
@@ -297,7 +297,7 @@ class SasSpec extends SparkSpec {
     }
 
   test("RLE fixture (pandas-validated compressed subheader rows) decodes") {
-    val wide = Sas.readSasRecords(spark, s"$dir/fixture_rle.sas7bdat")
+    val wide = Sas.readRecords(spark, s"$dir/fixture_rle.sas7bdat")
       .orderBy("row")
       .select($"id", $"z1", $"z2", $"score", $"blob", $"tag")
       .as[(Double, Option[Double], Option[Double], Option[Double],
@@ -310,7 +310,7 @@ class SasSpec extends SparkSpec {
       .option("inferSchema", "true").csv(s"$dir/golden_rle.csv")
       .orderBy("id").select($"id", $"blob")
       .as[(Double, String)].collect()
-    val ours = Sas.readSasRecords(spark, s"$dir/fixture_rle.sas7bdat")
+    val ours = Sas.readRecords(spark, s"$dir/fixture_rle.sas7bdat")
       .orderBy("id").select($"id", $"blob")
       .as[(Double, String)].collect()
     assert(ours.toSeq === golden.toSeq)
@@ -332,7 +332,7 @@ class SasSpec extends SparkSpec {
     assert(blob.length * 2 < plain.length,
       s"RLE ${blob.length} vs plain ${plain.length} bytes")
     val whole = Sas.records(
-        Sas.readSasBlobs(spark, Seq(("t.sas7bdat", blob))), cols)
+        Sas.readBlobs(spark, Seq(("t.sas7bdat", blob))), cols)
       .orderBy("row").select($"k", $"pad", $"txt")
       .as[(Double, Option[String], String)].collect()
     assert(whole.length === n)
@@ -348,7 +348,7 @@ class SasSpec extends SparkSpec {
     java.nio.file.Files.write(tmp, blob)
     val meta = Sas.parseMeta(blob)
     assert(meta.rle && meta.pageCount > 2, "multi-page rle expected")
-    val pagedCells = Sas.readSasPaged(spark, tmp.toString, partitions = 5)
+    val pagedCells = Sas.readPaged(spark, tmp.toString, partitions = 5)
     val paged = Sas.records(pagedCells, cols)
       .orderBy("row").select($"k", $"pad", $"txt")
       .as[(Double, Option[String], String)].collect()
@@ -362,7 +362,7 @@ class SasSpec extends SparkSpec {
 
   test("RDC fixture (pandas-validated compressed subheader rows) decodes " +
       "to the same frame as the RLE fixture") {
-    val wide = Sas.readSasRecords(spark, s"$dir/fixture_rdc.sas7bdat")
+    val wide = Sas.readRecords(spark, s"$dir/fixture_rdc.sas7bdat")
       .orderBy("row")
       .select($"id", $"z1", $"z2", $"score", $"blob", $"tag")
       .as[(Double, Option[Double], Option[Double], Option[Double],
@@ -385,7 +385,7 @@ class SasSpec extends SparkSpec {
     val meta = Sas.parseMeta(blob)
     assert(meta.compression === Sas.CompRdc && meta.pageCount > 2)
     val whole = Sas.records(
-        Sas.readSasBlobs(spark, Seq(("t.sas7bdat", blob))), cols)
+        Sas.readBlobs(spark, Seq(("t.sas7bdat", blob))), cols)
       .orderBy("row").select($"k", $"pad", $"txt")
       .as[(Double, Option[String], String)].collect()
     assert(whole.length === n)
@@ -398,7 +398,7 @@ class SasSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempFile("graft_rdc_", ".sas7bdat")
     java.nio.file.Files.write(tmp, blob)
     val paged = Sas.records(
-        Sas.readSasPaged(spark, tmp.toString, partitions = 5), cols)
+        Sas.readPaged(spark, tmp.toString, partitions = 5), cols)
       .orderBy("row").select($"k", $"pad", $"txt")
       .as[(Double, Option[String], String)].collect()
     assert(paged.toSeq === whole.toSeq)

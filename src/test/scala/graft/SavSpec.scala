@@ -28,7 +28,7 @@ class SavSpec extends SparkSpec {
     }
 
   private def check(file: String): Unit = {
-    val wide = Sav.readSavRecords(spark, s"$dir/$file")
+    val wide = Sav.readRecords(spark, s"$dir/$file")
       .orderBy("row").select($"id", $"name", $"score")
       .as[(Double, Option[String], Option[Double])].collect()
     assert(wide.toSeq === expected)
@@ -66,7 +66,7 @@ class SavSpec extends SparkSpec {
     assert(blob.length < plainLen,
       s"zsav $blob.length vs bytecode $plainLen")
     val wide = Sav.records(
-        Sav.readSavBlobs(spark, Seq(("t.zsav", blob))), cols)
+        Sav.readBlobs(spark, Seq(("t.zsav", blob))), cols)
       .orderBy("row").select($"id", $"grp", $"score", $"note")
       .as[(Double, String, Option[Double], Option[String])].collect()
     assert(wide.length === n)
@@ -82,7 +82,7 @@ class SavSpec extends SparkSpec {
   test("very long strings (info 14) fold across 252-byte segments") {
     // tools/make_sav_fixture.py VLS_ROWS: id f8 + one 600-wide text in
     // three segments (255/255/96 declared, 252/252/96 real)
-    val wide = Sav.readSavRecords(spark, s"$dir/fixture_vls.sav")
+    val wide = Sav.readRecords(spark, s"$dir/fixture_vls.sav")
       .orderBy("row").select($"id", $"txt")
       .as[(Double, Option[String])].collect()
     assert(wide.length === 12)
@@ -110,7 +110,7 @@ class SavSpec extends SparkSpec {
         ("zsav", Sav.dumps(cols, data, zsav = true))).foreach {
       case (label, blob) =>
         val wide = Sav.records(
-            Sav.readSavBlobs(spark, Seq(("t.sav", blob))), cols)
+            Sav.readBlobs(spark, Seq(("t.sav", blob))), cols)
           .orderBy("row").select($"k", $"doc", $"tag")
           .as[(Double, Option[String], String)].collect()
         assert(wide.length === n, label)
@@ -142,7 +142,7 @@ class SavSpec extends SparkSpec {
       val tmp = java.nio.file.Files.createTempFile("graft_zsav_", ".zsav")
       java.nio.file.Files.write(tmp, blob)
       val paged = Sav.records(
-          Sav.readSavPaged(spark, tmp.toString, partitions = 5), cols)
+          Sav.readPaged(spark, tmp.toString, partitions = 5), cols)
         .orderBy("row").select($"row", $"k", $"small", $"txt", $"score")
         .as[(Long, Double, Option[Double], Option[String], Option[Double])]
         .collect()
@@ -177,7 +177,7 @@ class SavSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempFile("graft_zsav_vls_", ".zsav")
     java.nio.file.Files.write(tmp, blob)
     val paged = Sav.records(
-        Sav.readSavPaged(spark, tmp.toString, partitions = 6), cols)
+        Sav.readPaged(spark, tmp.toString, partitions = 6), cols)
       .orderBy("row").select($"k", $"doc", $"tag")
       .as[(Double, Option[String], String)].collect()
     assert(paged.length === n)
@@ -209,7 +209,7 @@ class SavSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempFile("graft_zsav_bad_", ".zsav")
     java.nio.file.Files.write(tmp, broken)
     val e = intercept[Exception] {
-      Sav.readSavPaged(spark, tmp.toString).count()
+      Sav.readPaged(spark, tmp.toString).count()
     }
     assert(e.getMessage.contains("multiple of 8"))
     java.nio.file.Files.delete(tmp)
@@ -235,7 +235,7 @@ class SavSpec extends SparkSpec {
   }
 
   test("long names from info-13 win; tall cells carry types") {
-    val tall = Sav.readSav(spark, s"$dir/fixture_plain.sav")
+    val tall = Sav.read(spark, s"$dir/fixture_plain.sav")
     assert(tall.count() === 60L)
     val types = tall.select("key", "vtype").distinct()
       .as[(String, String)].collect().toMap
@@ -256,7 +256,7 @@ class SavSpec extends SparkSpec {
     Seq(false, true).foreach { bc =>
       val blob = Sav.dumps(cols, data, bytecode = bc)
       val wide = Sav.records(
-          Sav.readSavBlobs(spark, Seq(("t.sav", blob))), cols)
+          Sav.readBlobs(spark, Seq(("t.sav", blob))), cols)
         .orderBy("row")
         .select($"k", $"txt", $"v")
         .as[(Double, Option[String], Option[Double])].collect()
@@ -312,13 +312,13 @@ class SavSpec extends SparkSpec {
 
   test("paged reader matches whole-file; bytecode refuses the split") {
     val paged = Sav.records(
-        Sav.readSavPaged(spark, s"$dir/fixture_plain.sav", partitions = 4),
+        Sav.readPaged(spark, s"$dir/fixture_plain.sav", partitions = 4),
         Seq(("id", true), ("name", false), ("score", true)))
       .orderBy("row").select($"id", $"name", $"score")
       .as[(Double, Option[String], Option[Double])].collect()
     assert(paged.toSeq === expected)
     val e = intercept[IllegalArgumentException] {
-      Sav.readSavPaged(spark, s"$dir/fixture_bytecode.sav")
+      Sav.readPaged(spark, s"$dir/fixture_bytecode.sav")
     }
     assert(e.getMessage.contains("paged scan needs uncompressed"))
   }

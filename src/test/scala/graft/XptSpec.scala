@@ -26,7 +26,7 @@ class XptSpec extends SparkSpec {
     }
 
   test("fixture matches the pandas golden (18 rows, missing, blanks)") {
-    val wide = Xpt.readXptRecords(spark, s"$dir/fixture.xpt")
+    val wide = Xpt.readRecords(spark, s"$dir/fixture.xpt")
       .orderBy("row").select($"ID", $"SCORE", $"NAME")
       .as[(Double, Option[Double], Option[String])].collect()
     assert(wide.toSeq === expected)
@@ -57,7 +57,7 @@ class XptSpec extends SparkSpec {
     val blob = Xpt.dumps(cols, data)
     assert(blob.length % 80 === 0)
     val wide = Xpt.records(
-        Xpt.readXptBlobs(spark, Seq(("t.xpt", blob))), Seq(("K", true),
+        Xpt.readBlobs(spark, Seq(("t.xpt", blob))), Seq(("K", true),
           ("TXT", false), ("V", true)))
       .orderBy("row").select($"K", $"TXT", $"V")
       .as[(Double, Option[String], Option[Double])].collect()
@@ -71,7 +71,7 @@ class XptSpec extends SparkSpec {
 
   test("paged reader matches whole-file (driver-side blank-pad trim)") {
     val paged = Xpt.records(
-        Xpt.readXptPaged(spark, s"$dir/fixture.xpt", partitions = 4),
+        Xpt.readPaged(spark, s"$dir/fixture.xpt", partitions = 4),
         Seq(("ID", true), ("SCORE", true), ("NAME", false)))
       .orderBy("row").select($"ID", $"SCORE", $"NAME")
       .as[(Double, Option[Double], Option[String])].collect()
