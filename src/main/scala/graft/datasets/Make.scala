@@ -36,8 +36,11 @@ object Make {
     * string key — bit-equal in any engine with md5 (DuckDB:
     * CAST('0x'||substr(md5(s),1,15) AS BIGINT) / 2^60). */
   private def u01Md5(seed: Long, id: Column, tag: Int): Column =
-    conv(substring(md5(concat_ws("-", lit(seed), id, lit(tag))), 1, 15),
-      16, 10).cast("long").cast("double") / lit(math.pow(2.0, 60))
+    md5Key(seed, id, lit(tag)).cast("double") / lit(math.pow(2.0, 60))
+
+  /** The portable 60-bit hash of the canonical key `seed-id-tag`. */
+  private def md5Key(seed: Long, id: Column, tag: Column): Column =
+    graft.text.Dedup.md5Hash64(concat_ws("-", lit(seed), id, tag))
 
   /** Standard normal via Box–Muller from two independent uniforms.
     * `round(_, 9)` before use when the value must be engine-portable
@@ -121,8 +124,7 @@ object Make {
       s"$nInformative informative dims hold at most 2^$nInformative classes")
     val id = col("id")
     val label0 = if (portableHash)
-      pmod(conv(substring(md5(concat_ws("-", lit(seed), id, lit(1000003))),
-        1, 15), 16, 10).cast("long"), lit(nClasses))
+      pmod(md5Key(seed, id, lit(1000003)), lit(nClasses))
     else pmod(xxhash64(lit(seed), id, lit("label")), lit(nClasses))
     // portable mode rounds ONLY the libm-crossing gaussian sums (the
     // make_regression lesson: a single round after libm is
@@ -296,8 +298,7 @@ object Make {
     val id = col("id")
     def hmod(tag: Column, m: Int): Column =
       if (portableHash)
-        pmod(conv(substring(md5(concat_ws("-", lit(seed), id, tag)), 1, 15),
-          16, 10).cast("long"), lit(m.toLong))
+        pmod(md5Key(seed, id, tag), lit(m.toLong))
       else pmod(xxhash64(lit(seed), id, tag), lit(m.toLong))
     val vocabArr = array(TextVocab.map(lit): _*)
     val platArr = array(TextPlatforms.map(lit): _*)
@@ -447,8 +448,7 @@ object Make {
   private def hashMod(portable: Boolean, seed: Long, id: Column, tag: Int,
                       m: Long): Column =
     if (portable)
-      pmod(conv(substring(md5(concat_ws("-", lit(seed), id, lit(tag))), 1, 15),
-        16, 10).cast("long"), lit(m))
+      pmod(md5Key(seed, id, lit(tag)), lit(m))
     else pmod(xxhash64(lit(seed), id, lit(tag)), lit(m))
 
   /** One field's deterministic column. `lo + u·(hi−lo)` is pure IEEE
@@ -881,8 +881,7 @@ object Make {
       s"need positive nCenters/dim and boxMax > boxMin")
     val id = col("id")
     val cluster = if (portableHash)
-      pmod(conv(substring(md5(concat_ws("-", lit(seed), id, lit(500009))),
-        1, 15), 16, 10).cast("long"), lit(nCenters))
+      pmod(md5Key(seed, id, lit(500009)), lit(nCenters))
     else pmod(xxhash64(lit(seed), id, lit("blob")), lit(nCenters))
     def maybeRound(c: Column): Column = if (portableHash) round(c, 9) else c
     val span = boxMax - boxMin

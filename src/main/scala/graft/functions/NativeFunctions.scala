@@ -2,10 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The one table of graft's native SQL functions: the vector rows of
-  * [[VectorExpressions]] and the text rows of [[TextExpressions]].
+  * [[VectorExpressions]], the text rows of [[TextExpressions]] and the
+  * MinHash rows of [[MinHashExpressions]].
   * [[GraftExtensions]] injects it into every GraftSession and
   * [[register]] installs it on a session built without the extension,
   * so `DESCRIBE FUNCTION` reads the same however the session was
@@ -21,8 +24,23 @@ object NativeFunctions {
         group, "4.0.0", "", "built-in"),
       build)
 
+  /** A builder's plan-time integer argument; `what` names it. */
+  private[functions] def intLit(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
+  }
+
+  /** A builder's plan-time string argument; `what` names it. */
+  private[functions] def strLit(e: Expression, what: String): String = e match {
+    case Literal(v: UTF8String, StringType) => v.toString
+    case other => throw new IllegalArgumentException(
+      s"$what must be a string literal, got $other")
+  }
+
   lazy val functions: Seq[Row] =
-    VectorExpressions.functions ++ TextExpressions.functions
+    VectorExpressions.functions ++ TextExpressions.functions ++
+      MinHashExpressions.functions
 
   /** Register the table on an existing session (callable via
     * `call_function` / SQL). Idempotent: operators call this

@@ -229,13 +229,7 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
 }
 
 object TextExpressions {
-  import NativeFunctions.fn
-
-  private def intLit(e: Expression, name: String): Int = e match {
-    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$name maxN must be an integer literal, got $other")
-  }
+  import NativeFunctions.{fn, intLit, strLit}
 
   /** The native text functions: rows of the one table
     * [[NativeFunctions]] registers and [[GraftExtensions]] injects.
@@ -245,32 +239,26 @@ object TextExpressions {
       "subsequence length of two token arrays")(
       c => LcsLength(c(0), c(1))),
     fn(classOf[UnicodeNormalize], "unicode_norm",
-      "unicode_norm(str, form) - UAX #15 normalization", "string_funcs") { c =>
-      val form = c(1) match {
-        case Literal(v: UTF8String, StringType) => v.toString
-        case other => throw new IllegalArgumentException(
-          s"unicode_norm form must be a string literal, got $other")
-      }
-      UnicodeNormalize(c(0), form)
-    },
+      "unicode_norm(str, form) - UAX #15 normalization", "string_funcs")(
+      c => UnicodeNormalize(c(0), strLit(c(1), "unicode_norm form"))),
     fn(classOf[NgramOverlapAll], "ngram_overlap_all",
       "ngram_overlap_all(cand, ref, maxN) - clipped word-n-gram overlap " +
         "triples for orders 1..maxN")(
-      c => NgramOverlapAll(c(0), c(1), intLit(c(2), "ngram_overlap_all"))),
+      c => NgramOverlapAll(c(0), c(1), intLit(c(2), "ngram_overlap_all maxN"))),
     fn(classOf[CharGramOverlapAll], "chargram_overlap_all",
       "chargram_overlap_all(cand, ref, maxN) - clipped char-n-gram overlap " +
         "triples for orders 1..maxN", "string_funcs")(
       c => CharGramOverlapAll(c(0), c(1),
-        intLit(c(2), "chargram_overlap_all"))),
+        intLit(c(2), "chargram_overlap_all maxN"))),
     fn(classOf[DupNgramChars], "dup_ngram_chars",
       "dup_ngram_chars(toks, n, minOccur) - [total_chars, dup_chars] of " +
         "n-grams repeated >= minOccur times")(
-      c => DupNgramChars(c(0), intLit(c(1), "dup_ngram_chars"),
-        intLit(c(2), "dup_ngram_chars"))),
+      c => DupNgramChars(c(0), intLit(c(1), "dup_ngram_chars n"),
+        intLit(c(2), "dup_ngram_chars minOccur"))),
     fn(classOf[TopNgramStats], "top_ngram_stats",
       "top_ngram_stats(toks, n) - most frequent n-gram of the document " +
         "and its count")(
-      c => TopNgramStats(c(0), intLit(c(1), "top_ngram_stats"))),
+      c => TopNgramStats(c(0), intLit(c(1), "top_ngram_stats n"))),
     fn(classOf[DupTokenCounts], "dup_token_counts",
       "dup_token_counts(toks) - [n_tokens, occurrences of token types " +
         "appearing more than once]")(
@@ -278,12 +266,12 @@ object TextExpressions {
     fn(classOf[SummarizeDoc], "summarize_doc",
       "summarize_doc(text, minTokenLen) - top TF-IDF sentence of the " +
         "document (sidx, summary, score)", "string_funcs")(
-      c => SummarizeDoc(c(0), intLit(c(1), "summarize_doc"))),
+      c => SummarizeDoc(c(0), intLit(c(1), "summarize_doc minTokenLen"))),
     fn(classOf[WinnowFps], "winnow_fps",
       "winnow_fps(str, k, w) - winnowing fingerprint hashes (SIGMOD 2003) " +
         "of a normalized char stream", "string_funcs")(
-      c => WinnowFps(c(0), intLit(c(1), "winnow_fps"),
-        intLit(c(2), "winnow_fps"))),
+      c => WinnowFps(c(0), intLit(c(1), "winnow_fps k"),
+        intLit(c(2), "winnow_fps w"))),
     fn(classOf[MultiContains], "multi_contains",
       "multi_contains(text, patterns) - ascending ids of the literal " +
         "patterns occurring in text (Aho-Corasick, one pass)",

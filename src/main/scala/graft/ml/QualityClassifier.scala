@@ -62,7 +62,7 @@ object QualityClassifier {
   /** Hashed feature index of one term. Two hash families, same plan
     * shape (the dedup-twin convention): the portable 60-bit md5 hash
     * (non-negative, so `%` and `pmod` agree — any engine replays it,
-    * the oracle-checked default) or codegen xxhash64 (≈10× cheaper
+    * the oracle-checked default) or codegen xxhash64 (cheaper
     * per term, the corpus-scale choice). The hash family is part of
     * the MODEL: weights fitted with one family only score with that
     * family. */

@@ -61,10 +61,10 @@ object Graph {
     reliableCheckpointDir.foreach(sc.setCheckpointDir)
     // pin the invariants: reliable when a dir is given (survives
     // executor loss), executor-local otherwise (zero IO)
-    // lazy local pins: materialization folds into the first job that
-    // reads them (nodes.count() for n, the iteration-1 broadcast for
-    // the rest) instead of four serialized setup jobs — the lineage
-    // cut is identical once computed
+    // local pins with `eager = false`: NOT deferred under AQE —
+    // Dataset.checkpoint executes the adaptive plan at the call, so
+    // each cut below runs its shuffle stages as its own SQL execution
+    // while the entry body builds the plan, not folded into a later job
     def pin(df: DataFrame): DataFrame =
       if (reliableCheckpointDir.isDefined) df.checkpoint()
       else df.localCheckpoint(eager = false)

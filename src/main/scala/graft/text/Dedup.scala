@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.MinHashExpressions
 
 /** Document deduplication — exact, MinHash/LSH, SimHash, n-gram
   * Jaccard (north-star training-data-pipeline operators).
@@ -40,22 +41,12 @@ object Dedup {
       s => s.isNotNull)
   }
 
-  /** MinHash signature expression: for each of `numHashes` seeded hash
-    * functions, the minimum xxhash64 over the shingle set. NOTE:
-    * higher-order functions are interpreted (not codegen'd) — use
-    * [[minhashSignatures]] for corpus-scale signature computation. */
-  def minhashSignature(shingleCol: Column, numHashes: Int = 32): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingleCol, s => xxhash64(lit(seed), s)))
-    }: _*)
-
-  /** Corpus-scale MinHash signatures: explode shingles once, hash in
-    * codegen'd projections, take `numHashes` min-aggregates in ONE
-    * groupBy on the id. Output: (_id, _sig array<long>). */
   /** Distinct k-word shingles, one row per (id, shingle), built with
     * codegen'd operators: posexplode tokens, then concat with lead()
     * windows — the array-HOF shingle constructor is interpreted and
-    * dominates corpus-scale runs. One shuffle on the id. */
+    * dominates corpus-scale runs. One shuffle on the id. The shingle
+    * ROWS are what n-gram Jaccard and decontamination join on;
+    * MinHash needs no shingle rows ([[minhashSignatures]]). */
   def shinglesExploded(df: DataFrame, idCol: String, textCol: String,
                        k: Int): DataFrame = {
     val toks = df.select(col(idCol).as("_id"),
@@ -69,44 +60,40 @@ object Dedup {
       .select("_id", "_sh").distinct()
   }
 
+  /** Corpus-scale MinHash signatures on the xxhash64 family: one
+    * row-local `minhash_sig` projection over the row's tokens
+    * ([[graft.functions.MinHashSig]]), so the hashing runs in the
+    * scan's tasks and nothing is shuffled. A row with fewer than
+    * `shingleK` tokens has no shingle and no signature. Output:
+    * (_id, _sig array<long>), one row per signed input row — the id
+    * column is a key. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int, shingleK: Int): DataFrame = {
-    // hash the shingle STRING once; the k-hash family then re-hashes the
-    // 64-bit value (integer-input xxhash is ~10x cheaper than string).
-    val exploded = shinglesExploded(df, idCol, textCol, shingleK)
-      .withColumn("_h", xxhash64(col("_sh")))
-    val mins = (0 until numHashes).map(seed =>
-      min(xxhash64(lit(seed), col("_h"))).as(s"_h$seed"))
-    exploded.groupBy("_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("_id"),
-        array((0 until numHashes).map(i => col(s"_h$i")): _*).as("_sig"))
-  }
+                        numHashes: Int, shingleK: Int): DataFrame =
+    signatures(df, idCol, textCol, numHashes, shingleK, "xxhash")
 
-  /** Engine-portable 60-bit hash: the first 15 hex digits of md5,
-    * parsed base-16 — reproducible in ANY engine with an md5 built-in
-    * (DuckDB: `CAST('0x'||substr(md5(s),1,15) AS BIGINT)`), unlike
-    * xxhash64 which is Spark-internal. ~an order of magnitude slower
-    * than integer xxhash, so it backs the ORACLE-CHECKED minhash
-    * variant while xxhash64 stays the corpus-scale default. */
-  def md5Hash64(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
+  /** Engine-portable 60-bit hash: the top 60 bits of md5 (the native
+    * `md5_60`, [[graft.functions.Md5Sixty]]) — reproducible in ANY
+    * engine with an md5 built-in (DuckDB:
+    * `CAST('0x'||substr(md5(s),1,15) AS BIGINT)`), unlike xxhash64
+    * which is Spark-internal. The one definition every oracle-checked
+    * hash goes through. */
+  def md5Hash64(c: Column): Column = MinHashExpressions.md5_60(c.cast("binary"))
 
-  /** MinHash signatures with the portable md5 hash family: same plan
-    * shape as [[minhashSignatures]] (one explode, numHashes min-aggs
-    * in one groupBy) with every hash replayable in SQL. */
+  /** [[minhashSignatures]] on the portable md5 hash family: the
+    * shingle hash is [[md5Hash64]] of the shingle and seed j hashes
+    * `"<j>_" ‖ decimal(h)` the same way, so every signature is
+    * replayable in SQL. Same row-local plan. */
   def minhashSignaturesPortable(df: DataFrame, idCol: String, textCol: String,
-                                numHashes: Int, shingleK: Int): DataFrame = {
-    val exploded = shinglesExploded(df, idCol, textCol, shingleK)
-      .withColumn("_h", md5Hash64(col("_sh")))
-    val mins = (0 until numHashes).map(seed =>
-      min(md5Hash64(concat(lit(s"${seed}_"), col("_h").cast("string"))))
-        .as(s"_h$seed"))
-    exploded.groupBy("_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("_id"),
-        array((0 until numHashes).map(i => col(s"_h$i")): _*).as("_sig"))
-  }
+                                numHashes: Int, shingleK: Int): DataFrame =
+    signatures(df, idCol, textCol, numHashes, shingleK, "md5")
+
+  private def signatures(df: DataFrame, idCol: String, textCol: String,
+                         numHashes: Int, shingleK: Int,
+                         family: String): DataFrame =
+    df.select(col(idCol).as("_id"),
+        MinHashExpressions.minhashSig(TextFns.tokens(col(textCol)),
+          shingleK, numHashes, family).as("_sig"))
+      .filter(col("_sig").isNotNull)
 
   /** Candidate near-duplicate pairs via LSH banding: rows sharing any
     * band (contiguous signature slice) hash are candidates; candidates
@@ -163,7 +150,10 @@ object Dedup {
     // localCheckpoint: both sides of the self-join reuse the computed
     // signatures instead of re-hashing the corpus; unlike persist()
     // nothing stays pinned in the CacheManager after the caller drops
-    // the returned plan (ContextCleaner frees checkpoint blocks)
+    // the returned plan (ContextCleaner frees checkpoint blocks).
+    // `eager = false` does not defer the work under AQE:
+    // Dataset.checkpoint executes the adaptive plan at the call, so
+    // every shuffle stage below the cut runs here, at build time
     val sig = sigDf.localCheckpoint(eager = false)
     val banded = sig.select(col("_id"), col("_sig"),
       explode(bandStructs(col("_sig"), bands, rowsPer)).as("_band"))
@@ -659,7 +649,9 @@ object Dedup {
       // banding + CC, and the cluster min over reps IS the cluster
       // min over members. Drop set identical to the uncollapsed path
       // (asserted in ActivationsSpec); the collapse costs one linear
-      // window shuffle keyed by the signature.
+      // window shuffle keyed by the signature, which the cut below
+      // runs at build time (under AQE `eager = false` still executes
+      // every shuffle stage at the localCheckpoint call).
       val w = Window.partitionBy(col("_sig"))
       val withRep = sigs.withColumn("_rep", min(col("_id")).over(w))
         .localCheckpoint(eager = false)

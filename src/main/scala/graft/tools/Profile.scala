@@ -3,7 +3,11 @@
 // the noop sink, one untimed warm-up and then <iters> timed passes, and
 // reports where the wall time goes:
 //  - per pass: wall, jobs, stages, tasks, stage-wall and task-run sums,
-//    shuffle bytes and GC (SparkListener); for streaming entries also
+//    shuffle bytes and GC (SparkListener); `execs=`, the pass's SQL
+//    executions by action name (localCheckpoint, head, count, …, and
+//    `overwrite`, the noop write itself) from the QueryExecutionListener,
+//    which shows the eager work an entry body does before it returns
+//    its DataFrame; for streaming entries also
 //    the micro-batch count and `durationMs` summed per phase over the
 //    pass's replays (StreamingQueryListener);
 //  - after the last pass: the costliest stages and the noop write's
@@ -67,10 +71,15 @@ object Profile {
     // plan is the final one (`df.queryExecution` is a different,
     // never-executed QueryExecution and stays isFinalPlan=false)
     @volatile var written: Option[QueryExecution] = None
+    val execs = mutable.Map[String, Int]()
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
+                             durationNs: Long): Unit = {
+        if (collecting) execs.synchronized {
+          execs(funcName) = execs.getOrElse(funcName, 0) + 1
+        }
         if (qe.executedPlan.isInstanceOf[V2TableWriteExec]) written = Some(qe)
+      }
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     })
@@ -112,6 +121,7 @@ object Profile {
     def pass(name: String, it: Int): Unit = {
       stageWall.clear(); jobs = 0
       written = None
+      execs.synchronized(execs.clear())
       phaseMs.synchronized { phaseMs.clear(); batches = 0 }
       collecting = true
       val t0 = System.nanoTime()
@@ -126,7 +136,10 @@ object Profile {
       val shuf = stages.map(_._2._4).sum / 1e6
       val gc = stages.map(_._2._5).sum / 1e3
       val tasks = stages.map(_._2._6).sum
-      println(f"PROFILE $name it$it wall=$dt%.2fs jobs=$jobs stages=${stages.size} tasks=$tasks stageWallSum=$wallSum%.2fs taskRunSum=$runSum%.2fs shuffleMB=$shuf%.1f gc=$gc%.2fs")
+      val byAction = execs.synchronized(execs.toSeq.sortBy(_._1))
+      val execLine = s"execs=${byAction.map(_._2).sum} (" +
+        byAction.map { case (a, n) => s"$a=$n" }.mkString(" ") + ")"
+      println(f"PROFILE $name it$it wall=$dt%.2fs jobs=$jobs stages=${stages.size} tasks=$tasks stageWallSum=$wallSum%.2fs taskRunSum=$runSum%.2fs shuffleMB=$shuf%.1f gc=$gc%.2fs $execLine")
       phaseMs.synchronized {
         if (batches > 0)
           println(s"PROFILE $name it$it stream batches=$batches durationMs " +

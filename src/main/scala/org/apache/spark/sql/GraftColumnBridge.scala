@@ -22,4 +22,12 @@ object GraftColumnBridge {
   def toExpr(spark: SparkSession, c: Column): Expression =
     spark.asInstanceOf[classic.SparkSession].expression(c)
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** A native expression over Column arguments, built without a
+    * session: each argument stays a lazy `ColumnNodeExpression`, which
+    * the classic Dataset API unwraps when the Column enters a plan —
+    * for Dataset-API use only, never as a FunctionRegistry builder's
+    * output (see [[toExpr]]). */
+  def native(args: Column*)(build: Seq[Expression] => Expression): Column =
+    toColumn(build(args.map(classic.ExpressionUtils.expression)))
 }

@@ -35,6 +35,16 @@ class BandJoinPlanSpec extends SparkSpec {
       numHashes = 8, bands = 4, threshold = 0.5), "_band_a")
   }
 
+  test("minhash signature builders plan no window and no exchange (both hash families)") {
+    for (sigs <- Seq(
+        Dedup.minhashSignatures(docs, "doc_id", "text", 8, 3),
+        Dedup.minhashSignaturesPortable(docs, "doc_id", "text", 8, 3))) {
+      val plan = sigs.queryExecution.executedPlan.toString
+      assert(!plan.contains("Window") && !plan.contains("Exchange"),
+        s"signature plan shuffles:\n${plan.take(1200)}")
+    }
+  }
+
   test("simhash band join is keyed on the band column (both hash families)") {
     assertBandKeyed(Dedup.simhashPairs(docs, "doc_id", "text"), "_band_a")
     assertBandKeyed(Dedup.simhashPairsPortable(docs, "doc_id", "text"), "_band_a")

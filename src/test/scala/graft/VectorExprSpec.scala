@@ -146,12 +146,13 @@ class VectorExprSpec extends SparkSpec {
   test("DESCRIBE FUNCTION gives every native function its usage") {
     // a fresh session: no earlier register() call on the shared test
     // session can satisfy it, only the GraftSession extension that
-    // installs the vector and text tables
+    // installs the vector, text and MinHash tables
     val fresh = spark.newSession()
     val names = Seq("dot_f32", "cosine_f32", "quantize_i8", "cosine_i8",
       "lcs_len", "unicode_norm", "ngram_overlap_all",
       "chargram_overlap_all", "dup_ngram_chars", "top_ngram_stats",
-      "dup_token_counts", "summarize_doc", "winnow_fps", "multi_contains")
+      "dup_token_counts", "summarize_doc", "winnow_fps", "multi_contains",
+      "md5_60", "minhash_sig")
     for (name <- names) {
       val usage = fresh.sql(s"DESCRIBE FUNCTION $name")
         .collect().map(_.getString(0)).find(_.startsWith("Usage:"))
