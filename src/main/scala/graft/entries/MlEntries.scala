@@ -61,15 +61,15 @@ object MlEntries extends Entries {
   /** Amortized PQ artifacts, one per sf dir (the ivf_topk pattern):
     * real PQ deployments fit the codebook and encode the corpus ONCE,
     * then serve every query from the 8-byte code column. The packed
-    * frame is localCheckpoint-cut so `clearCache()` between bench
-    * queries cannot force a re-encode. */
+    * frame is cut (every run reads it) so `clearCache()` between runs
+    * cannot force a re-encode. */
   private def pq(s: SparkSession, dir: String)
       : (graft.ml.PQ.PQCodebook, DataFrame) =
     Fixtures.cached(s"pq:$dir") {
       val emb = T.embeddings(s, dir)
       val cb = graft.ml.PQ.fit(emb, "vec_id", "embedding", m = 8, k = 16)
-      val packed = graft.ml.PQ.encodePacked(emb, "embedding", cb)
-        .select("vec_id", "pq64").localCheckpoint()
+      val packed = graft.core.Cut.of(graft.ml.PQ.encodePacked(emb, "embedding", cb)
+        .select("vec_id", "pq64"), graft.core.Cut.Reread)
       (cb, packed)
     }
 

@@ -607,19 +607,16 @@ object Similarity {
                             centroids: DataFrame, cidCol: String,
                             cvecCol: String, totalRows: Long,
                             alpha: Double): DataFrame = {
-    // localCheckpoint, not lazy reuse: the temperature mixer evaluates
-    // its input once for the weight table and once for the selection
-    // window, and the assignment is the expensive n×K pass — cut it to
-    // the narrow (id, cluster, cos) table so it runs ONCE (measured
-    // 13.4 → ~7 s at 2M vectors). The checkpointed table is df-fold
-    // smaller than the embeddings, so this is the cache-friendly side
-    // of the cache-vs-recompute tradeoff (unlike the bm25 candidate
-    // table, which was larger than its inputs).
-    val assigned = assignToCentroids(df, idCol, vecCol,
+    // cut: the temperature mixer reads its input twice (weight table,
+    // selection window) through different exchanges, and the
+    // assignment is the expensive n×K pass — cut to the narrow
+    // (id, cluster, cos) table it runs ONCE (measured 13.4 → ~7 s at
+    // 2M vectors)
+    val assigned = graft.core.Cut.of(assignToCentroids(df, idCol, vecCol,
         centroids, cidCol, cvecCol)
       .withColumn("_one", lit(1L))
-      .withColumn("_src", concat(lit("c"), col("cluster")))
-      .localCheckpoint(eager = false)
+      .withColumn("_src", concat(lit("c"), col("cluster"))),
+      graft.core.Cut.Reread)
     graft.text.Quality.selectByTokenBudgetTemperature(assigned, idCol,
         "_src", "cos", "_one", totalRows, alpha)
       .select(col(idCol), col("cluster"), col("cos"))
@@ -722,7 +719,9 @@ object Similarity {
     }: _*)
     val bucketed = df.select(col(idCol).as("_id"), col(vecCol).as("_v"))
       .select(col("_id"), col("_v"), explode(tables).as("_bucket"))
-      .localCheckpoint(eager = false)
+    // no cut: the bucket rows are a row-local explode of the input
+    // (a few hyperplane dots per row), which each join leg recomputes
+    // in its own scan tasks rather than copying every vector to blocks
     // distinct per-leg attribute names so the bucket equi-join never
     // leans on Spark's self-join disambiguation heuristic
     val a = bucketed.select(col("_id").as("id_a"), col("_v").as("_va"),

@@ -376,23 +376,22 @@ object Multimodal {
                        allowWeak: Boolean = false): DataFrame =
     collapsedDropSet(hashes, bandedNearDupsWide(_, maxHamming, allowWeak))
 
-  /** The clone collapse shared by the drop-set kernels: pin the
-    * fingerprint table (it is consumed ~6× downstream — groupBy,
-    * exact-drop join, band x/y, verify a/b — and without a cut each
-    * consumer re-runs the upstream decode+hash pass over the MEDIA
-    * corpus; measured 5× the whole chain's wall at 400k images —
-    * 40 B/item, the Dedup.pairs256 localCheckpoint convention), drop
+  /** The clone collapse shared by the drop-set kernels: cut the
+    * fingerprint table (it is consumed ~6× downstream through
+    * different exchanges — groupBy, exact-drop join, band x/y, verify
+    * a/b — and without a cut each consumer re-runs the upstream
+    * decode+hash pass over the MEDIA corpus; measured 5× the whole
+    * chain's wall at 400k images — 40 B/item), drop
     * every non-min member of an identical-fingerprint group at
     * hamming 0, and hand ONE min-id representative per distinct
     * fingerprint to `pairKernel`. */
   private def collapsedDropSet(hashes: DataFrame,
       pairKernel: DataFrame => DataFrame): DataFrame = {
-    val ok = hashes.filter(col("ok"))
-      .select(col("media_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-      .localCheckpoint(eager = false)
+    val ok = graft.core.Cut.of(hashes.filter(col("ok"))
+      .select(col("media_id"), col("b0"), col("b1"), col("b2"), col("b3")),
+      graft.core.Cut.Reread)
     val reps = ok.groupBy("b0", "b1", "b2", "b3")
       .agg(min(col("media_id")).as("media_id"))
-      .localCheckpoint(eager = false)
     val exactDrops = ok.join(reps.select(col("media_id").as("_rep"),
         col("b0"), col("b1"), col("b2"), col("b3")),
         Seq("b0", "b1", "b2", "b3"))

@@ -2,6 +2,7 @@ package graft.rel
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Iterative graph analytics on edge DataFrames. The data-curation
   * use is host/URL ranking: Common-Crawl-style pipelines feed a
@@ -40,7 +41,7 @@ object Graph {
     * per iteration, so the L1 delta bottoms out near n·5e-10 and a
     * tighter tol can never fire.
     *
-    * Cluster safety: `localCheckpoint` stores blocks on executors
+    * Cluster safety: a [[graft.core.Cut]] stores blocks on executors
     * only — at real cluster scale an executor loss mid-loop kills the
     * query (unrecoverable lineage). Pass `reliableCheckpointDir` to
     * checkpoint the hoisted invariants once and the rank vector every
@@ -59,22 +60,19 @@ object Graph {
       s"checkpointEveryK must be >= 1, got $checkpointEveryK")
     val sc = edges.sparkSession.sparkContext
     reliableCheckpointDir.foreach(sc.setCheckpointDir)
-    // pin the invariants: reliable when a dir is given (survives
-    // executor loss), executor-local otherwise (zero IO)
-    // local pins with `eager = false`: NOT deferred under AQE —
-    // Dataset.checkpoint executes the adaptive plan at the call, so
-    // each cut below runs its shuffle stages as its own SQL execution
-    // while the entry body builds the plan, not folded into a later job
+    // pin the loop invariants, which every round re-reads: reliable
+    // when a dir is given (survives executor loss), executor-local
+    // otherwise (zero IO)
     def pin(df: DataFrame): DataFrame =
-      if (reliableCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint(eager = false)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      if (reliableCheckpointDir.isDefined) Cut.reliable(df)
+      else Cut.of(df, Cut.Reread)
+    // e and nodes are setup-only, read by the node count and the two
+    // pins, each its own action
+    val e = Cut.of(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(eager = false) // setup-only: unused once nodesF/eDeg exist
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(eager = false)
+      .distinct(), Cut.Reread)
+    val nodes = Cut.of(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct(), Cut.Reread)
     val n = nodes.count()
     require(n > 0, "empty graph: PageRank undefined")
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("_deg"))
@@ -114,8 +112,8 @@ object Graph {
       next =
         if (reliableCheckpointDir.isDefined && ((it + 1) % checkpointEveryK
             == 0 || it + 1 == iterations))
-          next.checkpoint()
-        else next.localCheckpoint(eager = tol > 0)
+          Cut.reliable(next)
+        else Cut.of(next, Cut.Lineage)
       if (tol > 0) {
         val delta = next
           .agg(coalesce(sum(abs(col("pr") - col("_prev"))), lit(0.0)))

@@ -23,21 +23,12 @@ object Market {
   def pairAssociations(df: DataFrame, basketCol: String, itemCol: String,
                        minPairs: Long = 1L,
                        maxBasketSize: Int = 1000): DataFrame = {
-    // localCheckpoint (eager): the distinct feeds the guard aggregate,
-    // the item counts AND both self-join sides — without
-    // materialization the dedup shuffle re-runs in every job (measured
-    // 5x on the bench entry). Checkpoint blocks, unlike persist'd
-    // ones, are reclaimed by the ContextCleaner as soon as the plan is
-    // garbage-collected, so library callers don't accumulate cache
-    // across calls (the guard head() right below needs the rows
-    // anyway, so eager costs no extra job). TRADE-OFF: localCheckpoint
-    // TRUNCATES lineage — on a cluster that loses an executor holding
-    // checkpoint blocks (decommission, dynamic allocation) the job
-    // fails instead of recomputing. This helper assumes static
-    // executors for its (short) lifetime; under dynamic allocation
-    // prefer reliable checkpointing or persist + explicit unpersist.
-    val items = df.select(col(basketCol).as("_b"), col(itemCol).as("_i"))
-      .distinct().localCheckpoint(true)
+    // cut: the distinct feeds the guard aggregate (its own action)
+    // and then the item counts and both self-join sides — without it
+    // the dedup shuffle re-runs in the guard's job and the query's
+    val items = graft.core.Cut.of(
+      df.select(col(basketCol).as("_b"), col(itemCol).as("_i")).distinct(),
+      graft.core.Cut.Reread)
     // ONE action yields both guards: basket count and the largest
     // basket (two separate counts were two extra jobs over the data)
     val guard = items.groupBy("_b").agg(count(lit(1)).as("_sz"))

@@ -236,11 +236,13 @@ object Spatial {
           else { rem = unresolved; i += 1 }
         }
       }
-      // one eager cut of the final result (its blocks are released by
-      // the ContextCleaner once the caller drops the plan), then the
-      // finally drops every per-level cache — a lazy return would
-      // leave the caches pinned until the caller materialized
-      parts.reduce(_.unionByName(_)).localCheckpoint()
+      // cut the final result and run its last stage (the count) while
+      // the per-level caches it reads are alive; then the finally drops
+      // them
+      val out = graft.core.Cut.of(parts.reduce(_.unionByName(_)),
+        graft.core.Cut.Reread)
+      out.count()
+      out
     } finally cached.foreach(_.unpersist(false))
   }
 

@@ -141,7 +141,12 @@ object Inferential {
     // is ONE groupBy + one k-row fold — no value-domain table, no
     // persist, no join-back. Tie sum Σ_v(cv³−cv) folds per-row as
     // Σ_rows(cv²−1).
-    val base = df.select(col(groupCol).as("g"), col(valueCol).as("v"))
+    // cut: the rank kernel reads its input three times through three
+    // different exchanges (measured at ×4: kruskal_wallis 0.63 → 0.83 s
+    // without it)
+    val base = graft.core.Cut.of(
+      df.select(col(groupCol).as("g"), col(valueCol).as("v")),
+      graft.core.Cut.Reread)
     val ranked = graft.ts.Windows
       .rank2Rows(base, Seq.empty, "v", "rank2", tieCountCol = Some("cv"))
       .filter(col("rank2").isNotNull)

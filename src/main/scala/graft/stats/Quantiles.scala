@@ -30,18 +30,16 @@ object Quantiles {
                               buckets: Int = 256): DataFrame = {
     require(ps.nonEmpty, "need at least one percentile")
     val g = partitionCols.map(col)
-    // lazy cut (raw row blocks, no separate blocking job — the first
-    // consumer materializes it): the count table feeds the rank
-    // kernel's three traversals AND `totals`. NOT Spread.scan
-    // (measured r19): repartitioning the raw rows before the groupBy
-    // regressed quantiles_exact 1.2→2.0 s min — the round-robin
-    // shuffle of every row costs more than the 3-task map-side
-    // hash-agg it parallelizes.
+    // no cut: the count table feeds the rank kernel's three
+    // traversals AND `totals`, all in one plan, so they share its one
+    // exchange. NOT Spread.scan (measured r19): repartitioning the raw
+    // rows before the groupBy regressed quantiles_exact 1.2→2.0 s min
+    // — the round-robin shuffle of every row costs more than the
+    // 3-task map-side hash-agg it parallelizes.
     val pv = df.filter(col(valueCol).isNotNull)
       .groupBy(g :+ col(valueCol).cast("double").as("_v"): _*)
-      .agg(count(lit(1)).as("_cv")).localCheckpoint(eager = false)
-    val ranked = graft.ts.Windows.rank2OfCounts(pv, partitionCols, buckets,
-      cut = false)
+      .agg(count(lit(1)).as("_cv"))
+    val ranked = graft.ts.Windows.rank2OfCounts(pv, partitionCols, buckets)
     val totals = pv.groupBy(g: _*).agg(sum("_cv").as("_n"))
     val targets = totals
       .select(g :+ explode(array(ps.map(lit): _*)).as("_p") :+ col("_n"): _*)

@@ -94,11 +94,10 @@ object Chunk {
     * Removal is every-occurrence (the conservative corpus-hygiene
     * variant; keep-one-copy is a policy layer above).
     *
-    * The tokenized corpus is cut once with an eager spread-parallel
-    * `localCheckpoint` (it feeds the span explode, the token explode
-    * AND the final length join — without a cut, the regex split would
-    * run three times over the full corpus); raw checkpoint blocks are
-    * freed by the ContextCleaner, so no unpersist bookkeeping.
+    * The tokenized corpus is cut once, spread-parallel (it feeds the
+    * span explode, the token explode AND the final length join —
+    * without a cut, the regex split would run three times over the
+    * full corpus); a cut needs no unpersist bookkeeping.
     *
     * Output: (idCol, text_deduped, n_kept, n_removed). */
   def maskDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
@@ -109,15 +108,11 @@ object Chunk {
     val toks = toksOf(col(textCol))
     // Spread.scan: the k-token rolling md5 is ~150 hashes/doc — a
     // 1-partition corpus scan serialized it on one task (r19 Profile).
-    // EAGER localCheckpoint (raw row blocks, ContextCleaner-freed)
-    // instead of persist+finally-unpersist: token-ARRAY frames are
-    // pathological for the columnar cache encode, and the three
-    // consumers otherwise race the materialization as concurrent AQE
-    // stages; the blocking job is now spread-parallel, and dropping
-    // the persist also drops the final whole-plan eager checkpoint
-    // that existed only to guard the unpersist.
-    val base = graft.core.Spread.scan(df).select(col(idCol), toks.as("_toks"),
-      size(toks).cast("long").as("_n")).localCheckpoint()
+    // a cut instead of persist+finally-unpersist: token-ARRAY frames
+    // are pathological for the columnar cache encode, and the cut's
+    // one job is spread-parallel
+    val base = graft.core.Cut.of(graft.core.Spread.scan(df).select(col(idCol),
+      toks.as("_toks"), size(toks).cast("long").as("_n")), graft.core.Cut.Reread)
     val starts = base.filter(col("_n") >= k)
       .select(col(idCol), explode(transform(
         sequence(lit(1), (col("_n") - k + 1).cast("int")),
@@ -251,8 +246,9 @@ object Chunk {
   /** Shared plan of the line-dedup variants; `removalFilter` turns the
     * (line, document-frequency) table into the lines to remove. The
     * exploded lines persist for the call (they feed the frequency
-    * count AND the anti-join) and the result cuts eagerly so the cache
-    * drops before returning. */
+    * count AND the anti-join) and the result is cut: every stage that
+    * reads the lines sits below a shuffle, so it runs at the cut,
+    * before the cache drops. */
   private def dedupLinesCore(df: DataFrame, idCol: String, textCol: String,
                              splitRe: String, joinSep: String,
                              removalFilter: DataFrame => DataFrame)
@@ -282,13 +278,13 @@ object Chunk {
       // lines at all (size(NULL) is NULL, coalesced to 0 removals)
       val nLines = coalesce(size(split(col(textCol), splitRe)), lit(0))
         .cast("long")
-      df.select(col(idCol), nLines.as("_ntot"))
+      graft.core.Cut.of(df.select(col(idCol), nLines.as("_ntot"))
         .join(reassembled, Seq(idCol), "left")
         .select(col(idCol),
           coalesce(col("text_clean"), lit("")).as("text_clean"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-          (col("_ntot") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
-        .localCheckpoint()
+          (col("_ntot") - coalesce(col("n_kept"), lit(0L))).as("n_removed")),
+        graft.core.Cut.Reread)
     } finally lines.unpersist(false)
   }
 }

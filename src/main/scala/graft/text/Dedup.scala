@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 import graft.functions.MinHashExpressions
 
 /** Document deduplication — exact, MinHash/LSH, SimHash, n-gram
@@ -147,15 +148,11 @@ object Dedup {
                            threshold: Double): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPer = numHashes / bands
-    // localCheckpoint: both sides of the self-join reuse the computed
-    // signatures instead of re-hashing the corpus; unlike persist()
-    // nothing stays pinned in the CacheManager after the caller drops
-    // the returned plan (ContextCleaner frees checkpoint blocks).
-    // `eager = false` does not defer the work under AQE:
-    // Dataset.checkpoint executes the adaptive plan at the call, so
-    // every shuffle stage below the cut runs here, at build time
-    val sig = sigDf.localCheckpoint(eager = false)
-    val banded = sig.select(col("_id"), col("_sig"),
+    // no cut: the signatures are row-local (one native expression per
+    // row), so each side of the self-join recomputes them in its own
+    // scan tasks rather than copying every signature to blocks
+    // (measured at ×4: drop_near_dups no slower without it)
+    val banded = sigDf.select(col("_id"), col("_sig"),
       explode(bandStructs(col("_sig"), bands, rowsPer)).as("_band"))
     // distinct attribute names per leg: the join key must never rely on
     // Spark's self-join disambiguation heuristic — if both sides ever
@@ -262,8 +259,7 @@ object Dedup {
     * VERIFIED band but not the guaranteed candidate recall. */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            maxHamming: Int = 8): DataFrame = {
-    val sk = simhashesPortable(df, idCol, textCol).localCheckpoint(eager = false)
-    val banded = sk.select(col("_id"), col("_sh"),
+    val banded = simhashesPortable(df, idCol, textCol).select(col("_id"), col("_sh"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"),
           shiftright(col("_sh"), b * 15).bitwiseAND(0x7FFFL).as("bh"))
@@ -331,16 +327,14 @@ object Dedup {
     * engine can brute-force. */
   def simhashPairsPortableWide(df: DataFrame, idCol: String, textCol: String,
                                maxHamming: Int = 8): DataFrame =
-    wideBandPairs(simhashesPortable(df, idCol, textCol).localCheckpoint(eager = false),
-      60, maxHamming)
+    wideBandPairs(simhashesPortable(df, idCol, textCol), 60, maxHamming)
 
   /** [[simhashPairs]]'s scale path past the 16-bit band birthday
     * knee: the xxhash64 64-bit sketch through [[wideBandPairs]]
     * (2×32-bit halves, radius-1 balls). Complete for Hamming ≤ 3. */
   def simhashPairsWide(df: DataFrame, idCol: String, textCol: String,
                        maxHamming: Int = 8): DataFrame =
-    wideBandPairs(simhashes(df, idCol, textCol).localCheckpoint(eager = false),
-      64, maxHamming)
+    wideBandPairs(simhashes(df, idCol, textCol), 64, maxHamming)
 
   /** 256-bit SimHash — the text sibling of
     * [[graft.mm.Multimodal.imageDHash256]], retiring even the WIDE
@@ -419,7 +413,7 @@ object Dedup {
 
   private def pairs256(sigs: DataFrame, maxHamming: Int): DataFrame =
     graft.mm.Multimodal.bandedNearDups(
-      sigs.localCheckpoint(eager = false).select(col("_id").as("media_id"),
+      sigs.select(col("_id").as("media_id"),
         lit(true).as("ok"), col("_s0").as("b0"), col("_s1").as("b1"),
         col("_s2").as("b2"), col("_s3").as("b3")),
       maxHamming, allowWeak = maxHamming > 3)
@@ -429,8 +423,7 @@ object Dedup {
     * <= maxHamming. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 8): DataFrame = {
-    val sk = simhashes(df, idCol, textCol).localCheckpoint(eager = false)
-    val banded = sk.select(col("_id"), col("_sh"),
+    val banded = simhashes(df, idCol, textCol).select(col("_id"), col("_sh"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"),
           shiftright(col("_sh"), b * 16).bitwiseAND(0xFFFFL).as("bh"))
@@ -459,8 +452,8 @@ object Dedup {
     * neighbors' labels — two shuffles (join + groupBy), both keyed, no
     * cartesian. Converges in O(component diameter) rounds; dedup
     * graphs are near-cliques (diameter ≤ ~3), so the loop is short
-    * regardless of corpus size. `localCheckpoint` cuts lineage so plan
-    * depth stays constant across iterations; the convergence probe is
+    * regardless of corpus size. A [[graft.core.Cut]] per round keeps
+    * plan depth constant across iterations; the convergence probe is
     * a count aggregate (O(1) to the driver). At 1000-executor scale
     * the same loop holds — state is one (id, comp) row per node,
     * edges are reused from cache, and per-round cost is bounded by
@@ -485,11 +478,12 @@ object Dedup {
     }
     val e0 = pairs.select(checkedId(col(aCol)).as("src"),
       checkedId(col(bCol)).as("dst"))
-    val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(eager = false)
+    // cut: every round's cut and convergence probe re-read the edges
+    val edges = Cut.of(
+      e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
+      Cut.Reread)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
-      .localCheckpoint(eager = false)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -501,19 +495,17 @@ object Dedup {
       // linearly over the materialized blocks instead of re-joining
       // next against labels (the r18 check paid a full two-sided
       // shuffle join per iteration just to detect the fixed point)
-      val next0 = labels.join(prop, labels("id") === prop("_nid"), "left")
+      val next0 = Cut.of(labels.join(prop, labels("id") === prop("_nid"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("_ncomp"), col("comp"))).as("comp"),
           (col("_ncomp").isNotNull && col("_ncomp") < col("comp"))
-            .as("_chg"))
-        .localCheckpoint(eager = false)
+            .as("_chg")), Cut.Lineage)
       val changed = next0
         .agg(coalesce(max(col("_chg")), lit(false))).head().getBoolean(0)
       labels = next0.select(col("id"), col("comp"))
       converged = !changed
       iter += 1
     }
-    edges.unpersist()
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: not converged after $maxIter iterations — " +
@@ -543,7 +535,7 @@ object Dedup {
     * the fixed point is a star forest rooted at component minima.
     *
     * Edges are kept canonical (u > v) and distinct between rounds;
-    * `localCheckpoint` cuts lineage per round, and convergence is an
+    * a [[graft.core.Cut]] per round bounds lineage, and convergence is an
     * O(1)-to-driver check (edge count equal AND symmetric difference
     * empty). Output matches [[connectedComponents]] exactly:
     * (id, comp) for every id in any pair, comp = min reachable id —
@@ -562,14 +554,15 @@ object Dedup {
     val ids = pairs
       .select(explode(array(checkedId(col(aCol)), checkedId(col(bCol))))
         .as("id"))
-      .distinct().localCheckpoint(eager = false)
-    // canonical edge invariant maintained by both stars: u > v
-    var edges = pairs
+      .distinct()
+    // canonical edge invariant maintained by both stars: u > v; the
+    // round-0 edge set is cut like every round's
+    var edges = Cut.of(pairs
       .select(checkedId(col(aCol)).as("_a"), checkedId(col(bCol)).as("_b"))
       .filter(col("_a") =!= col("_b"))
       .select(greatest(col("_a"), col("_b")).as("u"),
         least(col("_a"), col("_b")).as("v"))
-      .distinct().localCheckpoint(eager = false)
+      .distinct(), Cut.Lineage)
 
     // large-star over the undirected view: m(u) = min(Γ(u) ∪ {u});
     // emit (v, m(u)) for every STRICTLY LARGER neighbor v. m ≤ u < v
@@ -598,11 +591,10 @@ object Dedup {
     var converged = edges.isEmpty
     var iter = 0
     while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
+      val next = Cut.of(smallStar(largeStar(edges)), Cut.Lineage)
       val nextCount = next.count()
       converged = nextCount == edges.count() &&
         next.except(edges).limit(1).isEmpty
-      edges.unpersist()
       edges = next
       iter += 1
     }
@@ -649,12 +641,11 @@ object Dedup {
       // banding + CC, and the cluster min over reps IS the cluster
       // min over members. Drop set identical to the uncollapsed path
       // (asserted in ActivationsSpec); the collapse costs one linear
-      // window shuffle keyed by the signature, which the cut below
-      // runs at build time (under AQE `eager = false` still executes
-      // every shuffle stage at the localCheckpoint call).
+      // window shuffle keyed by the signature. Cut: the components'
+      // own cuts read it, and so does the final plan's drop set.
       val w = Window.partitionBy(col("_sig"))
-      val withRep = sigs.withColumn("_rep", min(col("_id")).over(w))
-        .localCheckpoint(eager = false)
+      val withRep = Cut.of(sigs.withColumn("_rep", min(col("_id")).over(w)),
+        Cut.Reread)
       val repSigs = withRep.filter(col("_id") === col("_rep"))
         .select(col("_id"), col("_sig"))
       val pairs = minhashPairsFromSigs(repSigs, numHashes, bands, threshold)
@@ -678,7 +669,9 @@ object Dedup {
     * shuffle is proportional to shingle postings, not n². */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val sh = shinglesExploded(df, idCol, textCol, k).localCheckpoint(eager = false)
+    // no cut: both join sides and the sizes read the shingle window's
+    // one exchange, which adaptive execution reuses
+    val sh = shinglesExploded(df, idCol, textCol, k)
     val a = sh.select(col("_id").as("id_a"), col("_sh"))
     val b = sh.select(col("_id").as("id_b"), col("_sh"))
     val inter = a.join(b, Seq("_sh")).filter(col("id_a") < col("id_b"))

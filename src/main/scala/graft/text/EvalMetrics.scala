@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Corpus-scale text-generation evaluation metrics — BLEU (Papineni
   * et al. 2002) and ROUGE-N recall (Lin 2004) re-expressed as pure
@@ -34,15 +35,14 @@ object EvalMetrics {
         i => array_join(slice(toks, i, lit(n)), " ")))
   }
 
-  /** (doc, _t token-array) projection of one side, MATERIALIZED
-    * (`localCheckpoint`) because every order re-reads the arrays — at
-    * maxN = 4 the tokenize regex would otherwise run four times per
-    * side (the scoreByStupidBackoff rule). */
+  /** (doc, _t token-array) projection of one side, cut because every
+    * order re-reads the arrays through its own exchange — at maxN = 4
+    * the tokenize regex would otherwise run four times per side (the
+    * scoreByStupidBackoff rule). */
   private def tokSide(df: DataFrame, idCol: String,
                       textCol: String): DataFrame =
-    df.select(col(idCol).as("doc"),
-        TextFns.tokens(lower(col(textCol))).as("_t"))
-      .localCheckpoint(eager = false)
+    Cut.of(df.select(col(idCol).as("doc"),
+        TextFns.tokens(lower(col(textCol))).as("_t")), Cut.Reread)
 
   /** Per-(doc, gram) counts of order-n grams over a [[tokSide]]. */
   private def gramCounts(toks: DataFrame, n: Int): DataFrame =
@@ -226,8 +226,8 @@ object EvalMetrics {
     *
     * `kernel = "local"` (default): ONE doc-keyed full join + the
     * native overlap expression, then the tiny per-doc triple table
-    * (3·bleuMaxN longs per doc) is checkpointed and serves both
-    * faces. `kernel = "shuffle"`: the tagged relational kernel with
+    * (3·bleuMaxN longs per doc) is cut and serves both faces, which
+    * the caller reads as separate actions. `kernel = "shuffle"`: the tagged relational kernel with
     * the (doc, n) sufficient-statistics table shared instead.
     * Requires rougeMaxN <= bleuMaxN. */
   def evalSuite(cands: DataFrame, refs: DataFrame, idCol: String,
@@ -238,8 +238,9 @@ object EvalMetrics {
       s"need 1 <= rougeMaxN <= bleuMaxN, got $rougeMaxN > $bleuMaxN")
     requireKernel(kernel)
     if (kernel == "local") {
-      val ov = localOverlap(cands, refs, idCol, candCol, refCol, bleuMaxN)
-        .localCheckpoint(eager = false)
+      val ov = Cut.of(
+        localOverlap(cands, refs, idCol, candCol, refCol, bleuMaxN),
+        Cut.Reread)
       val rouge = ov.filter(col("_cl").isNotNull)
         .select(col("doc") +: (1 to rougeMaxN).map { n =>
           val m = element_at(col("_ov"), 3 * n - 2)
@@ -259,8 +260,8 @@ object EvalMetrics {
     } else {
       val cToks = tokSide(cands, idCol, candCol)
       val rToks = tokSide(refs, idCol, refCol)
-      val ov = overlapAllOrders(cToks, rToks, bleuMaxN, hashGrams)
-        .localCheckpoint(eager = false)
+      val ov = Cut.of(overlapAllOrders(cToks, rToks, bleuMaxN, hashGrams),
+        Cut.Reread)
       // ROUGE face: the n <= rougeMaxN slice of the shared table
       val spine = cToks.select(col("doc")).distinct()
       val perOrder = ov.filter(col("n") <= rougeMaxN)
@@ -353,13 +354,12 @@ object EvalMetrics {
   }
 
   /** (doc, _s whitespace-stripped lowered string) projection of one
-    * side, materialized once for all orders (the [[tokSide]] rule —
-    * at maxN = 6 the regex strip would otherwise run six times). */
+    * side, cut once for all orders (the [[tokSide]] rule — at
+    * maxN = 6 the regex strip would otherwise run six times). */
   private def charSide(df: DataFrame, idCol: String,
                        textCol: String): DataFrame =
-    df.select(col(idCol).as("doc"),
-        regexp_replace(lower(col(textCol)), "\\s+", "").as("_s"))
-      .localCheckpoint(eager = false)
+    Cut.of(df.select(col(idCol).as("doc"),
+        regexp_replace(lower(col(textCol)), "\\s+", "").as("_s")), Cut.Reread)
 
   /** Per-document chrF (Popović 2015): character n-gram F-β score,
     * the tokenization-free eval metric (no tokenizer to disagree

@@ -75,18 +75,17 @@ object Keywords {
         .select(col("doc"), col("_s.sidx").as("sidx"),
           col("_s.summary").as("summary"), col("_s.score").as("score"))
     }
-    // sent feeds four consumers (tf, ns, and the final join) — persist
-    // so the regex sentence split of the corpus runs once, not four
-    // times (the split dominates per-row cost on long documents).
+    // sent feeds tf, ns and the final join of one plan, so the regex
+    // sentence split runs once per reading exchange; this kernel is
+    // the single-giant-doc escape hatch, and no measured query pays
+    // for a cut here
     val sent = df.select(col(idCol).as("doc"),
         posexplode(split(col(textCol), "[.!?]\\s+")).as(Seq("sidx", "sent")))
       .filter(length(trim(col("sent"))) > 0)
-      .localCheckpoint(eager = false)
     val toks = sent.select(col("doc"), col("sidx"),
         explode(TextFns.tokens(lower(col("sent")))).as("token"))
       .filter(length(col("token")) >= minTokenLen)
     val tf = toks.groupBy("doc", "sidx", "token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
     // tf is unique per (doc, sidx, token), so the sentence-frequency of
     // a token is just its row count in tf — no second pass over the raw
     // token stream and no distinct() shuffle of it.

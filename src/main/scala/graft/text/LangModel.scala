@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Unigram language-model scoring for corpus quality filtering — the
   * CCNet/KenLM-style "perplexity filter" of LLM data pipelines
@@ -44,25 +45,24 @@ object LangModel {
   def unigramVocab(corpus: DataFrame, textCol: String,
                    alpha: Double = 0.5): DataFrame = {
     require(alpha > 0, s"alpha must be > 0, got $alpha")
-    // cut once: the counts feed both the totals and the projection.
     // NOT Spread.scan: measured r19 — spreading the tokenize made the
-    // whole LM ladder SLOWER (sb_ppl 2.2→2.7 s min even with an eager
-    // cut): the tokenize is ~0.5 s serial here, and the repartition +
-    // token-array checkpoint blocks + concurrent consumer stages
-    // racing the lazy materialization cost more than the parallelism
-    // buys. quality_clf's featureRows (md5-bound, single consumer, no
-    // checkpoint) is the shape where Spread wins.
-    val counts = corpus
+    // whole LM ladder SLOWER (sb_ppl 2.2→2.7 s min): the tokenize is
+    // ~0.5 s serial here, and the repartition costs more than the
+    // parallelism buys. quality_clf's featureRows (md5-bound, single
+    // consumer) is the shape where Spread wins.
+    val tokens = corpus
       .select(explode(TextFns.tokens(lower(col(textCol)))).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
     // an empty model must fail HERE, loudly: with zero rows the
     // totals are NULL, every log-prob is NULL, and downstream
     // coalescing would silently score every document as the neutral
-    // ppl = 1 — a quality filter that filters nothing
-    require(!counts.isEmpty,
+    // ppl = 1 — a quality filter that filters nothing. The guard reads
+    // the token stream (a limit-1 scan), not the count shuffle.
+    require(!tokens.isEmpty,
       "reference corpus has no tokens: refusing to train an empty " +
         "unigram model (every document would score ppl = 1)")
+    // no cut: the totals and the projection read one count exchange,
+    // which adaptive execution reuses
+    val counts = countsOf(tokens, "tf", "token")
     val totals = counts.agg(sum("tf").as("_N"),
       count(lit(1)).as("_V"))
     counts.crossJoin(broadcast(totals))
@@ -92,9 +92,9 @@ object LangModel {
                      idCol: String, textCol: String,
                      alpha: Double = 0.5): DataFrame = {
     // the single training pipeline (one corpus explode, one groupBy,
-    // vocab cut once, non-empty guard) lives in unigramVocab; the
-    // totals re-derive from the cached vocab — a vocab-sized
-    // aggregate, not a second corpus pass
+    // non-empty guard) lives in unigramVocab; the totals re-derive
+    // from the vocab — a vocab-sized aggregate over the reused count
+    // exchange, not a second corpus pass
     val vocab = unigramVocab(refCorpus, textCol, alpha)
       .select(col("token"), col("tf").as("_ctf"), col("logp").as("_lp"))
     val totals = vocab.agg(sum("_ctf").as("_N"), count(lit(1)).as("_V"))
@@ -124,7 +124,7 @@ object LangModel {
     *
     * Plan shape: bigrams are a pure array expression (no window — a
     * `transform(sequence)` over adjacent token pairs), counted in ONE
-    * groupBy; context counts re-aggregate the cached bigram
+    * groupBy; context counts re-aggregate the bigram
     * table, never the corpus; scoring pre-aggregates to
     * (doc, w₁, w₂, tf) then takes two keyed equi-joins.
     *
@@ -152,20 +152,20 @@ object LangModel {
     finishScores(docs, idCol, scored, "n_bigrams")
   }
 
-  /** Distinct-bigram counts of the reference corpus, cut once (lazy
-    * `localCheckpoint` — persist() measured 1.6× slower on kn3_ppl:
+  /** Distinct-bigram counts of the reference corpus, cut once (a cut,
+    * not persist(): persist() measured 1.6× slower on kn3_ppl —
     * token-array frames are pathological for the columnar cache)
-    * because every derived table — context totals,
-    * continuation counts, type totals — re-aggregates it rather than
-    * re-reading the corpus. Loud non-empty guard: see unigramVocab. */
+    * because every derived table — context totals, continuation
+    * counts, type totals — re-aggregates it, each through its own
+    * exchange (measured: without the cut kn_ppl at ×4 ran 1.02 →
+    * 1.21–1.45 s). Loud non-empty guard: see unigramVocab. */
   private def refBigramCounts(refCorpus: DataFrame,
                               textCol: String): DataFrame = {
-    val refBg = refCorpus
+    val refBg = Cut.of(refCorpus
       .select(TextFns.tokens(lower(col(textCol))).as("_toks"))
       .select(explode(bigramsOf(col("_toks"))).as("_bg"))
       .select(col("_bg.w1").as("w1"), col("_bg.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("_c12"))
-      .localCheckpoint(eager = false)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("_c12")), Cut.Reread)
     require(!refBg.isEmpty,
       "reference corpus has no bigrams: refusing to train an empty " +
         "bigram model (every document would score ppl = 1)")
@@ -207,7 +207,7 @@ object LangModel {
     *
     * Plan shape is scoreByBigram's: one corpus explode into ONE
     * bigram groupBy; context totals `(c(w₁·), N₁₊(w₁·))` and
-    * continuation counts `N₁₊(·w₂)` re-aggregate the cached
+    * continuation counts `N₁₊(·w₂)` re-aggregate the
     * bigram table; type totals ride as a 1-row broadcast; scoring
     * pre-aggregates to (doc, w₁, w₂, tf) then takes three keyed
     * equi-joins — AQE broadcasts the model tables when small, shuffles
@@ -253,7 +253,7 @@ object LangModel {
   }
 
   /** Fit-time Kneser–Ney artifact for the stream deploy: the three
-    * model tables (each a re-aggregation of the one cached
+    * model tables (each a re-aggregation of the one cut
     * bigram-count pass) plus the two type totals collected once at fit
     * time — the [[graft.stream.Streaming]] deploy joins the tables
     * stream-static and carries the totals as literals, the
@@ -297,7 +297,7 @@ object LangModel {
     * context backs off to P₂ alone (λ₃ = 1); an unseen w₂ backs off
     * to P₁ (λ₂ = 1) — every log stays finite.
     *
-    * Every model table is a RE-AGGREGATION of the one cached
+    * Every model table is a RE-AGGREGATION of the one
     * trigram count table (the count-of-count statistics KN needs are
     * exactly one groupBy each), and scoring is six keyed equi-joins
     * on the pre-aggregated (doc, w₁, w₂, w₃, tf) table — the
@@ -313,11 +313,7 @@ object LangModel {
     require(discount > 0 && discount < 1,
       s"discount must be in (0, 1), got $discount")
     require(alpha > 0, s"alpha must be > 0, got $alpha")
-    val (_, _, tri0) = refNgramCounts(refCorpus, textCol)
-    val tri = tri0.localCheckpoint(eager = false)
-    require(!tri.isEmpty,
-      "reference corpus has no trigrams: refusing to train an empty " +
-        "KN3 model (every document would score ppl = 1)")
+    val tri = refTrigramCounts(refCorpus, textCol)
     // each tri row is one distinct (w1,w2,w3) TYPE, so per-key
     // count(*) aggregates ARE the N₁₊ statistics
     val ctx12 = tri.groupBy("w1", "w2")
@@ -373,7 +369,7 @@ object LangModel {
   }
 
   /** Fit-time order-3 KN artifact for the stream deploy: the five
-    * model tables (each a re-aggregation of the one cached
+    * model tables (each a re-aggregation of the one cut
     * trigram type table) plus the two totals collected once — the
     * KnModel/SbModel convention. */
   final case class Kn3Model(tri: DataFrame, ctx12: DataFrame,
@@ -390,14 +386,9 @@ object LangModel {
     require(discount > 0 && discount < 1,
       s"discount must be in (0, 1), got $discount")
     require(alpha > 0, s"alpha must be > 0, got $alpha")
-    val (_, _, tri0) = refNgramCounts(refCorpus, textCol)
-    val tri = tri0.localCheckpoint(eager = false)
-    require(!tri.isEmpty,
-      "reference corpus has no trigrams: refusing to train an empty " +
-        "KN3 model (every document would score ppl = 1)")
+    val tri = refTrigramCounts(refCorpus, textCol)
     val ctx12 = tri.groupBy("w1", "w2")
       .agg(sum("_c123").as("_c12d"), count(lit(1)).as("_n1f12"))
-    // bgCont not cut — see scoreByKneserNey3 (measured r19)
     val bgCont = tri.groupBy("w2", "w3").agg(count(lit(1)).as("_n1b23"))
     val ctx2 = bgCont.groupBy("w2")
       .agg(sum("_n1b23").as("_nmid"), count(lit(1)).as("_n1f2"))
@@ -428,7 +419,7 @@ object LangModel {
     * `mean_logprob`/`ppl` keep their ladder names so banding code is
     * model-agnostic, but read them as mean log-score and its exp.
     *
-    * Plan shape: the reference tokenizes ONCE into a cached
+    * Plan shape: the reference tokenizes ONCE into a cut
     * token-array table (at cluster scale this is the "write the
     * tokenized corpus to a temp table" step every n-gram pipeline
     * has); the three count tables are then three explode→groupBy
@@ -491,43 +482,67 @@ object LangModel {
     finishScores(docs, idCol, scored, "n_trigrams")
   }
 
+  /** Row counts per distinct `keys` of an n-gram stream, named `out`.
+    * The keys are declared not null: [[TextFns.tokens]] never yields a
+    * null token, so the filter drops nothing, but it makes redundant
+    * the not-null filters Catalyst infers from each consumer's join
+    * keys and pushes below the count exchange. Every consumer then
+    * plans the identical exchange, and adaptive execution reuses it
+    * instead of running one count shuffle per key set. */
+  private def countsOf(grams: DataFrame, out: String,
+                       keys: String*): DataFrame =
+    grams.filter(keys.map(k => col(k).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as(out))
+
+  /** The reference corpus's non-empty token arrays, one `_toks` row
+    * per document. */
+  private def refTokens(refCorpus: DataFrame, textCol: String): DataFrame =
+    refCorpus.select(TextFns.tokens(lower(col(textCol))).as("_toks"))
+      .filter(size(col("_toks")) > 0)
+
+  /** Distinct-trigram counts (w1, w2, w3, _c123) of the reference
+    * corpus, cut: the KN3 model re-aggregates them through several
+    * different exchanges (measured: without the cut kn3_ppl ran every
+    * trigram shuffle twice, shuffleMB 4.2 → 5.9 at ×4, and was no
+    * faster). The guard reads the token arrays (a limit-1 scan), not
+    * the count shuffle. */
+  private def refTrigramCounts(refCorpus: DataFrame,
+                               textCol: String): DataFrame = {
+    val toks = refTokens(refCorpus, textCol)
+    require(!toks.filter(size(col("_toks")) >= 3).isEmpty,
+      "reference corpus has no trigrams: refusing to train an empty " +
+        "KN3 model (every document would score ppl = 1)")
+    Cut.of(trigramCounts(toks), Cut.Reread)
+  }
+
+  /** Distinct-trigram counts (w1, w2, w3, _c123) of a [[refTokens]]
+    * table. */
+  private def trigramCounts(toks: DataFrame): DataFrame =
+    countsOf(toks.select(explode(trigramsOf(col("_toks"))).as("_tg"))
+      .select(col("_tg.w1").as("w1"), col("_tg.w2").as("w2"),
+        col("_tg.w3").as("w3")), "_c123", "w1", "w2", "w3")
+
   /** The three n-gram count tables of the stupid-backoff model: one
-    * tokenize pass cut once (lazy `localCheckpoint`; see
-    * refBigramCounts for the measured persist() revert), then uni/bi/tri
-    * re-aggregate the ARRAYS — never re-reading raw text. Loud
-    * non-empty guard: see unigramVocab. */
+    * tokenize pass cut once (a cut, not persist(): persist() measured
+    * 1.6× slower on kn3_ppl — token-array frames are pathological for
+    * the columnar cache), then uni/bi/tri re-aggregate the ARRAYS —
+    * never re-reading raw text. The three explodes feed three
+    * different exchanges, so without the cut each would re-tokenize
+    * the scan. uni and bi are not cut: the scoring joins read uni
+    * three times and bi twice inside one plan, and adaptive execution
+    * plans each repeat as a `ReusedExchange` of the one count shuffle
+    * (see [[countsOf]]; `ExchangeReuseSpec` asserts it). Loud non-empty
+    * guard: see unigramVocab. */
   private def refNgramCounts(refCorpus: DataFrame, textCol: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val refToks = refCorpus
-      .select(TextFns.tokens(lower(col(textCol))).as("_toks"))
-      .filter(size(col("_toks")) > 0)
-      .localCheckpoint(eager = false)
+    val refToks = Cut.of(refTokens(refCorpus, textCol), Cut.Reread)
     require(!refToks.isEmpty,
       "reference corpus has no tokens: refusing to train an empty " +
         "n-gram model (every document would score ppl = 1)")
-    // uni and bi are lazily cut too: stupid-backoff's scoring joins
-    // consume uni THREE times (two join slots + the token totals) and
-    // bi twice — without a cut each consumer re-explodes the token
-    // arrays and re-shuffles (the r19 executed-plan audit showed the
-    // whole explode→groupBy subtree duplicated per slot). Measured
-    // flat at sf0.1 (the duplicates ran as concurrent broadcast-build
-    // futures on idle cores; sb_ppl 1.87 vs 1.90 min isolated), but at
-    // corpus scale — where a web-scale vocabulary stops being
-    // broadcastable and each duplicate becomes its own full shuffle —
-    // the cut is the only sane plan. A lazy checkpoint that is never
-    // consumed (kn3 uses only tri) runs no job and costs nothing.
-    val uni = refToks.select(explode(col("_toks")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("_cu"))
-      .localCheckpoint(eager = false)
-    val bi = refToks.select(explode(bigramsOf(col("_toks"))).as("_bg"))
-      .select(col("_bg.w1").as("w1"), col("_bg.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("_cb"))
-      .localCheckpoint(eager = false)
-    val tri = refToks.select(explode(trigramsOf(col("_toks"))).as("_tg"))
-      .select(col("_tg.w1").as("w1"), col("_tg.w2").as("w2"),
-        col("_tg.w3").as("w3"))
-      .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("_c123"))
-    (uni, bi, tri)
+    val uni = countsOf(refToks.select(explode(col("_toks")).as("w")), "_cu", "w")
+    val bi = countsOf(refToks.select(explode(bigramsOf(col("_toks"))).as("_bg"))
+      .select(col("_bg.w1").as("w1"), col("_bg.w2").as("w2")), "_cb", "w1", "w2")
+    (uni, bi, trigramCounts(refToks))
   }
 
   /** Fit-time Stupid Backoff artifact for the stream deploy: the three

@@ -66,21 +66,16 @@ object Retrieval {
       require(k1 >= 0 && b >= 0 && b <= 1,
         s"need k1 >= 0 and 0 <= b <= 1, got k1=$k1 b=$b")
     }
-    // one corpus pass: per-(doc, token) term frequencies
-    val docTf = docs.select(col(docId).as("doc"),
+    // one corpus pass: per-(doc, token) term frequencies, cut: df, dl
+    // and the candidate join each read it through a different exchange
+    // (their inferred join filters differ), so without the cut the
+    // corpus explode+groupBy ran twice (measured at ×4: shuffleMB
+    // 1.0 → 2.7, bm25_topk 0.95 → 1.32 s). A cut, not persist():
+    // persist() pinned one columnar copy per call for the session
+    // lifetime and regressed the bm25 family 18–40% in r18.
+    val docTf = graft.core.Cut.of(docs.select(col(docId).as("doc"),
         explode(TextFns.tokens(lower(col(textCol)))).as("token"))
-      .groupBy("doc", "token").agg(count(lit(1)).as("tf"))
-      // cut once: feeds df, dl AND the candidate join — without it the
-      // corpus explode+groupBy re-runs three times. LAZY localCheckpoint
-      // (not persist): it materializes inside the first consumer's job
-      // like a cache, but its blocks are freed by the ContextCleaner
-      // when the DataFrame is dropped — persist() pinned one columnar
-      // (doc,token,tf) copy per invocation for the session lifetime
-      // (nothing here can unpersist: the returned rankings still read
-      // it), which regressed the whole bm25 family 18–40% in the r18
-      // driver bench and pins corpus-scale memory in any long-lived
-      // application.
-      .localCheckpoint(eager = false)
+      .groupBy("doc", "token").agg(count(lit(1)).as("tf")), graft.core.Cut.Reread)
     // document lengths and corpus scalars. N counts DISTINCT doc ids —
     // rows sharing a doc id merge their term frequencies into one
     // logical document and count once toward N (zero-token documents
@@ -129,9 +124,12 @@ object Retrieval {
     // scale: at 40× corpus the checkpoint write + K re-reads cost more
     // than recomputing the whole retrieval per parameterization
     // (measured bisect: one-parameter bm25 stayed linear, the
-    // multi-parameter rrf fusion went super-linear). What IS cut for
-    // reuse is the grouped scored table — per-(query, doc),
-    // k-independent, df-fold smaller.
+    // multi-parameter rrf fusion went super-linear). What IS cut is
+    // the grouped scored table — per-(query, doc), k-independent,
+    // df-fold smaller: each of the K top-k tails reads one score
+    // column, so Catalyst prunes the aggregate differently per tail,
+    // no exchange matches, and without the cut a fused caller runs the
+    // whole retrieval K times (rrf_fuse: 23 exchanges).
     val aggs = params.zipWithIndex.map { case ((k1, b), i) =>
       val contrib = idf * (col("tf").cast("double") * lit(k1 + 1.0)) /
         (col("tf").cast("double") +
@@ -140,11 +138,9 @@ object Retrieval {
       round(sum(contrib), 6).as(s"_score$i")
     }
     val grouped = cand.groupBy("query", "doc").agg(aggs.head, aggs.tail: _*)
-    // same lifecycle reasoning as docTf: lazy checkpoint, not persist —
-    // the K top-k tails all read this cut, and the caller keeps the
-    // returned frames alive for as long as it needs them
     val scoredAll =
-      if (params.size > 1) grouped.localCheckpoint(eager = false) else grouped
+      if (params.size > 1) graft.core.Cut.of(grouped, graft.core.Cut.Reread)
+      else grouped
     params.indices.map { i =>
       graft.rel.Sampling.topKPerGroup(
           scoredAll.select(col("query"), col("doc"),
@@ -167,7 +163,6 @@ object Retrieval {
     val docTf = docs.select(col(docId).as("doc"),
         explode(TextFns.tokens(lower(col(textCol)))).as("token"))
       .groupBy("doc", "token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
     val nDocs = docs.select(col(docId).as("doc")).distinct().count()
     require(nDocs > 0, "empty corpus: BM25 idf is undefined at N = 0")
     val dl = docTf.groupBy("doc").agg(sum("tf").as("dl"))

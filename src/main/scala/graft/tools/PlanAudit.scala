@@ -34,7 +34,7 @@ object PlanAudit {
     graft.SparkEntry.files.flatMap(_.globalWindowAllowed).toSet
 
   /** Count the exchanges a plan EXECUTES, not the ones its printout
-    * mentions: a `persist()`ed / lazily checkpointed shared subtree
+    * mentions: a `persist()`ed shared subtree
     * prints once per consumer but runs once, so the r17 text count
     * (`lines.count(_.contains("Exchange"))`, which also miscounted
     * every `ReusedExchange` as a new shuffle) over-reported plans that

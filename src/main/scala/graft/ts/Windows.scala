@@ -139,14 +139,8 @@ object Windows {
     * group×bucket partitions. A plain ordered window per group funnels
     * each group through ONE task — the 100 TB killer when groups are
     * few or skewed; here every sort is 1/`buckets` the size. */
-  def rank2OfCounts(pv0: DataFrame, partitionCols: Seq[String],
-                    buckets: Int = 256, cut: Boolean = true): DataFrame = {
-    // same reuse shape as rank2Rows: bounds, bucket counts and the
-    // ranked join all traverse the count table — cut it once (lazy,
-    // raw blocks; see rank2Rows). Callers that already materialized
-    // pv (and consume it themselves) pass cut = false to avoid a
-    // second block copy.
-    val pv = if (cut) pv0.localCheckpoint(eager = false) else pv0
+  def rank2OfCounts(pv: DataFrame, partitionCols: Seq[String],
+                    buckets: Int = 256): DataFrame = {
     val g = partitionCols.map(col)
     val v = col("_v")
     val bounds = pv.groupBy(g: _*)
@@ -210,23 +204,17 @@ object Windows {
     * groups). For high-cardinality partition keys drop the
     * [[org.apache.spark.sql.functions.broadcast]] hints (Catalyst/AQE
     * then picks a shuffled hash join on the same keys; the plan stays
-    * two-phase and exact, just pays the join shuffle). */
-  def rank2Rows(df0: DataFrame, partitionCols: Seq[String], valueCol: String,
+    * two-phase and exact, just pays the join shuffle).
+    *
+    * The input is read three times in the one plan (bounds, bucket
+    * counts, the ranked join). An input ending in a shuffle is shared
+    * by exchange reuse, and a bare column-pruned scan is cheaper to
+    * re-read than to copy (r19, spearman), so nothing is cut here; a
+    * caller whose input is costly row-local work cuts it with
+    * [[graft.core.Cut]]. */
+  def rank2Rows(df: DataFrame, partitionCols: Seq[String], valueCol: String,
                 outName: String, buckets: Int = 256,
-                tieCountCol: Option[String] = None,
-                cut: Boolean = true): DataFrame = {
-    // the input feeds three consumers (bounds, bucket counts, the
-    // ranked join) — materialize it once so each reads computed rows
-    // instead of re-running the upstream subtree (3× the scan
-    // uncached; 9× when two rank passes nest, e.g. spearman). Lazy
-    // localCheckpoint beats persist() here: raw row blocks skip the
-    // columnar cache encode (measured 1.5× slower on spearman), and
-    // eager=false folds the materialization into the first consumer's
-    // job instead of a separate blocking one. Callers whose input is
-    // a bare column-pruned scan (re-running it three times is cheaper
-    // than one block copy of every row — the nested spearman's INNER
-    // pass) opt out with cut = false, the rank2OfCounts convention.
-    val df = if (cut) df0.localCheckpoint(eager = false) else df0
+                tieCountCol: Option[String] = None): DataFrame = {
     val g = partitionCols.map(col)
     val v = col(valueCol)
     val bounds = df.filter(v.isNotNull).groupBy(g: _*)

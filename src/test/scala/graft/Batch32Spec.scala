@@ -164,7 +164,7 @@ class Batch32Spec extends SparkSpec {
       "ﬁne ﬂow",           // ligatures (NFKC folds, NFC keeps)
       "Ⅻ ½ ①",             // compatibility chars
       "plain ascii", "")
-    val df = samples.zipWithIndex.map { case (s, i) => (i.toLong, s) }
+    val df = nonLocal(samples.zipWithIndex.map { case (s, i) => (i.toLong, s) })
       .toDF("id", "s")
     for (form <- Seq("NFC", "NFD", "NFKC", "NFKD")) {
       val out = df.select($"id",
@@ -177,7 +177,7 @@ class Batch32Spec extends SparkSpec {
       }
     }
     // nulls propagate; non-literal form is rejected at registration
-    val nulls = Seq((1L, null.asInstanceOf[String])).toDF("id", "s")
+    val nulls = nonLocal(Seq((1L, null.asInstanceOf[String]))).toDF("id", "s")
       .select(call_function("unicode_norm", $"s", lit("NFC"))).head()
     assert(nulls.isNullAt(0))
     intercept[Exception] {
@@ -260,7 +260,7 @@ class Batch32Spec extends SparkSpec {
       (i.toLong, Seq.fill(rnd.nextInt(12))(vocab(rnd.nextInt(4))),
         Seq.fill(rnd.nextInt(12))(vocab(rnd.nextInt(4))))
     } :+ ((99L, Seq.empty[String], Seq("a", "b")))
-    val df = cases.toDF("id", "a", "b")
+    val df = nonLocal(cases).toDF("id", "a", "b")
     val out = df.select($"id",
         call_function("lcs_len", $"a", $"b").as("lcs"))
       .orderBy("id").collect()
@@ -269,7 +269,7 @@ class Batch32Spec extends SparkSpec {
     }
     // null ELEMENTS are rejected loudly, null ARRAYS propagate
     intercept[Exception] {
-      Seq((1L, Seq("a", null), Seq("a"))).toDF("id", "a", "b")
+      nonLocal(Seq((1L, Seq("a", null), Seq("a")))).toDF("id", "a", "b")
         .select(call_function("lcs_len", $"a", $"b")).collect()
     }
     val nullRow = df.limit(1)

@@ -38,13 +38,6 @@ class MinHashKernelSpec extends SparkSpec {
      else Dedup.minhashSignatures(df, "id", "text", numHashes, k))
       .as[(Long, Seq[Long])].collect().toMap
 
-  /** Inputs go through an RDD, not a local relation: the optimizer
-    * folds a projection over a local relation at plan time, always
-    * interpreted, which would leave the generated code untested. */
-  private def nonLocal[T: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](
-      rows: Seq[T]) =
-    spark.createDataset(spark.sparkContext.parallelize(rows, 3))
-
   private lazy val docs: DataFrame = nonLocal(Seq[(Long, String)](
     (1L, "the quick brown fox jumps over the lazy dog"),
     (2L, "the quick brown fox jumps over the lazy cat"),

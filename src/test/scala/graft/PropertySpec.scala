@@ -49,7 +49,7 @@ class PropertySpec extends SparkSpec {
     } yield (a.updated(spikeA, a(spikeA) * spike), b)
     forSamples(vecGen, n = 8) { case (a, b) =>
       if (a.exists(_ != 0.0) && b.exists(_ != 0.0)) {
-        val df = Seq((a.map(_.toFloat).toArray, b.map(_.toFloat).toArray))
+        val df = nonLocal(Seq((a.map(_.toFloat).toArray, b.map(_.toFloat).toArray)))
           .toDF("a", "b")
         val r = df.select(
           call_function("cosine_i8",
@@ -233,7 +233,7 @@ class PropertySpec extends SparkSpec {
         'ﬁ', '½', 'Ⅻ', ' '))
     val strGen = Gen.listOfN(24, charGen).map(_.mkString)
     forSamples(Gen.listOfN(20, strGen), n = 5) { strs =>
-      val df = strs.zipWithIndex.map { case (s, i) => (i.toLong, s) }
+      val df = nonLocal(strs.zipWithIndex.map { case (s, i) => (i.toLong, s) })
         .toDF("id", "s")
       def norm(c: org.apache.spark.sql.Column, f: String) =
         call_function("unicode_norm", c, lit(f))

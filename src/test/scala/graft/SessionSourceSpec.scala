@@ -5,9 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scans over `src/`: every session is built through
-  * [[graft.core.GraftSession]], and the set of programs and of
-  * `SPARK_GRAFT_*` env knobs only changes on purpose, so a new main,
-  * suite or knob cannot quietly appear. */
+  * [[graft.core.GraftSession]], every cut through [[graft.core.Cut]],
+  * and the set of programs, of `SPARK_GRAFT_*` env knobs and of
+  * `persist()` sites only changes on purpose, so a new main, suite,
+  * knob, cut or cache cannot quietly appear. */
 class SessionSourceSpec extends AnyFunSuite {
   private def scalaFiles(roots: String*): Seq[Path] = roots.flatMap { root =>
     val files = Files.walk(Paths.get(root))
@@ -35,6 +36,37 @@ class SessionSourceSpec extends AnyFunSuite {
     }
     assert(mains.sorted == Seq("ApiDoc", "PipelineDemo", "PlanAudit",
       "Profile", "Verify"))
+  }
+
+  /** `src/main` files with comments stripped, keyed by path under
+    * `src/main/scala/graft/`. */
+  private lazy val mainCode: Map[String, String] = {
+    val root = Paths.get("src/main/scala/graft")
+    scalaFiles("src/main").map { p =>
+      root.relativize(p).toString -> Files.readString(p)
+        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    }.toMap
+  }
+
+  test("only graft.core.Cut calls localCheckpoint or checkpoint") {
+    val call = "\\.(localCheckpoint|checkpoint)\\(".r
+    val hits = mainCode.collect {
+      case (f, src) if call.findFirstIn(src).isDefined => f
+    }.toSet
+    assert(hits == Set("core/Cut.scala"),
+      "cut outside graft.core.Cut; route it through Cut.of")
+  }
+
+  test("the persist() sites are a pinned set, each released by unpersist") {
+    val sites = mainCode.map { case (f, src) =>
+      f -> "\\.persist\\(".r.findAllIn(src).size
+    }.filter(_._2 > 0)
+    assert(sites == Map("text/Quality.scala" -> 1, "text/Chunk.scala" -> 1,
+      "rel/Spatial.scala" -> 2, "ml/Similarity.scala" -> 2,
+      "ml/PQ.scala" -> 1))
+    sites.keys.foreach { f =>
+      assert(mainCode(f).contains("unpersist("), s"$f never unpersists")
+    }
   }
 
   test("src/main reads exactly two SPARK_GRAFT_* env knobs") {

@@ -9,9 +9,9 @@ class VectorExprSpec extends SparkSpec {
 
   test("dot_f32/cosine_f32 match the interpreted HOF formulation bit-for-bit") {
     NativeFunctions.register(spark)
-    val df = Seq(
+    val df = nonLocal(Seq(
       (1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
-      (2L, Array(0.5f, -0.5f, 0.0f), Array(0.5f, 0.5f, 1.0f))).toDF("id", "a", "b")
+      (2L, Array(0.5f, -0.5f, 0.0f), Array(0.5f, 0.5f, 1.0f)))).toDF("id", "a", "b")
     val out = df.select(
       call_function("dot_f32", col("a"), col("b")).as("dn"),
       Similarity.dot(col("a"), col("b")).as("dh"),
@@ -26,10 +26,10 @@ class VectorExprSpec extends SparkSpec {
 
   test("quantize_i8 codes: exact bytes, scale invariance, zero vector") {
     NativeFunctions.register(spark)
-    val df = Seq(
+    val df = nonLocal(Seq(
       (1L, Array(1.0f, -0.5f, 0.25f, 0.0f)),
       (2L, Array(4.0f, -2.0f, 1.0f, 0.0f)), // same direction, 4x scale
-      (3L, Array(0.0f, 0.0f, 0.0f, 0.0f))).toDF("id", "v")
+      (3L, Array(0.0f, 0.0f, 0.0f, 0.0f)))).toDF("id", "v")
     val codes = Similarity.quantizeI8(df, "v").orderBy("id")
       .select("vec_i8").as[Array[Byte]].collect()
     // hand math: max=1.0 → floor(x*127+0.5): 127, floor(-63.5+0.5)=-63, 32, 0
@@ -102,7 +102,8 @@ class VectorExprSpec extends SparkSpec {
 
   test("null input yields null, not a crash") {
     NativeFunctions.register(spark)
-    val df = Seq((Some(Array(1.0f)), None: Option[Array[Float]])).toDF("a", "b")
+    val df = nonLocal(Seq((Some(Array(1.0f)), None: Option[Array[Float]])))
+      .toDF("a", "b")
     val r = df.select(call_function("dot_f32", col("a"), col("b"))).head
     assert(r.isNullAt(0))
   }
