@@ -156,17 +156,20 @@ object StreamEntries extends Entries {
             .as("toks"))
         .as[(Long, Seq[String])].collect()
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-      // one micro-batch: the queries plus a watermark-advancing tail
-      // row — tokenless, matches nothing, but pushes event time far
-      // enough that the 10:00 window closes
+      // the queries plus a watermark-advancing tail row — tokenless,
+      // matches nothing, but pushes event time far enough that the
+      // 10:00 window closes
       val batch = qRows.toSeq.map { case (qid, tk) => (t0, qid, tk) } :+
         ((java.sql.Timestamp.valueOf("2024-01-01 12:00:00"), -1L,
           Seq.empty[String]))
       // no stateRows: the window-agg state here is per (query, doc)
       // candidate pair — Σ_t df(t), CORPUS-proportional and unknown at
       // deploy time — so state partitions keep the session default
-      // (the scale-honest choice; only the checksum toggle is scoped)
-      graft.stream.Streaming.replay(s, Seq(batch), "append") { in =>
+      // (the scale-honest choice; only the fixed toggles are scoped)
+      // two micro-batches: the watermark the first computes applies
+      // from the next batch on, so the empty watermark-advance chunk
+      // is the batch that closes the window and emits it
+      graft.stream.Streaming.replay(s, Seq(batch, Seq.empty), "append") { in =>
         graft.stream.Streaming.bm25StreamScores(
             in.toDF("ts", "qid", "qtoks"), index,
             "qid", "qtoks", "ts", "5 minutes", "10 minutes")

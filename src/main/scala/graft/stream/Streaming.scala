@@ -611,12 +611,12 @@ object Streaming {
     * cloned session picks the confs up on the query thread, i.e.
     * asynchronously after `start()` returns (restoring right after
     * `start()` measurably re-enabled checksums on the first batches) —
-    * the session runs with per-file checkpoint CHECKSUMS off and,
-    * when `stateRows` is given, shuffle/state partitions sized by
-    * [[statePartitionsFor]]; every touched conf is restored
-    * afterwards, so a DURABLE-checkpoint query started later in the
-    * same session keeps the corruption guard ON (the r18 helper set
-    * the conf session-globally and never restored it).
+    * the session runs with per-file checkpoint CHECKSUMS off, no-data
+    * micro-batches off and, when `stateRows` is given, shuffle/state
+    * partitions sized by [[statePartitionsFor]]; every touched conf is
+    * restored afterwards, so a DURABLE-checkpoint query started later
+    * in the same session keeps the corruption guard ON (the r18 helper
+    * set the conf session-globally and never restored it).
     *
     * Why checksums off: Spark 4.1 writes and await-verifies a checksum
     * file next to every state/offset/commit file to detect durable-
@@ -626,16 +626,29 @@ object Streaming {
     * partition per micro-batch). Durable deploys (kill-restart
     * recovery tests, real clusters) keep the default ON.
     *
+    * Why no-data batches off: by default the engine runs one extra
+    * batch with no input after every batch that moved the watermark,
+    * so a watermarked replay of n chunks ran up to 2n batches, each
+    * paying the full per-batch floor (~0.25 s of `addBatch` plus a WAL
+    * and a commit-log write at sf0.01). Off, the engine adds NO
+    * batches: one chunk is one batch. A replay reaches every watermark
+    * state through its own chunks instead — a deploy whose output
+    * waits on the watermark ends its chunks with a watermark-advance
+    * chunk (see [[replay]]).
+    *
     * The progress-retention window is raised for the duration too —
     * scoped the same way — so [[droppedByWatermark]] sums over EVERY
     * micro-batch of the replay, not just the last 100. */
   def withReplayTuning[A](spark: SparkSession, stateRows: Long = -1L)
                          (run: => A): A = {
     val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val spKey = "spark.sql.shuffle.partitions"
     val prKey = "spark.sql.streaming.numRecentProgressUpdates"
-    val before = Seq(ckKey, spKey, prKey).map(k => k -> spark.conf.getOption(k))
+    val before =
+      Seq(ckKey, ndKey, spKey, prKey).map(k => k -> spark.conf.getOption(k))
     spark.conf.set(ckKey, "false")
+    spark.conf.set(ndKey, "false")
     if (stateRows >= 0L)
       spark.conf.set(spKey, statePartitionsFor(spark, stateRows).toString)
     spark.conf.set(prKey, "100000")
@@ -657,11 +670,18 @@ object Streaming {
     * `stateRows` sizing the state partitions; -1 keeps the session's
     * partition count). Each element of `chunks` is added as ONE
     * micro-batch and drained with `processAllAvailable` before the
-    * next, so the chunk list IS the micro-batch layout. A watermarked
-    * deploy that must release everything it buffers ends `chunks`
-    * with flush sentinels (see [[shuffledReplay]]): rows far past
-    * every real event that advance the watermark, which updates at
-    * batch END, so the last sentinel's batch fires the timeouts.
+    * next. One chunk is one batch and the engine adds none (no-data
+    * batches are off), so the chunk list IS the micro-batch layout;
+    * an empty chunk is still a new offset, so it runs a batch too.
+    *
+    * The watermark a batch computes from its rows is applied from the
+    * NEXT batch on, and no batch runs without a chunk. So a deploy
+    * whose output waits on the watermark — a window that must close,
+    * a reorder buffer that must drain — ends its chunks with a
+    * watermark-advance chunk: an empty chunk after the batch that
+    * moved the watermark (bm25_stream), or flush sentinels (see
+    * [[shuffledReplay]]): rows far past every real event, the first
+    * moving the watermark and the second firing the timeouts.
     *
     * The query is stopped even when a batch fails. The replay then
     * `require`s that the engine dropped ZERO rows as late-beyond-
@@ -701,12 +721,15 @@ object Streaming {
     * i + `disp(e)`, so the disorder is bounded by the largest
     * displacement; `disp` is called once per event, in order. The
     * watermark `delay` is the replay's own observed max lateness plus
-    * a 2 s margin, so no event is late. The shuffled events come as
-    * `batches` micro-batches, then two flush batches: user_id -1 /
+    * a 2 s margin, so no event is late behind any batch's watermark.
+    * The shuffled events come as `batches` chunks, then two flush
+    * chunks, each chunk one micro-batch (see [[replay]]): user_id -1 /
     * event_type "__flush__" rows, dropped by the deploys' own filters
-    * after they pass the watermark node. The first moves the
-    * watermark past every real event; the second fires the event-time
-    * timeouts that drain every reorder buffer. */
+    * after they pass the watermark node. The first flush batch moves
+    * the watermark past every real event; the second, running under
+    * that watermark, fires the event-time timeouts that drain every
+    * reorder buffer — the watermark-advance chunks a deploy whose
+    * output waits on the watermark ends with. */
   def shuffledReplay(evs: Array[TypedEvent], batches: Int)
                     (disp: TypedEvent => Int): ShuffledReplay = {
     // keys precomputed: sortBy re-evaluates its key per comparison
@@ -927,17 +950,18 @@ object Streaming {
 
   /** Collapse a [[funnelStream]] sink table (update-mode rows, possibly
     * several per user) to the batch funnel's (step, step_name,
-    * n_users) — max over the monotone max_step per user, then k
-    * one-row counts. Batch-side: runs over the sink, not the stream. */
+    * n_users) — max over the monotone max_step per user, then ONE
+    * global aggregate of k `count_if`s, inlined into k rows (one user
+    * shuffle plus one single-partition exchange, not one per step).
+    * Batch-side: runs over the sink, not the stream. */
   def funnelStreamCounts(perUser: DataFrame, steps: Seq[String]): DataFrame = {
     val latest = perUser.groupBy("user_id")
       .agg(max(col("max_step")).as("_ms"))
-    steps.zipWithIndex.map { case (name, i) =>
-      latest.filter(col("_ms") >= i + 1)
-        .agg(count(lit(1)).as("n_users"))
-        .select(lit(i + 1).as("step"), lit(name).as("step_name"),
-          col("n_users"))
-    }.reduce(_ unionByName _)
+    val rows = steps.zipWithIndex.map { case (name, i) =>
+      struct(lit(i + 1).as("step"), lit(name).as("step_name"),
+        count_if(col("_ms") >= i + 1).as("n_users"))
+    }
+    latest.agg(array(rows: _*).as("_steps")).select(inline(col("_steps")))
   }
 
   /** Per-user conversion state: earliest fromStep micros (MinValue =

@@ -8,10 +8,15 @@
 //    `overwrite`, the noop write itself) from the QueryExecutionListener,
 //    which shows the eager work an entry body does before it returns
 //    its DataFrame; for streaming entries also
-//    the micro-batch count and `durationMs` summed per phase over the
-//    pass's replays (StreamingQueryListener);
-//  - after the last pass: the costliest stages and the noop write's
-//    final adaptive plan, with its initial plan (QueryExecutionListener).
+//    the micro-batch count, the batches that read no input rows
+//    (`emptyBatches=`), `durationMs` summed per phase, the state
+//    operators' commit time summed and their row count and memory at
+//    the largest batch, over the pass's replays (StreamingQueryListener);
+//  - after the last pass: the costliest stages, the noop write's
+//    final adaptive plan, with its initial plan, and each early
+//    execution's action with its `Exchange` and `ReusedExchange` node
+//    counts, so exchange reuse inside a query's own cut shows too
+//    (QueryExecutionListener).
 // A query that fails in any pass prints `PROFILE <q> FAILED: …` and no
 // timing line for that pass, and the run goes on to the next query.
 // Run:
@@ -25,12 +30,14 @@ import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
 
-object Profile {
+object Profile extends AdaptiveSparkPlanHelper {
   /** Micro-batch phases summed from `StreamingQueryProgress.durationMs`. */
   private val phases =
     Seq("addBatch", "queryPlanning", "walCommit", "commitOffsets", "latestOffset")
@@ -71,13 +78,14 @@ object Profile {
     // plan is the final one (`df.queryExecution` is a different,
     // never-executed QueryExecution and stays isFinalPlan=false)
     @volatile var written: Option[QueryExecution] = None
-    val execs = mutable.Map[String, Int]()
+    // the pass's executions by action, in completion order; all but the
+    // noop write ran before the body returned its DataFrame — a
+    // replay's micro-batch sink writes among them
+    val execs = mutable.ArrayBuffer[(String, QueryExecution)]()
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
                              durationNs: Long): Unit = {
-        if (collecting) execs.synchronized {
-          execs(funcName) = execs.getOrElse(funcName, 0) + 1
-        }
+        if (collecting) execs.synchronized(execs += funcName -> qe)
         if (qe.executedPlan.isInstanceOf[V2TableWriteExec]) written = Some(qe)
       }
       override def onFailure(funcName: String, qe: QueryExecution,
@@ -88,12 +96,21 @@ object Profile {
     val terminated = ConcurrentHashMap.newKeySet[UUID]()
     val phaseMs = mutable.Map[String, Long]()
     var batches = 0
+    var emptyBatches = 0
+    var stateCommitMs = 0L
+    var stateRowsMax = 0L
+    var stateBytesMax = 0L
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
         started.add(e.runId)
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         phaseMs.synchronized {
+          val ops = e.progress.stateOperators.toSeq
           batches += 1
+          if (e.progress.numInputRows == 0L) emptyBatches += 1
+          stateCommitMs += ops.map(_.commitTimeMs).sum
+          stateRowsMax = stateRowsMax.max(ops.map(_.numRowsTotal).sum)
+          stateBytesMax = stateBytesMax.max(ops.map(_.memoryUsedBytes).sum)
           phases.foreach { p =>
             Option(e.progress.durationMs.get(p))
               .foreach(ms => phaseMs(p) = phaseMs.getOrElse(p, 0L) + ms)
@@ -122,7 +139,10 @@ object Profile {
       stageWall.clear(); jobs = 0
       written = None
       execs.synchronized(execs.clear())
-      phaseMs.synchronized { phaseMs.clear(); batches = 0 }
+      phaseMs.synchronized {
+        phaseMs.clear(); batches = 0; emptyBatches = 0
+        stateCommitMs = 0L; stateRowsMax = 0L; stateBytesMax = 0L
+      }
       collecting = true
       val t0 = System.nanoTime()
       exec(name)
@@ -136,14 +156,19 @@ object Profile {
       val shuf = stages.map(_._2._4).sum / 1e6
       val gc = stages.map(_._2._5).sum / 1e3
       val tasks = stages.map(_._2._6).sum
-      val byAction = execs.synchronized(execs.toSeq.sortBy(_._1))
-      val execLine = s"execs=${byAction.map(_._2).sum} (" +
+      val passExecs = execs.synchronized(execs.toSeq)
+      val byAction =
+        passExecs.groupMapReduce(_._1)(_ => 1)(_ + _).toSeq.sortBy(_._1)
+      val execLine = s"execs=${passExecs.size} (" +
         byAction.map { case (a, n) => s"$a=$n" }.mkString(" ") + ")"
       println(f"PROFILE $name it$it wall=$dt%.2fs jobs=$jobs stages=${stages.size} tasks=$tasks stageWallSum=$wallSum%.2fs taskRunSum=$runSum%.2fs shuffleMB=$shuf%.1f gc=$gc%.2fs $execLine")
       phaseMs.synchronized {
         if (batches > 0)
-          println(s"PROFILE $name it$it stream batches=$batches durationMs " +
-            phases.map(p => s"$p=${phaseMs.getOrElse(p, 0L)}").mkString(" "))
+          println(s"PROFILE $name it$it stream batches=$batches " +
+            s"emptyBatches=$emptyBatches durationMs " +
+            phases.map(p => s"$p=${phaseMs.getOrElse(p, 0L)}").mkString(" ") +
+            s" stateCommitMs=$stateCommitMs stateRowsMax=$stateRowsMax " +
+            s"stateBytesMax=$stateBytesMax")
       }
       if (it == iters) {
         stages.sortBy(-_._2._2).take(12).foreach { case (id, (nm, w, r, sb, g, nt)) =>
@@ -152,6 +177,14 @@ object Profile {
         println(s"PROFILE $name plan (noop write, executed):")
         println(written.map(_.executedPlan.toString.take(20000))
           .getOrElse("  (no write reported)"))
+        passExecs.filterNot(e => written.contains(e._2)).foreach { case (action, qe) =>
+          val plan = qe.executedPlan
+          val exchanges = collectWithSubqueries(plan) { case x: Exchange => x }
+          val reused =
+            collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }
+          println(s"PROFILE $name early $action exchanges=${exchanges.size} " +
+            s"reused=${reused.size}")
+        }
       }
     }
 

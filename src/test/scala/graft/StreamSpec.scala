@@ -1,9 +1,14 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 import graft.stream.Streaming
 import scala.jdk.CollectionConverters._
 
@@ -446,6 +451,23 @@ class StreamSpec extends SparkSpec {
     assert(streamed === batch)
     assert(batch === Seq((1, "view", 5L), (2, "click", 3L),
       (3, "purchase", 1L)))
+  }
+
+  test("funnelStreamCounts collapses its k steps in one aggregate") {
+    val perUser = Seq((1L, 1), (1L, 3), (2L, 2), (3L, 1), (3L, 1))
+      .toDF("user_id", "max_step")
+    val counts = Streaming.funnelStreamCounts(perUser,
+      Seq("view", "click", "purchase"))
+    assert(counts.as[(Int, String, Long)].collect().sortBy(_._1).toSeq ===
+      Seq((1, "view", 3L), (2, "click", 2L), (3, "purchase", 1L)))
+    // the user shuffle plus one single-partition exchange, not one
+    // filtered count (and exchange) per step
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(counts.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }
+    assert(exchanges.size === 2, exchanges)
+    assert(exchanges.count(_ == SinglePartition) === 1, exchanges)
   }
 
   test("transitionsStream matches batch eventTransitions across micro-batches") {
@@ -1173,7 +1195,8 @@ class StreamSpec extends SparkSpec {
     val keys = Seq(
       "spark.sql.streaming.checkpoint.fileChecksum.enabled",
       "spark.sql.shuffle.partitions",
-      "spark.sql.streaming.numRecentProgressUpdates")
+      "spark.sql.streaming.numRecentProgressUpdates",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
     val before = keys.map(k => k -> spark.conf.get(k))
     // inside the scope the tuned values are live (the started query's
     // cloned session captures them)
@@ -1181,6 +1204,7 @@ class StreamSpec extends SparkSpec {
       assert(spark.conf.get(keys(0)) === "false")
       assert(spark.conf.get(keys(1)) === "1")
       assert(spark.conf.get(keys(2)) === "100000")
+      assert(spark.conf.get(keys(3)) === "false")
     }
     assert(keys.map(k => k -> spark.conf.get(k)) === before)
     // and every REAL replay entry (temp checkpoint, memory sink, scoped
@@ -1212,5 +1236,46 @@ class StreamSpec extends SparkSpec {
       "a replay entry left a stream execution thread running")
     assert(keys.map(k => k -> spark.conf.get(k)) === before,
       "a replay entry leaked session confs")
+  }
+  test("one chunk is one micro-batch: each replay runs exactly its chunks") {
+    // chunks per replay entry at sf: the in-order family, the drift
+    // monitors and media dedup cut their input into 3; each `*_ooo`
+    // adds shuffledReplay's 2 flush chunks to its 3; stream_dedup is
+    // one chunk; bm25_stream ends with its watermark-advance chunk
+    val chunks = Map(
+      "stream_dedup" -> 1, "bm25_stream" -> 2,
+      "funnel_stream" -> 3, "conversion_stream" -> 3,
+      "cohort_stream" -> 3, "transitions_stream" -> 3,
+      "drift_psi_cat_stream" -> 3, "drift_psi_stream" -> 3,
+      "media_dedup_stream" -> 3,
+      "funnel_stream_ooo" -> 5, "conversion_stream_ooo" -> 5,
+      "cohort_stream_ooo" -> 5, "transitions_stream_ooo" -> 5)
+    val started = ConcurrentHashMap.newKeySet[UUID]()
+    val terminated = ConcurrentHashMap.newKeySet[UUID]()
+    val progress = new ConcurrentHashMap[UUID, Integer]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(e.runId)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.merge(e.progress.runId, 1, (a: Integer, b: Integer) => a + b)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    try for ((entry, n) <- chunks.toSeq.sortBy(_._1)) {
+      started.clear(); terminated.clear(); progress.clear()
+      graft.SparkEntry.queries(entry)(spark, sf)
+      // drain: listener events arrive asynchronously but in order, so
+      // once a run's termination has landed so have all its progresses
+      val deadline = System.currentTimeMillis() + 30000
+      while (!(started.size == 1 && terminated.containsAll(started)) &&
+             System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(started.size === 1, s"$entry should run one replay")
+      val run = started.iterator.next()
+      assert(terminated.contains(run), s"$entry: termination never arrived")
+      assert(progress.getOrDefault(run, 0).intValue === n,
+        s"$entry ran ${progress.getOrDefault(run, 0)} micro-batches for $n chunks")
+    } finally spark.streams.removeListener(listener)
   }
 }
