@@ -18,110 +18,68 @@ object SqlEntries extends Entries {
       .fit(T.orders(s, dir), "orders")
       .fit(T.customer(s, dir), "customer")
 
+  // windowFunctions intent (query.py:639): running order count/customer.
+  private val windowSql =
+    """SELECT o_orderkey,
+    |  CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
+    |    ORDER BY o_orderdate, o_orderkey) AS INT) AS order_seq
+    |FROM orders ORDER BY o_orderkey""".stripMargin
+
+  // ROLLUP — reachable in the reference only via raw SQL (SURVEY §2.4).
+  private val rollupSql =
+    """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
+    |  COALESCE(o_orderstatus, 'ALL') AS status,
+    |  CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS INT) AS gid,
+    |  COUNT(*) AS n,
+    |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+    |FROM orders
+    |GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
+    |ORDER BY gid, pri, status""".stripMargin
+
+  // CUBE.
+  private val cubeSql =
+    """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
+    |  COALESCE(l_linestatus, 'ALL') AS ls,
+    |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INT) AS gid,
+    |  COUNT(*) AS n
+    |FROM lineitem
+    |GROUP BY CUBE(l_returnflag, l_linestatus)
+    |ORDER BY gid, rf, ls""".stripMargin
+
+  // GROUPING SETS.
+  private val groupingSetsSql =
+    """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
+    |  COALESCE(o_orderstatus, 'ALL') AS status,
+    |  CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS INT) AS gid,
+    |  COUNT(*) AS n
+    |FROM orders
+    |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
+    |ORDER BY gid, pri, status""".stripMargin
+
+  // CTE + join + aggregate intents (query.py:429 subquery surface).
+  private val cteSql =
+    """WITH big AS (
+    |  SELECT o_custkey, COUNT(*) AS n_big FROM orders
+    |  WHERE o_totalprice > 300000 GROUP BY o_custkey)
+    |SELECT c.c_mktsegment, COUNT(*) AS n_cust,
+    |  CAST(SUM(b.n_big) AS BIGINT) AS n_big_orders
+    |FROM customer c JOIN big b ON c.c_custkey = b.o_custkey
+    |GROUP BY c.c_mktsegment
+    |ORDER BY c.c_mktsegment""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // windowFunctions intent (query.py:639): running order count/customer.
-    "sql_window" -> ((s, dir) => {
-      guards(s, dir).windowFunctions(
-        """SELECT o_orderkey,
-          |  CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
-          |    ORDER BY o_orderdate, o_orderkey) AS INT) AS order_seq
-          |FROM orders ORDER BY o_orderkey""".stripMargin)
-    }),
-
-    // ROLLUP — reachable in the reference only via raw SQL (SURVEY §2.4).
-    "sql_rollup" -> ((s, dir) => {
-      guards(s, dir).aggregate(
-        """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
-          |  COALESCE(o_orderstatus, 'ALL') AS status,
-          |  CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS INT) AS gid,
-          |  COUNT(*) AS n,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-          |FROM orders
-          |GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
-          |ORDER BY gid, pri, status""".stripMargin)
-    }),
-
-    // CUBE.
-    "sql_cube" -> ((s, dir) => {
-      guards(s, dir).aggregate(
-        """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
-          |  COALESCE(l_linestatus, 'ALL') AS ls,
-          |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INT) AS gid,
-          |  COUNT(*) AS n
-          |FROM lineitem
-          |GROUP BY CUBE(l_returnflag, l_linestatus)
-          |ORDER BY gid, rf, ls""".stripMargin)
-    }),
-
-    // GROUPING SETS.
-    "sql_grouping_sets" -> ((s, dir) => {
-      guards(s, dir).aggregate(
-        """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
-          |  COALESCE(o_orderstatus, 'ALL') AS status,
-          |  CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS INT) AS gid,
-          |  COUNT(*) AS n
-          |FROM orders
-          |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
-          |ORDER BY gid, pri, status""".stripMargin)
-    }),
-
-    // CTE + join + aggregate intents (query.py:429 subquery surface).
-    "sql_cte" -> ((s, dir) => {
-      guards(s, dir).joinTables(
-        """WITH big AS (
-          |  SELECT o_custkey, COUNT(*) AS n_big FROM orders
-          |  WHERE o_totalprice > 300000 GROUP BY o_custkey)
-          |SELECT c.c_mktsegment, COUNT(*) AS n_cust,
-          |  CAST(SUM(b.n_big) AS BIGINT) AS n_big_orders
-          |FROM customer c JOIN big b ON c.c_custkey = b.o_custkey
-          |GROUP BY c.c_mktsegment
-          |ORDER BY c.c_mktsegment""".stripMargin)
-    })
+    "sql_window" -> ((s, dir) => guards(s, dir).windowFunctions(windowSql)),
+    "sql_rollup" -> ((s, dir) => guards(s, dir).aggregate(rollupSql)),
+    "sql_cube" -> ((s, dir) => guards(s, dir).aggregate(cubeSql)),
+    "sql_grouping_sets" -> ((s, dir) => guards(s, dir).aggregate(groupingSetsSql)),
+    "sql_cte" -> ((s, dir) => guards(s, dir).joinTables(cteSql))
   )
 
   val oracleSql: Map[String, String] = Map(
-    "sql_window" ->
-      """SELECT o_orderkey,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey) AS INT) AS order_seq
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "sql_rollup" ->
-      """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
-        |  COALESCE(o_orderstatus, 'ALL') AS status,
-        |  CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS INT) AS gid,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
-        |ORDER BY gid, pri, status""".stripMargin,
-
-    "sql_cube" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
-        |  COALESCE(l_linestatus, 'ALL') AS ls,
-        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INT) AS gid,
-        |  COUNT(*) AS n
-        |FROM lineitem
-        |GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY gid, rf, ls""".stripMargin,
-
-    "sql_grouping_sets" ->
-      """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
-        |  COALESCE(o_orderstatus, 'ALL') AS status,
-        |  CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS INT) AS gid,
-        |  COUNT(*) AS n
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
-        |ORDER BY gid, pri, status""".stripMargin,
-
-    "sql_cte" ->
-      """WITH big AS (
-        |  SELECT o_custkey, COUNT(*) AS n_big FROM orders
-        |  WHERE o_totalprice > 300000 GROUP BY o_custkey)
-        |SELECT c.c_mktsegment, COUNT(*) AS n_cust,
-        |  CAST(SUM(b.n_big) AS BIGINT) AS n_big_orders
-        |FROM customer c JOIN big b ON c.c_custkey = b.o_custkey
-        |GROUP BY c.c_mktsegment
-        |ORDER BY c.c_mktsegment""".stripMargin
+    "sql_window" -> windowSql,
+    "sql_rollup" -> rollupSql,
+    "sql_cube" -> cubeSql,
+    "sql_grouping_sets" -> groupingSetsSql,
+    "sql_cte" -> cteSql
   )
 }

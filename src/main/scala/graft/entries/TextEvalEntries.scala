@@ -166,9 +166,9 @@ object TextEvalEntries extends Entries {
 
     // text.EvalMetrics.rougeN: per-document ROUGE-1/2 recall of each
     // document against its first-word-dropped twin — the eval-side
-    // operator of a model-output pipeline as pure n-gram count
-    // aggregations (clipped matches over reference totals), every
-    // shuffle keyed by (doc, gram).
+    // operator of a model-output pipeline as clipped n-gram counts
+    // (matches over reference totals): one doc-keyed join and the
+    // native row-local overlap expression.
     "rouge_doc" -> ((s, dir) => {
       val cand = T.documents(s, dir)
       val ref = cand.select(col("doc_id"),
@@ -216,9 +216,9 @@ object TextEvalEntries extends Entries {
     // text.EvalMetrics.chrF: per-document chrF2 (Popović 2015) of each
     // document against its first-word-dropped twin — character n-grams
     // 1..6 (the published setting), whitespace stripped, β = 2. The
-    // kernel is the same clipped-overlap FULL join as ROUGE/BLEU, just
-    // over CHAR grams: every shuffle keyed by (doc, gram), nothing
-    // pairwise across documents. Dropping the first WORD perturbs
+    // kernel is the same clipped overlap as ROUGE/BLEU, just over CHAR
+    // grams: one doc-keyed join and a row-local native expression,
+    // nothing pairwise across documents. Dropping the first WORD perturbs
     // every char offset, so the metric is exercised away from the
     // identity fast-path on every row.
     "chrf_doc" -> ((s, dir) => {

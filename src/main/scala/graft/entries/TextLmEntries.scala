@@ -342,8 +342,8 @@ object TextLmEntries extends Entries {
     // character fraction (n=2 — 349 of the 500 sf0.01 docs carry a
     // duplicated bigram, so both regimes are exercised) — positional
     // coverage, a token counts once however many duplicated bigrams
-    // overlap it. Explode-once plan: transform(sequence)+slice builds
-    // grams in-row, shuffles keyed by doc / (doc, gram) only.
+    // overlap it. One native row-local expression per document, no
+    // shuffle.
     "ngram_rep" -> ((s, dir) => {
       graft.text.Quality.dupNgramCharFrac(T.documents(s, dir),
           "doc_id", "text", n = 2)
@@ -352,8 +352,8 @@ object TextLmEntries extends Entries {
 
     // text.Quality.topNgramCharFrac: Gopher's TOP-n-gram signal (n=3)
     // — most frequent trigram per doc and the token-char fraction its
-    // (possibly overlapping) occurrences account for; shared in-row
-    // gram builder with ngram_rep, two-phase per-doc top-1.
+    // (possibly overlapping) occurrences account for; one native
+    // row-local expression per document, no shuffle.
     "top_ngram" -> ((s, dir) => {
       graft.text.Quality.topNgramCharFrac(T.documents(s, dir),
           "doc_id", "text", n = 3)

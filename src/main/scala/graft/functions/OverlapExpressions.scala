@@ -12,18 +12,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * computed INSIDE the row instead of through a (doc, n, gram)-keyed
   * shuffle.
   *
-  * The relational kernel (explode → count → FULL join → reduce) moves
+  * A relational plan (explode → count → FULL join → reduce) moves
   * every gram occurrence through an exchange: at maxN = 4 that is ~4
   * corpus volumes of shuffle per side. But clipping is DOC-LOCAL —
   * `matched_n(doc) = Σ_gram min(c_cand, c_ref)` needs only the two
-  * token arrays of ONE document — so the scalable plan is a doc-keyed
-  * join of the two sides followed by this expression: the only
-  * exchange left is the join on the document id, and the gram
-  * counting runs as a per-row hash map in generated code (the
-  * [[LcsLength]] row-local rule). The shuffle kernel remains in
-  * [[graft.text.EvalMetrics]] (`kernel = "shuffle"`) as the escape
-  * hatch for pathological single-document skew (a 1 GB document
-  * straggles a row-local kernel but spreads across gram groups).
+  * token arrays of ONE document — so the plan is a doc-keyed join of
+  * the two sides followed by this expression: the only exchange is
+  * the join on the document id, and the gram counting runs as a
+  * per-row hash map in generated code (the [[LcsLength]] row-local
+  * rule). A single document is counted by one task.
   *
   * Output for maxN orders: array<long> of length 3·maxN laid out as
   * [m_1, ct_1, rt_1, …, m_maxN, ct_maxN, rt_maxN] where m = clipped
@@ -33,8 +30,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * NULL ELEMENTS are rejected loudly (the lcs_len convention). */
 object NgramOverlapKernel {
 
-  /** Word-gram overlap over two token arrays (grams joined by one
-    * space, exactly as `EvalMetrics.ngramsOf` spells them). */
+  /** Word-gram overlap over two token arrays. A gram is its n
+    * consecutive tokens joined by one space, so two grams match
+    * exactly when their space-joined strings are equal. */
   def words(x: ArrayData, y: ArrayData, maxN: Int): ArrayData = {
     val nc = x.numElements(); val nr = y.numElements()
     val cs = new Array[String](nc)
@@ -55,8 +53,8 @@ object NgramOverlapKernel {
   }
 
   /** Char-gram overlap over two strings, counted in CODE POINTS (the
-    * `substr`/`length` column semantics the relational chrF kernel
-    * uses — UTF-16 unit indexing would disagree beyond the BMP).
+    * `substr`/`length` column semantics and the chrF oracle —
+    * UTF-16 unit indexing would disagree beyond the BMP).
     * Allocation-free inner loop: a gram is a (start, end) char span
     * over a code-point offset table (identity offsets on
     * surrogate-free strings), counted in a reused open-address table
@@ -216,8 +214,7 @@ object NgramOverlapKernel {
 /** Row-local kernels for the Gopher repetition signals — the same
   * doc-locality argument as [[NgramOverlapKernel]]: duplicate-gram
   * char coverage and the modal n-gram of a document depend on that
-  * document alone, so the (doc, gram) shuffle of the relational
-  * kernels can be removed, not shrunk. Char counts are CODE POINTS
+  * document alone, so no (doc, gram) shuffle is needed at all. Char counts are CODE POINTS
   * (the `length()` column semantics); the top-gram tie-break is the
   * UTF8 BINARY order (the `orderBy(_g.asc)` semantics — Java String
   * comparison would disagree beyond the BMP). */

@@ -11,12 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.text.Keywords.extractiveSummary]] scoring (sentence split,
   * per-sentence TF, within-doc sentence frequency, decimal-exact
   * tf·ln score, mean, argmax) is DOC-LOCAL: its "document frequency"
-  * counts the document's OWN sentences, so nothing crosses rows. The
-  * relational kernel pays two checkpoints, four doc-keyed aggregates
-  * and a window for what one per-row pass computes.
+  * counts the document's OWN sentences, so nothing crosses rows. A
+  * relational plan would pay four doc-keyed aggregates and a window
+  * for what one per-row pass computes.
   *
-  * Parity contract with the relational kernel (asserted in
-  * Batch33Spec on the real corpus):
+  * Semantics (pinned by a driver-side golden in Batch33Spec, real
+  * corpus included, in codegen and interpreted mode):
   *  - sentence split is `Pattern.split(text, -1)` (Spark's `split`
   *    keeps trailing empties; `String.split`'s default drops them and
   *    would shift sidx numbering);
@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    correctly-rounded double steps (decimal→double, ÷ count).
   *
   * Returns struct(sidx, summary, score) or NULL when no sentence has
-  * a scorable token (the relational kernel drops such docs). */
+  * a scorable token (such docs get no summary row). */
 object SummaryKernel {
 
   private val sentRe = java.util.regex.Pattern.compile("[.!?]\\s+")

@@ -69,7 +69,7 @@ object Blocklist {
     // EVERY element — a token array fed to `filter` straight off the
     // regex chain costs |blocklist| regex passes per row. Let-bind the
     // normalized text, then the (tokens, padded) pair, via the
-    // one-element-array trick (the Winnow.fingerprints convention) so
+    // one-element-array trick (the Winnow.md5WindowMins convention) so
     // each is computed exactly once per row.
     val hitStruct = transform(array(TextFns.cleanText(textOrEmpty(textCol))), c0 => {
       transform(array(struct(TextFns.tokens(c0).as("t"),

@@ -170,50 +170,89 @@ object Dedup {
       .filter(col("sig_sim") >= threshold)
   }
 
-  /** 64-bit SimHash per row as a pure expression (small inputs only —
-    * higher-order folds are interpreted; use [[simhashes]] at corpus
-    * scale). */
-  def simhash(c: Column): Column = {
-    val toks = TextFns.tokens(c)
-    val hashes = transform(toks, t => xxhash64(t))
-    (0 until 64).map { i =>
-      val bitSum = aggregate(hashes, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(bitSum > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-  }
+  /** Corpus-scale 64-bit SimHash: one xxhash64 word per token through
+    * the lane-packed [[sketches]] builder. Output: (_id, _sh). */
+  def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    sketches(df, idCol, textCol, Seq(t => xxhash64(t)), bitsPerWord = 64)
+      .select(col("_id"), col("_s0").as("_sh"))
 
-  /** Corpus-scale SimHash: explode tokens, hash once per token in a
-    * codegen'd projection, then count set bits per position with
-    * LANE-PACKED aggregates — three 21-bit counters per long, so 22
-    * sums instead of 64 (valid for docs up to 65k tokens; 21-bit
-    * fields keep the packed SUM inside int64 under ANSI). The sign
-    * rule bitSum_i > 0 becomes 2·setCount_i > n. Output: (_id, _sh). */
-  def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+  /** 60-bit SimHash on the portable md5 hash family ([[md5Hash64]]
+    * per token, same [[sketches]] builder). Every step is replayable
+    * in SQL, so the paired query gets a full oracle. Output:
+    * (_id, _sh). */
+  def simhashesPortable(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    sketches(df, idCol, textCol, Seq(t => md5Hash64(t)), bitsPerWord = 60)
+      .select(col("_id"), col("_s0").as("_sh"))
+
+  /** 256-bit SimHash — the text sibling of
+    * [[graft.mm.Multimodal.imageDHash256]], retiring even the WIDE
+    * kernels' ~2^25 knee: FOUR independent 64-bit xxhash words per
+    * token (word w hashes (w, token)), each majority-folded by
+    * [[sketches]], emitted as four 64-bit signature words. Near-dup
+    * joins key on whole words, so random band collisions fall to
+    * ~4n²/2^64 — no birthday term at any feasible corpus size and no
+    * ball enumeration. The match criterion tightens with the bits
+    * (hamming 3/256 vs 3/64): right for dedup-before-training; raise
+    * maxHamming consciously for heavier edits. Output: (_id, _s0.._s3). */
+  def simhashes256(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    sketches(df, idCol, textCol,
+      (0 until 4).map(w => (t: Column) => xxhash64(lit(w), t)),
+      bitsPerWord = 64)
+
+  /** [[simhashes256]] on the portable md5 family — four salted 60-bit
+    * words (word w hashes "sh256_w_" ++ token), every step replayable
+    * in SQL so the paired query gets a full oracle. 240 signature
+    * bits; same no-knee join geometry (collisions ~4n²/2^60). */
+  def simhashes256Portable(df: DataFrame, idCol: String,
+                           textCol: String): DataFrame =
+    sketches(df, idCol, textCol,
+      (0 until 4).map(w => (t: Column) => md5Hash64(concat(lit(s"sh256_${w}_"), t))),
+      bitsPerWord = 60)
+
+  /** The one SimHash builder: explode tokens, hash each token once per
+    * word (`wordHashes(w)`, in a codegen'd projection), then count set
+    * bits per position with LANE-PACKED sums — three 21-bit counters
+    * per long, so ⌈bitsPerWord/3⌉ sums per word (22 for 64 bits, 20
+    * for 60) instead of bitsPerWord; bit i of a word lives in sum
+    * i mod perSum, lane i div perSum. 21-bit fields keep the packed SUM
+    * inside int64 under ANSI: a 16-bit 4-lane pack overflowed once a
+    * doc repeated a lane-3 bit >32767 times, while the 21-bit
+    * worst-case sum (65535·(2^42+2^21+1) ≈ 2.9e17) stays far inside
+    * for every guard-valid document. The majority rule
+    * bitSum_i > 0 becomes 2·setCount_i > n. Output:
+    * (_id, _s0 … _s{words−1}). */
+  private def sketches(df: DataFrame, idCol: String, textCol: String,
+                       wordHashes: Seq[Column => Column],
+                       bitsPerWord: Int): DataFrame = {
+    val lanes = 3
+    val fieldBits = 21
+    val perSum = (bitsPerWord + lanes - 1) / lanes
+    val words = wordHashes.indices
     val exploded = df.select(col(idCol).as("_id"),
-        explode(TextFns.tokens(col(textCol))).as("_t"))
-      .withColumn("_h", xxhash64(col("_t")))
-    // THREE 21-bit counter lanes per long (bits b+22·lane, field shift
-    // 21·lane): a 16-bit 4-lane pack overflowed int64 in the SUM under
-    // ANSI once a doc repeated a lane-3 bit >32767 times — 21-bit
-    // fields keep the worst-case sum (65535·(2^42+2^21+1) ≈ 2.9e17)
-    // far inside int64 for every guard-valid document
-    val packSums = (0 until 22).map { b =>
-      val lanes = (0 until 3).filter(l => b + 22 * l < 64)
-      val packed = lanes.map { lane =>
-        shiftleft(shiftright(col("_h"), b + 22 * lane).bitwiseAND(1L), 21 * lane)
+      explode(TextFns.tokens(col(textCol))).as("_t"))
+    val withH = words.foldLeft(exploded)((d, w) =>
+      d.withColumn(s"_h$w", wordHashes(w)(col("_t"))))
+    val packSums = for (w <- words; b <- 0 until perSum) yield {
+      val live = (0 until lanes).filter(l => b + perSum * l < bitsPerWord)
+      val packed = live.map { lane =>
+        shiftleft(shiftright(col(s"_h$w"), b + perSum * lane)
+          .bitwiseAND(1L), fieldBits * lane)
       }.reduce(_ + _)
-      sum(packed).as(s"_p$b")
+      sum(packed).as(s"_p${w}_$b")
     }
     val aggsAll = packSums :+ count(lit(1)).as("_n")
-    val withCounts = exploded.groupBy("_id")
-      .agg(aggsAll.head, aggsAll.tail: _*)
-    val sh = (0 until 64).map { i =>
-      val b = i % 22; val lane = i / 22
-      val setCount = shiftright(col(s"_p$b"), 21 * lane).bitwiseAND(0x1FFFFFL)
-      when(setCount * 2 > col("_n"), lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-    withCounts.select(col("_id"), laneGuard(sh).as("_sh"))
+    val withCounts = withH.groupBy("_id").agg(aggsAll.head, aggsAll.tail: _*)
+    val sigs = words.map { w =>
+      (0 until bitsPerWord).map { i =>
+        val b = i % perSum; val lane = i / perSum
+        val setCount = shiftright(col(s"_p${w}_$b"), fieldBits * lane)
+          .bitwiseAND((1L << fieldBits) - 1)
+        when(setCount * 2 > col("_n"), lit(1L << i)).otherwise(lit(0L))
+      }.reduce(_ bitwiseOR _)
+    }
+    // the token-count guard raises once per row (word 0 carries it)
+    withCounts.select(col("_id") +: laneGuard(sigs.head).as("_s0") +:
+      words.tail.map(w => sigs(w).as(s"_s$w")): _*)
   }
 
   /** The packed-lane counters hold 21 bits each but the sign rule is
@@ -226,43 +265,34 @@ object Dedup {
         lit(" has more than 65535 tokens; above this cap the majority " +
           "sign rule is unreliable — split the document upstream")))).otherwise(sh)
 
-  /** 60-bit SimHash on the portable md5 hash family (same lane-packed
-    * plan as [[simhashes]]: 20 packed sums carrying 3 21-bit counters
-    * each, bit i = b + 20·lane). Every step is replayable in SQL, so
-    * the paired query gets a full oracle. */
-  def simhashesPortable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val exploded = df.select(col(idCol).as("_id"),
-        explode(TextFns.tokens(col(textCol))).as("_t"))
-      .withColumn("_h", md5Hash64(col("_t")))
-    val packSums = (0 until 20).map { b =>
-      val packed = (0 until 3).map { lane =>
-        shiftleft(shiftright(col("_h"), b + 20 * lane).bitwiseAND(1L), 21 * lane)
-      }.reduce(_ + _)
-      sum(packed).as(s"_p$b")
-    }
-    val aggsAll = packSums :+ count(lit(1)).as("_n")
-    val withCounts = exploded.groupBy("_id")
-      .agg(aggsAll.head, aggsAll.tail: _*)
-    val sh = (0 until 60).map { i =>
-      val b = i % 20; val lane = i / 20
-      val setCount = shiftright(col(s"_p$b"), 21 * lane).bitwiseAND(0x1FFFFFL)
-      when(setCount * 2 > col("_n"), lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-    withCounts.select(col("_id"), laneGuard(sh).as("_sh"))
-  }
+  /** Near-duplicate candidates by SimHash: rows sharing any of four
+    * 16-bit bands of the 64-bit sketch, verified by Hamming distance
+    * <= maxHamming. Complete for Hamming < 4 (pigeonhole over the 4
+    * bands); candidates at larger distances are best-effort, so a
+    * `maxHamming` above 3 widens the VERIFIED band but not the
+    * guaranteed candidate recall. Output: (id_a, id_b, hamming). */
+  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
+                   maxHamming: Int = 8): DataFrame =
+    bandPairs(simhashes(df, idCol, textCol), bandBits = 16, maxHamming)
 
   /** [[simhashPairs]] over the portable 60-bit md5 sketch: four
-    * 15-bit bands, Hamming-verified candidates — the oracle-checked
-    * variant. Recall guarantee as in [[simhashPairs]]: complete for
-    * Hamming < 4 (pigeonhole over the 4 bands); candidates at larger
-    * distances are best-effort, so a `maxHamming` above 3 widens the
-    * VERIFIED band but not the guaranteed candidate recall. */
+    * 15-bit bands, the oracle-checked variant, with the same recall
+    * guarantee. */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int = 8): DataFrame = {
-    val banded = simhashesPortable(df, idCol, textCol).select(col("_id"), col("_sh"),
+                           maxHamming: Int = 8): DataFrame =
+    bandPairs(simhashesPortable(df, idCol, textCol), bandBits = 15, maxHamming)
+
+  /** The 4-band pair kernel of [[simhashPairs]] and
+    * [[simhashPairsPortable]]: each (_id, _sh) sketch explodes into
+    * four `bandBits`-wide bands, rows sharing a (band, value) pair
+    * join, and candidates are verified by Hamming distance. */
+  private def bandPairs(sk: DataFrame, bandBits: Int,
+                        maxHamming: Int): DataFrame = {
+    val mask = (1L << bandBits) - 1L
+    val banded = sk.select(col("_id"), col("_sh"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"),
-          shiftright(col("_sh"), b * 15).bitwiseAND(0x7FFFL).as("bh"))
+          shiftright(col("_sh"), b * bandBits).bitwiseAND(mask).as("bh"))
       }: _*)).as("_band"))
     // per-leg attribute names — see minhashPairsFromSigs
     val a = banded.select(col("_id").as("id_a"), col("_sh").as("_sha"),
@@ -336,63 +366,6 @@ object Dedup {
                        maxHamming: Int = 8): DataFrame =
     wideBandPairs(simhashes(df, idCol, textCol), 64, maxHamming)
 
-  /** 256-bit SimHash — the text sibling of
-    * [[graft.mm.Multimodal.imageDHash256]], retiring even the WIDE
-    * kernels' ~2^25 knee: FOUR independent 64-bit xxhash words per
-    * token (word w hashes (w, token)), each majority-folded with the
-    * lane-packed plan of [[simhashes]], emitted as four 64-bit
-    * signature words. Near-dup joins key on whole words, so random
-    * band collisions fall to ~4n²/2^64 — no birthday term at any
-    * feasible corpus size and no ball enumeration. The match
-    * criterion tightens with the bits (hamming 3/256 vs 3/64): right
-    * for dedup-before-training; raise maxHamming consciously for
-    * heavier edits. Output: (_id, _s0.._s3). */
-  def simhashes256(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhashes256Impl(df, idCol, textCol,
-      (w, t) => xxhash64(lit(w), t), bitsPerWord = 64)
-
-  /** [[simhashes256]] on the portable md5 family — four salted 60-bit
-    * words (word w hashes "sh256_w_" ++ token), every step replayable
-    * in SQL so the paired query gets a full oracle. 240 signature
-    * bits; same no-knee join geometry (collisions ~4n²/2^60). */
-  def simhashes256Portable(df: DataFrame, idCol: String,
-                           textCol: String): DataFrame =
-    simhashes256Impl(df, idCol, textCol,
-      (w, t) => md5Hash64(concat(lit(s"sh256_${w}_"), t)), bitsPerWord = 60)
-
-  private def simhashes256Impl(df: DataFrame, idCol: String, textCol: String,
-                               hashW: (Int, Column) => Column,
-                               bitsPerWord: Int): DataFrame = {
-    val lanes = 3
-    val fieldBits = 21 // packed-SUM overflow headroom, see simhashes
-    val perSum = (bitsPerWord + lanes - 1) / lanes // bit positions per packed sum
-    val exploded = df.select(col(idCol).as("_id"),
-      explode(TextFns.tokens(col(textCol))).as("_t"))
-    val withH = (0 until 4).foldLeft(exploded)((d, w) =>
-      d.withColumn(s"_h$w", hashW(w, col("_t"))))
-    val packSums = for (w <- 0 until 4; b <- 0 until perSum) yield {
-      val live = (0 until lanes).filter(l => b + perSum * l < bitsPerWord)
-      val packed = live.map { lane =>
-        shiftleft(shiftright(col(s"_h$w"), b + perSum * lane)
-          .bitwiseAND(1L), fieldBits * lane)
-      }.reduce(_ + _)
-      sum(packed).as(s"_p${w}_$b")
-    }
-    val aggsAll = packSums :+ count(lit(1)).as("_n")
-    val withCounts = withH.groupBy("_id").agg(aggsAll.head, aggsAll.tail: _*)
-    val words = (0 until 4).map { w =>
-      (0 until bitsPerWord).map { i =>
-        val b = i % perSum; val lane = i / perSum
-        val setCount = shiftright(col(s"_p${w}_$b"), fieldBits * lane)
-          .bitwiseAND((1L << fieldBits) - 1)
-        when(setCount * 2 > col("_n"), lit(1L << i)).otherwise(lit(0L))
-      }.reduce(_ bitwiseOR _)
-    }
-    // the token-count guard raises once per row (word 0 carries it)
-    withCounts.select(col("_id"), laneGuard(words.head).as("_s0"),
-      words(1).as("_s1"), words(2).as("_s2"), words(3).as("_s3"))
-  }
-
   /** Near-dup pairs over the 240-bit portable signature through the
     * SAME width-agnostic 4-band kernel as the media path
     * ([[graft.mm.Multimodal.bandedNearDups]]): complete for
@@ -417,28 +390,6 @@ object Dedup {
         lit(true).as("ok"), col("_s0").as("b0"), col("_s1").as("b1"),
         col("_s2").as("b2"), col("_s3").as("b3")),
       maxHamming, allowWeak = maxHamming > 3)
-
-  /** Near-duplicate candidates by SimHash: rows sharing any of four
-    * 16-bit bands of the 64-bit sketch, verified by Hamming distance
-    * <= maxHamming. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 8): DataFrame = {
-    val banded = simhashes(df, idCol, textCol).select(col("_id"), col("_sh"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("_sh"), b * 16).bitwiseAND(0xFFFFL).as("bh"))
-      }: _*)).as("_band"))
-    // per-leg attribute names — see minhashPairsFromSigs
-    val a = banded.select(col("_id").as("id_a"), col("_sh").as("_sha"),
-      col("_band").as("_band_a"))
-    val b = banded.select(col("_id").as("id_b"), col("_sh").as("_shb"),
-      col("_band").as("_band_b"))
-    val hamming = bit_count(col("_sha").bitwiseXOR(col("_shb")))
-    a.join(b, col("_band_a") === col("_band_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
 
   /** Resolve near-duplicate PAIRS into duplicate CLUSTERS: connected
     * components by iterative min-label propagation. The missing last

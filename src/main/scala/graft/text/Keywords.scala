@@ -52,58 +52,21 @@ object Keywords {
     * doc's sentences containing the token. Token scores are exact
     * decimals (tf·6-dp-rounded-ln), so the per-sentence mean is one
     * deterministic double division and the argmax (ties → first
-    * sentence) is engine-stable.
+    * sentence) is engine-stable. Docs with no non-blank sentence
+    * produce no row.
     *
-    * Plan: sentence/token explodes → three aggregates keyed by doc —
-    * every shuffle is on (doc[, sidx|token]); no cross-document state,
-    * so the operator scales linearly with corpus size. */
+    * The scoring is doc-local (its "df" counts the document's OWN
+    * sentences): one native `summarize_doc` expression per row — no
+    * aggregate, window or cross-document state, so the operator
+    * scales linearly with corpus size. */
   def extractiveSummary(df: DataFrame, idCol: String, textCol: String,
-                        minTokenLen: Int = 2,
-                        kernel: String = "local"): DataFrame = {
-    require(kernel == "local" || kernel == "shuffle",
-      s"kernel must be 'local' or 'shuffle', got $kernel")
-    if (kernel == "local") {
-      // the scoring is doc-local (its "df" counts the document's OWN
-      // sentences) — one native summarize_doc expression per row, no
-      // checkpoint/aggregate/window machinery; the relational kernel
-      // below stays as the single-giant-doc escape hatch
-      graft.functions.NativeFunctions.register(df.sparkSession)
-      return df.select(col(idCol).as("doc"),
-          call_function("summarize_doc", col(textCol), lit(minTokenLen))
-            .as("_s"))
-        .filter(col("_s").isNotNull)
-        .select(col("doc"), col("_s.sidx").as("sidx"),
-          col("_s.summary").as("summary"), col("_s.score").as("score"))
-    }
-    // sent feeds tf, ns and the final join of one plan, so the regex
-    // sentence split runs once per reading exchange; this kernel is
-    // the single-giant-doc escape hatch, and no measured query pays
-    // for a cut here
-    val sent = df.select(col(idCol).as("doc"),
-        posexplode(split(col(textCol), "[.!?]\\s+")).as(Seq("sidx", "sent")))
-      .filter(length(trim(col("sent"))) > 0)
-    val toks = sent.select(col("doc"), col("sidx"),
-        explode(TextFns.tokens(lower(col("sent")))).as("token"))
-      .filter(length(col("token")) >= minTokenLen)
-    val tf = toks.groupBy("doc", "sidx", "token").agg(count(lit(1)).as("tf"))
-    // tf is unique per (doc, sidx, token), so the sentence-frequency of
-    // a token is just its row count in tf — no second pass over the raw
-    // token stream and no distinct() shuffle of it.
-    val sdf = tf.groupBy("doc", "token").agg(count(lit(1)).as("sdf"))
-    val ns = sent.groupBy("doc").agg(count(lit(1)).as("ns"))
-    val scoredTok = tf
-      .join(sdf, Seq("doc", "token"))
-      .join(ns, Seq("doc"))
-      .withColumn("tokscore",
-        (col("tf").cast("decimal(10,0)") *
-          round(log(col("ns").cast("double") / col("sdf").cast("double")), 6)
-            .cast("decimal(10,6)")).cast("decimal(20,6)"))
-    val sentScore = scoredTok.groupBy("doc", "sidx")
-      .agg((sum("tokscore").cast("double") / count(lit(1)).cast("double"))
-        .as("score"))
-    val w = Window.partitionBy("doc").orderBy(col("score").desc, col("sidx").asc)
-    sentScore.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .join(sent, Seq("doc", "sidx"))
-      .select(col("doc"), col("sidx"), col("sent").as("summary"), col("score"))
+                        minTokenLen: Int = 2): DataFrame = {
+    graft.functions.NativeFunctions.register(df.sparkSession)
+    df.select(col(idCol).as("doc"),
+        call_function("summarize_doc", col(textCol), lit(minTokenLen))
+          .as("_s"))
+      .filter(col("_s").isNotNull)
+      .select(col("doc"), col("_s.sidx").as("sidx"),
+        col("_s.summary").as("summary"), col("_s.score").as("score"))
   }
 }

@@ -102,68 +102,26 @@ object Quality {
     * characters it accounts for (count × bigram length / doc chars).
     * High values flag boilerplate/spam for a training-data filter.
     *
-    * Plan: one token explode feeds a (doc, token) count and, via a
-    * per-doc positional window, a (doc, bigram) count; per-doc
-    * argmax by (count desc, bigram asc) is a two-phase top-1 — all
-    * shuffles keyed by doc, linear in corpus size. Ties and docs with
-    * <2 tokens are deterministic (lexicographic min / empty bigram).
-    */
-  def repetitionStats(df: DataFrame, idCol: String, textCol: String,
-                      kernel: String = "local"): DataFrame = {
-    require(kernel == "local" || kernel == "shuffle",
-      s"kernel must be 'local' or 'shuffle', got $kernel")
-    if (kernel == "local") {
-      // both signals are doc-local — one native expression each, no
-      // shuffle (the dup_ngram_chars rule); the relational kernel
-      // below stays as the single-giant-doc escape hatch
-      graft.functions.NativeFunctions.register(df.sparkSession)
-      val toks = coalesce(TextFns.tokens(col(textCol)),
-        array().cast("array<string>"))
-      return df.select(col(idCol), length(col(textCol)).as("_nc"),
-          call_function("dup_token_counts", toks).as("_d"),
-          call_function("top_ngram_stats", toks, lit(2)).as("_t"))
-        .select(col(idCol),
-          coalesce(round(element_at(col("_d"), 2).cast("double") /
-            when(element_at(col("_d"), 1) > 0, element_at(col("_d"), 1)),
-            9), lit(0.0)).as("dup_token_ratio"),
-          col("_t.gram").as("top_bigram"),
-          col("_t.cnt").as("top_bigram_n"),
-          round(coalesce(
-            when(col("_t.cnt") > 0, col("_t.cnt") *
-              length(col("_t.gram")).cast("double") / col("_nc")),
-            lit(0.0)), 9).as("top_bigram_char_frac"))
-    }
-    import org.apache.spark.sql.expressions.Window
-    val base = df.select(col(idCol).as("doc"),
-      length(col(textCol)).as("_nc"), col(textCol).as("_txt"))
-    val toks = base.select(col("doc"),
-      posexplode(TextFns.tokens(col("_txt"))).as(Seq("_p", "_t")))
-    val tf = toks.groupBy("doc", "_t").agg(count(lit(1)).as("_tf"))
-    val dup = tf.groupBy("doc").agg(
-      sum("_tf").as("_n"),
-      sum(when(col("_tf") > 1, col("_tf")).otherwise(0L)).as("_dup"))
-    val w = Window.partitionBy("doc").orderBy("_p")
-    val big = toks.withColumn("_t2", lead("_t", 1).over(w))
-      .filter(col("_t2").isNotNull)
-      .select(col("doc"), concat_ws(" ", col("_t"), col("_t2")).as("_g"))
-      .groupBy("doc", "_g").agg(count(lit(1)).as("_gc"))
-    val top = big.withColumn("_rn", row_number().over(
-        Window.partitionBy("doc").orderBy(col("_gc").desc, col("_g").asc)))
-      .filter(col("_rn") === 1)
-      .select(col("doc"), col("_g").as("top_bigram"), col("_gc").as("top_bigram_n"))
-    // dup is LEFT-joined: an empty/whitespace-only doc has no token
-    // rows, and a quality filter that silently drops such docs from
-    // its report would hide exactly the rows it should be flagging
-    base.select("doc", "_nc")
-      .join(dup, Seq("doc"), "left")
-      .join(top, Seq("doc"), "left")
-      .select(col("doc").as(idCol),
-        coalesce(round(col("_dup").cast("double") / col("_n"), 9), lit(0.0))
-          .as("dup_token_ratio"),
-        coalesce(col("top_bigram"), lit("")).as("top_bigram"),
-        coalesce(col("top_bigram_n"), lit(0L)).as("top_bigram_n"),
+    * Both signals are doc-local: one native expression each
+    * (`dup_token_counts`, `top_ngram_stats`) inside one projection, no
+    * shuffle. Ties break by (count desc, bigram binary asc); docs with
+    * <2 tokens surface with an empty bigram and 0. */
+  def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    graft.functions.NativeFunctions.register(df.sparkSession)
+    val toks = coalesce(TextFns.tokens(col(textCol)),
+      array().cast("array<string>"))
+    df.select(col(idCol), length(col(textCol)).as("_nc"),
+        call_function("dup_token_counts", toks).as("_d"),
+        call_function("top_ngram_stats", toks, lit(2)).as("_t"))
+      .select(col(idCol),
+        coalesce(round(element_at(col("_d"), 2).cast("double") /
+          when(element_at(col("_d"), 1) > 0, element_at(col("_d"), 1)),
+          9), lit(0.0)).as("dup_token_ratio"),
+        col("_t.gram").as("top_bigram"),
+        col("_t.cnt").as("top_bigram_n"),
         round(coalesce(
-          col("top_bigram_n") * length(col("top_bigram")).cast("double") / col("_nc"),
+          when(col("_t.cnt") > 0, col("_t.cnt") *
+            length(col("_t.gram")).cast("double") / col("_nc")),
           lit(0.0)), 9).as("top_bigram_char_frac"))
   }
 
@@ -243,76 +201,28 @@ object Quality {
     * Coverage is positional: a token counts once however many
     * duplicated n-grams overlap it, and "characters" are token
     * characters (whitespace-free — the same Σ token-length integer
-    * [[qualityScores]] uses).
+    * [[qualityScores]] uses). Empty docs and docs with no duplicated
+    * n-gram surface with frac 0.
     *
-    * Plan: n-grams materialize per row via `transform(sequence)` +
-    * `slice` (window-free, codegen), ONE posexplode feeds the
-    * per-(doc, gram) count, occurrences of duplicated grams re-join on
-    * (doc, gram), covered positions union via `explode(sequence)` +
-    * distinct, and token lengths join back by (doc, position). Every
-    * shuffle is keyed by doc or (doc, gram) — linear in corpus size,
-    * the same explode-once shape as
-    * [[graft.text.Chunk.maskDuplicateSpans]]. */
-  /** (doc, 0-based gram start `_i0`, gram text `_g`) for every word
-    * n-gram — built in-row via transform(sequence)+slice (window-free,
-    * codegen) and exploded once; shared by the duplicate-mass and
-    * top-gram repetition signals. */
-  private def ngramOccurrences(base: DataFrame, n: Int): DataFrame =
-    base.filter(size(col("_toks")) >= n)
-      .select(col("doc"), posexplode(
-        transform(sequence(lit(1), size(col("_toks")) - (n - 1)),
-          i => array_join(slice(col("_toks"), i, lit(n)), " "))).as(Seq("_i0", "_g")))
-
+    * Duplicate coverage is doc-local: one native `dup_ngram_chars`
+    * expression per row, NO shuffle at all (the EvalMetrics
+    * row-local rule). */
   def dupNgramCharFrac(df: DataFrame, idCol: String, textCol: String,
-                       n: Int, minOccur: Int = 2,
-                       kernel: String = "local"): DataFrame = {
+                       n: Int, minOccur: Int = 2): DataFrame = {
     require(n >= 1, "n must be >= 1")
     require(minOccur >= 2, "minOccur must be >= 2")
-    require(kernel == "local" || kernel == "shuffle",
-      s"kernel must be 'local' or 'shuffle', got $kernel")
-    if (kernel == "local") {
-      // duplicate coverage is doc-local: one native expression per
-      // row, NO shuffle at all (the EvalMetrics row-local rule) —
-      // the relational kernel below stays as the single-giant-doc
-      // escape hatch
-      graft.functions.NativeFunctions.register(df.sparkSession)
-      return df.select(col(idCol),
-          call_function("dup_ngram_chars",
-            coalesce(TextFns.tokens(col(textCol)),
-              array().cast("array<string>")),
-            lit(n), lit(minOccur)).as("_d"))
-        .select(col(idCol),
-          element_at(col("_d"), 1).as("total_chars"),
-          element_at(col("_d"), 2).as("dup_chars"))
-        .withColumn("dup_ngram_char_frac",
-          round(coalesce(col("dup_chars").cast("double") /
-            when(col("total_chars") > 0, col("total_chars")), lit(0.0)), 9))
-    }
-    val base = df.select(col(idCol).as("doc"), TextFns.tokens(col(textCol)).as("_toks"))
-    val tokLens = base
-      .select(col("doc"), posexplode(col("_toks")).as(Seq("_p0", "_t")))
-      .select(col("doc"), (col("_p0") + 1).as("_pos"), length(col("_t")).as("_len"))
-    val grams = ngramOccurrences(base, n)
-    val dups = grams.groupBy("doc", "_g")
-      .agg(count(lit(1)).as("_c")).filter(col("_c") >= minOccur)
-      .select("doc", "_g")
-    val covered = grams.join(dups, Seq("doc", "_g"))
-      .select(col("doc"), explode(sequence(col("_i0") + 1, col("_i0") + n)).as("_pos"))
-      .distinct()
-    val covChars = covered.join(tokLens, Seq("doc", "_pos"))
-      .groupBy("doc").agg(sum("_len").as("_cov"))
-    val totChars = tokLens.groupBy("doc").agg(sum("_len").as("_tot"))
-    // LEFT joins: a doc with no tokens (or no duplicated n-gram) must
-    // surface with frac 0, not vanish — same survival rule as
-    // [[repetitionStats]]
-    base.select(col("doc"))
-      .join(totChars, Seq("doc"), "left")
-      .join(covChars, Seq("doc"), "left")
-      .select(col("doc").as(idCol),
-        coalesce(col("_tot"), lit(0L)).as("total_chars"),
-        coalesce(col("_cov"), lit(0L)).as("dup_chars"),
-        round(coalesce(col("_cov").cast("double") / col("_tot"), lit(0.0)), 9)
-          .as("dup_ngram_char_frac"))
+    graft.functions.NativeFunctions.register(df.sparkSession)
+    df.select(col(idCol),
+        call_function("dup_ngram_chars",
+          coalesce(TextFns.tokens(col(textCol)),
+            array().cast("array<string>")),
+          lit(n), lit(minOccur)).as("_d"))
+      .select(col(idCol),
+        element_at(col("_d"), 1).as("total_chars"),
+        element_at(col("_d"), 2).as("dup_chars"))
+      .withColumn("dup_ngram_char_frac",
+        round(coalesce(col("dup_chars").cast("double") /
+          when(col("total_chars") > 0, col("total_chars")), lit(0.0)), 9))
   }
 
   /** Marker-word language scores + argmax prediction.
@@ -347,6 +257,41 @@ object Quality {
       .drop(profiles.map(p => s"_score_${p._1}"): _*)
   }
 
+  /** Gopher's TOP n-gram signal: the most frequent word n-gram per
+    * document and the fraction of the document's token characters its
+    * occurrences account for (count × gram token chars ÷ total token
+    * chars — Rae et al. 2021 table A1 applies this for n = 2..4;
+    * [[dupNgramCharFrac]] is the companion duplicate-mass signal for
+    * larger n). Occurrences may overlap, so the fraction can exceed 1
+    * on pathological repetition ("a a a a"'s top bigram) — that IS the
+    * boilerplate signal, don't clamp it. Ties break by (count desc,
+    * gram binary asc); docs shorter than n tokens surface with an
+    * empty gram and 0.
+    *
+    * The modal gram of a document is doc-local: one native
+    * `top_ngram_stats` expression per row, NO shuffle at all. */
+  def topNgramCharFrac(df: DataFrame, idCol: String, textCol: String,
+                       n: Int): DataFrame = {
+    require(n >= 1, "n must be >= 1")
+    graft.functions.NativeFunctions.register(df.sparkSession)
+    val toks = coalesce(TextFns.tokens(col(textCol)),
+      array().cast("array<string>"))
+    df.select(col(idCol),
+        call_function("top_ngram_stats", toks, lit(n)).as("_t"),
+        length(array_join(toks, "")).as("_tot"))
+      .select(col(idCol),
+        col("_t.gram").as("top_ngram"),
+        col("_t.cnt").as("top_ngram_n"),
+        // cnt = 0 guard: 0 · (len("") − (n−1)) is IEEE −0.0; a doc
+        // with no gram reads +0.0
+        round(coalesce(
+          when(col("_t.cnt") > 0,
+            col("_t.cnt").cast("double") *
+              (length(col("_t.gram")) - lit(n - 1)) /
+              when(col("_tot") > 0, col("_tot"))),
+          lit(0.0)), 9).as("top_ngram_char_frac"))
+  }
+
   /** Token-budget sampling — the data-mixing step of a training run:
     * within each source, keep the best-scoring documents until the
     * per-source token budget is spent (the first doc to cross the
@@ -357,67 +302,6 @@ object Quality {
     * must be processed by one task, so shard huge single sources by a
     * salted sub-source key first if a source alone exceeds a task's
     * comfortable row count. */
-  /** Gopher's TOP n-gram signal: the most frequent word n-gram per
-    * document and the fraction of the document's token characters its
-    * occurrences account for (count × gram token chars ÷ total token
-    * chars — Rae et al. 2021 table A1 applies this for n = 2..4;
-    * [[dupNgramCharFrac]] is the companion duplicate-mass signal for
-    * larger n). Occurrences may overlap, so the fraction can exceed 1
-    * on pathological repetition ("a a a a"'s top bigram) — that IS the
-    * boilerplate signal, don't clamp it. Ties break lexicographically;
-    * docs shorter than n tokens surface with an empty gram and 0.
-    *
-    * Plan: the shared in-row gram builder + one map-side-combined
-    * (doc, gram) count + the two-phase per-doc top-1 — all shuffles
-    * keyed by doc or (doc, gram). */
-  def topNgramCharFrac(df: DataFrame, idCol: String, textCol: String,
-                       n: Int, kernel: String = "local"): DataFrame = {
-    require(n >= 1, "n must be >= 1")
-    require(kernel == "local" || kernel == "shuffle",
-      s"kernel must be 'local' or 'shuffle', got $kernel")
-    if (kernel == "local") {
-      // the modal gram of a document is doc-local: one native
-      // expression per row replaces the (doc, gram) count + window —
-      // NO shuffle at all (same tie-break: count desc, gram binary asc)
-      graft.functions.NativeFunctions.register(df.sparkSession)
-      val toks = coalesce(TextFns.tokens(col(textCol)),
-        array().cast("array<string>"))
-      return df.select(col(idCol),
-          call_function("top_ngram_stats", toks, lit(n)).as("_t"),
-          length(array_join(toks, "")).as("_tot"))
-        .select(col(idCol),
-          col("_t.gram").as("top_ngram"),
-          col("_t.cnt").as("top_ngram_n"),
-          // cnt = 0 guard: 0 · (len("") − (n−1)) is IEEE −0.0, which
-          // the relational kernel's join-miss coalesce spells +0.0
-          round(coalesce(
-            when(col("_t.cnt") > 0,
-              col("_t.cnt").cast("double") *
-                (length(col("_t.gram")) - lit(n - 1)) /
-                when(col("_tot") > 0, col("_tot"))),
-            lit(0.0)), 9).as("top_ngram_char_frac"))
-    }
-    import org.apache.spark.sql.expressions.Window
-    val base = df.select(col(idCol).as("doc"),
-      TextFns.tokens(col(textCol)).as("_toks"))
-    val totals = base.select(col("doc"),
-      length(array_join(col("_toks"), "")).as("_tot"))
-    val top = ngramOccurrences(base, n)
-      .groupBy("doc", "_g").agg(count(lit(1)).as("_c"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy("doc").orderBy(col("_c").desc, col("_g").asc)))
-      .filter(col("_rn") === 1)
-      .select(col("doc"), col("_g").as("top_ngram"), col("_c").as("top_ngram_n"))
-    totals.join(top, Seq("doc"), "left")
-      .select(col("doc").as(idCol),
-        coalesce(col("top_ngram"), lit("")).as("top_ngram"),
-        coalesce(col("top_ngram_n"), lit(0L)).as("top_ngram_n"),
-        round(coalesce(
-          col("top_ngram_n").cast("double") *
-            (length(col("top_ngram")) - lit(n - 1)) / col("_tot"),
-          lit(0.0)), 9).as("top_ngram_char_frac"))
-  }
-
   def selectByTokenBudget(df: DataFrame, idCol: String, sourceCol: String,
                           scoreCol: String, tokenCol: String,
                           budgetPerSource: Long): DataFrame = {

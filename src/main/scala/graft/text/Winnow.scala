@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   * 2/(w+1) of all k-grams (paper §3), so the fingerprint table is a
   * small fraction of corpus volume.
   *
-  * Everything is row-local higher-order functions over the char
-  * stream — no explode until the final (id, fp) projection, no UDF,
-  * no shuffle before the fingerprint groupBy. At 100 TB the plan is:
+  * Everything is row-local over the char stream (a native kernel for
+  * the xxhash64 family, higher-order functions for the md5 family) —
+  * no explode until the final (id, fp) projection, no UDF, no
+  * shuffle before the fingerprint groupBy. At 100 TB the plan is:
   * one scan, per-row kernel, one exchange keyed by fp hash (bounded
   * by the dup-set guard exactly like minhashPairs).
   *
@@ -43,41 +44,45 @@ object Winnow {
     * of the paper only changes recorded positions, which pair
     * detection does not use.
     *
-    * `portableHash = true` swaps xxhash64 for the md5-derived 60-bit
+    * The xxhash64 family runs the native row-local `winnow_fps`
+    * kernel: O(n) monotonic-deque window minima inside whole-stage
+    * codegen. `portableHash = true` swaps in the md5-derived 60-bit
     * hash ([[Dedup.md5Hash64]]) so any engine with md5 replays the
-    * selection bit-identically (the oracle convention).
+    * selection bit-identically (the oracle convention); that family
+    * runs as higher-order functions over the char stream
+    * ([[md5WindowMins]]). (id, fp) is unique by construction — each
+    * row's minima are distinct — and below-threshold docs explode to
+    * zero rows.
     */
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 5, w: Int = 4,
-                   portableHash: Boolean = false,
-                   kernel: String = "local"): DataFrame = {
+                   portableHash: Boolean = false): DataFrame = {
     require(k >= 2, s"k-gram size must be >= 2, got $k")
     require(w >= 2, s"winnow window must be >= 2, got $w")
-    require(kernel == "local" || kernel == "hof",
-      s"kernel must be 'local' or 'hof', got $kernel")
-    val sRaw = regexp_replace(TextFns.cleanText(col(textCol)), " ", "")
-    if (!portableHash && kernel == "local") {
-      // xxhash64 family runs the native row-local kernel: O(n)
-      // monotonic-deque window minima inside whole-stage codegen,
-      // bit-identical to the HOF path on the (ASCII) cleaned stream —
-      // asserted in Batch34Spec
-      graft.functions.NativeFunctions.register(df.sparkSession)
-      val fps = call_function("winnow_fps", sRaw, lit(k), lit(w))
-      return df.select(col(idCol), explode(fps).as("fp"))
-    }
-    def hashOf(gram: Column): Column =
-      if (portableHash) Dedup.md5Hash64(gram) else xxhash64(gram)
+    val s = regexp_replace(TextFns.cleanText(col(textCol)), " ", "")
+    val fps =
+      if (portableHash) md5WindowMins(s, k, w)
+      else {
+        graft.functions.NativeFunctions.register(df.sparkSession)
+        call_function("winnow_fps", s, lit(k), lit(w))
+      }
+    df.select(col(idCol), explode(fps).as("fp"))
+  }
+
+  /** Distinct window minima of the md5-60 k-gram hashes of `sRaw`.
+    * HOF lambdas get NO subexpression elimination: an array-valued
+    * expression referenced inside a lambda re-evaluates on EVERY
+    * lambda invocation, turning the window pass O(n²·md5). Each stage
+    * is therefore LET-BOUND via the one-element-array trick —
+    * transform(array(e), x => body)[0] evaluates `e` exactly once per
+    * row and hands the VALUE to the body as a lambda variable. */
+  private def md5WindowMins(sRaw: Column, k: Int, w: Int): Column = {
     val emptyL = array().cast("array<long>")
-    // HOF lambdas get NO subexpression elimination: an array-valued
-    // expression referenced inside a lambda re-evaluates on EVERY
-    // lambda invocation, turning the window pass O(n²·md5). Each
-    // stage is therefore LET-BOUND via the one-element-array trick —
-    // transform(array(e), x => body)[0] evaluates `e` exactly once
-    // per row and hands the VALUE to the body as a lambda variable.
-    val fps = transform(array(sRaw), s0 => {
+    transform(array(sRaw), s0 => {
       val nG = length(s0) - lit(k - 1) // # k-grams
       val hashesE = when(nG >= 1,
-        transform(sequence(lit(1), nG), i => hashOf(s0.substr(i, lit(k)))))
+        transform(sequence(lit(1), nG),
+          i => Dedup.md5Hash64(s0.substr(i, lit(k)))))
         .otherwise(emptyL)
       transform(array(hashesE), hs => {
         val nWin = size(hs) - lit(w - 1) // # complete windows
@@ -87,10 +92,6 @@ object Winnow {
           .otherwise(emptyL)
       }).getItem(0)
     }).getItem(0)
-    df.select(col(idCol), explode(fps).as("fp"))
-    // no distinct() needed: array_distinct already dedupes per row,
-    // so (id, fp) is unique by construction — one shuffle saved;
-    // below-threshold docs explode to zero rows
   }
 
   /** Document pairs sharing at least `minShared` winnowing
@@ -107,9 +108,8 @@ object Winnow {
   def pairs(df: DataFrame, idCol: String, textCol: String,
             k: Int = 5, w: Int = 4, minShared: Int = 2,
             maxDf: Int = 1000,
-            portableHash: Boolean = false,
-            kernel: String = "local"): DataFrame = {
-    val fps = fingerprints(df, idCol, textCol, k, w, portableHash, kernel)
+            portableHash: Boolean = false): DataFrame = {
+    val fps = fingerprints(df, idCol, textCol, k, w, portableHash)
     val bounded = fps
       .withColumn("_df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("fp")))
@@ -136,15 +136,13 @@ object Winnow {
                  idCol: String, textCol: String,
                  k: Int = 5, w: Int = 4, minShared: Int = 2,
                  maxDf: Int = 1000,
-                 portableHash: Boolean = false,
-                 kernel: String = "local"): DataFrame = {
-    val refFps = fingerprints(ref, idCol, textCol, k, w, portableHash, kernel)
+                 portableHash: Boolean = false): DataFrame = {
+    val refFps = fingerprints(ref, idCol, textCol, k, w, portableHash)
       .withColumn("_df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("fp")))
       .filter(col("_df") <= maxDf)
       .select(col(idCol).as("id_b"), col("fp"))
-    val corpusFps = fingerprints(df, idCol, textCol, k, w, portableHash,
-        kernel)
+    val corpusFps = fingerprints(df, idCol, textCol, k, w, portableHash)
       .select(col(idCol).as("id_a"), col("fp"))
     corpusFps.join(refFps, Seq("fp"))
       .groupBy("id_a", "id_b")

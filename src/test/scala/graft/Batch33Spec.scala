@@ -1,12 +1,70 @@
 package graft
 
-import graft.text.EvalMetrics
-import org.apache.spark.sql.functions.col
+import scala.reflect.runtime.universe.TypeTag
+import graft.text.{EvalMetrics, TextFns}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, lower, regexp_replace}
 
 /** Round-12 continuation: chrF — hand-computed char-n-gram F-scores
-  * (Popović 2015) and the whitespace/empty/short-doc conventions. */
+  * (Popović 2015) and the whitespace/empty/short-doc conventions — and
+  * driver-side goldens for the row-local eval, Gopher repetition and
+  * summary kernels, run in codegen and interpreted mode. */
 class Batch33Spec extends SparkSpec {
   import spark.implicits._
+
+  private def r6(x: Double): Double = BigDecimal(x)
+    .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def r9(x: Double): Double = BigDecimal(x)
+    .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Occurrence counts of the word n-grams of `toks`, each gram its n
+    * tokens joined by one space. */
+  private def wordGrams(toks: Seq[String], n: Int): Map[String, Int] =
+    toks.sliding(n).filter(_.size == n).map(_.mkString(" ")).toSeq
+      .groupBy(identity).map { case (g, v) => g -> v.size }
+
+  /** chrF (P, R, F2) of two whitespace-stripped lowered strings in the
+    * operator's integer micro-unit arithmetic. */
+  private def chrfGolden(c: String, r: String,
+                         maxN: Int): (Double, Double, Double) = {
+    def grams(s: String, n: Int) =
+      (0 to s.length - n).map(i => s.substring(i, i + n))
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+    // the same exact integer micro-unit arithmetic as the operator
+    def micro(m: Long, d: Long): Long =
+      if (d > 0) (2L * m * 1000000L + d) / (2L * d) else 0L
+    val pr = (1 to maxN).map { n =>
+      val cg = grams(c, n)
+      val rg = grams(r, n)
+      val m = cg.map { case (g, cc) => math.min(cc, rg.getOrElse(g, 0)) }
+        .sum.toLong
+      val ct = cg.values.sum.toLong; val rt = rg.values.sum.toLong
+      (micro(m, ct), micro(m, rt))
+    }
+    val p = ((2L * pr.map(_._1).sum + maxN) / (2L * maxN)).toDouble / 1e6
+    val rr = ((2L * pr.map(_._2).sum + maxN) / (2L * maxN)).toDouble / 1e6
+    val f = if (4.0 * p + rr > 0) r6(5.0 * p * rr / (4.0 * p + rr)) else 0.0
+    (p, rr, f)
+  }
+
+  /** The sf0.001 documents plus edge documents, as driver rows. */
+  private lazy val corpusRows: Seq[(Long, String)] =
+    spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
+      .toSeq ++ Seq(
+        (90001L, ""), (90002L, "   "), (90003L, "solo"),
+        (90004L, "a a a a a"), (90005L, "The Cat the cat THE CAT sat"),
+        (90006L, "\tleading tab then words"), (90007L, "x y. z!  w? v"))
+
+  /** `rows` with their first word dropped — the eval entries' twin. */
+  private def twins(rows: Seq[(Long, String)]): Seq[(Long, String)] =
+    rows.map { case (i, t) => (i, t.replaceFirst("^\\S+\\s+", "")) }
+
+  /** `f(text)` per document id, evaluated by Spark. */
+  private def perDoc[T: TypeTag](rows: Seq[(Long, String)],
+                                 f: Column => Column): Map[Long, T] =
+    rows.toDF("id", "text").select(col("id"), f(col("text")))
+      .as[(Long, T)].collect().toMap
 
   private def chrf(cand: Seq[(Long, String)], ref: Seq[(Long, String)],
                    maxN: Int, beta: Double = 2.0) =
@@ -58,28 +116,9 @@ class Batch33Spec extends SparkSpec {
 
   test("chrF agrees with a driver-side golden on random strings") {
     val rng = new scala.util.Random(7)
-    def golden(c: String, r: String, maxN: Int): (Double, Double, Double) = {
-      def grams(s: String, n: Int) =
-        (0 to s.length - n).map(i => s.substring(i, i + n))
-          .groupBy(identity).map { case (k, v) => k -> v.size }
-      def r6(x: Double) = BigDecimal(x)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      // the same exact integer micro-unit arithmetic as the operator
-      def micro(m: Long, d: Long): Long =
-        if (d > 0) (2L * m * 1000000L + d) / (2L * d) else 0L
-      val pr = (1 to maxN).map { n =>
-        val cg = grams(c.toLowerCase.replaceAll("\\s+", ""), n)
-        val rg = grams(r.toLowerCase.replaceAll("\\s+", ""), n)
-        val m = cg.map { case (g, cc) => math.min(cc, rg.getOrElse(g, 0)) }
-          .sum.toLong
-        val ct = cg.values.sum.toLong; val rt = rg.values.sum.toLong
-        (micro(m, ct), micro(m, rt))
-      }
-      val p = ((2L * pr.map(_._1).sum + maxN) / (2L * maxN)).toDouble / 1e6
-      val rr = ((2L * pr.map(_._2).sum + maxN) / (2L * maxN)).toDouble / 1e6
-      val f = if (4.0 * p + rr > 0) r6(5.0 * p * rr / (4.0 * p + rr)) else 0.0
-      (p, rr, f)
-    }
+    def golden(c: String, r: String, maxN: Int): (Double, Double, Double) =
+      chrfGolden(c.toLowerCase.replaceAll("\\s+", ""),
+        r.toLowerCase.replaceAll("\\s+", ""), maxN)
     val docs = (0L until 40L).map { i =>
       val alpha = "abcab "
       (i, (0 until 3 + rng.nextInt(20)).map(_ =>
@@ -115,96 +154,195 @@ class Batch33Spec extends SparkSpec {
     assert(rouge.filter(col("rouge_1") > 0).count() >= 3)
   }
 
-  test("local, shuffle and hashed-gram kernels agree on real data") {
-    val cand = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val ref = cand.select(col("doc_id"),
-      org.apache.spark.sql.functions.regexp_replace(
-        col("text"), "^\\S+\\s+", "").as("text"))
-    def rouge(kernel: String, hashed: Boolean) =
-      graft.text.EvalMetrics.rougeN(cand, ref, "doc_id", "text", "text",
-        maxN = 2, kernel = kernel, hashGrams = hashed)
-        .orderBy("doc").collect().toSeq
-    val rLocal = rouge("local", hashed = true)
-    assert(rLocal === rouge("shuffle", hashed = true))
-    assert(rLocal === rouge("shuffle", hashed = false))
-    def bleu(kernel: String, hashed: Boolean) =
-      graft.text.EvalMetrics.corpusBleu(cand, ref, "doc_id", "text",
-        "text", maxN = 4, kernel = kernel, hashGrams = hashed)
-        .collect().toSeq
-    val bLocal = bleu("local", hashed = true)
-    assert(bLocal === bleu("shuffle", hashed = true))
-    assert(bLocal === bleu("shuffle", hashed = false))
-    def chrfK(kernel: String) =
-      graft.text.EvalMetrics.chrF(cand, ref, "doc_id", "text", "text",
-        maxN = 4, kernel = kernel).orderBy("doc").collect().toSeq
-    assert(chrfK("local") === chrfK("shuffle"))
+  test("rougeN, corpusBleu and chrF equal driver-side goldens on real data") {
+    val refRows = twins(corpusRows)
+    val cand = nonLocal(corpusRows).toDF("doc_id", "text")
+    val ref = nonLocal(refRows).toDF("doc_id", "text")
+    val lowered = (c: Column) => TextFns.tokens(lower(c))
+    val cToks = perDoc[Seq[String]](corpusRows, lowered)
+    val rToks = perDoc[Seq[String]](refRows, lowered)
+    // (matched, cand total, ref total) of order n for one document
+    def triple(id: Long, n: Int): (Long, Long, Long) = {
+      val cg = wordGrams(cToks(id), n); val rg = wordGrams(rToks(id), n)
+      (cg.map { case (g, c) => math.min(c, rg.getOrElse(g, 0)) }.sum.toLong,
+        cg.values.sum.toLong, rg.values.sum.toLong)
+    }
+    val ids = corpusRows.map(_._1).sorted
+    val rougeGold = ids.map { id =>
+      Seq[Any](id) ++ (1 to 2).map { n =>
+        val (m, _, rt) = triple(id, n)
+        if (rt > 0) r6(m.toDouble / rt.toDouble) else 0.0
+      }
+    }
+    val rouge = bothModes(graft.text.EvalMetrics.rougeN(cand, ref,
+      "doc_id", "text", "text", maxN = 2).orderBy("doc").collect().toSeq
+      .map(_.toSeq))
+    assert(rouge === rougeGold)
+
+    val candLen = ids.map(cToks(_).size.toLong).sum
+    val refLen = ids.map(rToks(_).size.toLong).sum
+    val ps = (1 to 4).map { n =>
+      val (m, t) = ids.map(triple(_, n)).foldLeft((0L, 0L)) {
+        case ((am, at), (m, t, _)) => (am + m, at + t)
+      }
+      if (t > 0) r6(m.toDouble / t.toDouble) else 0.0
+    }
+    val bp =
+      if (candLen >= refLen && candLen > 0) 1.0
+      else if (candLen > 0)
+        r6(StrictMath.exp(1.0 - refLen.toDouble / candLen.toDouble))
+      else 0.0
+    val bleuGold =
+      if (ps.contains(0.0)) 0.0
+      else r6(bp * StrictMath.exp(ps.map(StrictMath.log).reduce(_ + _) / 4.0))
+    val bleu = bothModes(graft.text.EvalMetrics.corpusBleu(cand, ref,
+      "doc_id", "text", "text", maxN = 4).collect().toSeq.map(_.toSeq))
+    assert(bleu === Seq(Seq[Any](bleuGold, bp) ++ ps ++ Seq(candLen, refLen)))
+    assert(bleuGold > 0.0)
+
+    val stripped = (c: Column) => regexp_replace(lower(c), "\\s+", "")
+    val cStr = perDoc[String](corpusRows, stripped)
+    val rStr = perDoc[String](refRows, stripped)
+    val chrfGold = ids.map { id =>
+      val (p, r, f) = chrfGolden(cStr(id), rStr(id), 4)
+      (id, p, r, f)
+    }
+    val chrf = bothModes(graft.text.EvalMetrics.chrF(cand, ref, "doc_id",
+      "text", "text", maxN = 4).orderBy("doc")
+      .as[(Long, Double, Double, Double)].collect().toSeq)
+    assert(chrf === chrfGold)
   }
 
-  test("Gopher repetition kernels: local equals shuffle, edges included") {
-    val docs = (Seq(
+  /** Most frequent n-gram of `toks` by (count desc, gram UTF-8
+    * binary asc); ("", 0) below n tokens. */
+  private def topGram(toks: Seq[String], n: Int): (String, Long) = {
+    val bin = Ordering.Iterable[Int].on[String](
+      _.getBytes("UTF-8").toSeq.map(_ & 0xff))
+    val grams = wordGrams(toks, n)
+    if (grams.isEmpty) ("", 0L)
+    else {
+      val best = grams.toSeq.min(Ordering.Tuple2(Ordering.Int.reverse, bin)
+        .on[(String, Int)](g => (g._2, g._1)))
+      (best._1, best._2.toLong)
+    }
+  }
+
+  private def cpLen(s: String): Long = s.codePointCount(0, s.length).toLong
+
+  test("Gopher repetition signals equal driver-side goldens, edges included") {
+    val edge = Seq(
       (1L, "a b c a b c a b"),  // dup 2-grams cover most positions
       (2L, "x y z w"),          // no repeated 2-gram
       (3L, "t t t t"),          // one gram repeated everywhere
       (4L, "solo"),             // fewer tokens than n
       (5L, "")                  // empty
     ) ++ (6L to 60L).map(i => (i, s"w$i q${i % 7} e${i % 3} q${i % 7} " +
-      s"e${i % 3} q${i % 7} r${i % 11}"))).toDF("doc_id", "text")
-    val dl = graft.text.Quality.dupNgramCharFrac(docs, "doc_id", "text",
-      n = 2, minOccur = 2, kernel = "local").orderBy("doc_id").collect().toSeq
-    val ds = graft.text.Quality.dupNgramCharFrac(docs, "doc_id", "text",
-      n = 2, minOccur = 2, kernel = "shuffle").orderBy("doc_id").collect().toSeq
-    assert(dl === ds)
-    val tl = graft.text.Quality.topNgramCharFrac(docs, "doc_id", "text",
-      n = 2, kernel = "local").orderBy("doc_id").collect().toSeq
-    val ts = graft.text.Quality.topNgramCharFrac(docs, "doc_id", "text",
-      n = 2, kernel = "shuffle").orderBy("doc_id").collect().toSeq
-    assert(tl === ts)
-    // and on the real corpus with the entry parameterization
-    val real = spark.read.parquet(s"$sf/documents.parquet")
-    val rl = graft.text.Quality.dupNgramCharFrac(real, "doc_id", "text",
-      n = 2, minOccur = 2, kernel = "local").orderBy("doc_id").collect().toSeq
-    val rs = graft.text.Quality.dupNgramCharFrac(real, "doc_id", "text",
-      n = 2, minOccur = 2, kernel = "shuffle").orderBy("doc_id").collect().toSeq
-    assert(rl === rs)
-    val ql = graft.text.Quality.topNgramCharFrac(real, "doc_id", "text",
-      n = 3, kernel = "local").orderBy("doc_id").collect().toSeq
-    val qs = graft.text.Quality.topNgramCharFrac(real, "doc_id", "text",
-      n = 3, kernel = "shuffle").orderBy("doc_id").collect().toSeq
-    assert(ql === qs)
-    val pl = graft.text.Quality.repetitionStats(docs, "doc_id", "text",
-      kernel = "local").orderBy("doc_id").collect().toSeq
-    val ps = graft.text.Quality.repetitionStats(docs, "doc_id", "text",
-      kernel = "shuffle").orderBy("doc_id").collect().toSeq
-    assert(pl === ps)
-    val el = graft.text.Quality.repetitionStats(real, "doc_id", "text",
-      kernel = "local").orderBy("doc_id").collect().toSeq
-    val es = graft.text.Quality.repetitionStats(real, "doc_id", "text",
-      kernel = "shuffle").orderBy("doc_id").collect().toSeq
-    assert(el === es)
+      s"e${i % 3} q${i % 7} r${i % 11}"))
+    val real = corpusRows
+    val toksOf = (c: Column) => TextFns.tokens(c)
+    def dupGold(rows: Seq[(Long, String)], n: Int) = {
+      val toks = perDoc[Seq[String]](rows, toksOf)
+      rows.map(_._1).sorted.map { id =>
+        val t = toks(id)
+        val starts = (0 to t.size - n).map(i => t.slice(i, i + n).mkString(" "))
+        val counts = starts.groupBy(identity).map { case (g, v) => g -> v.size }
+        val covered = starts.indices.filter(i => counts(starts(i)) >= 2)
+          .flatMap(i => i until i + n).toSet
+        val tot = t.map(cpLen).sum
+        val dup = covered.toSeq.map(p => cpLen(t(p))).sum
+        (id, tot, dup, if (tot > 0) r9(dup.toDouble / tot.toDouble) else 0.0)
+      }
+    }
+    def topGold(rows: Seq[(Long, String)], n: Int) = {
+      val toks = perDoc[Seq[String]](rows, toksOf)
+      rows.map(_._1).sorted.map { id =>
+        val (g, c) = topGram(toks(id), n)
+        val tot = toks(id).map(cpLen).sum
+        (id, g, c, if (c > 0 && tot > 0)
+          r9(c.toDouble * (cpLen(g) - (n - 1)).toDouble / tot.toDouble) else 0.0)
+      }
+    }
+    def repGold(rows: Seq[(Long, String)]) = {
+      val toks = perDoc[Seq[String]](rows, toksOf)
+      val text = rows.toMap
+      rows.map(_._1).sorted.map { id =>
+        val t = toks(id)
+        val dup = t.groupBy(identity).values.map(_.size).filter(_ > 1).sum
+        val (g, c) = topGram(t, 2)
+        (id, if (t.nonEmpty) r9(dup.toDouble / t.size.toDouble) else 0.0,
+          g, c, if (c > 0)
+            r9(c.toDouble * cpLen(g).toDouble / cpLen(text(id)).toDouble) else 0.0)
+      }
+    }
+    import graft.text.Quality
+    for (rows <- Seq(edge, real)) {
+      val df = nonLocal(rows).toDF("doc_id", "text")
+      val dup = bothModes(Quality.dupNgramCharFrac(df, "doc_id", "text",
+        n = 2, minOccur = 2).orderBy("doc_id")
+        .as[(Long, Long, Long, Double)].collect().toSeq)
+      assert(dup === dupGold(rows, 2))
+      assert(dup.exists(_._3 > 0))
+      for (n <- Seq(2, 3)) {
+        val top = bothModes(Quality.topNgramCharFrac(df, "doc_id", "text",
+          n = n).orderBy("doc_id").as[(Long, String, Long, Double)]
+          .collect().toSeq)
+        assert(top === topGold(rows, n))
+      }
+      val rep = bothModes(Quality.repetitionStats(df, "doc_id", "text")
+        .orderBy("doc_id").as[(Long, Double, String, Long, Double)]
+        .collect().toSeq)
+      assert(rep === repGold(rows))
+    }
   }
 
-  test("extractiveSummary: local kernel equals the relational kernel") {
+  test("extractiveSummary equals a driver-side TF-IDF golden, edges included") {
     val docs = (Seq(
       (1L, "spark is fast. spark is very fast! the cat sat? done"),
       (2L, "a b. a b. a b."),        // identical sentences, tie on score
       (3L, "x"),                      // one sentence, one short token
-      (4L, ""),                       // empty -> dropped by both
-      (5L, "  .  !  ")                // only empty sentences -> dropped
+      (4L, ""),                       // empty -> no row
+      (5L, "  .  !  "),               // only empty sentences -> no row
+      (41L, "ab cd. ab cd. ab cd."),  // scorable tie -> first sentence
+      (42L, "ab cd! cd ab? ab")       // sentences 0 and 1 tie on top
     ) ++ (6L to 40L).map(i =>
       (i, s"w$i row${i % 5} scan. merge w$i table! row${i % 5} scan " +
-        s"row${i % 5}? the end of doc $i."))).toDF("doc_id", "text")
-    val l = graft.text.Keywords.extractiveSummary(docs, "doc_id", "text",
-      kernel = "local").orderBy("doc").collect().toSeq
-    val s = graft.text.Keywords.extractiveSummary(docs, "doc_id", "text",
-      kernel = "shuffle").orderBy("doc").collect().toSeq
-    assert(l === s)
-    val real = spark.read.parquet(s"$sf/documents.parquet")
-    val rl = graft.text.Keywords.extractiveSummary(real, "doc_id", "text",
-      kernel = "local").orderBy("doc").collect().toSeq
-    val rs = graft.text.Keywords.extractiveSummary(real, "doc_id", "text",
-      kernel = "shuffle").orderBy("doc").collect().toSeq
-    assert(rl.nonEmpty && rl === rs)
+        s"row${i % 5}? the end of doc $i.")))
+    val minLen = 2
+    // sentences as Spark's split spells them; trim and lower as the
+    // tokens column does (trim strips spaces only)
+    def golden(id: Long, text: String): Option[(Long, Int, String, Double)] = {
+      def trimSp(s: String) = s.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+      val sents = java.util.regex.Pattern.compile("[.!?]\\s+").split(text, -1)
+        .toSeq.zipWithIndex.filter { case (s, _) => trimSp(s).nonEmpty }
+      val toks = sents.map { case (s, i) =>
+        i -> trimSp(s).toLowerCase.split("\\s+", -1).toSeq
+          .filter(t => cpLen(t) >= minLen)
+      }
+      val ns = sents.size
+      val sdf = toks.flatMap(_._2.distinct).groupBy(identity)
+        .map { case (t, v) => t -> v.size }
+      val scored = toks.filter(_._2.nonEmpty).map { case (i, ts) =>
+        val tf = ts.groupBy(identity).map { case (t, v) => t -> v.size }
+        val sum = tf.map { case (t, c) =>
+          BigDecimal(c) * BigDecimal(StrictMath.log(ns.toDouble / sdf(t)))
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        }.sum
+        (i, sum.toDouble / tf.size.toDouble)
+      }
+      if (scored.isEmpty) None
+      else {
+        val (i, score) = scored.minBy { case (i, sc) => (-sc, i) }
+        Some((id, i, sents.find(_._2 == i).get._1, score))
+      }
+    }
+    for (rows <- Seq(docs, corpusRows)) {
+      val got = bothModes(graft.text.Keywords.extractiveSummary(
+          nonLocal(rows).toDF("doc_id", "text"), "doc_id", "text",
+          minTokenLen = minLen)
+        .orderBy("doc").as[(Long, Int, String, Double)].collect().toSeq)
+      val want = rows.sortBy(_._1).flatMap { case (id, t) => golden(id, t) }
+      assert(got.nonEmpty && got === want)
+    }
   }
 
   test("qaEval matches hand-computed EM and token F1") {

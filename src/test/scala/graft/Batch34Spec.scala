@@ -88,20 +88,43 @@ class Batch34Spec extends SparkSpec {
     assert(out === Set((1L, 100L)))
   }
 
-  test("winnowing native kernel is bit-identical to the HOF path") {
+  test("winnowing fingerprints equal a driver-side window-min golden (both hash families)") {
     val rnd = new scala.util.Random(11)
-    val docs = (0 until 40).map { i =>
+    val random = (0 until 40).map { i =>
       val words = Seq.fill(3 + rnd.nextInt(25))(
         Seq.fill(1 + rnd.nextInt(8))(('a' + rnd.nextInt(26)).toChar).mkString)
       (i.toLong, words.mkString(" "))
-    } :+ ((99L, "")) :+ ((98L, "ab"))
-    val df = docs.toDF("id", "text")
-    def fpSet(kernel: String) =
-      Winnow.fingerprints(df, "id", "text", k = 5, w = 4,
-          portableHash = false, kernel = kernel)
-        .as[(Long, Long)].collect().toSet
-    assert(fpSet("local") === fpSet("hof"))
-    assert(fpSet("local").nonEmpty)
+    } ++ Seq((99L, ""), (98L, "ab"), (97L, "!!! ... ???"),
+      (96L, "abcdefgh"), (95L, "AbC-dEf, GhI"))
+    val real = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq
+    val (k, w) = (5, 4)
+    def xxh(g: String): Long = {
+      val b = g.getBytes("UTF-8")
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(b,
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+    }
+    def md5_60(g: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(g.getBytes("UTF-8"))
+        .map(x => f"${x & 0xff}%02x").mkString.take(15), 16)
+    for (rows <- Seq(random, real); portable <- Seq(false, true)) {
+      // the normalized char stream, as the operator cleans it
+      val streams = rows.toDF("id", "text").select(col("id"),
+          regexp_replace(graft.text.TextFns.cleanText(col("text")), " ", ""))
+        .as[(Long, String)].collect().toMap
+      val hash: String => Long = if (portable) md5_60 else xxh
+      val want = streams.toSeq.flatMap { case (id, s) =>
+        val hs = (0 to s.length - k).map(i => hash(s.substring(i, i + k)))
+        (0 to hs.size - w).map(j => hs.slice(j, j + w).min).distinct
+          .map(id -> _)
+      }.toSet
+      val got = bothModes(Winnow.fingerprints(nonLocal(rows).toDF("id", "text"),
+          "id", "text", k = k, w = w, portableHash = portable)
+        .as[(Long, Long)].collect().toSeq.sorted)
+      assert(got.size === got.toSet.size, "an (id, fp) row repeats")
+      assert(got.toSet === want)
+      assert(want.nonEmpty)
+    }
   }
 
   test("winnow_fps registers as a SQL function") {

@@ -53,20 +53,6 @@ class MinHashKernelSpec extends SparkSpec {
     (12L, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do")
   )).toDF("id", "text")
 
-  /** Runs `body` with whole-stage codegen off and expression codegen
-    * disabled, so every projection evaluates interpreted. */
-  private def interpreted[T](body: => T): T = {
-    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val saved = keys.map { case (key, _) => key -> spark.conf.getOption(key) }
-    keys.foreach { case (key, v) => spark.conf.set(key, v) }
-    try body
-    finally saved.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
-    }
-  }
-
   for (md5Family <- Seq(true, false); k <- Seq(1, 3, 5); n <- Seq(8, 32)) {
     val family = if (md5Family) "md5" else "xxhash"
     test(s"minhash_sig equals the shingle-window reference ($family, k=$k, numHashes=$n)") {

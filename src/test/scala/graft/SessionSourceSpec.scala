@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.core.GraftSession]], every cut through [[graft.core.Cut]],
   * and the set of programs, of `SPARK_GRAFT_*` env knobs and of
   * `persist()` sites only changes on purpose, so a new main, suite,
-  * knob, cut or cache cannot quietly appear. */
+  * knob, cut or cache cannot quietly appear; no text operator lets
+  * its caller choose between implementations. */
 class SessionSourceSpec extends AnyFunSuite {
   private def scalaFiles(roots: String*): Seq[Path] = roots.flatMap { root =>
     val files = Files.walk(Paths.get(root))
@@ -67,6 +68,20 @@ class SessionSourceSpec extends AnyFunSuite {
     sites.keys.foreach { f =>
       assert(mainCode(f).contains("unpersist("), s"$f never unpersists")
     }
+  }
+
+  test("no graft.text operator takes a kernel selector") {
+    // a public def with a `kernel` or `hashGrams` parameter lets the
+    // caller pick between two implementations of one operator
+    val defDecl = "(private(?:\\[\\w+\\])? )?def (\\w+)".r
+    val selector = "\\b(kernel|hashGrams)\\s*:".r
+    val sites = mainCode.toSeq.filter(_._1.startsWith("text/")).flatMap {
+      case (f, src) => selector.findAllMatchIn(src).flatMap { m =>
+        defDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
+          .filter(_.group(1) == null).map(d => s"$f:${d.group(2)}")
+      }
+    }.distinct.sorted
+    assert(sites.isEmpty, s"operators with an implementation selector: $sites")
   }
 
   test("src/main reads exactly two SPARK_GRAFT_* env knobs") {

@@ -22,4 +22,26 @@ abstract class SparkSpec extends AnyFunSuite {
     * interpreted, so an expression's generated code would never run. */
   def nonLocal[T: Encoder: ClassTag](rows: Seq[T]): Dataset[T] =
     spark.createDataset(spark.sparkContext.parallelize(rows, 3))
+
+  /** Runs `body` with whole-stage codegen off and expression codegen
+    * disabled, so every projection evaluates interpreted. */
+  def interpreted[T](body: => T): T = {
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = keys.map { case (key, _) => key -> spark.conf.getOption(key) }
+    keys.foreach { case (key, v) => spark.conf.set(key, v) }
+    try body
+    finally saved.foreach {
+      case (key, Some(v)) => spark.conf.set(key, v)
+      case (key, None) => spark.conf.unset(key)
+    }
+  }
+
+  /** `body` run in the default mode and again interpreted: the two
+    * results must be equal, and the default one is returned. */
+  def bothModes[T](body: => T): T = {
+    val codegen = body
+    assert(interpreted(body) == codegen, "codegen and interpreted results differ")
+    codegen
+  }
 }

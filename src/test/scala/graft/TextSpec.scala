@@ -76,10 +76,43 @@ class TextSpec extends SparkSpec {
       (2L, "spark engine shuffle partition broadcast join aggregate windows"),
       (3L, "completely different words about cooking pasta tomatoes basil")
     ).toDF("doc_id", "text")
-    val hs = df.select(col("doc_id"), Dedup.simhash(col("text")).as("h"))
+    val hs = Dedup.simhashes(df, "doc_id", "text")
       .as[(Long, Long)].collect().toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(hs(1L), hs(2L)) < ham(hs(1L), hs(3L)))
+  }
+
+  test("simhashes and simhashesPortable equal a driver-side majority golden") {
+    val rows = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
+      .toSeq ++ Seq((90001L, ""), (90002L, "solo"), (90003L, "x x x y"),
+        (90004L, "\tleading tab, then words"))
+    val toks = rows.toDF("doc_id", "text")
+      .select(col("doc_id"), TextFns.tokens(col("text")))
+      .as[(Long, Seq[String])].collect().toMap
+    def xxh(t: String): Long = {
+      val b = t.getBytes("UTF-8")
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(b,
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+    }
+    def md5_60(t: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(t.getBytes("UTF-8"))
+        .map(x => f"${x & 0xff}%02x").mkString.take(15), 16)
+    // bit i is set when more than half of the doc's tokens set it
+    def majority(hs: Seq[Long], bits: Int): Long = (0 until bits).map { i =>
+      val set = hs.count(h => ((h >>> i) & 1L) == 1L)
+      if (2 * set > hs.size) 1L << i else 0L
+    }.sum
+    val df = nonLocal(rows).toDF("doc_id", "text")
+    for ((sketch, hash, bits) <- Seq(
+        (Dedup.simhashes _, xxh _, 64), (Dedup.simhashesPortable _, md5_60 _, 60))) {
+      val want = toks.filter(_._2.nonEmpty)
+        .map { case (id, ts) => id -> majority(ts.map(hash), bits) }
+      val got = bothModes(sketch(df, "doc_id", "text")
+        .as[(Long, Long)].collect().toMap)
+      assert(got === want)
+      assert(got.values.toSet.size > rows.size / 2)
+    }
   }
 
   test("cosineTopK returns the query vector itself first") {
